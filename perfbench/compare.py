@@ -3,15 +3,17 @@
 
 Usage:
 
-    python3 perfbench/compare.py --parent ../parent --change . [--pairs 10]
-        [--workloads cold_registry,stream_heartbeat] [--seconds 10] [--seed0 1000]
+    python3 perfbench/compare.py --parent ../parent --change . [--pairs 10] [--seed0 1000]
 
 Each checkout is a repository root holding `perfbench/`; both must hold
-the identical benchmark. The command runs `--pairs` pairs per workload,
-alternating which side runs first, the same seed on both sides of a
-pair. For every end-to-end metric it reports each side's median and
-quartiles, how many pairs the change won, and a verdict:
+the identical benchmark and the identical fixture generator, so both
+sides read the same inputs. The command runs `--pairs` pairs of every
+workload in BENCHMARK.json at its `run_seconds`, alternating which side
+runs first, the same seed on both sides of a pair. For every end-to-end
+metric it reports each side's median and quartiles, how many pairs the
+change won, and a verdict:
 
+  failed      the change's runs failed more operations than the parent's;
   gain        the change won at least 9 of 10 pairs (ties count for
               neither) and the medians differ by more than the parent's
               interquartile range, in the better direction;
@@ -29,6 +31,9 @@ import statistics
 import subprocess
 import sys
 
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from run import GEN_SOURCES  # noqa: E402
+
 
 def bench_digest(root):
     """Digest of the benchmark's own files, without build and run output."""
@@ -43,6 +48,15 @@ def bench_digest(root):
             h.update(os.path.relpath(p, base).encode())
             with open(p, "rb") as fh:
                 h.update(fh.read())
+    return h.hexdigest()
+
+
+def gen_digest(root):
+    """Digest of the fixture generator's sources."""
+    h = hashlib.sha1()
+    for rel in GEN_SOURCES:
+        with open(os.path.join(root, rel), "rb") as fh:
+            h.update(fh.read())
     return h.hexdigest()
 
 
@@ -64,15 +78,18 @@ def quartiles(xs):
     return q1, statistics.median(xs), q3
 
 
-def verdict(parent, change, better, bound):
-    """Choosing-metrics section 8 applied to one metric."""
+def verdict(parent, change, better, bound, failed):
+    """Choosing-metrics section 8 applied to one metric; `failed` holds
+    the parent's and the change's failed operations."""
     sign = 1 if better == "lower" else -1  # positive: change is better
     wins = sum(1 for p, c in zip(parent, change) if sign * (p - c) > 0)
     p1, pm, p3 = quartiles(parent)
     c1, cm, c3 = quartiles(change)
     spread = max((p3 - p1) / pm if pm else 0, (c3 - c1) / cm if cm else 0)
     gap = sign * (pm - cm)
-    if wins >= 0.9 * len(parent) and gap > p3 - p1:
+    if failed[1] > failed[0]:
+        v = "failed"
+    elif wins >= 0.9 * len(parent) and gap > p3 - p1:
         v = "gain"
     elif spread > bound and not (max(change) < min(parent) or min(change) > max(parent)):
         v = "unresolved"
@@ -88,17 +105,18 @@ def main():
     ap.add_argument("--parent", required=True)
     ap.add_argument("--change", required=True)
     ap.add_argument("--pairs", type=int, default=10)
-    ap.add_argument("--workloads", default="")
-    ap.add_argument("--seconds", type=int, default=0)
     ap.add_argument("--seed0", type=int, default=1000)
     args = ap.parse_args()
     roots = [os.path.abspath(args.parent), os.path.abspath(args.change)]
     if bench_digest(roots[0]) != bench_digest(roots[1]):
         raise SystemExit("the two checkouts hold different benchmarks; compare with identical perfbench/")
-    spec = json.load(open(os.path.join(roots[1], "BENCHMARK.json")))
-    seconds = args.seconds or spec["run_seconds"]
-    workloads = [w for w in args.workloads.split(",") if w] or [w["name"] for w in spec["workloads"]]
-    for w in workloads:
+    if gen_digest(roots[0]) != gen_digest(roots[1]):
+        raise SystemExit("the two checkouts generate different fixtures; compare with identical "
+                         + ", ".join(GEN_SOURCES))
+    with open(os.path.join(roots[1], "BENCHMARK.json")) as f:
+        spec = json.load(f)
+    seconds = spec["run_seconds"]
+    for w in (w["name"] for w in spec["workloads"]):
         vals = ({}, {})
         failed = [0, 0]
         for i in range(args.pairs):
@@ -106,14 +124,14 @@ def main():
             order = (0, 1) if i % 2 == 0 else (1, 0)
             for side in order:
                 res = run(roots[side], w, seed, seconds)
-                failed[side] += res["failed"] + (0 if res["correct"] else 1)
+                failed[side] += res["failed"]
                 for k, v in res["metrics"].items():
                     vals[side].setdefault(k, []).append(v["value"])
             print(f"{w}: pair {i + 1}/{args.pairs} done", file=sys.stderr, flush=True)
         cells = []
         for m in spec["end_to_end"]:
             v, wins, p, c, spread = verdict(vals[0][m["name"]], vals[1][m["name"]],
-                                            m["better"], m["bound"])
+                                            m["better"], m["bound"], failed)
             cells.append(f"{m['name']}: {v} (parent {p[1]:.4g} [{p[0]:.4g}, {p[2]:.4g}], "
                          f"change {c[1]:.4g} [{c[0]:.4g}, {c[2]:.4g}] {m['unit']}, "
                          f"wins {wins}/{args.pairs}, spread {spread:.3f} vs bound {m['bound']})")

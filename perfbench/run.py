@@ -51,22 +51,18 @@ ADD_OPENS = [
 ]
 RUN_TIMEOUT_S = 170
 MB = 1e6
-LAYER_UNITS = {
-    "ops.build_s": "s", "ops.build_jobs": "count",
-    "derived.built": "count", "derived.mb_written": "MB", "derived.build_s": "s",
-    "pin.storage_mb": "MB", "pin.rdds": "count",
-    "plan.analysis_s": "s", "plan.optimization_s": "s", "plan.planning_s": "s",
-    "codegen.compile_s": "s", "codegen.compiles": "count",
-    "exec.task_s": "s", "exec.cpu_s": "s", "exec.gc_s": "s", "exec.wait_s": "s",
-    "exec.busy_frac": "1", "exec.tasks": "count", "exec.stages": "count",
-    "exec.shuffle_read_mb": "MB", "exec.shuffle_write_mb": "MB", "exec.spill_mb": "MB",
-    "exec.failed_tasks": "count", "driver.self_s": "s",
+# Units of the per-layer metrics kept in the record only; the units of
+# the metrics BENCHMARK.json lists come from BENCHMARK.json.
+RECORD_ONLY_UNITS = {
+    "derived.build_s": "s", "plan.optimization_s": "s", "codegen.compile_s": "s",
+    "exec.gc_s": "s",
     "stream.get_batch_ms": "ms", "stream.planning_ms": "ms", "stream.add_batch_ms": "ms",
-    "stream.wal_commit_ms": "ms", "stream.commit_offsets_ms": "ms", "stream.late_rows": "count",
+    "stream.wal_commit_ms": "ms", "stream.commit_offsets_ms": "ms",
     "state.commit_ms": "ms", "state.update_ms": "ms", "state.removal_ms": "ms",
-    "state.rows_total": "count", "state.rows_updated": "count", "state.rows_removed": "count",
-    "state.mb": "MB", "state.updated_frac": "1",
 }
+# The fixture generator: its sources key the fixture cache, and
+# compare.py refuses two checkouts whose generators differ.
+GEN_SOURCES = ["src/main/scala/graft/SfGen.scala"]  # relative to the repository root
 
 
 def log(msg):
@@ -168,7 +164,7 @@ def java(cp, tmpdir, args, timeout):
 
 def fixture(cp, sf, threads):
     """Generated once per checkout and generator source (seed-independent)."""
-    gen_digest = tree_digest([os.path.join(ENGINE_SRC, "scala", "graft", "SfGen.scala")])[:12]
+    gen_digest = tree_digest([os.path.join(ROOT, p) for p in GEN_SOURCES])[:12]
     out = os.path.join(CACHE_DIR, f"sf{sf}-{gen_digest}")
     os.makedirs(CACHE_DIR, exist_ok=True)
     with open(os.path.join(CACHE_DIR, "lock"), "w") as lock:
@@ -508,6 +504,15 @@ def batch_start(b):
 
 # ------------------------------------------------------------------ main
 
+def steal_s():
+    """CPU seconds the hypervisor gave to other guests, all CPUs since boot."""
+    try:
+        with open("/proc/stat") as f:
+            return int(f.readline().split()[8]) / os.sysconf("SC_CLK_TCK")
+    except (OSError, IndexError, ValueError):
+        return None
+
+
 def machine():
     info = {"nproc": os.cpu_count(), "heap_gb": heap_gb()}
     try:
@@ -535,6 +540,9 @@ def main():
     if not os.path.isdir(os.path.join(ENGINE_SRC, "scala", "graft")):
         log(f"engine sources not found under {ENGINE_SRC}")
         return 2
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        spec = json.load(f)
+    listed = spec["per_layer" if args.trace else "end_to_end"]
     stamp = machine()
     threads = stamp["nproc"]
     cp, digest = build()
@@ -548,11 +556,14 @@ def main():
         os.makedirs(os.path.join(run_dir, d))
     try:
         out = os.path.join(run_dir, "record.json")
+        steal0 = steal_s()
         rc = java(cp, os.path.join(run_dir, "tmp"), [
             "run", f"workload={args.workload}", f"seed={args.seed}",
             f"seconds={args.seconds}", f"trace={args.trace}", f"threads={threads}",
             f"sfdir={sf_dir}", f"rundir={run_dir}", f"out={out}"],
             RUN_TIMEOUT_S)
+        steal1 = steal_s()
+        stamp["steal_s"] = None if steal0 is None or steal1 is None else round(steal1 - steal0, 2)
         if rc != 0 or not os.path.exists(out):
             log(f"harness failed (exit {rc})")
             return 1
@@ -576,7 +587,8 @@ def main():
         spans, layers = spans_and_layers(rec)
         with open(base + "-spans.json", "w") as f:
             json.dump(spans, f)
-        record["per_layer"] = {k: {"value": v, "unit": LAYER_UNITS[k]} for k, v in layers.items()}
+        units = dict(RECORD_ONLY_UNITS, **{m["name"]: m["unit"] for m in spec["per_layer"]})
+        record["per_layer"] = {k: {"value": v, "unit": units[k]} for k, v in layers.items()}
         record["pin_storage_mb_by_pass"] = [p["storage"]["bytes"] / MB for p in rec["passes"]]
         untraced = base + "-trace0.json"
         if os.path.exists(untraced):
@@ -588,12 +600,9 @@ def main():
     with open(base + f"-trace{args.trace}-raw.json", "w") as f:
         json.dump(rec, f)
 
-    spec_file = os.path.join(ROOT, "BENCHMARK.json")
-    spec = json.load(open(spec_file)) if os.path.exists(spec_file) else {}
     measured = record["per_layer"] if args.trace else e2e
-    listed = spec.get("per_layer" if args.trace else "end_to_end", [])
-    metrics = {n: {"value": measured[n]["value"], "unit": measured[n]["unit"]}
-               for n in ([m["name"] for m in listed] or sorted(measured))}
+    metrics = {m["name"]: {"value": measured[m["name"]]["value"], "unit": m["unit"]}
+               for m in listed}
     print(json.dumps(record))
     print(json.dumps({"correct": correct, "attempted": attempted, "failed": failed,
                       "metrics": metrics}))

@@ -33,8 +33,6 @@ object Harness {
 
   // ---- workload shapes -------------------------------------------------
 
-  /** Registry queries per second of --seconds in `cold_registry`. */
-  val ColdQueriesPerSecond = 1.2
   /** `stream_heartbeat`: rows per micro-batch, untimed warm-up batches
     * and batches per reported pass. Distinct keys are drawn per seed
     * just below the batch size, so every batch touches every key of
@@ -44,13 +42,22 @@ object Harness {
   val StreamWarmupBatches = 5
   val StreamBatchesPerPass = 5
 
-  /** The cold slice: `ceil(ColdQueriesPerSecond × seconds)` names spread
-    * evenly over the name-sorted registry, in that order.
+  /** The `cold_registry` slice: twelve names spread evenly over the
+    * name-sorted registry of 192 (every sixteenth), pinned so that adding
+    * or renaming a registry query leaves the workload as it is. Run in
+    * name-sorted order.
     */
-  def coldQueries(seconds: Int): Seq[String] = {
-    val sorted = SparkEntry.queries.keys.toSeq.sorted
-    val k = math.ceil(seconds * ColdQueriesPerSecond).toInt.max(1).min(sorted.size)
-    (0 until k).map(i => sorted(i * sorted.size / k))
+  val ColdQueries: Seq[String] = Seq(
+    "q_agg_approx_distinct", "q_agg_sum_global", "q_decontaminate_bloom",
+    "q_dedup_paragraph", "q_fileindex_build", "q_join_full_outer",
+    "q_join_waiting_suppliers", "q_mm_video", "q_sample_weighted",
+    "q_sim_search_ivf_kmeans", "q_subquery_anti_agg", "q_udaf_file_checksum")
+
+  def coldQueries: Seq[String] = {
+    val missing = ColdQueries.filterNot(SparkEntry.queries.contains)
+    require(missing.isEmpty,
+      s"cold_registry queries missing from SparkEntry.queries: ${missing.mkString(", ")}")
+    ColdQueries
   }
 
   // ---- clock and JSON --------------------------------------------------
@@ -402,6 +409,8 @@ object Harness {
     val runDir = a("rundir")
     val trace = a("trace") == "1"
     val tmp = new File(sys.props("java.io.tmpdir"))
+    // checked before the session starts, so a missing name fails the run at once
+    val coldNames = if (workload == "cold_registry") coldQueries else Nil
     val spark = session(threads, runDir)
     val tracer = if (trace) Some(new Tracer) else None
     tracer.foreach { t =>
@@ -420,7 +429,7 @@ object Harness {
     val runner = new Runner(spark, a("sfdir"), tracer, tmp)
     val result = workload match {
       case "cold_registry" =>
-        coldRegistry(spark, runner, coldQueries(seconds))
+        coldRegistry(spark, runner, coldNames)
       case "stream_heartbeat" =>
         streamHeartbeat(spark, runDir, threads, seconds, seed)
       case other => throw new IllegalArgumentException(s"unknown workload $other")
