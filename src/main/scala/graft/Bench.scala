@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** Fixed-work single-thread CPU calibration (VERDICT r18 missing #3):
@@ -42,27 +41,11 @@ object Bench {
     val calibMs = calibrateMs()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    // same escape hatch as Verify: the sf10 timed leg raises the
+    // SPARK_GRAFT_EXTRA_CONF, as in Verify: the sf10 timed leg raises the
     // stride-1 substring ceiling so the bench measures the math at
     // volume instead of recording the (designed) loud refusal
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";")
-      .filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
-    // native functions (array_dot_f/_l, shingle3) — the same registrations
-    // spark.sql.extensions=graft.functions.GraftExtensions performs; done
-    // here once so every query builder can rely on them
-    graft.functions.GraftFunctions.ensureRegistered(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.build(s"local[$cpus]", cpus.toInt,
+      sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq.flatMap(Sessions.parseConfList))
     // JVM/session warmup (untimed): initializes Hadoop FS, the codegen
     // compiler, and the scheduler once so the first measured query isn't
     // charged for process bring-up. Each query's own planning/codegen

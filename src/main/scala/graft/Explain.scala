@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan for one (or every) query
   * and time N executions — the `.explain`-and-iterate loop SURVEY §4
   * prescribes. Usage:
@@ -16,19 +14,7 @@ object Explain {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val iters = if (args.length > 2) args(2).toInt else 1
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // native functions (array_dot_f/_l, shingle3) — the same registrations
-    // spark.sql.extensions=graft.functions.GraftExtensions performs; done
-    // here once so every query builder can rely on them
-    graft.functions.GraftFunctions.ensureRegistered(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.build(s"local[$cpus]", cpus.toInt)
     val targets =
       if (name == "ALL") SparkEntry.queries.toSeq.sortBy(_._1)
       else name.split(",").map(_.trim).toSeq.map(n => n -> SparkEntry.queries(n))

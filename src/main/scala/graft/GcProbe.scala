@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Command-line entry for the abandoned-dataset orphan GC — the same
   * sweep `CALL graft.gc_orphans(ttl_ms)` runs, invokable from a cron
   * or a round receipt without a SQL session:
@@ -18,13 +16,7 @@ object GcProbe {
   def main(args: Array[String]): Unit = {
     val ttl = args.headOption.map(_.toLong)
       .getOrElse(ops.Derived.generationTtlMs)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-gc-probe")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = Sessions.build("local[4]", 4)
     spark.sparkContext.setLogLevel("ERROR")
     try {
       val rows = ops.Derived.gcOrphans(spark, ops.Procedures.artifactFamilies, ttl)

@@ -105,16 +105,7 @@ object StressProbe {
     // (the r16 sf100 receipts ran at 320)
     val shufflePartitions = sys.env.get("SPARK_GRAFT_PARTITIONS")
       .map(_.toInt).getOrElse(math.max(cpus.toInt, 32 * mult / 10))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.GraftFunctions.ensureRegistered(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.build(s"local[$cpus]", shufflePartitions)
     // mult=1 probes the base corpus AS-IS (a genuine SfGen decade) —
     // replicating 1× would just burn a full disk copy
     val dir = if (mult == 1) base else buildScaled(spark, base, mult)

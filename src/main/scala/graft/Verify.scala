@@ -1,47 +1,26 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+
+  /** Verify's confs beyond the common set. SPARK_GRAFT_RELIABLE_PIN=true
+    * forces every pin() through the reliable-checkpoint path;
+    * SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" sets arbitrary session confs for
+    * gate legs (sweep's sf10 leg raises the stride-1 substring ceiling
+    * this way).
+    */
+  def extraConfs(env: Map[String, String]): Seq[(String, String)] =
+    env.get("SPARK_GRAFT_RELIABLE_PIN").map("spark.graft.reliablePin" -> _).toSeq ++
+      env.get("SPARK_GRAFT_EXTRA_CONF").toSeq.flatMap(Sessions.parseConfList)
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // SPARK_GRAFT_MASTER=local-cluster[2,4,8192] runs the whole dump
-    // against REAL executor JVMs (Sessions.tuneForMaster wires their
-    // classpath); SPARK_GRAFT_RELIABLE_PIN=true forces every pin()
-    // through the reliable-checkpoint path — together the multi-JVM
-    // gate VERDICT r12 #2 asked for. Driver default unchanged.
+    // against real executor JVMs
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = Sessions.tuneForMaster(
-      SparkSession.builder().master(master), master)
-    sys.env.get("SPARK_GRAFT_RELIABLE_PIN")
-      .foreach(v => builder.config("spark.graft.reliablePin", v))
-    // SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2": arbitrary session confs for
-    // gate legs (sweep's sf10 leg raises the stride-1 substring ceiling
-    // this way — env reaches the forked JVM where SBT_OPTS -D does not)
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";")
-      .filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      })
-    val spark = builder
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // Write int64 micros (not legacy INT96) so DuckDB reads timestamps
-      // back exactly as Spark computed them.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // events.parquet has TIMESTAMP(NANOS) — read as long, converted in
-      // Tables.events (same micros truncation DuckDB applies).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // native functions (array_dot_f/_l, shingle3) — the same registrations
-    // spark.sql.extensions=graft.functions.GraftExtensions performs; done
-    // here once so every query builder can rely on them
-    graft.functions.GraftFunctions.ensureRegistered(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.build(master, cpus.toInt, extraConfs(sys.env))
     new java.io.File(outDir).mkdirs()
     // dev-only subset run (comma-separated names); driver sets nothing
     // and always dumps the full registry

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -87,52 +86,5 @@ object ArrayDotLong {
   val builder: Seq[Expression] => Expression = { children =>
     require(children.length == 2, "array_dot_l takes exactly 2 arguments")
     ArrayDotLong(children.head, children(1))
-  }
-}
-
-/** Idempotent in-session registration for code paths that run without
-  * `spark.sql.extensions` (the Verify/Bench/Explain mains, tests): the
-  * same surface GraftExtensions installs — the three native functions
-  * AND the FoldChainedXor optimizer rule (injectOptimizerRule has no
-  * live-session equivalent, so the rule rides
-  * `spark.experimental.extraOptimizations`, which the optimizer runs in
-  * its user-provided batch). Benchmarks and plan-shape claims therefore
-  * reflect the shipped extension path, not a rule-less session.
-  */
-object GraftFunctions {
-  def ensureRegistered(s: SparkSession): Unit = {
-    val reg = s.sessionState.functionRegistry
-    reg.registerFunction(ArrayDotProduct.identifier, ArrayDotProduct.info,
-      ArrayDotProduct.builder)
-    reg.registerFunction(ArrayDotLong.identifier, ArrayDotLong.info,
-      ArrayDotLong.builder)
-    reg.registerFunction(Shingle3.identifier, Shingle3.info, Shingle3.builder)
-    reg.registerFunction(GzipSize.identifier, GzipSize.info, GzipSize.builder)
-    reg.registerFunction(CmsEstimate.identifier, CmsEstimate.info,
-      CmsEstimate.builder)
-    reg.registerFunction(WinHashes60.identifier, WinHashes60.info,
-      WinHashes60.builder)
-    reg.registerFunction(Md5Prefix64.identifier, Md5Prefix64.info,
-      Md5Prefix64.builder)
-    reg.registerFunction(WinMinK.identifier, WinMinK.info, WinMinK.builder)
-    // A session built with spark.sql.extensions=GraftExtensions already
-    // runs FoldChainedXor in its injected-rule batch; appending it to
-    // extraOptimizations too would run it in a second batch. The rule IS
-    // idempotent (a folded `x ^ c` no longer matches any pattern —
-    // FoldChainedXorSpec pins this), but skip the duplicate anyway: the
-    // extensions conf is the only publicly inspectable registration site
-    // (RuleExecutor.batches is protected).
-    // Exact class-name match, not substring: the conf is a comma-list
-    // of class names, and a foreign class merely CONTAINING
-    // "GraftExtensions" must not suppress the append (the rule would
-    // silently vanish from every batch — optimization-only, but
-    // plan-shape claims and benches would quietly regress).
-    val viaExtensions = s.conf.getOption("spark.sql.extensions")
-      .exists(_.split(',').map(_.trim)
-        .contains(classOf[GraftExtensions].getName))
-    if (!viaExtensions &&
-        !s.experimental.extraOptimizations.contains(graft.plans.FoldChainedXor))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.FoldChainedXor
   }
 }

@@ -38,21 +38,22 @@ case class WinMinK(left: Expression, right: Expression)
     if (left.dataType != ArrayType(LongType, containsNull = false))
       TypeCheckResult.TypeCheckFailure(
         s"win_min_k expects array<bigint> (no null elements), got ${left.dataType.simpleString}")
-    else if (right.dataType != IntegerType && right.dataType != LongType)
+    // int only: compute takes an Int window, and a bigint k would be
+    // silently truncated on the way in
+    else if (right.dataType != IntegerType)
       TypeCheckResult.TypeCheckFailure(
-        s"win_min_k expects an integral k, got ${right.dataType.simpleString}")
+        s"win_min_k expects an int k, got ${right.dataType.simpleString}")
     else TypeCheckResult.TypeCheckSuccess
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "win_min_k"
 
   override protected def nullSafeEval(arr: Any, k: Any): Any =
-    WinMinK.compute(arr.asInstanceOf[ArrayData],
-      k.asInstanceOf[Number].intValue())
+    WinMinK.compute(arr.asInstanceOf[ArrayData], k.asInstanceOf[Int])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (a, k) =>
-      s"graft.functions.WinMinK.compute($a, (int)$k)")
+      s"graft.functions.WinMinK.compute($a, $k)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): WinMinK =

@@ -1161,8 +1161,6 @@ object LlmPipeline {
     * blocked cosine joins).
     */
   private def dotL(a: String, b: String) = s"array_dot_l($a, $b)"
-  private val dotQDuck =
-    "CAST(list_sum(list_transform(list_zip(qa, qb), p -> p[1] * p[2])) AS BIGINT)"
 
 
   /** Candidate-block substrate for q_dedup_embed: each embedding row

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.ops.Streaming
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** LIVE streaming ingest — the file-tail end of the reference's

@@ -870,7 +870,7 @@ private class ProtoChunkReader(file: String, start: Long, end: Long, message: St
               s"corrupt frame length $l at offset $pos in $file (${fileLen - pos} B remain)")
           l.toInt
         } catch {
-          case e: FramingException if permissive =>
+          case _: FramingException if permissive =>
             // length chain broken: the remainder of the file is
             // unaddressable — drop it and end this partition
             return false

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Cross-PROCESS artifact-lifecycle races (VERDICT r18 missing #2):

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.sources.JsonlCorpus
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 

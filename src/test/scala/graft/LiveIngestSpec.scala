@@ -93,7 +93,7 @@ class LiveIngestSpec extends AnyFunSuite {
     // (GRAFT_TEST_MASTER=local-cluster[2,4,...]) exercise this.
     assume(spark.sparkContext.master.startsWith("local-cluster"),
       "needs real executor processes (local-cluster master)")
-    import org.apache.spark.{SparkEnv, TaskContext}
+    import org.apache.spark.SparkEnv
     import spark.implicits._
     def liveExecutors(): Set[String] =
       spark.range(0, 64, 1, 64)
@@ -196,7 +196,6 @@ class LiveIngestSpec extends AnyFunSuite {
   }
 
   test("live source feeds the stateful liveness monitor (decode -> flatMapGroupsWithState)") {
-    import spark.implicits._
     val base = Files.createTempDirectory("graft-live2").toString
     val src = s"$base/frames"
     Files.createDirectories(Paths.get(src))
@@ -224,7 +223,6 @@ class LiveIngestSpec extends AnyFunSuite {
   }
 
   test("decoded arrivals carry the payload cardinalities the monitor aggregates") {
-    import spark.implicits._
     val base = Files.createTempDirectory("graft-live3").toString
     val src = s"$base/frames"
     Files.createDirectories(Paths.get(src))

@@ -1,6 +1,5 @@
 package graft
 
-import graft.sources.ProtoIngest
 import graft.sources.ProtoIngest._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
@@ -75,7 +74,7 @@ class ProtoPropertySpec extends AnyFunSuite {
         Try(dec(b)) match {
           case Success(_)                           => true
           case Failure(_: IllegalArgumentException) => true
-          case Failure(other)                       => false
+          case Failure(_)                           => false
         }
       }
     }, n = 1000)

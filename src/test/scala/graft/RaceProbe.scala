@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Second-JVM half of the cross-process race witnesses:
   * CrossProcessRaceSpec (artifact lifecycle) and CmsCrossProcessSpec
   * (sketch-log sink/compactor) fork this main as a REAL separate java
@@ -31,15 +29,8 @@ object RaceProbe {
   def main(args: Array[String]): Unit = {
     require(args.length >= 1,
       "usage: RaceProbe <dataset_dir> | --cms-compact <sketch_dir> <iters> <keep_tail>")
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-race-probe")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft-raceprobe-wh-${java.util.UUID.randomUUID()}")
-      .getOrCreate()
+    val spark = Sessions.build("local[2]", 2, Seq("spark.sql.warehouse.dir" ->
+      s"/tmp/graft-raceprobe-wh-${java.util.UUID.randomUUID()}"))
     try {
       args(0) match {
         case "--cms-compact" =>

@@ -34,7 +34,6 @@ class SkewSpec extends AnyFunSuite {
   }
 
   test("salted join refuses inputs that already carry the salt column") {
-    import spark.implicits._
     val withSalt = skewedFact.withColumn(ops.Skew.SaltCol, lit(0))
     val e = intercept[IllegalArgumentException] {
       ops.Skew.saltedJoin(withSalt, dim, "k", 8)

@@ -2,72 +2,54 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared session for the whole forked test JVM (Test / fork := true)
-  * — mirrors Verify.scala's config so specs see exactly the plans the
-  * driver's correctness gate sees.
+/** One shared session for the whole forked test JVM (Test / fork := true),
+  * built by the same `Sessions.build` as Verify so specs see the plans
+  * the correctness gate sees.
   */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    // GRAFT_TEST_MASTER=local-cluster[2,4,8192] runs the whole suite
-    // against real executor JVMs (multi-JVM gate, VERDICT r12 #2);
-    // GRAFT_TEST_RELIABLE_PIN=true additionally forces every pin()
-    // through the reliable-checkpoint path. Defaults unchanged.
-    // Default master is local[4,2] — 4 threads with spark.task.maxFailures=2
-    // (local[n] alone is RETRYLESS, maxFailures=1, unlike any real cluster
-    // where the default is 4). Retry-capable matters twice: it lets
-    // RetryStabilitySpec inject genuine first-attempt task failures and
-    // assert byte-identical recovery, and it runs every other spec under
-    // the cluster failure model (a deterministically-failing task still
-    // fails its job — just after one retry — so no failure is masked).
-    val master = sys.env.getOrElse("GRAFT_TEST_MASTER", "local[4,2]")
-    val builder = graft.Sessions.tuneForMaster(
-      SparkSession.builder().master(master), master)
-    sys.env.get("GRAFT_TEST_RELIABLE_PIN")
-      .foreach(v => builder.config("spark.graft.reliablePin", v))
-    // GRAFT_TEST_STATESTORE=rocksdb runs every stateful streaming spec
-    // on RocksDBStateStoreProvider (the production backend a real
-    // deployment swaps in when HDFS-backed in-memory state commits
-    // become the bottleneck — StreamBench shows stateful legs are
-    // commit-bound). Default stays Spark's in-memory HDFS provider.
-    sys.env.get("GRAFT_TEST_STATESTORE").foreach {
-      case "rocksdb" => builder.config(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      case "rocksdb-changelog" =>
-        // RocksDB + changelog checkpointing: per-batch uploads become the
-        // delta log instead of full SST snapshots — the posture a large
-        // deployment runs (snapshot upload moves off the commit path).
-        builder.config(
-          "spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-          .config("spark.sql.streaming.stateStore.rocksdb." +
-            "changelogCheckpointing.enabled", "true")
-      case other => builder.config(
-        "spark.sql.streaming.stateStore.providerClass", other)
-    }
-    val s = builder
+
+  private val StateStoreProvider = "spark.sql.streaming.stateStore.providerClass"
+  private val RocksDb =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** The test session's confs beyond the common set.
+    *
+    * GRAFT_TEST_RELIABLE_PIN=true forces every pin() through the
+    * reliable-checkpoint path. GRAFT_TEST_STATESTORE=rocksdb runs every
+    * stateful streaming spec on RocksDBStateStoreProvider (the backend a
+    * deployment swaps in when in-memory state commits become the
+    * bottleneck); `rocksdb-changelog` adds changelog checkpointing, so
+    * per-batch uploads become the delta log instead of full SST
+    * snapshots; any other value is taken as a provider class name.
+    */
+  def extraConfs(env: Map[String, String]): Seq[(String, String)] =
+    Seq(
       // full production registration (native functions + optimizer rule
       // + the CALL graft.<procedure> parser) — the extensions path a
-      // deployment configures; ensureRegistered below stays as the
-      // idempotent belt-and-suspenders for sessions built without it
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.streaming.checkpointLocation",
-        s"/tmp/graft-test-ckpt-${java.util.UUID.randomUUID()}")
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft-test-warehouse-${java.util.UUID.randomUUID()}")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    // same registrations spark.sql.extensions=GraftExtensions performs —
-    // done at session acquisition so every spec and query builder can
-    // rely on the native functions without per-builder registration
-    graft.functions.GraftFunctions.ensureRegistered(s)
-    s
-  }
+      // deployment configures; Sessions.build's ensureRegistered stays
+      // as the idempotent path for sessions built without it
+      "spark.sql.extensions" -> "graft.functions.GraftExtensions",
+      "spark.sql.streaming.checkpointLocation" ->
+        s"/tmp/graft-test-ckpt-${java.util.UUID.randomUUID()}",
+      "spark.sql.warehouse.dir" ->
+        s"/tmp/graft-test-warehouse-${java.util.UUID.randomUUID()}") ++
+      env.get("GRAFT_TEST_RELIABLE_PIN").map("spark.graft.reliablePin" -> _) ++
+      env.get("GRAFT_TEST_STATESTORE").toSeq.flatMap {
+        case "rocksdb" => Seq(StateStoreProvider -> RocksDb)
+        case "rocksdb-changelog" => Seq(StateStoreProvider -> RocksDb,
+          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
+        case other => Seq(StateStoreProvider -> other)
+      }
+
+  // GRAFT_TEST_MASTER=local-cluster[2,4,8192] runs the whole suite
+  // against real executor JVMs. The default local[4,2] is 4 threads with
+  // spark.task.maxFailures=2 (local[n] alone is retryless, unlike any
+  // real cluster): RetryStabilitySpec injects genuine first-attempt task
+  // failures, and every other spec runs under the cluster failure model
+  // (a deterministically failing task still fails its job, after one
+  // retry, so no failure is masked).
+  lazy val spark: SparkSession = Sessions.build(
+    sys.env.getOrElse("GRAFT_TEST_MASTER", "local[4,2]"), 4, extraConfs(sys.env))
 
   val sf0001 = "/root/testdata/sf0.001"
 }

@@ -55,4 +55,12 @@ class WinMinKSpec extends AnyFunSuite {
       .select(expr("win_min_k(hs, k)")).collect()
     assert(r.forall(_.isNullAt(0)))
   }
+
+  test("a bigint k fails analysis instead of being truncated to int") {
+    import spark.implicits._
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      Seq(Seq(1L, 2L, 3L)).toDF("hs")
+        .select(expr("win_min_k(hs, CAST(16 AS BIGINT))")).collect())
+    assert(e.getMessage.contains("win_min_k expects an int k"), e.getMessage)
+  }
 }
