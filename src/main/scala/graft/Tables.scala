@@ -15,36 +15,18 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, TimestampNTZType}
   */
 object Tables {
 
-  /** Session-scoped PLAN memo for the base-table reads (VERDICT r20 #2,
-    * the ~0.65 s/query fixed floor): every `spark.read.parquet` call
-    * eagerly resolves the relation on the driver — file listing +
-    * a parquet footer read for schema inference — and the registry's
-    * 192 queries each re-paid it for every table they touch (~400+
-    * resolutions per bench run for identical immutable plans). Memoize
-    * the resolved DataFrame per (session, path, source mtime): a
-    * DataFrame is an immutable logical plan, so reuse changes NO query
-    * result and NO physical plan — each query still analyzes, optimizes
-    * and executes its own tree from the shared leaf. NOT result
-    * caching: nothing is persisted or precomputed, every action still
-    * computes from the parquet bytes. The mtime key makes a regenerated
-    * fixture (same path, new bytes) miss — same staleness contract as
-    * every corpus memo — and stale keys for the same (session, path)
-    * are evicted on refresh.
+  /** Session memo for the base-table reads: every `spark.read.parquet`
+    * eagerly resolves the relation on the driver (file listing and a
+    * footer read for schema inference), and the registry's queries
+    * would otherwise re-pay that for every table they touch. Nothing is
+    * persisted or precomputed: each action still computes from the
+    * parquet bytes.
     */
-  private val readMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long), DataFrame]()
+  private val readMemo = new SessionMemo[DataFrame]
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val key = (spark, path, ops.Derived.sourceMtime(spark, path))
-    if (!readMemo.containsKey(key)) {
-      val it = readMemo.keys()
-      while (it.hasMoreElements) {
-        val k = it.nextElement()
-        if (k._1 == spark && k._2 == path) readMemo.remove(k)
-      }
-    }
-    readMemo.computeIfAbsent(key, _ => normNtz(spark.read.parquet(path)))
+    readMemo(spark, path)(normNtz(spark.read.parquet(path)))
   }
 
   /** Normalize TIMESTAMP_NTZ columns to TIMESTAMP (LTZ). The fixture

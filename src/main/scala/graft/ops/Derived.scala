@@ -27,7 +27,7 @@ object Derived {
     */
   def dirFor(s: SparkSession, family: String, sourceFile: String,
              version: String = ""): String = {
-    val mtime = sourceMtime(s, sourceFile)
+    val (mtime, _) = sourceStamp(s, sourceFile)
     s"${familyDir(family)}/${labelFor(sourceFile)}" +
       s"_$mtime${if (version.isEmpty) "" else s"_$version"}"
   }
@@ -69,14 +69,17 @@ object Derived {
     "d" + new org.apache.hadoop.fs.Path(sourceFile)
       .getParent.toString.replaceAll("[^A-Za-z0-9._-]", "_")
 
-  /** Hadoop-FS mtime of a source file (0 when absent) — the staleness
-    * stamp session memos key on (substring windows, cc labels), shared
-    * so no memo re-grows the java.io.File-on-remote-path trap.
+  /** Hadoop-FS (mtime, length) of a source file, (0, 0) when absent —
+    * the staleness stamp of [[graft.SessionMemo]] and of artifact dirs,
+    * shared so no caller re-grows the java.io.File-on-remote-path trap.
     */
-  def sourceMtime(s: SparkSession, sourceFile: String): Long = {
+  def sourceStamp(s: SparkSession, sourceFile: String): (Long, Long) = {
     val p = new org.apache.hadoop.fs.Path(sourceFile)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.getFileStatus(p).getModificationTime else 0L
+    try {
+      val st = fs.getFileStatus(p)
+      (st.getModificationTime, st.getLen)
+    } catch { case _: java.io.FileNotFoundException => (0L, 0L) }
   }
 
   /** Per-artifact-dir build locks: two registry queries sharing one

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import graft.ops.Pin.PinOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -115,22 +115,22 @@ object LlmPipeline {
     * variable-length string agg buffers can't hash-aggregate; BIGINT
     * mins can, and shuffle 8 B per (doc, permutation) instead of 32.
     *
-    * READ-THROUGH over the PERSISTED substrate (VERDICT r17 #1): the
-    * session memo caches a plain scan of the manifest-keyed artifact
+    * READ-THROUGH over the PERSISTED substrate: the session memo
+    * caches a plain scan of the manifest-keyed artifact
     * ([[ensureMinhashBanded]]) — a cold session (or second JVM) reads
     * the signature table instead of re-paying the corpus scan, and a
     * manifest tick evolves the artifact (append-exact: signatures are
     * per-doc) instead of rebuilding it.
     */
   private[graft] def minhashBanded(s: SparkSession, d: String): DataFrame =
-    // NO fanOut here, by measurement (r21): a keyed exchange on
+    // NO fanOut here, by measurement: a keyed exchange on
     // (band, band_key) was tried alongside the postings one and the
     // banded consumers read flat-to-slower (q_dedup_near 1.64 → 1.76 s
     // raw / flat normalized, q_dedup_editdist likewise) — the banded
     // table is bands×docs rows (~80 k at sf0.1), so the bucket
     // aggregate is too small to repay the exchange the way the
     // shingle-volume postings scan does.
-    corpusMemo(minhashBandedMemo, s, d)(
+    minhashBandedMemo(s, s"$d/documents.parquet")(
       s.read.parquet(ensureMinhashBanded(s, d))
         .select("doc_id", "band", "band_key"))
 
@@ -140,8 +140,7 @@ object LlmPipeline {
     * per-call ensure (manifest listing + family-dir enumeration) to
     * once per session per corpus state.
     */
-  private val minhashBandedMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long), DataFrame]()
+  private val minhashBandedMemo = new SessionMemo[DataFrame]
 
   /** Banded-signature rows for a postings subset, src provenance
     * carried through the aggregate (a doc lives in exactly one part
@@ -204,8 +203,8 @@ object LlmPipeline {
     * rowsFor(delta) unioned, removal = src anti-join. private[graft]:
     * Multimodal's phash table rides the same lifecycle.
     *
-    * INGEST CONTRACT (ADVICE r18): a doc_id must live in exactly ONE
-    * part file. The signature families group per (doc_id, src), so a
+    * INGEST CONTRACT: a doc_id must live in exactly ONE part file.
+    * The signature families group per (doc_id, src), so a
     * doc_id re-ingested into a second file would fragment into two
     * signature row-sets and silently diverge from the whole-corpus
     * groupBy semantics the SQL/oracle mirrors compute. The staged
@@ -214,8 +213,8 @@ object LlmPipeline {
     * violating corpus fails the build loudly.
     */
   private[graft] def ensureRowSubstrate(s: SparkSession, family: String,
-      table: String, lines: Seq[String])(
-      rowsFor: Seq[String] => DataFrame): String =
+      table: String)(rowsFor: Seq[String] => DataFrame): String = {
+    val lines = Storage.manifestLines(s, table)
     Storage.ensureManifestKeyedWithLines(s, family, table, lines)(
       fullBuild = pinned => rowsFor(pinned),
       deltaBuild = (prev, added) => prev.unionByName(rowsFor(added)),
@@ -224,10 +223,9 @@ object LlmPipeline {
       // data file — every artifact row then carries the same src by
       // construction, so a doc_id cannot span two part files. Skipping
       // it saves a full staged-artifact read + aggregate job per cold
-      // build at single-file corpora (every test SF — the r20
-      // measurement put the ensure leg at >3/4 of the postings build)
-      // while the multi-file corpora the contract exists for still pay
-      // the honest check (VERDICT r20 #5).
+      // build at single-file corpora (every test SF; the ensure leg was
+      // measured at >3/4 of the postings build) while the multi-file
+      // corpora the contract exists for still pay the honest check.
       validate = tmp => if (lines.length > 1) {
         val staged = s.read.parquet(tmp)
         if (staged.columns.contains("doc_id") && staged.columns.contains("src")) {
@@ -241,6 +239,7 @@ object LlmPipeline {
               "one part file (re-ingested doc in a delta file?)")
         }
       })
+  }
 
   /** Inverted-index rows for a set of documents part files: one row per
     * (doc, distinct shingle), keyed by the shingle's 60-bit base hash,
@@ -269,8 +268,7 @@ object LlmPipeline {
 
   private[graft] def ensureNgramPostings(s: SparkSession, d: String): String = {
     val table = s"$d/documents.parquet"
-    ensureRowSubstrate(s, NgramPostingsFamily, table,
-      Storage.manifestLines(s, table))(ngramPostingsRows(s, _))
+    ensureRowSubstrate(s, NgramPostingsFamily, table)(ngramPostingsRows(s, _))
   }
 
   /** The banded-signature artifact derives from the POSTINGS artifact,
@@ -285,13 +283,11 @@ object LlmPipeline {
   private[graft] def ensureMinhashBanded(s: SparkSession, d: String): String = {
     val table = s"$d/documents.parquet"
     val lines = Storage.manifestLines(s, table)
-    lazy val posts = s.read.parquet(
-      ensureRowSubstrate(s, NgramPostingsFamily, table, lines)(
-        ngramPostingsRows(s, _)))
+    lazy val posts = s.read.parquet(ensureNgramPostings(s, d))
     def rowsFor(paths: Seq[String], full: Boolean): DataFrame = {
       import s.implicits._
       val base =
-        if (full) posts // the postings artifact covers exactly `lines`
+        if (full) posts // postings key on the same manifest as `lines`
         else posts.join(
           broadcast(paths.map(Storage.normSrcStr).toDF("src")),
           Seq("src"), "left_semi")
@@ -331,8 +327,7 @@ object LlmPipeline {
 
   private[graft] def ensureSimhashSig(s: SparkSession, d: String): String = {
     val table = s"$d/documents.parquet"
-    ensureRowSubstrate(s, SimhashSigFamily, table,
-      Storage.manifestLines(s, table))(simhashSigRows(s, _))
+    ensureRowSubstrate(s, SimhashSigFamily, table)(simhashSigRows(s, _))
   }
 
   /** Bucketed-embedding rows for a set of embeddings part files: label,
@@ -348,8 +343,7 @@ object LlmPipeline {
 
   private[graft] def ensureEmbedBucketed(s: SparkSession, d: String): String = {
     val table = s"$d/embeddings.parquet"
-    ensureRowSubstrate(s, EmbedBucketedFamily, table,
-      Storage.manifestLines(s, table))(embedBucketedRows(s, _))
+    ensureRowSubstrate(s, EmbedBucketedFamily, table)(embedBucketedRows(s, _))
   }
 
   /** Test seam: drop every substrate session memo so a spec can replay
@@ -459,7 +453,7 @@ object LlmPipeline {
   def dedupCc(s: SparkSession, d: String): DataFrame =
     ccLabelsFor(s, d).orderBy("doc_id")
 
-  /** Converged component labels, memoized per (session, dataset dir):
+  /** Converged component labels, memoized per (session, corpus state):
     * q_dedup_cc and q_dedup_cluster_stats both consume the SAME
     * label table, and each independent rebuild re-runs the whole
     * signature→banding→pairs→propagation pipeline (~2.5 s combined in
@@ -470,32 +464,10 @@ object LlmPipeline {
     * (ensureIvfIndex) applied to the cc stage. Keyed by session so a
     * stopped session's pinned blocks are never handed to a new one.
     */
-  /** Session memo keyed by (session, dir, documents mtime), evicting a
-    * superseded same-corpus entry so its pinned blocks become
-    * reclaimable — the shared discipline of the cc-label and
-    * substring-window memos (a fixture regenerated at the same path
-    * must miss: the ensureBloomIndex staleness rule; Derived.sourceMtime
-    * reads through the Hadoop FS so remote paths stamp correctly too).
-    */
-  private def corpusMemo[V](
-      memo: java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long), V],
-      s: SparkSession, d: String, table: String = "documents.parquet")(build: => V): V = {
-    val key = (s, d, Derived.sourceMtime(s, s"$d/$table"))
-    if (!memo.containsKey(key)) {
-      val it = memo.keys()
-      while (it.hasMoreElements) {
-        val k = it.nextElement()
-        if (k._1 == s && k._2 == d) memo.remove(k)
-      }
-    }
-    memo.computeIfAbsent(key, _ => build)
-  }
-
-  private val ccLabelsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long), DataFrame]()
+  private val ccLabelsMemo = new SessionMemo[DataFrame]
 
   private def ccLabelsFor(s: SparkSession, d: String): DataFrame =
-    corpusMemo(ccLabelsMemo, s, d)(
+    ccLabelsMemo(s, s"$d/documents.parquet")(
       ccLabels(minhashPairsFromBanded(minhashBanded(s, d))))
 
   /** Min-label-propagation core over an undirected pair list (doc_a,
@@ -700,11 +672,10 @@ object LlmPipeline {
     * minhashBanded discipline.
     */
   private[graft] def simhashSig(s: SparkSession, d: String): DataFrame =
-    corpusMemo(simhashSigMemo, s, d)(
+    simhashSigMemo(s, s"$d/documents.parquet")(
       s.read.parquet(ensureSimhashSig(s, d)).select("doc_id", "simhash"))
 
-  private val simhashSigMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long), DataFrame]()
+  private val simhashSigMemo = new SessionMemo[DataFrame]
 
   /** Pair-generation core for SimHash signatures (doc_id, simhash) —
     * factored out so specs can drive it with synthetic degenerate
@@ -944,7 +915,7 @@ object LlmPipeline {
   private[graft] val NgramDfCap = 100
 
   def dedupNgram(s: SparkSession, d: String): DataFrame =
-    ngramPairsFromPostings(ngramPostingsFanned(s, d))
+    ngramPairsFromPostings(ngramPostings(s, d))
 
   /** Inverted-index rows (doc_id, sh): one row per (doc, distinct
     * shingle), keyed by the shingle's 60-bit base hash, not the shingle
@@ -955,33 +926,8 @@ object LlmPipeline {
     * fingerprint column here accepts.
     */
   private[graft] def ngramPostings(s: SparkSession, d: String): DataFrame =
-    corpusMemo(ngramPostingsMemo, s, d)(
+    ngramPostingsMemo(s, s"$d/documents.parquet")(
       s.read.parquet(ensureNgramPostings(s, d)).select("doc_id", "sh"))
-
-  /** The postings scan PRE-FANNED on the posting-list key, for the
-    * PAIR-GENERATION consumers only (q_dedup_ngram,
-    * q_dedup_collapsed_jaccard): the compacted artifact is ONE file at
-    * test SFs (Storage.compactSmallFiles), so the intersection
-    * aggregate's map side otherwise runs on one core; keyed on sh the
-    * groupBy reuses this exchange (guide §2.4 — consumer shuffle counts
-    * unchanged, PlanShapeSpec pins them), and at production split
-    * counts fanOut is the identity (guide §2.2). A SEPARATE memo, not a
-    * change to [[ngramPostings]], by measurement (r21): fanning the
-    * shared memo made the non-pair consumers (boilerplate, source
-    * overlap, the decontamination family — whose first step is NOT an
-    * sh-clustered aggregate or whose volume is too small to repay an
-    * exchange) flat-to-slower, while the two pair queries gained
-    * 1.2–1.4×.
-    */
-  private val ngramPostingsFannedMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long), DataFrame]()
-
-  private def ngramPostingsFanned(s: SparkSession, d: String): DataFrame =
-    corpusMemo(ngramPostingsFannedMemo, s, d)({
-      val dir = ensureNgramPostings(s, d)
-      Tables.fanOut(
-        s.read.parquet(dir).select("doc_id", "sh"), Seq(dir), col("sh"))
-    })
 
   /** Session memo for the pinned inverted index: SEVEN registry queries
     * consume these rows (ngram/collapsed-jaccard pairs, boilerplate,
@@ -993,8 +939,7 @@ object LlmPipeline {
     * 100 TB lake runs once at ingest), so the memo holds a plain
     * parquet scan, not pinned blocks.
     */
-  private val ngramPostingsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long), DataFrame]()
+  private val ngramPostingsMemo = new SessionMemo[DataFrame]
 
   /** Jaccard-pair core over inverted-index rows (doc_id, sh) — factored
     * out so specs can drive it with a planted degenerate shingle.
@@ -1172,12 +1117,11 @@ object LlmPipeline {
     * embeddings manifest), the minhashBanded discipline.
     */
   private[graft] def embedBucketed(s: SparkSession, d: String): DataFrame =
-    corpusMemo(embedBucketedMemo, s, d, "embeddings.parquet")(
+    embedBucketedMemo(s, s"$d/embeddings.parquet")(
       s.read.parquet(ensureEmbedBucketed(s, d))
         .select("vec_id", "label", "q", "n2", "bucket"))
 
-  private val embedBucketedMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long), DataFrame]()
+  private val embedBucketedMemo = new SessionMemo[DataFrame]
 
   /** Pair-generation core for bucketed embeddings (vec_id, label, q, n2,
     * bucket) — the minhashPairsFromBanded discipline applied to the
@@ -2670,14 +2614,12 @@ object LlmPipeline {
     * train emits the merges, apply re-reads the final state, and both
     * chains are materialized by [[Pin.pin]] — so the second consumer
     * (whichever runs later) should pay a memo hit, not a second
-    * corpus aggregate + K rewrite passes. Same staleness contract as
-    * the postings/banded/cc memos (mtime-keyed, same-path eviction).
+    * corpus aggregate + K rewrite passes.
     */
-  private val bpeLoopMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long), (Seq[DataFrame], DataFrame)]()
+  private val bpeLoopMemo = new SessionMemo[(Seq[DataFrame], DataFrame)]
 
   private def bpeLoopFor(s: SparkSession, d: String): (Seq[DataFrame], DataFrame) =
-    corpusMemo(bpeLoopMemo, s, d)(bpeLoop(s, d))
+    bpeLoopMemo(s, s"$d/documents.parquet")(bpeLoop(s, d))
 
   /** The shared [[BpeIters]]-deep training loop: returns the per-iter
     * 1-row merge frames (train's output) and the final rewritten word
@@ -3462,13 +3404,12 @@ object LlmPipeline {
   /** Stride-1 window hashes (doc_id, pos, h) — the shared substrate of
     * the exact and winnowed substring-dedup forms below; checkpointed
     * because every consumer fans out over it, and MEMOIZED per
-    * (session, dataset dir) because three registry queries (stride-1,
+    * (session, corpus state) because three registry queries (stride-1,
     * winnow, auto) consume the same table and the W×-volume window
     * pass is each one's dominant cost — the ccLabelsMemo discipline:
     * build the index once, run every analysis against it.
     */
-  private val substringWindowsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long), DataFrame]()
+  private val substringWindowsMemo = new SessionMemo[DataFrame]
 
   /** Per-doc-distinct window hashes (doc_id, h) — the df-count and
     * join-leg input both the stride-1 form and the auto router's
@@ -3480,16 +3421,14 @@ object LlmPipeline {
     * ngramPostingsMemo — the pair join, span window and gaps-and-
     * islands accounting still run per invocation.
     */
-  private val substringDistinctMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long), DataFrame]()
+  private val substringDistinctMemo = new SessionMemo[DataFrame]
 
-  private val winnowFpsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long), DataFrame]()
+  private val winnowFpsMemo = new SessionMemo[DataFrame]
 
   /** Per-doc-distinct winnow fingerprints (doc_id, h) — the shared
     * substrate of dedupSubstringWinnow and the auto router's winnow
-    * branch (see the r15 scaladoc there). Read-through over the
-    * persisted artifact (ensureWinnowFps), the minhashBanded
+    * branch. Read-through over the persisted artifact
+    * (ensureWinnowFps), the minhashBanded
     * discipline: fingerprints are per-doc, so the manifest lifecycle's
     * append/removal legs apply verbatim. (The stride-1
     * substringWindows table below deliberately STAYS a session memo:
@@ -3498,7 +3437,7 @@ object LlmPipeline {
     * router sending production volume to THIS quarter-volume form.)
     */
   private def winnowFps(s: SparkSession, d: String): DataFrame =
-    corpusMemo(winnowFpsMemo, s, d)(
+    winnowFpsMemo(s, s"$d/documents.parquet")(
       s.read.parquet(ensureWinnowFps(s, d)).select("doc_id", "h"))
 
   // K is baked into the artifact rows, so the family name carries it:
@@ -3537,8 +3476,7 @@ object LlmPipeline {
     // (the K rename invalidated them by design; this reclaims the
     // bytes — at sf100 the K=8 artifact was ~9 GB)
     Derived.retireRetiredFamily(s, "graft-winnow-fps", table)
-    ensureRowSubstrate(s, WinnowFpsFamily, table,
-      Storage.manifestLines(s, table))(winnowFpsRows(s, _))
+    ensureRowSubstrate(s, WinnowFpsFamily, table)(winnowFpsRows(s, _))
   }
 
   /** q_substrate_stats — per-family footprint of the persisted dedup
@@ -3602,7 +3540,7 @@ object LlmPipeline {
   }
 
   private def substringWindows(s: SparkSession, d: String): DataFrame =
-    corpusMemo(substringWindowsMemo, s, d)(
+    substringWindowsMemo(s, s"$d/documents.parquet")(
       // fanOut before the W×-volume explode+md5 pass: the fixture scan
       // is one split, so unfanned the whole window pass runs on one
       // core (measured 4.1 s of the registry's slowest query at sf0.1);
@@ -3649,7 +3587,7 @@ object LlmPipeline {
           "winnow above 10M chars) or q_dedup_substring_winnow, or raise " +
           "spark.graft.substringStride1MaxChars to accept the cost explicitly.")
     val wins = substringWindows(s, d)
-    val ds = corpusMemo(substringDistinctMemo, s, d)(
+    val ds = substringDistinctMemo(s, s"$d/documents.parquet")(
       wins.select("doc_id", "h").distinct().pinned())
     val g = ds.groupBy("h").agg(count(lit(1)).as("df"))
       .where(col("df").between(2, SubDfCap)).select("h")
@@ -3764,16 +3702,15 @@ object LlmPipeline {
     * ceiling guard.
     */
   /** Total corpus chars — the stride-1 volume fence's input. Memoized
-    * per (session, dir, mtime): it is a pure function of the corpus,
+    * per (session, corpus state): it is a pure function of the corpus,
     * and unmemoized every q_dedup_substring call ran this eager
     * aggregate job (and q_dedup_substring_auto ran it TWICE — once to
     * route, once inside the routed stride-1 form).
     */
-  private val corpusCharsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long), Long]()
+  private val corpusCharsMemo = new SessionMemo[Long]
 
   private def corpusChars(s: SparkSession, d: String): Long =
-    corpusMemo(corpusCharsMemo, s, d)(
+    corpusCharsMemo(s, s"$d/documents.parquet")(
       Tables.documents(s, d)
         .agg(coalesce(sum(col("n_chars")), lit(0L)).as("v")).head.getLong(0))
 
@@ -3805,7 +3742,7 @@ object LlmPipeline {
       .groupBy(md5(coalesce(col("text"), lit(""))).as("norm_key"))
       .agg(min(col("doc_id")).as("doc_id"))
       .select("doc_id")
-    ngramPairsFromPostings(ngramPostingsFanned(s, d).join(reps, "doc_id"))
+    ngramPairsFromPostings(ngramPostings(s, d).join(reps, "doc_id"))
   }
 
   private[graft] val EditDistMax = 16

@@ -977,8 +977,7 @@ object Multimodal {
 
   private[graft] def ensurePhashTable(s: SparkSession, d: String): String = {
     val table = s"$d/documents.parquet"
-    LlmPipeline.ensureRowSubstrate(s, PhashFamily, table,
-      Storage.manifestLines(s, table))(phashRows(s, _))
+    LlmPipeline.ensureRowSubstrate(s, PhashFamily, table)(phashRows(s, _))
   }
 
   /** q_dedup_phash — perceptual near-duplicate image detection as a

@@ -560,6 +560,10 @@ class PlanShapeSpec extends AnyFunSuite {
       "q_agg_custdist" -> 3)           // per-cust agg + customer-side
                                        // exchange (agg reuses) + c_count
                                        // agg; order rides the agg exchange
+    // warm every memo under the session's default (AQE-on) conf, so a
+    // memo first built here gets the plan the pinned counts describe,
+    // whatever ran before this spec
+    expected.foreach { case (name, _) => SparkEntry.queries(name)(spark, d) }
     val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
