@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DecimalType, DoubleType, TimestampNTZType}
 
 /** Table access + determinism helpers shared by every operator.
@@ -97,91 +100,57 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = apply(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")
 
-  /** Scale-adaptive scan fan-out (optimization guide §2.2/§2.5, §6): the
-    * driver fixtures are single-file, single-row-group parquet, so every
-    * scan is ONE split — and a CPU-heavy map stage (explode + per-window
-    * md5, per-row digests, partial aggregation) runs on 1 of the
-    * session's cores while 31 idle. Parquet cannot split below the
-    * row-group, so the only way to engage the machine is an explicit
-    * exchange AFTER the scan. This helper adds that exchange **only
-    * when the scan under-parallelizes** (fewer input splits than
-    * `defaultParallelism`): at production scale the same table arrives
-    * in hundreds of splits and `fanOut` is the identity — no shuffle is
-    * added at 100 TB, so map-side combining above it is never lost
-    * where it matters. The repartition is KEYED (hash) on a
-    * high-cardinality column chosen by the call site — round-robin
-    * repartition would pay the sort-before-repartition pass
-    * (SPARK-23207) and guide §2.5 forbids rand-derived keys under
-    * retries; when the key is the downstream grouping key the
-    * aggregation reuses this exchange outright (guide §2.4), so the
-    * plan's shuffle count does not grow.
+  /** Spreads a plain scan over every core: adds a hash exchange to
+    * `defaultParallelism` partitions, keyed on `keys`, when `df` is a
+    * chain of `Project`/`Filter` over one file-source relation whose
+    * files pack into fewer splits than `defaultParallelism`, and
+    * returns `df` itself otherwise (an aggregate, join, exchange,
+    * generate, union or window anywhere in the plan, or enough splits).
     *
-    * The under-parallelization guard reads the SOURCE FILE LISTING, not
-    * `df.rdd.getNumPartitions` (VERDICT r20 #2: df.rdd compiles the
-    * DataFrame to an RDD — a full extra physical-planning pass on the
-    * driver per call; a split estimate from the listing costs at most a
-    * few getFileStatus calls and zero planning). `srcPaths` are the
-    * files/dirs the frame's leaf scan reads — the manifest-pinned part
-    * files for substrate builders, the table path for direct scans.
-    * The estimate replays Spark's own FilePartition math
-    * (maxSplitBytes = min(maxPartitionBytes, max(openCost,
-    * totalPadded/defaultParallelism))), so the fire/identity decision
-    * matches what the old RDD probe observed; listing work is bounded —
-    * `srcPaths.length >= cores` short-circuits to identity with zero FS
-    * calls (≥ N files always pack to ≥ ~N splits under that math), and
-    * a directory walk stops as soon as enough bytes are seen.
+    * Parquet cannot split below a row group, so a single-file table is
+    * one split and a CPU-heavy map stage above it (explode, per-window
+    * hashing, a partial aggregate) runs on one core. A table that
+    * arrives in enough splits gets no exchange, so map-side combining
+    * is kept where the data is large.
+    *
+    * The decision reads only the analyzed plan the Dataset already
+    * holds and the file listing its relation already made: no physical
+    * planning pass and no filesystem call. Splits are counted with
+    * Spark's FilePartition packing (maxSplit = min(maxPartitionBytes,
+    * max(openCost, padded / cores)), padded = bytes + files × openCost).
+    *
+    * The exchange is keyed because a round-robin repartition pays a
+    * local sort first (SPARK-23207) and rand-derived keys are unsafe
+    * under task retries; when the key is the downstream grouping key
+    * the aggregate reuses this exchange. `input_file_name()` is
+    * undefined above an exchange, so callers project it below this call.
     */
-  def fanOut(df: DataFrame, srcPaths: Seq[String], keys: Column*): DataFrame = {
+  def fanOut(df: DataFrame, keys: Column*): DataFrame = {
     val s = df.sparkSession
     val target = s.sparkContext.defaultParallelism
-    if (srcPaths.length < target &&
-        estimatedScanSplits(s, srcPaths, target) < target) {
-      if (keys.nonEmpty) df.repartition(target, keys: _*)
-      else df.repartition(target)
-    } else df
+    if (scanSplits(df.queryExecution.analyzed, s.sessionState.conf, target)
+        .exists(_ < target)) df.repartition(target, keys: _*)
+    else df
   }
 
-  private def confBytes(s: SparkSession, key: String, dflt: Long): Long =
-    try s.conf.getOption(key)
-      .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
-      .getOrElse(dflt)
-    catch { case scala.util.control.NonFatal(_) => dflt }
-
-  /** Estimated split count of a parquet scan over `paths`, per Spark's
-    * FilePartition packing. Early-exits once the accumulated padded
-    * bytes prove splits ≥ `target`, so the walk touches O(cores) files
-    * even on a production-sized directory.
+  /** Split count of a `Project`/`Filter` chain over one file-source
+    * relation; None for any other plan.
     */
-  private def estimatedScanSplits(s: SparkSession, paths: Seq[String],
-      target: Int): Long = {
-    val openCost = confBytes(s, "spark.sql.files.openCostInBytes", 4L << 20)
-    val maxPart = confBytes(s, "spark.sql.files.maxPartitionBytes", 128L << 20)
-    val enough = target.toLong * maxPart // padded bytes proving >= target splits
-    var padded = 0L
-    var nFiles = 0L
-    val it = paths.iterator
-    while (it.hasNext && padded < enough && nFiles < target) {
-      val p = new org.apache.hadoop.fs.Path(it.next())
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) {
-        val st = fs.getFileStatus(p)
-        if (st.isFile) { padded += st.getLen + openCost; nFiles += 1 }
-        else {
-          val files = fs.listFiles(p, true)
-          while (files.hasNext && padded < enough && nFiles < target) {
-            val f = files.next()
-            val name = f.getPath.getName
-            if (f.isFile && !name.startsWith("_") && !name.startsWith("."))
-              { padded += f.getLen + openCost; nFiles += 1 }
-          }
-        }
+  private def scanSplits(plan: LogicalPlan, conf: SQLConf, target: Int): Option[Long] =
+    plan match {
+      case p: Project => scanSplits(p.child, conf, target)
+      case f: Filter => scanSplits(f.child, conf, target)
+      case r: LogicalRelation => r.relation match {
+        case fs: HadoopFsRelation =>
+          val openCost = conf.filesOpenCostInBytes
+          val padded = fs.location.sizeInBytes + fs.location.inputFiles.length * openCost
+          val maxSplit = math.max(1L,
+            math.min(conf.filesMaxPartitionBytes, math.max(openCost, padded / target)))
+          Some((padded + maxSplit - 1) / maxSplit)
+        case _ => None
       }
+      case _ => None
     }
-    if (padded >= enough || nFiles >= target) return target.toLong
-    val bytesPerCore = padded / math.max(1, target)
-    val maxSplit = math.min(maxPart, math.max(openCost, bytesPerCore))
-    (padded + maxSplit - 1) / math.max(1L, maxSplit)
-  }
 
   /** Exact decimal sum of a ~2-decimal DOUBLE money column, returned as
     * DOUBLE. Summing doubles directly is partition-order dependent (and

@@ -4,15 +4,13 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
 
-  /** Verify's confs beyond the common set. SPARK_GRAFT_RELIABLE_PIN=true
-    * forces every pin() through the reliable-checkpoint path;
+  /** Verify's confs beyond the common set.
     * SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" sets arbitrary session confs for
     * gate legs (sweep's sf10 leg raises the stride-1 substring ceiling
     * this way).
     */
   def extraConfs(env: Map[String, String]): Seq[(String, String)] =
-    env.get("SPARK_GRAFT_RELIABLE_PIN").map("spark.graft.reliablePin" -> _).toSeq ++
-      env.get("SPARK_GRAFT_EXTRA_CONF").toSeq.flatMap(Sessions.parseConfList)
+    env.get("SPARK_GRAFT_EXTRA_CONF").toSeq.flatMap(Sessions.parseConfList)
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args

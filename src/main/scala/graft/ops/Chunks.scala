@@ -286,18 +286,15 @@ object Chunks {
       .select(col("l_suppkey").as("node_id"),
         concat(lit("f_"), lpad(col("l_orderkey").cast("string"), 12, "0")).as("filename"),
         col("l_linenumber").cast("int").as("seq"))
-    // `fan`: engage every core for the collect_set object aggregate when
-    // the scan under-parallelizes (single-split fixture files — guide
-    // §2.2; identity at production split counts). Keyed on the FULL
-    // grouping key so the (node, file) aggregate reuses this exchange
-    // (guide §2.4) — the plan's shuffle count does not grow. Only
-    // q_heartbeat_map_explode opts in: it must materialize the whole
-    // payload (explode's cardinality depends on it), where its siblings'
-    // `.count()` plans prune the payload expressions and an exchange
-    // would only add cost (the r20 blanket experiment measured exactly
-    // that: explode 2.30 → 1.62 s, every pruned sibling SLOWER).
-    (if (fan) Tables.fanOut(base, Seq(s"$d/lineitem.parquet"),
-        col("node_id"), col("filename"))
+    // `fan`: spread the collect_set object aggregate over every core.
+    // Keyed on the full grouping key so the (node, file) aggregate
+    // reuses this exchange and the plan's shuffle count does not grow.
+    // Only q_heartbeat_map_explode opts in: it must materialize the whole
+    // payload (explode's cardinality depends on it), while its siblings'
+    // `.count()` plans prune the payload expressions, so an exchange
+    // would only add cost (measured: explode 2.30 → 1.62 s, every pruned
+    // sibling slower).
+    (if (fan) Tables.fanOut(base, col("node_id"), col("filename"))
      else base)
       .groupBy("node_id", "filename")
       // a node holds a chunk ONCE: the fixture duplicates (suppkey,

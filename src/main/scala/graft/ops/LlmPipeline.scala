@@ -247,18 +247,16 @@ object LlmPipeline {
     * only meaningful before the first exchange).
     */
   private def ngramPostingsRows(s: SparkSession, paths: Seq[String]): DataFrame =
-    // fanOut below the shingle explode+md5 (and below the
-    // input_file_name projection, which an exchange would void): the
-    // single-split fixture scan otherwise runs the whole tokenize/
-    // shingle/hash pass on one core, and — because the BUILD's
-    // partitioning is the artifact's file layout — published the
-    // artifact as ONE file, making every consumer's scan single-task
-    // too. Identity at production split counts (guide §2.2, §6).
+    // fanOut below the shingle explode+md5 and above the
+    // input_file_name projection, which an exchange would void. The
+    // build's partitioning is the artifact's file layout, so an unfanned
+    // single-split scan would also publish a one-file artifact and make
+    // every consumer's scan single-task.
     withTk(Tables.fanOut(
       s.read.parquet(paths: _*)
         .select(col("doc_id"), Storage.normSrcCol(input_file_name()).as("src"),
           col("text")),
-      paths, col("doc_id")))
+      col("doc_id")))
       .select(col("doc_id"), col("src"),
         explode(expr(s"array_distinct($shingles)")).as("sg"))
       // md5_prefix64 ≡ CAST(conv(substring(md5(sg),1,15),16,10) AS BIGINT)
@@ -304,14 +302,13 @@ object LlmPipeline {
     * SimHash weighs shingles WITH multiplicity, postings are distinct.
     */
   private def simhashSigRows(s: SparkSession, paths: Seq[String]): DataFrame = {
-    // same fanOut rationale as ngramPostingsRows: parallel shingle+md5
-    // build, multi-split artifact, keyed on the signature grouping so
-    // the (doc_id, src) aggregate reuses the exchange
+    // same fanOut rationale as ngramPostingsRows; keyed on doc_id so the
+    // (doc_id, src) aggregate reuses the exchange
     val hs = withTk(Tables.fanOut(
       s.read.parquet(paths: _*)
         .select(col("doc_id"), Storage.normSrcCol(input_file_name()).as("src"),
           col("text")),
-      paths, col("doc_id")))
+      col("doc_id")))
       .select(col("doc_id"), col("src"),
         explode(expr(shingles)).as("sg"))
       .select(col("doc_id"), col("src"), expr("md5_prefix64(sg)").as("h"))
@@ -929,7 +926,7 @@ object LlmPipeline {
     ngramPostingsMemo(s, s"$d/documents.parquet")(
       s.read.parquet(ensureNgramPostings(s, d)).select("doc_id", "sh"))
 
-  /** Session memo for the pinned inverted index: SEVEN registry queries
+  /** Session memo for the inverted-index scan: SEVEN registry queries
     * consume these rows (ngram/collapsed-jaccard pairs, boilerplate,
     * source overlap, the three decontamination forms), and the
     * decontamination family reads them on TWO plan branches (benchmark
@@ -997,14 +994,13 @@ object LlmPipeline {
     * BoilerplateDfCap. The pre-filter signal for template/chrome removal
     * (a doc that is mostly high-df shingles is navigation or a license
     * page, not content) — the corpus-level complement of the intra-doc
-    * q_text_repetition score. Plan: the inverted index is built once and
-    * localCheckpoint-pinned (consumed by the df aggregate AND the
-    * join-back — the dedupIncremental branch-reuse lesson), df is one
+    * q_text_repetition score. Plan: both the df aggregate and the
+    * join-back scan the persisted postings artifact, df is one
     * combining aggregate, the join-back shuffles 16 B rows on the
     * shingle hash. Exact integer ppm — fully oracle-checked.
     */
   def boilerplateScore(s: SparkSession, d: String): DataFrame = {
-    val postings = ngramPostings(s, d) // memo-pinned; both branches reuse
+    val postings = ngramPostings(s, d)
     val dfs = postings.groupBy("sh")
       .agg(countDistinct(col("doc_id")).as("df"))
     postings.join(dfs, "sh")
@@ -1485,11 +1481,11 @@ object LlmPipeline {
       .withColumn("flip", expr(lshFlipExpr).cast("int"))
     val probeBuckets =
       if (multiProbe) "array(bucket, CAST(bucket ^ flip AS INT))" else "array(bucket)"
-    val probes = broadcast(b.where(col("vec_id") < RecallProbes)
+    val probes = b.where(col("vec_id") < RecallProbes)
       .select(col("vec_id").as("probe_id"), col("q").as("qa"),
-        expr(dotL("q", "q")).as("n2a"), expr(probeBuckets).as("probe_buckets")))
+        expr(dotL("q", "q")).as("n2a"), expr(probeBuckets).as("probe_buckets"))
     val scored = b.select(col("vec_id").as("cand_id"), col("q").as("qb"), col("bucket"))
-      .crossJoin(probes)
+      .crossJoin(broadcast(probes))
       .where(col("cand_id") =!= col("probe_id"))
       .select(col("probe_id"), col("cand_id"), col("bucket"), col("probe_buckets"),
         (expr(dotL("qa", "qb")).cast("double") /
@@ -2652,17 +2648,13 @@ object LlmPipeline {
     */
   private[graft] def bpeLoopDeep(s: SparkSession, d: String, iters: Int,
       pinEvery: Int, stopWhenExhausted: Boolean = true): (Seq[DataFrame], DataFrame) = {
-    // fanOut below the tokenize/explode/word-count pass: the corpus
-    // aggregate is the loop's only corpus-sized work and q_bpe_apply was
-    // the one leaderboard query with real core-scaling headroom left
-    // (8c/32c ratio 1.56, VERDICT r20) — on the single-split fixture
-    // scan the whole pass ran on one core. Keyed on doc_id (identity at
-    // production split counts, guide §2.2); the groupBy("w") sum is
-    // exact, so the merge sequence is byte-identical.
+    // fanOut below the tokenize/explode/word-count pass, the loop's only
+    // corpus-sized work. Keyed on doc_id; the groupBy("w") sum is exact,
+    // so the merge sequence does not depend on the partitioning.
     val words = Pin.pin(withTk(Tables.fanOut(
       Tables.documents(s, d)
         .select(col("doc_id"), coalesce(col("text"), lit("")).as("text")),
-      Seq(s"$d/documents.parquet"), col("doc_id")))
+      col("doc_id")))
       .select(explode(col("tk")).as("w"))
       .where(length(col("w")) >= 2)
       // the wrapper chars are reserved; a token carrying them would
@@ -3448,16 +3440,15 @@ object LlmPipeline {
   private[graft] lazy val WinnowFpsFamily = s"graft-winnow-fps-k$WinnowK"
 
   private def winnowFpsRows(s: SparkSession, paths: Seq[String]): DataFrame =
-    // src (input_file_name) is projected BELOW the fanOut exchange —
-    // it is undefined above a repartition — and the W×-volume window
-    // hashing runs above it, engaging every core on the single-split
-    // fixture scan (identity at production split counts, guide §2.2)
+    // src (input_file_name) is projected below the fanOut exchange,
+    // since it is undefined above one; the W×-volume window hashing
+    // runs above it
     Tables.fanOut(
       s.read.parquet(paths: _*)
         .where(col("n_chars") >= SubWinW)
         .select(col("doc_id"), Storage.normSrcCol(input_file_name()).as("src"),
           col("text"), col("n_chars")),
-      paths, col("doc_id"))
+      col("doc_id"))
       .select(col("doc_id"), col("src"),
         // native window-hash pass (see substringWindows)
         expr(s"win_hashes60(text, n_chars, $SubWinW)").as("hs"))
@@ -3541,10 +3532,7 @@ object LlmPipeline {
 
   private def substringWindows(s: SparkSession, d: String): DataFrame =
     substringWindowsMemo(s, s"$d/documents.parquet")(
-      // fanOut before the W×-volume explode+md5 pass: the fixture scan
-      // is one split, so unfanned the whole window pass runs on one
-      // core (measured 4.1 s of the registry's slowest query at sf0.1);
-      // at production split counts fanOut is the identity (guide §2.2)
+      // fanOut before the W×-volume window-hash explode.
       // win_hashes60 (native, functions/WinHashes60) replaces the
       // per-position substring→md5→hex→conv chain: one offsets walk +
       // one digest per window instead of an O(pos) re-scan and a hex
@@ -3554,7 +3542,7 @@ object LlmPipeline {
         Tables.documents(s, d)
           .where(col("n_chars") >= SubWinW)
           .select(col("doc_id"), col("text"), col("n_chars")),
-        Seq(s"$d/documents.parquet"), col("doc_id"))
+        col("doc_id"))
         .select(col("doc_id"),
           posexplode(expr(s"win_hashes60(text, n_chars, $SubWinW)")).as(Seq("p0", "h")))
         .select(col("doc_id"), (col("p0") + 1).cast("long").as("pos"), col("h"))

@@ -961,16 +961,14 @@ object Multimodal {
 
   private def phashRows(s: SparkSession, paths: Seq[String]): DataFrame = {
     import s.implicits._
-    // fanOut below the input_file_name projection: the per-doc image
-    // DECODE (the most expensive substrate build per byte) otherwise
-    // runs on the fixture scan's single split; identity at production
-    // split counts (guide §2.2)
+    // fanOut above the input_file_name projection, which an exchange
+    // would void, and below the per-doc image decode
     phashCoreSrc(graft.Tables.fanOut(
       s.read.parquet(paths: _*)
         .select(col("doc_id"),
           Storage.normSrcCol(input_file_name()).as("src"),
           coalesce(col("text"), lit("")).cast("binary").as("payload")),
-      paths, col("doc_id"))
+      col("doc_id"))
       .as[(Long, String, Array[Byte])])
       .toDF("doc_id", "src", "phash_hex")
   }

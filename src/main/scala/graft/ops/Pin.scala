@@ -11,21 +11,21 @@ import org.apache.spark.sql.DataFrame
   * live in executor memory, no filesystem round-trip — but its blocks
   * die with their executor, so on a real cluster a lost node would
   * kill the job (no lineage left to recover from). `pinned()` keeps
-  * the local-mode fast path and switches to a RELIABLE checkpoint
-  * (HDFS/object-store-backed, survives executor loss) when the session
-  * is not local or `spark.graft.reliablePin=true` forces it; the
-  * checkpoint dir falls back to `spark.graft.pinDir` (default under
-  * java.io.tmpdir) when the session has not set one.
+  * the fast path under a `local`/`local[...]` master, where every block
+  * lives in the one driver JVM, and switches to a RELIABLE checkpoint
+  * (HDFS/object-store-backed, survives executor loss) under any other
+  * master, `local-cluster[...]` included; the checkpoint dir falls back
+  * to `spark.graft.pinDir` (default under java.io.tmpdir) when the
+  * session has not set one.
   */
 object Pin {
 
-  def pin(df: DataFrame): DataFrame = {
+  def pin(df: DataFrame): DataFrame =
+    pin(df, reliable = !df.sparkSession.sparkContext.isLocal)
+
+  private[graft] def pin(df: DataFrame, reliable: Boolean): DataFrame = {
     val s = df.sparkSession
     val sc = s.sparkContext
-    val reliable = s.conf
-      .getOption("spark.graft.reliablePin")
-      .map(_.toBoolean)
-      .getOrElse(!sc.master.startsWith("local"))
     if (!reliable) df.localCheckpoint()
     else {
       if (sc.getCheckpointDir.isEmpty)
@@ -39,7 +39,7 @@ object Pin {
       // dropped once the checkpoint files are the source of truth —
       // but ONLY if this call created it: unpersisting a plan the
       // caller had already cached would silently drop the caller's
-      // cache entry as a side effect of pinning (ADVICE r12).
+      // cache entry as a side effect of pinning.
       if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
         df.checkpoint()
       else {

@@ -6,9 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pin — the lineage-cut helper behind every multi-consumer subtree.
   * Local mode must keep the fast localCheckpoint path; the cluster-safe
-  * reliable path (spark.graft.reliablePin=true) must produce identical
-  * results through a real on-disk checkpoint, because on a cluster a
-  * localCheckpoint's blocks die with a lost executor.
+  * reliable path, which any non-local master takes, must produce
+  * identical results through a real on-disk checkpoint, because on a
+  * cluster a localCheckpoint's blocks die with a lost executor.
   */
 class PinSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
@@ -20,39 +20,26 @@ class PinSpec extends AnyFunSuite {
     assert(df.count() == 100)
   }
 
-  test("pin: reliablePin=true checkpoints to disk and results are identical") {
+  test("pin: the reliable path checkpoints to disk and results are identical") {
     val mk = () => spark.range(1000)
       .select(col("id"), md5(col("id").cast("string")).as("h"))
-    val local = Pin.pin(mk()).orderBy("id").as[(Long, String)].collect().toSeq
-    spark.conf.set("spark.graft.reliablePin", "true")
-    try {
-      val reliable = Pin.pin(mk())
-      assert(reliable.orderBy("id").as[(Long, String)].collect().toSeq == local)
-      val ckptDir = spark.sparkContext.getCheckpointDir
-      assert(ckptDir.nonEmpty, "reliable pin must set a checkpoint dir")
-      // a pinned PIPELINE stays correct under the reliable flag: the
-      // substring dedup pins its window table for four consumers
-      val viaReliable = ops.LlmPipeline.dedupSubstring(spark, d)
-        .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
-      spark.conf.unset("spark.graft.reliablePin")
-      val viaLocal = ops.LlmPipeline.dedupSubstring(spark, d)
-        .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
-      assert(viaReliable == viaLocal)
-    } finally spark.conf.unset("spark.graft.reliablePin")
+    val local = Pin.pin(mk(), reliable = false)
+      .orderBy("id").as[(Long, String)].collect().toSeq
+    val reliable = Pin.pin(mk(), reliable = true)
+    assert(reliable.orderBy("id").as[(Long, String)].collect().toSeq == local)
+    val ckptDir = spark.sparkContext.getCheckpointDir
+    assert(ckptDir.nonEmpty, "reliable pin must set a checkpoint dir")
   }
 
   test("pin (reliable) leaves a caller-created cache in place") {
-    spark.conf.set("spark.graft.reliablePin", "true")
-    try {
-      val cached = spark.range(500).select(col("id"), (col("id") * 3).as("v")).persist()
-      cached.count()
-      assert(Pin.pin(cached).count() == 500)
-      // the old form persist()ed then finally-unpersist()ed the SAME plan,
-      // dropping the caller's cache as a side effect (ADVICE r12)
-      assert(cached.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
-        "pin unpersisted the caller's cache")
-      cached.unpersist()
-    } finally spark.conf.unset("spark.graft.reliablePin")
+    val cached = spark.range(500).select(col("id"), (col("id") * 3).as("v")).persist()
+    cached.count()
+    assert(Pin.pin(cached, reliable = true).count() == 500)
+    // persisting then unpersisting the SAME plan would drop the
+    // caller's cache as a side effect of pinning
+    assert(cached.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      "pin unpersisted the caller's cache")
+    cached.unpersist()
   }
 
   test("q_dedup_substring_auto: below the volume cap it is the stride-1 result") {

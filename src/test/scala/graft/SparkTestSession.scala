@@ -14,13 +14,12 @@ object SparkTestSession {
 
   /** The test session's confs beyond the common set.
     *
-    * GRAFT_TEST_RELIABLE_PIN=true forces every pin() through the
-    * reliable-checkpoint path. GRAFT_TEST_STATESTORE=rocksdb runs every
-    * stateful streaming spec on RocksDBStateStoreProvider (the backend a
-    * deployment swaps in when in-memory state commits become the
-    * bottleneck); `rocksdb-changelog` adds changelog checkpointing, so
-    * per-batch uploads become the delta log instead of full SST
-    * snapshots; any other value is taken as a provider class name.
+    * GRAFT_TEST_STATESTORE=rocksdb runs every stateful streaming spec on
+    * RocksDBStateStoreProvider (the backend a deployment swaps in when
+    * in-memory state commits become the bottleneck); `rocksdb-changelog`
+    * adds changelog checkpointing, so per-batch uploads become the delta
+    * log instead of full SST snapshots; any other value is taken as a
+    * provider class name.
     */
   def extraConfs(env: Map[String, String]): Seq[(String, String)] =
     Seq(
@@ -33,7 +32,6 @@ object SparkTestSession {
         s"/tmp/graft-test-ckpt-${java.util.UUID.randomUUID()}",
       "spark.sql.warehouse.dir" ->
         s"/tmp/graft-test-warehouse-${java.util.UUID.randomUUID()}") ++
-      env.get("GRAFT_TEST_RELIABLE_PIN").map("spark.graft.reliablePin" -> _) ++
       env.get("GRAFT_TEST_STATESTORE").toSeq.flatMap {
         case "rocksdb" => Seq(StateStoreProvider -> RocksDb)
         case "rocksdb-changelog" => Seq(StateStoreProvider -> RocksDb,
@@ -42,7 +40,8 @@ object SparkTestSession {
       }
 
   // GRAFT_TEST_MASTER=local-cluster[2,4,8192] runs the whole suite
-  // against real executor JVMs. The default local[4,2] is 4 threads with
+  // against real executor JVMs, with every pin() on the reliable
+  // checkpoint path (Pin picks it for any non-local master). The default local[4,2] is 4 threads with
   // spark.task.maxFailures=2 (local[n] alone is retryless, unlike any
   // real cluster): RetryStabilitySpec injects genuine first-attempt task
   // failures, and every other spec runs under the cluster failure model
