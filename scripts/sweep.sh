@@ -49,11 +49,11 @@ for sf in sf0.001 sf0.01 sf0.1 sf1 sf1gen sf10gen; do
   elif [ ! -d "$dir" ]; then
     if [ "$sf" = "sf1" ] && [ -d /root/testdata/sf0.1 ]; then
       # The driver has not generated sf1; stand the decade in with the
-      # StressProbe 10×-sf0.1 corpus (id-offset replicas — ADVERSARIAL
+      # `graft.Probe stress` 10×-sf0.1 corpus (id-offset replicas — ADVERSARIAL
       # for dedup: every doc ×10 verbatim, so df caps / hot buckets /
       # substring windows all bind) and run the SAME hash gate on it.
       echo "=== sweep sf1 (10x-sf0.1 stand-in) ==="
-      dir=$(sbt -batch "runMain graft.StressProbe /root/testdata/sf0.1 10 BUILD_ONLY" 2>&1 \
+      dir=$(sbt -batch "runMain graft.Probe stress /root/testdata/sf0.1 10 BUILD_ONLY" 2>&1 \
             | grep -o '/tmp/graft_stress_10x_[0-9a-f]*' | head -1)
       [ -n "$dir" ] || { echo "sweep: decade build failed"; exit 1; }
     else

@@ -1,12 +1,14 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Measurement harness for the IVF staleness contract (VERDICT r16 #4):
-  * how does recall@10 of the frozen-centroid persisted index degrade as
-  * appended mass drifts away from the clustered distribution, and where
-  * should the recluster threshold sit?
+/** Measurement harness for the IVF staleness contract: how does
+  * recall@10 of the frozen-centroid persisted index degrade as appended
+  * mass drifts away from the clustered distribution, and where should
+  * the recluster threshold sit?
   *
   * For each append fraction f of a 2000-vector base corpus, a fresh
   * index is built, a drifted partition (+1.0 per dimension — a moderate
@@ -16,7 +18,8 @@ import org.apache.spark.sql.functions._
   *   - recall@10 of the nprobe=1 bucket probe vs exact cosine truth,
   *     separately for base-distribution probes and drifted probes
   *   - the q_ivf_staleness drift ratio and recluster verdict
-  * Output: one line per fraction (BENCHNOTES r17 records the curve).
+  * Output: one line per fraction, then one line per split-vs-refit
+  * corpus size. Run as `graft.Probe ivf-drift`.
   */
 object IvfDriftProbe {
 
@@ -24,13 +27,6 @@ object IvfDriftProbe {
   private val NBase = 2000
   private val NProbes = 50
   private val K = 10
-
-  def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.build(s"local[$cpus]", cpus.toInt)
-    spark.sparkContext.setLogLevel("ERROR")
-    try run(spark) finally spark.stop()
-  }
 
   private def vecs(spark: SparkSession, ids: Range, offset: Double,
       seed: Long): DataFrame = {
@@ -87,9 +83,9 @@ object IvfDriftProbe {
       .agg(max("count")).collect().head.getLong(0) / total
   }
 
-  private def measure(spark: SparkSession, frac: Double, offset: Double): Unit = {
-    val dir = s"/tmp/graft-ivf-drift-" +
-      java.util.UUID.randomUUID().toString.take(8)
+  private def measure(spark: SparkSession, scratch: Path, frac: Double,
+      offset: Double): Unit = {
+    val dir = Files.createTempDirectory(scratch, "drift-").toString
     val nApp = (NBase * frac).toInt
     vecs(spark, 0 until NBase, 0.0, 42).coalesce(1)
       .write.parquet(s"$dir/embeddings.parquet")
@@ -122,22 +118,20 @@ object IvfDriftProbe {
       .join(appCells, Seq("bucket"), "left_semi").count()
   }
 
-  /** The two maintenance actions head-to-head on the same drifted
-    * corpus (VERDICT r17 missing #4): the PARTIAL split (hot cells
-    * only, INDEX rows only) vs the FULL refit (whole-corpus re-read +
-    * KMeans). Wall times converge at local scale (both rewrite the
-    * index-sized artifact); the structural differences are what matter
-    * at 100 TB: the split never touches a corpus byte (it runs against
-    * archived/cold corpus files — the spec corrupts them first), fits
-    * KMeans over the hot-cell mass only, and keeps every cold
-    * assignment verbatim, where the refit re-reads the corpus and
-    * moves every vector. Both must separate the drifted mass from the
-    * base members it contaminated (mixed_base -> 0).
+  /** The two maintenance actions head-to-head on the same drifted corpus:
+    * the PARTIAL split (hot cells only, INDEX rows only) vs the FULL
+    * refit (whole-corpus re-read + KMeans). Wall times converge at local
+    * scale (both rewrite the index-sized artifact); the structural
+    * differences are what matter at 100 TB: the split never touches a
+    * corpus byte (it runs against archived/cold corpus files — the spec
+    * corrupts them first), fits KMeans over the hot-cell mass only, and
+    * keeps every cold assignment verbatim, where the refit re-reads the
+    * corpus and moves every vector. Both must separate the drifted mass
+    * from the base members it contaminated (mixed_base -> 0).
     */
-  private def splitVsRefit(spark: SparkSession, nBase: Int): Unit = {
+  private def splitVsRefit(spark: SparkSession, scratch: Path, nBase: Int): Unit = {
     def build(tag: String): String = {
-      val dir = s"/tmp/graft-ivf-splitvs-$tag-" +
-        java.util.UUID.randomUUID().toString.take(8)
+      val dir = Files.createTempDirectory(scratch, s"splitvs-$tag-").toString
       vecs(spark, 0 until nBase, 0.0, 42).coalesce(4)
         .write.parquet(s"$dir/embeddings.parquet")
       ops.LlmPipeline.ensureIvfIndex(spark, dir)
@@ -150,33 +144,32 @@ object IvfDriftProbe {
       val t0 = System.nanoTime(); val a = f
       (a, (System.nanoTime() - t0) / 1e9)
     }
+    def mixed(d: String) = mixedBase(spark, ops.LlmPipeline.ivfIndexDir(spark, d))
     val dSplit = build("split")
-    val mixedBefore = mixedBase(spark,
-      ops.LlmPipeline.ivfIndexDir(spark, dSplit))
+    val mixedBefore = mixed(dSplit)
     val (didSplit, tSplit) = timed(ops.LlmPipeline.ivfSplitHotCells(spark, dSplit))
-    val mixedAfterSplit = mixedBase(spark,
-      ops.LlmPipeline.ivfIndexDir(spark, dSplit))
+    val mixedAfterSplit = mixed(dSplit)
     val dRefit = build("refit")
     val (didRefit, tRefit) = timed(ops.LlmPipeline.ivfReclusterIfStale(spark, dRefit))
-    val mixedAfterRefit = mixedBase(spark,
-      ops.LlmPipeline.ivfIndexDir(spark, dRefit))
+    val mixedAfterRefit = mixed(dRefit)
     println(f"split-vs-refit nBase=$nBase%d: split ran=$didSplit " +
       f"$tSplit%6.2fs (mixed_base $mixedBefore%d -> $mixedAfterSplit%d, corpus NOT read); " +
       f"refit ran=$didRefit $tRefit%6.2fs (-> $mixedAfterRefit%d, corpus re-read)")
   }
 
-  private def run(spark: SparkSession): Unit = {
+  /** The whole curve, each corpus in its own dir under `scratch`. */
+  def run(spark: SparkSession, scratch: Path): Unit = {
     println(f"${"offset"}%6s ${"frac"}%6s ${"n_app"}%6s ${"ratio"}%8s " +
       f"${"frac_m"}%8s ${"reclust"}%8s ${"recall_base"}%12s " +
       f"${"recall_drift"}%13s ${"max_cell"}%10s")
     // drift-magnitude sweep at a fixed 25% append
     for (offset <- Seq(0.0, 0.1, 0.25, 0.5, 1.0, 2.0))
-      measure(spark, 0.25, offset)
+      measure(spark, scratch, 0.25, offset)
     // append-fraction sweep at a fixed moderate drift
     for (frac <- Seq(0.05, 0.10, 0.50, 1.00))
-      measure(spark, frac, 1.0)
+      measure(spark, scratch, frac, 1.0)
     // the maintenance actions head-to-head on the drifted shape
     for (nBase <- Seq(2000, 20000, 100000))
-      splitVsRefit(spark, nBase)
+      splitVsRefit(spark, scratch, nBase)
   }
 }

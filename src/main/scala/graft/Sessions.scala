@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one session builder every entry point uses (Bench, Verify,
-  * Explain, the probes, the test session). A caller states only what
+  * Probe, the test session). A caller states only what
   * differs for it — master, shuffle partitions, extra confs — and the
   * conf decision itself is the pure, ordered list `confs` returns:
   * common confs, then local-cluster executor wiring, then the caller's

@@ -1,12 +1,12 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 
 import graft.ops.Streaming
 import graft.ops.Streaming.Heartbeat
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 /** Dev tool: steady-state THROUGHPUT of the true-streaming surface —
   * the evidence class the batch bench cannot produce. Bench.scala times
@@ -32,12 +32,11 @@ import org.apache.spark.sql.streaming.OutputMode
   * streaming (ops/Streaming.scala:223-345), and this probe records what
   * they sustain per second on the declared local[32] target.
   *
-  * Usage: runMain graft.StreamBench [rowsPerBatch] [nBatches]
-  * (defaults 100000, 30). Each stateful leg runs once per state-store
-  * backend (HDFS-backed in-memory AND RocksDB — the production swap
-  * when commits dominate; SPARK_GRAFT_STATE_BACKENDS overrides).
-  * Prints one summary JSON line (file copy at
-  * /tmp/graft_stream_bench.json) for BENCHNOTES.
+  * Run as `graft.Probe stream [rowsPerBatch] [nBatches]` (defaults
+  * 100000, 30). Each stateful leg runs once per state-store backend
+  * (HDFS-backed in-memory AND RocksDB — the production swap when
+  * commits dominate; SPARK_GRAFT_STATE_BACKENDS overrides). Returns one
+  * summary JSON line.
   */
 object StreamBench {
 
@@ -59,37 +58,40 @@ object StreamBench {
   private final case class Result(name: String, rowsPerSec: Double,
                                   batches: Int, rows: Long)
 
+  /** Leading micro-batches left out of the steady state. */
+  val Warmup = 5
+
   /** Run one streaming pipeline for `nBatches` micro-batches and report
-    * steady-state throughput (batches after `warmup`, from the engine's
-    * numInputRows / triggerExecution telemetry).
+    * steady-state throughput (batches after `Warmup`).
     */
-  private def run(s: SparkSession, name: String, df: DataFrame,
-                  mode: OutputMode, nBatches: Int, warmup: Int = 5): Result = {
-    val ckpt = Files.createTempDirectory(s"graft-streambench-$name").toString
+  private def runLeg(s: SparkSession, scratch: Path, name: String,
+                     df: DataFrame, mode: OutputMode, nBatches: Int): Result = {
+    val ckpt = Files.createTempDirectory(scratch, name).toString
     val q = df.writeStream.format("noop").outputMode(mode)
       .option("checkpointLocation", ckpt).start()
     try {
       while (Option(q.lastProgress).forall(_.batchId < nBatches) && q.isActive)
         q.awaitTermination(200)
-      // a failed stream must not read as a slow one
-      q.exception.foreach(e => throw e)
-      val prog = q.recentProgress.toSeq
-        .filter(p => p.batchId >= warmup && p.numInputRows > 0)
-      val rows = prog.map(_.numInputRows).sum
-      val secs = prog
-        .flatMap(p => Option(p.durationMs.get("triggerExecution")).map(_.toLong))
-        .sum / 1000.0
-      Result(name, if (secs > 0) rows / secs else 0.0, prog.size, rows)
-    } finally {
-      q.stop()
-      // deleted after spark.stop(), not here: the state-store maintenance
-      // threads flush asynchronously past q.stop(), and deleting under
-      // them spews chmod/FileNotFound noise into the next query's run
-      ckpts += ckpt
-    }
+      steady(name, q, Warmup, rowsPerInput = 1)
+    } finally q.stop()
   }
 
-  private val ckpts = scala.collection.mutable.ArrayBuffer[String]()
+  /** Throughput of `q`'s batches from `warmup` on that read any input,
+    * from the engine's numInputRows / triggerExecution telemetry, each
+    * input row worth `rowsPerInput` rows. A failed stream throws: it
+    * must not read as a slow one.
+    */
+  private def steady(name: String, q: StreamingQuery, warmup: Int,
+                     rowsPerInput: Long): Result = {
+    q.exception.foreach(e => throw e)
+    val prog = q.recentProgress.toSeq
+      .filter(p => p.batchId >= warmup && p.numInputRows > 0)
+    val rows = prog.map(_.numInputRows).sum * rowsPerInput
+    val secs = prog
+      .flatMap(p => Option(p.durationMs.get("triggerExecution")).map(_.toLong))
+      .sum / 1000.0
+    Result(name, if (secs > 0) rows / secs else 0.0, prog.size, rows)
+  }
 
   /** Live file-tail ingest throughput: `nFiles` varint-framed heartbeat
     * spool files pre-written, then tailed by LiveIngest.heartbeatStream
@@ -98,10 +100,10 @@ object StreamBench {
     * the reference's heartbeat fan-in. numInputRows counts FILES at
     * this source, so frames/s is derived via framesPerFile.
     */
-  private def runLiveIngest(s: SparkSession, nFiles: Int,
+  private def runLiveIngest(s: SparkSession, scratch: Path, nFiles: Int,
                             framesPerFile: Int, warmupBatches: Int = 2): Result = {
     import graft.sources.{LiveIngest, ProtoChunkSource, ProtoIngest}
-    val base = Files.createTempDirectory("graft-streambench-live").toString
+    val base = Files.createTempDirectory(scratch, "live").toString
     val dir = s"$base/frames"
     new java.io.File(dir).mkdirs()
     val frames = ProtoChunkSource.heartbeatFrameBytes(
@@ -121,53 +123,26 @@ object StreamBench {
         q.awaitTermination(200)
         seenFiles = q.recentProgress.map(_.numInputRows).sum
       }
-      q.exception.foreach(e => throw e)
-      val prog = q.recentProgress.toSeq
-        .filter(p => p.batchId >= warmupBatches && p.numInputRows > 0)
-      val decoded = prog.map(_.numInputRows).sum * framesPerFile
-      val secs = prog
-        .flatMap(p => Option(p.durationMs.get("triggerExecution")).map(_.toLong))
-        .sum / 1000.0
-      Result("live_file_tail_decode",
-        if (secs > 0) decoded / secs else 0.0, prog.size, decoded)
-    } finally {
-      q.stop()
-      ckpts += base
-    }
+      steady("live_file_tail_decode", q, warmupBatches, framesPerFile)
+    } finally q.stop()
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
-  }
-
-  def main(args: Array[String]): Unit = {
-    val rowsPerBatch = args.headOption.map(_.toInt).getOrElse(100000)
-    val nBatches = if (args.length > 1) args(1).toInt else 30
-    // fewer batches than the warmup window would "measure" an empty
-    // steady state and print a plausible-looking all-zero record
-    require(nBatches > 5, s"nBatches must exceed the 5-batch warmup, got $nBatches")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_MASTER=local-cluster[2,4,8192] measures the stateful
-    // legs across real executor JVMs (state store instances live in the
-    // executors; progress telemetry crosses the RPC boundary)
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = Sessions.build(master, cpus.toInt)
-
+  /** Every leg, with checkpoints and spool files under `scratch`; the
+    * caller deletes it after `spark.stop()`, since state-store threads
+    * flush past `q.stop()`. Returns the summary JSON line, which the
+    * caller prints after `spark.stop()` too, so shutdown logs do not
+    * interleave with it. `nBatches` must exceed `Warmup`.
+    */
+  def measure(spark: SparkSession, rowsPerBatch: Int, nBatches: Int,
+      scratch: Path): String = {
     def hb = hbStream(spark, rowsPerBatch, nodes = 200)
 
-    // cleanup must run even when a pipeline fails mid-sequence: every
-    // dir accumulated in ckpts so far (checkpoints + the live-ingest
-    // spool) would otherwise leak into /tmp on each failed run; the
-    // metric line still prints AFTER stop() (the Bench lesson: shutdown
-    // logs interleave past a pre-stop println on merged stdout+stderr)
-    val line = try {
-    // State-backend comparison (VERDICT r13 #3): every stateful leg is
-    // state-store-commit-bound, which is exactly what the RocksDB
-    // provider changes — run each stateful pipeline on both backends
-    // (providerClass is a runtime SQLConf; each query binds it at
-    // start). Stateless legs (passthrough, file tail) touch no state
-    // store and run once. SPARK_GRAFT_STATE_BACKENDS narrows the list.
+    // Every stateful leg is state-store-commit-bound, which is exactly
+    // what the RocksDB provider changes — run each stateful pipeline on
+    // every backend (providerClass is a runtime SQLConf; each query
+    // binds it at start). Stateless legs (passthrough, file tail) touch
+    // no state store and run once. SPARK_GRAFT_STATE_BACKENDS narrows
+    // the list.
     val backends = sys.env.getOrElse("SPARK_GRAFT_STATE_BACKENDS",
       "hdfs,rocksdb,rocksdb-changelog")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
@@ -182,35 +157,29 @@ object StreamBench {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
       case fqcn => fqcn
     }
+    // join legs spread keys over 50k nodes: ~2 rows/node/side/batch keeps
+    // the time-bounded fan-out ~4× instead of quadratic-in-batch
+    def wide = hbStream(spark, rowsPerBatch, nodes = 50000)
+    def leg(name: String, df: DataFrame, mode: OutputMode) =
+      runLeg(spark, scratch, name, df, mode, nBatches)
     val stateful = try {
       backends.flatMap { b =>
         spark.conf.set("spark.sql.streaming.stateStore.providerClass", providerOf(b))
         spark.conf.set("spark.sql.streaming.stateStore.rocksdb." +
           "changelogCheckpointing.enabled", (b == "rocksdb-changelog").toString)
         Seq(
-          run(spark, s"watermarked_counts:$b", Streaming.watermarkedCounts(hb),
-            OutputMode.Update(), nBatches),
-          run(spark, s"session_windows:$b", Streaming.sessionizedStream(hb),
-            OutputMode.Append(), nBatches),
-          run(spark, s"dedup_within_watermark:$b",
-            Streaming.dedupWithinWatermark(hb).toDF(),
-            OutputMode.Append(), nBatches),
-          run(spark, s"stateful_liveness:$b", Streaming.statefulLiveness(hb).toDF(),
-            OutputMode.Update(), nBatches),
-          // join keys spread over 50k nodes: ~2 rows/node/side/batch keeps
-          // the time-bounded fan-out ~4× instead of quadratic-in-batch
-          run(spark, s"stream_stream_join:$b",
-            Streaming.streamStreamJoin(
-              hbStream(spark, rowsPerBatch, nodes = 50000),
-              hbStream(spark, rowsPerBatch, nodes = 50000)),
-            OutputMode.Append(), nBatches),
+          leg(s"watermarked_counts:$b", Streaming.watermarkedCounts(hb), OutputMode.Update()),
+          leg(s"session_windows:$b", Streaming.sessionizedStream(hb), OutputMode.Append()),
+          leg(s"dedup_within_watermark:$b", Streaming.dedupWithinWatermark(hb).toDF(),
+            OutputMode.Append()),
+          leg(s"stateful_liveness:$b", Streaming.statefulLiveness(hb).toDF(),
+            OutputMode.Update()),
+          leg(s"stream_stream_join:$b", Streaming.streamStreamJoin(wide, wide),
+            OutputMode.Append()),
           // FULL OUTER: both sides buffer to the watermark and emit
           // null-padded on eviction — the heaviest join state shape
-          run(spark, s"stream_stream_full_join:$b",
-            Streaming.streamStreamFullJoin(
-              hbStream(spark, rowsPerBatch, nodes = 50000),
-              hbStream(spark, rowsPerBatch, nodes = 50000)),
-            OutputMode.Append(), nBatches))
+          leg(s"stream_stream_full_join:$b", Streaming.streamStreamFullJoin(wide, wide),
+            OutputMode.Append()))
       }
     } finally {
       spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
@@ -220,26 +189,16 @@ object StreamBench {
     val results = Seq(
       // sink-bound ceiling: projection only, no state — everything else
       // is read relative to this number
-      run(spark, "passthrough", hb.toDF(), OutputMode.Append(), nBatches)) ++
+      leg("passthrough", hb.toDF(), OutputMode.Append())) ++
       stateful ++ Seq(
       // spool-file tail: 200 files × 5000 varint frames (≈1M heartbeats)
-      runLiveIngest(spark, nFiles = 200, framesPerFile = 5000))
+      runLiveIngest(spark, scratch, nFiles = 200, framesPerFile = 5000))
 
     results.foreach(r => println(
       f"[streambench] ${r.name}%-24s ${r.rowsPerSec}%,12.0f rows/s  " +
         f"(${r.rows}%,d rows over ${r.batches}%d steady batches)"))
     val qs = results.map(r => s""""${r.name}":${r.rowsPerSec.toLong}""")
       .mkString("{", ",", "}")
-    val l = s"""{"metric":"stream_rows_per_sec","unit":"rows/sec","rows_per_batch":$rowsPerBatch,"n_batches":$nBatches,"queries":$qs}"""
-    try Files.write(java.nio.file.Paths.get("/tmp/graft_stream_bench.json"),
-      l.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case scala.util.control.NonFatal(_) => () }
-    l
-    } finally {
-      spark.sparkContext.setLogLevel("ERROR")
-      spark.stop()
-      ckpts.foreach(c => deleteRecursively(new java.io.File(c)))
-    }
-    println(line)
+    s"""{"metric":"stream_rows_per_sec","unit":"rows/sec","rows_per_batch":$rowsPerBatch,"n_batches":$nBatches,"queries":$qs}"""
   }
 }

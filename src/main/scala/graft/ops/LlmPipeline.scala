@@ -1092,7 +1092,7 @@ object LlmPipeline {
     "list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
 
   /** Codegen'd exact integer dot (functions/ArrayDotLong; registered at
-    * session acquisition by the Verify/Bench/Explain mains and the test
+    * session acquisition by the Verify/Bench/Probe mains and the test
     * session, or by spark.sql.extensions=GraftExtensions in production):
     * Σ aᵢ·bᵢ over array<bigint>. Long addition is
     * associative, so the value is bit-identical to the interpreted

@@ -323,7 +323,7 @@ object Storage {
     * with NO grouping keys no sort is inserted — it is a plain
     * partial+final accumulation pass; the SinglePartition exchange is
     * the inherent 1-row global aggregate (both are the documented
-    * benign cases in graft.Explain's red-flag list).
+    * benign cases in `graft.Probe explain`'s red-flag list).
     */
   def profileColumns(s: SparkSession, d: String): DataFrame = {
     val aggs = ProfileCols.flatMap { c => Seq(

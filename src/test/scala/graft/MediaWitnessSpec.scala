@@ -398,7 +398,7 @@ class MediaWitnessSpec extends AnyFunSuite {
   }
 
   test("volume media corpus: every generated asset decodes through a REAL branch") {
-    // the sf-proportional decode tier (StressProbe media_decode_volume)
+    // the sf-proportional decode tier (graft.Probe stress media_decode_volume)
     // is only evidence if no asset falls back to the md5 stub; pin that
     // on a small corpus here, one of each generator branch included
     val spark = SparkTestSession.spark

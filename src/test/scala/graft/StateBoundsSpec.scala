@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Streaming STATE-SIZE bounds (VERDICT r14 #6): StreamBench measures
+/** Streaming STATE-SIZE bounds: `graft.Probe stream` measures
   * rows/s; these specs assert the other half of the stateful contract —
   * state stays BOUNDED under watermark eviction. Every stateful leg
   * runs N watermark-advancing rounds (each round jumps event time by
@@ -21,7 +21,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Runs on BOTH production RocksDB postures (plain and changelog-
   * checkpointing) plus the default HDFS-backed provider: the provider
   * class is a per-query-start conf, so one JVM covers all three, same
-  * as StreamBench's tri-backend loop.
+  * as the stream probe's tri-backend loop.
   */
 class StateBoundsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
