@@ -214,6 +214,11 @@ object Derived {
     * against the winner's published dir and its temp dir is discarded.
     * In-JVM races are single-flighted through a per-dir lock with a
     * post-lock marker recheck.
+    *
+    * A call that publishes also retires the superseded generations of
+    * this (family, dataset) ([[retireSuperseded]]) — the one place the
+    * store's generation GC runs, so every family gets it and a warm
+    * call (marker present) never lists the family dir.
     */
   def ensure(s: SparkSession, family: String, sourceFile: String,
              version: String = "", marker: String = "_SUCCESS")
@@ -264,9 +269,9 @@ object Derived {
               s"Derived.ensure($family): publish rename to $dir failed and no complete artifact exists")
         } else {
           // Hadoop rename into a dir that APPEARED between the recheck
-          // above and here NESTS tmp inside it and still returns true
-          // (ADVICE r13): a stray "<dir>/<family>….build-xxxx" subtree
-          // that directory-recursive readers would pick up. Detect and
+          // above and here NESTS tmp inside it and still returns true:
+          // a stray "<dir>/<family>….build-xxxx" subtree that
+          // directory-recursive readers would pick up. Detect and
           // remove the nested leftover; the racer's published artifact
           // (same source, same version ⇒ same content) stays.
           val nested = new org.apache.hadoop.fs.Path(s"$dir/${tmp.getName}")
@@ -274,6 +279,7 @@ object Derived {
           if (!fs.exists(success))
             throw new IllegalStateException(
               s"Derived.ensure($family): published $dir has no $marker after rename")
+          retireSuperseded(s, family, sourceFile, dir, marker)
         }
       }
     }
@@ -305,9 +311,10 @@ object Derived {
     */
   private[graft] var generationTtlMs: Long = 3600L * 1000
 
-  /** Retire superseded generations after a publish: of this dataset's
-    * COMPLETE artifact dirs, keep `keepDir` (the one just published)
-    * plus the [[keepGenerations]] most-recent others, delete the rest —
+  /** Retire superseded generations after a publish ([[ensure]] calls
+    * it once its rename lands): of this dataset's COMPLETE artifact
+    * dirs, keep `keepDir` (the one just published) plus the
+    * [[keepGenerations]] most-recent others, delete the rest —
     * the reference retires what it supersedes (compaction deletes
     * originals; the node-offline cascade deletes orphaned state,
     * controller/FileTable.java:59-97) where this lifecycle previously
@@ -355,10 +362,10 @@ object Derived {
     // legacy-label sweep: this dataset's pre-digest artifacts are
     // unreachable by every current code path (no keep budget — they
     // can never be served again), reclaimed once TTL-aged. The gate is
-    // the LONG orphanTtlMs, not generationTtlMs (ADVICE r19): in a
-    // mixed-version rolling deployment a process still running
-    // pre-digest code serves these dirs LIVE — an upgrade window, not
-    // an in-flight-query window, so the sweep must outwait a deploy.
+    // the LONG orphanTtlMs, not generationTtlMs: in a mixed-version
+    // rolling deployment a process still running pre-digest code
+    // serves these dirs LIVE — an upgrade window, not an
+    // in-flight-query window, so the sweep must outwait a deploy.
     val legacyPrefix = legacyLabelFor(sourceFile) + "_"
     if (legacyPrefix != prefix) fs.listStatus(fam).toSeq
       .filter { st =>
@@ -441,9 +448,9 @@ object Derived {
     * the NEXT `-r<n>` generation (atomic Derived.ensure into a new
     * dir) and the previous generation stays on disk for its in-flight
     * readers — [[resolveGeneration]] routes every new reader to the
-    * refit, and [[retireSuperseded]] reclaims older generations under
-    * the keep-budget on the same call. No path is ever absent, so no
-    * reader can race a rename window (ADVICE r17).
+    * refit, and the publishing ensure reclaims older generations under
+    * the keep-budget. No path is ever absent, so no reader can race a
+    * rename window.
     */
   def replaceVersioned(s: SparkSession, family: String, sourceFile: String,
       version: String, marker: String = "_SUCCESS")
@@ -457,8 +464,6 @@ object Derived {
          else n.stripPrefix(s"$baseName-r").toIntOption.getOrElse(0)) + 1
       case None => 1
     }
-    val published = ensure(s, family, sourceFile, s"$version-r$next", marker)(build)
-    retireSuperseded(s, family, sourceFile, published, marker)
-    published
+    ensure(s, family, sourceFile, s"$version-r$next", marker)(build)
   }
 }

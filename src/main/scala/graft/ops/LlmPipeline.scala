@@ -791,29 +791,9 @@ object LlmPipeline {
       case Some(ids) => minhashBanded(s, d).join(ids, Seq("doc_id"), "left_semi")
       case None => minhashBanded(s, d)
     }
-    val pairs = minhashPairsFromBanded(banded).pinned()
-    val docsInPairs = pairs.select(col("doc_a").as("doc_id"))
-      .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
-    val sh = verifyShingleHashes(s, d, docsInPairs).pinned()
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    // build-side choice is deliberately LEFT TO STATS (+ AQE at
-    // runtime): sh is candidate-set-bounded but NOT small-bounded — on
-    // an adversarial corpus the candidate docs' shingle table reaches
-    // corpus scale (sf100: ~450M rows; an r18 interim broadcast hint
-    // here cost q_dedup_near 96 → 468 s, the receipt that reverted
-    // it). When sh is genuinely small Catalyst broadcasts it and the
-    // n_inter aggregate rides pairs' pinned range partitioning for
-    // free; when it is not, the aggregate re-key is one honest
-    // exchange (PlanShapeSpec budgets 3 for the fixture's estimates).
-    val inter = pairs
-      .join(sh.select(col("doc_id").as("doc_a"), col("h")), Seq("doc_a"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("h")), Seq("doc_b", "h"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_inter"))
-    // inner join on inter: a zero-intersection candidate cannot pass
+    // inner join on n_inter: a zero-intersection candidate cannot pass
     // J > 1/2, so the left-coalesce of dedupVerify is dead weight here
-    pairs.join(inter, Seq("doc_a", "doc_b"))
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("n_a")), Seq("doc_a"))
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("n_b")), Seq("doc_b"))
+    pairIntersections(s, d, banded, "inner")
       .where(col("n_inter") * 2 > col("n_a") + col("n_b") - col("n_inter"))
       .select(col("doc_a"), col("doc_b"),
         (lit(1.0) - col("n_inter").cast("double") /
@@ -1935,7 +1915,7 @@ object LlmPipeline {
     * dirFor and ensure so the two can never disagree on the dir.
     */
   private def ivfManifestKey(s: SparkSession, d: String): String =
-    ivfKeyOf(Storage.manifestLines(s, s"$d/embeddings.parquet"))
+    Storage.manifestKey(Storage.manifestLines(s, s"$d/embeddings.parquet"))
 
   /** Metadata-only probe: is the CURRENT IVF index (this manifest key,
     * any refit generation) already published? One listing + marker
@@ -1945,11 +1925,6 @@ object LlmPipeline {
   private[graft] def ivfIndexReady(s: SparkSession, d: String): Boolean =
     Derived.resolveGeneration(s, IvfFamily, s"$d/embeddings.parquet",
       s"v2m${ivfManifestKey(s, d)}", IvfMarker).isDefined
-
-  private def ivfKeyOf(lines: Seq[String]): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(lines.mkString("\n").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
 
   /** The INDEX-BUILD job: fit the coarse quantizer once and persist the
     * searchable state — bucket assignments (vec_id, q, bucket) and the
@@ -2063,7 +2038,7 @@ object LlmPipeline {
     * 31-75, public GitHub).
     */
   /** The scheduled-retrain job the staleness verdict drives — the
-    * recluster ACTION completing VERDICT r16 #4's loop: when
+    * recluster ACTION closing the staleness loop: when
     * q_ivf_staleness flags recluster, re-fit the coarse quantizer on
     * the CURRENT corpus (the pinned listing) and atomically REPLACE the
     * index artifact; no-op when the verdict is quiet. This is the one
@@ -2082,15 +2057,10 @@ object LlmPipeline {
       val src = s"$d/embeddings.parquet"
       val lines = Storage.manifestLines(s, src)
       Derived.replaceVersioned(s, IvfFamily, src,
-        version = s"v2m${ivfKeyOf(lines)}", marker = IvfMarker) { tmp =>
+        version = s"v2m${Storage.manifestKey(lines)}", marker = IvfMarker) { tmp =>
         buildIvfIndexFrom(s,
           s.read.parquet(Storage.manifestPath(lines): _*), tmp)
-        val fs = new org.apache.hadoop.fs.Path(tmp)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.create(new org.apache.hadoop.fs.Path(tmp, Storage.SrcFormatMarker)).close()
-        val out = fs.create(new org.apache.hadoop.fs.Path(tmp, "_MANIFEST"))
-        try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-        finally out.close()
+        Storage.stampManifest(s, tmp, lines)
       }
       true
     }
@@ -2104,21 +2074,21 @@ object LlmPipeline {
     */
   private[graft] val IvfHotCellPpk = 500L
 
-  /** PARTIAL recluster (VERDICT r17 missing #4): when drift has piled
-    * the appended mass into a few cells, split THOSE cells (k=2 KMeans
-    * over each hot cell's own members) instead of re-fitting the whole
-    * quantizer — cost proportional to the hot-cell mass, not the
-    * corpus, which is the difference between a targeted maintenance
-    * action and a full retrain at 100 TB (faiss's split-then-refine
-    * idiom). Everything reads from INDEX rows (the stored
-    * milli-quantized vectors), never the corpus; vectors outside hot
-    * cells keep their buckets verbatim; the refit publishes as the
-    * next '-r<n>' generation (no reader ever sees an absent path) and
-    * re-baselines staleness: split cells adopt their appends into the
-    * clustered structure, so the stats table restarts with a fresh
-    * build row (computed from quantized vectors — within 1e-6 relative
-    * of the raw-embedding baseline, far inside the 1.5× threshold) and
-    * every row's appended flag clears. Returns whether a split ran.
+  /** PARTIAL recluster: when drift has piled the appended mass into a
+    * few cells, split THOSE cells (k=2 KMeans over each hot cell's own
+    * members) instead of re-fitting the whole quantizer — cost
+    * proportional to the hot-cell mass, not the corpus, which is the
+    * difference between a targeted maintenance action and a full
+    * retrain at 100 TB (faiss's split-then-refine idiom). Everything
+    * reads from INDEX rows (the stored milli-quantized vectors), never
+    * the corpus; vectors outside hot cells keep their buckets verbatim;
+    * the refit publishes as the next '-r<n>' generation (no reader ever
+    * sees an absent path) and re-baselines staleness: split cells adopt
+    * their appends into the clustered structure, so the stats table
+    * restarts with a fresh build row (computed from quantized vectors —
+    * within 1e-6 relative of the raw-embedding baseline, far inside the
+    * 1.5× threshold) and every row's appended flag clears. Returns
+    * whether a split ran.
     */
   def ivfSplitHotCells(s: SparkSession, d: String): Boolean = {
     import s.implicits._
@@ -2135,14 +2105,9 @@ object LlmPipeline {
     if (hot.isEmpty) return false
     val lines = Storage.manifestLines(s, src)
     Derived.replaceVersioned(s, IvfFamily, src,
-      version = s"v2m${ivfKeyOf(lines)}", marker = IvfMarker) { tmp =>
+      version = s"v2m${Storage.manifestKey(lines)}", marker = IvfMarker) { tmp =>
       splitCellsInto(s, idxDir, hot, tmp)
-      val fs = new org.apache.hadoop.fs.Path(tmp)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.create(new org.apache.hadoop.fs.Path(tmp, Storage.SrcFormatMarker)).close()
-        val out = fs.create(new org.apache.hadoop.fs.Path(tmp, "_MANIFEST"))
-      try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-      finally out.close()
+      Storage.stampManifest(s, tmp, lines)
     }
     true
   }
@@ -2274,18 +2239,18 @@ object LlmPipeline {
     // pinned full-build read, AND the written _MANIFEST — never two
     // separate snapshots that a concurrent append could split
     val lines = Storage.manifestLines(s, src)
+    val ver = s"v2m${Storage.manifestKey(lines)}"
     // a recluster refit publishes as a '-r<n>' GENERATION of this same
     // manifest key (Derived.replaceVersioned — readers of the previous
     // generation keep their files); resolve to the newest before the
     // base-version ensure, or a post-refit call would rebuild (or
     // serve) the superseded base
-    Derived.resolveGeneration(s, IvfFamily, src,
-        s"v2m${ivfKeyOf(lines)}", IvfMarker) match {
+    Derived.resolveGeneration(s, IvfFamily, src, ver, IvfMarker) match {
       case Some(latest) => ivfOracleIndexDir = Some(latest); return latest
       case None => ()
     }
     val published = Derived.ensure(s, IvfFamily, src,
-      version = s"v2m${ivfKeyOf(lines)}", marker = IvfMarker) { tmp =>
+      version = ver, marker = IvfMarker) { tmp =>
       // a base from before per-row provenance + staleness stats + the
       // base/appended census flag cannot extend or subtract — fall
       // through to the full build
@@ -2306,14 +2271,14 @@ object LlmPipeline {
         case Some((prevDir, prev)) if currentFormat(prevDir) &&
             ((prev -- lines.toSet).isEmpty || Storage.removalBaseTrusted(
               s, prevDir, s.read.parquet(s"$prevDir/assignments"))) =>
-          // evolve under FROZEN centroids (VERDICT r16 #3): subtract
-          // the removed files' vectors (anti-join on src provenance —
-          // the reference's node-offline cascade,
-          // controller/FileTable.java:59-97), assign the added files'
-          // vectors to their nearest previous centroid; surviving
-          // assignments stay byte-stable (probe results over kept
-          // vectors cannot move), centroids copy last as the commit
-          // marker. The general daily tick carries BOTH diffs at once.
+          // evolve under FROZEN centroids: subtract the removed files'
+          // vectors (anti-join on src provenance — the reference's
+          // node-offline cascade, controller/FileTable.java:59-97),
+          // assign the added files' vectors to their nearest previous
+          // centroid; surviving assignments stay byte-stable (probe
+          // results over kept vectors cannot move), centroids copy last
+          // as the commit marker. The general daily tick carries BOTH
+          // diffs at once.
           evolveIvfIndex(s, prevDir,
             Storage.manifestPath((prev -- lines.toSet).toSeq.sorted),
             Storage.manifestPath(lines.filterNot(prev)), tmp)
@@ -2322,16 +2287,8 @@ object LlmPipeline {
           buildIvfIndexFrom(s,
             s.read.parquet(Storage.manifestPath(lines): _*), tmp)
       }
-      val fs = new org.apache.hadoop.fs.Path(tmp)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.create(new org.apache.hadoop.fs.Path(tmp, Storage.SrcFormatMarker)).close()
-        val out = fs.create(new org.apache.hadoop.fs.Path(tmp, "_MANIFEST"))
-      try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-      finally out.close()
+      Storage.stampManifest(s, tmp, lines)
     }
-    // reached only when no complete generation existed (resolve above
-    // short-circuits otherwise), i.e. a build just published: GC
-    Derived.retireSuperseded(s, IvfFamily, src, published, marker = IvfMarker)
     ivfOracleIndexDir = Some(published)
     published
   }
@@ -3470,48 +3427,56 @@ object LlmPipeline {
     ensureRowSubstrate(s, WinnowFpsFamily, table)(winnowFpsRows(s, _))
   }
 
-  /** q_substrate_stats — per-family footprint of the persisted dedup
-    * substrates, SQL-visible (VERDICT r18 next #6: the winnow artifact
-    * was a ~9 GB outlier nobody could SEE without shelling du): one row
-    * per family with its published path, row count (parquet footer
-    * metadata — no data scan), and on-disk bytes. Six bounded FS/footer
-    * probes — metadata-sized at any corpus scale. No DuckDB oracle (the
-    * artifact dirs are engine-local state, the ivf_staleness rationale);
-    * LlmPipelineSpec pins shape and row-count consistency.
+  /** One persisted dedup substrate: its row `name` in
+    * q_substrate_stats and `CALL graft.ensure_dedup_substrates`, its
+    * artifact `family`, the dataset `table` it derives from, and its
+    * ensure entry point.
     */
+  private[graft] case class Substrate(name: String, family: String,
+      table: String, ensure: (SparkSession, String) => String)
+
+  /** The six dedup substrates in build order (minhash bands read the
+    * postings) — the one list the readiness gate, q_substrate_stats and
+    * the ingest-time CALL verb walk.
+    */
+  private[graft] lazy val substrates: Seq[Substrate] = Seq(
+    Substrate("ngram_postings", NgramPostingsFamily, "documents.parquet", ensureNgramPostings),
+    Substrate("minhash_banded", MinhashBandedFamily, "documents.parquet", ensureMinhashBanded),
+    Substrate("simhash", SimhashSigFamily, "documents.parquet", ensureSimhashSig),
+    Substrate("embed_bucketed", EmbedBucketedFamily, "embeddings.parquet", ensureEmbedBucketed),
+    Substrate("winnow_fps", WinnowFpsFamily, "documents.parquet", ensureWinnowFps),
+    Substrate("phash", Multimodal.PhashFamily, "documents.parquet", Multimodal.ensurePhashTable))
+
   /** Metadata-only probe: are all six dedup substrates current for
     * this corpus (completion marker present at the exact manifest
-    * key)? Two source listings + six marker probes, zero corpus reads
-    * — the SQL-surface registration gate
+    * key)? At most one listing per source table + six marker probes,
+    * zero corpus reads — the SQL-surface registration gate
     * (SqlSurface.registerDerivedViews).
     */
   private[graft] def substratesReady(s: SparkSession, d: String): Boolean = {
-    val docT = s"$d/documents.parquet"
-    val embT = s"$d/embeddings.parquet"
-    lazy val docKey = Storage.manifestKey(Storage.manifestLines(s, docT))
-    lazy val embKey = Storage.manifestKey(Storage.manifestLines(s, embT))
-    def ready(family: String, table: String, key: String): Boolean = {
-      val dir = Derived.dirFor(s, family, table, version = s"m$key")
-      val p = new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS")
+    val keys = scala.collection.mutable.Map.empty[String, String]
+    substrates.forall { sub =>
+      val table = s"$d/${sub.table}"
+      val key = keys.getOrElseUpdate(table,
+        Storage.manifestKey(Storage.manifestLines(s, table)))
+      val p = new org.apache.hadoop.fs.Path(
+        s"${Derived.dirFor(s, sub.family, table, version = s"m$key")}/_SUCCESS")
       p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
     }
-    ready(NgramPostingsFamily, docT, docKey) &&
-      ready(MinhashBandedFamily, docT, docKey) &&
-      ready(SimhashSigFamily, docT, docKey) &&
-      ready(WinnowFpsFamily, docT, docKey) &&
-      ready(Multimodal.PhashFamily, docT, docKey) &&
-      ready(EmbedBucketedFamily, embT, embKey)
   }
 
+  /** q_substrate_stats — per-family footprint of the persisted dedup
+    * substrates, SQL-visible (the winnow artifact was a ~9 GB outlier
+    * nobody could SEE without shelling du): one row per family with
+    * its published path, row count (parquet footer metadata — no data
+    * scan), and on-disk bytes. Six bounded FS/footer probes —
+    * metadata-sized at any corpus scale. No DuckDB oracle (the
+    * artifact dirs are engine-local state, the ivf_staleness
+    * rationale); LlmPipelineSpec pins shape and row-count consistency.
+    */
   def substrateStats(s: SparkSession, d: String): DataFrame = {
-    val fams: Seq[(String, String)] = Seq(
-      "embed_bucketed" -> ensureEmbedBucketed(s, d),
-      "minhash_banded" -> ensureMinhashBanded(s, d),
-      "ngram_postings" -> ensureNgramPostings(s, d),
-      "phash" -> Multimodal.ensurePhashTable(s, d),
-      "simhash" -> ensureSimhashSig(s, d),
-      "winnow_fps" -> ensureWinnowFps(s, d))
-    val rows = fams.map { case (family, dir) =>
+    val rows = substrates.map { sub =>
+      val dir = sub.ensure(s, d)
       val p = new org.apache.hadoop.fs.Path(dir)
       val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
       val bytes = fs.getContentSummary(p).getLength
@@ -3524,7 +3489,7 @@ object LlmPipeline {
               st.getPath, s.sparkContext.hadoopConfiguration))
           try in.getRecordCount finally in.close()
         }.sum
-      (family, nRows, bytes)
+      (sub.name, nRows, bytes)
     }
     import s.implicits._
     rows.toDF("family", "n_rows", "bytes").orderBy("family")
@@ -4478,30 +4443,46 @@ object LlmPipeline {
     * SHINGLE HASHES, not shingles: a 60-bit collision inside one doc
     * would undercount by one on both engines identically, the same
     * collision budget minhashBanded already accepts.) The pair list and
-    * the pruned hash table are localCheckpoint-pinned (2 and 3 consumers
-    * below).
+    * the pruned hash table are pinned in [[pairIntersections]].
     */
-  def dedupVerify(s: SparkSession, d: String): DataFrame = {
-    val pairs = minhashPairsFromBanded(minhashBanded(s, d)).pinned()
-    val docsInPairs = pairs.select(col("doc_a").as("doc_id"))
-      .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
-    val sh = verifyShingleHashes(s, d, docsInPairs).pinned()
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    // build side left to stats/AQE — sh can reach corpus scale on an
-    // adversarial corpus (see nearBandedVerified's receipt note)
-    val inter = pairs
-      .join(sh.select(col("doc_id").as("doc_a"), col("h")), Seq("doc_a"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("h")), Seq("doc_b", "h"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_inter"))
-    pairs
-      .join(inter, Seq("doc_a", "doc_b"), "left")
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("n_a")), Seq("doc_a"))
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("n_b")), Seq("doc_b"))
+  def dedupVerify(s: SparkSession, d: String): DataFrame =
+    pairIntersections(s, d, minhashBanded(s, d), "left")
       .select(col("doc_a"), col("doc_b"),
         expr("coalesce(n_inter, CAST(0 AS BIGINT)) * 1000000 DIV " +
           "(n_a + n_b - coalesce(n_inter, CAST(0 AS BIGINT)))").as("jaccard_ppm"))
       .withColumn("is_dup", col("jaccard_ppm") >= VerifyDupPpm)
       .orderBy("doc_a", "doc_b")
+
+  /** The exact-verify core shared by [[dedupVerify]] and
+    * [[nearBandedVerified]]: the candidate pairs of `banded` (pinned)
+    * joined (`joinType` "inner" or "left") to their shingle-hash
+    * intersection count `n_inter`, then to both docs' set sizes `n_a`
+    * and `n_b`. The shingle re-read is pruned to docs in ≥1 pair
+    * ([[verifyShingleHashes]]) and pinned (3 consumers).
+    *
+    * Build-side choice is deliberately LEFT TO STATS (+ AQE at
+    * runtime): the shingle table is candidate-set-bounded but NOT
+    * small-bounded — on an adversarial corpus it reaches corpus scale
+    * (sf100: ~450M rows; a broadcast hint here once cost q_dedup_near
+    * 96 → 468 s). When it is genuinely small Catalyst broadcasts it and
+    * the n_inter aggregate rides the pairs' pinned range partitioning
+    * for free; when it is not, the aggregate re-key is one honest
+    * exchange (PlanShapeSpec budgets 3 for the fixture's estimates).
+    */
+  private def pairIntersections(s: SparkSession, d: String,
+      banded: DataFrame, joinType: String): DataFrame = {
+    val pairs = minhashPairsFromBanded(banded).pinned()
+    val docsInPairs = pairs.select(col("doc_a").as("doc_id"))
+      .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
+    val sh = verifyShingleHashes(s, d, docsInPairs).pinned()
+    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
+    val inter = pairs
+      .join(sh.select(col("doc_id").as("doc_a"), col("h")), Seq("doc_a"))
+      .join(sh.select(col("doc_id").as("doc_b"), col("h")), Seq("doc_b", "h"))
+      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_inter"))
+    pairs.join(inter, Seq("doc_a", "doc_b"), joinType)
+      .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("n_a")), Seq("doc_a"))
+      .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("n_b")), Seq("doc_b"))
   }
 
   /** The verify stage's pruned shingle re-read: semi-join the corpus

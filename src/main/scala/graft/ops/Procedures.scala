@@ -36,15 +36,15 @@ object Procedures {
 
   /** Every persisted-artifact family store the engine writes — the
     * orphan GC's sweep surface. A family added anywhere must be listed
-    * here or its abandoned-dataset artifacts leak (GcOrphansSpec pins
-    * the count against the ensure entry points).
+    * here or its abandoned-dataset artifacts leak (GcOrphansSpec checks
+    * every family dir holding a dataset's entries is listed).
     */
   private[graft] def artifactFamilies: Seq[String] = Seq(
     Storage.ZonemapFamily, Storage.ZonemapMergedFamily, Storage.BloomFamily,
-    LlmPipeline.NgramPostingsFamily, LlmPipeline.MinhashBandedFamily,
-    LlmPipeline.SimhashSigFamily, LlmPipeline.EmbedBucketedFamily,
-    LlmPipeline.WinnowFpsFamily, LlmPipeline.IvfFamily,
-    LlmPipeline.JsonlExportFamily, Multimodal.PhashFamily)
+    LlmPipeline.IvfFamily, LlmPipeline.JsonlExportFamily,
+    graft.sources.MediaFixtures.FixtureFamily,
+    graft.sources.MediaFixtures.VolumeFamily) ++
+    LlmPipeline.substrates.map(_.family)
 
   private val procs: Seq[(String, Proc)] = Seq(
     "ensure_zone_map" -> Proc(
@@ -88,16 +88,10 @@ object Procedures {
     "ensure_dedup_substrates" -> Proc(
       Seq(Param("dataset_dir")), ensureSchema,
       (s, a) => {
-        val r = Seq(
-          Row("ngram_postings", LlmPipeline.ensureNgramPostings(s, a(0))),
-          Row("minhash_banded", LlmPipeline.ensureMinhashBanded(s, a(0))),
-          Row("simhash", LlmPipeline.ensureSimhashSig(s, a(0))),
-          Row("embed_bucketed", LlmPipeline.ensureEmbedBucketed(s, a(0))),
-          Row("winnow_fps", LlmPipeline.ensureWinnowFps(s, a(0))),
-          Row("phash", Multimodal.ensurePhashTable(s, a(0))))
+        val r = LlmPipeline.substrates.map(sub => Row(sub.name, sub.ensure(s, a(0))))
         // the SQL surface's substrate_stats view is a snapshot — once
         // this verb has (re)built substrates, re-derive it so SQL and
-        // DataFrame spellings agree on the fresh artifact (ADVICE r19)
+        // DataFrame spellings agree on the fresh artifact
         graft.SqlSurface.refreshDerivedViews(s, a(0))
         r
       }),

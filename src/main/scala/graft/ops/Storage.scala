@@ -176,18 +176,11 @@ object Storage {
     val src = s"$d/lineitem.parquet"
     val lines = manifestLines(s, src)
     val partials = ensureZoneMapWithLines(s, d, lines)
-    val dir = Derived.dirFor(s, ZonemapMergedFamily, src,
-      version = s"m${manifestKey(lines)}")
-    val fresh = !new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS")
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-      .exists(new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS"))
-    val published = Derived.ensure(s, ZonemapMergedFamily, src,
+    Derived.ensure(s, ZonemapMergedFamily, src,
       version = s"m${manifestKey(lines)}") { tmp =>
       zonemapMerge(s.read.parquet(partials))
         .coalesce(1).write.mode("overwrite").parquet(tmp)
     }
-    if (fresh) Derived.retireSuperseded(s, ZonemapMergedFamily, src, published)
-    published
   }
 
   private[graft] def manifestKey(lines: Seq[String]): String =
@@ -511,39 +504,6 @@ object Storage {
       .headOption.map { case (dir, prev, _) => (dir, prev) }
   }
 
-  /** Manifest-keyed build-or-extend lifecycle shared by the Bloom index
-    * and the zone map (VERDICT r15 #4 applied to BOTH persisted
-    * indexes): the artifact key is the full data-file listing; a pure
-    * append finds the previous artifact and runs `deltaBuild` over ONLY
-    * the new files' paths plus the previous artifact dir; anything else
-    * (modified/removed file, first build) runs `fullBuild` — over
-    * exactly the PINNED listing's paths, never a live directory scan
-    * (ADVICE r16 TOCTOU): a file appended between the listing and the
-    * build would otherwise be baked into the artifact but absent from
-    * its _MANIFEST, so the next ensure would merge it AGAIN as delta —
-    * double-counted zone-map stats, duplicate IVF assignment rows. The
-    * builder output is published atomically with its manifest
-    * (Derived.ensure).
-    */
-  /** The lifecycle body over a CALLER-pinned listing — split out so the
-    * spec can hand it a stale snapshot and prove artifact content and
-    * manifest derive from the same listing (the TOCTOU witness).
-    *
-    * The manifest diff against the best overlapping previous artifact
-    * splits into `removed` (lines the base covered that are gone) and
-    * `added` (new lines); the general daily tick carries BOTH — an
-    * ingest appends partitions while retention drops old ones. Rows
-    * evolve as `deltaBuild(removeBuild(prevRows, removed), added)`:
-    * subtraction first (VERDICT r16 #3 — the reference's node-offline
-    * cascade delete, controller/FileTable.java:59-97, as index
-    * maintenance), then the append merge, each leg skipped when its
-    * diff is empty. An unsubtractable index (`removeBuild = null`, the
-    * Bloom bit-OR) only ever sees pure-append bases (bestOverlapBase
-    * filters for it) and full-rebuilds on any removal; a removeBuild
-    * may also DECLINE at runtime (return null — e.g. the base predates
-    * per-row provenance) and fall through to the honest rebuild.
-    * Covered corpus bytes are never re-read on the evolve path.
-    */
   /** Test seam: fires after an evolve base is SELECTED but before its
     * rows are read — the one window where another process's generation
     * GC can retire the base out from under this build
@@ -579,30 +539,50 @@ object Storage {
     }
   }
 
+  /** Manifest-keyed build-or-extend lifecycle shared by the Bloom
+    * index, the zone map and the row substrates: the artifact key is
+    * the full data-file listing, here CALLER-pinned — the spec hands it
+    * a stale snapshot to prove artifact content and manifest derive
+    * from the same listing (the TOCTOU witness). Every build reads
+    * exactly the pinned listing's paths, never a live directory scan:
+    * a file appended between the listing and the build would otherwise
+    * be baked into the artifact but absent from its _MANIFEST, so the
+    * next ensure would merge it AGAIN as delta — double-counted
+    * zone-map stats, duplicate IVF assignment rows.
+    *
+    * The manifest diff against the best overlapping previous artifact
+    * splits into `removed` (lines the base covered that are gone) and
+    * `added` (new lines); the general daily tick carries BOTH — an
+    * ingest appends partitions while retention drops old ones. Rows
+    * evolve as `deltaBuild(removeBuild(prevRows, removed), added)`:
+    * subtraction first (the reference's node-offline cascade delete,
+    * controller/FileTable.java:59-97, as index maintenance), then the
+    * append merge, each leg skipped when its diff is empty. No base
+    * (first build) runs `fullBuild`. An unsubtractable index
+    * (`removeBuild = null`, the Bloom bit-OR) only ever sees
+    * pure-append bases (bestOverlapBase filters for it) and
+    * full-rebuilds on any removal; a removeBuild may also DECLINE at
+    * runtime (return null — e.g. the base predates per-row provenance)
+    * and fall through to the honest rebuild. Covered corpus bytes are
+    * never re-read on the evolve path. The builder output is published
+    * atomically with its manifest (Derived.ensure).
+    */
   private[graft] def ensureManifestKeyedWithLines(s: SparkSession,
       family: String, src: String, lines: Seq[String])(
       fullBuild: Seq[String] => DataFrame,
       deltaBuild: (DataFrame, Seq[String]) => DataFrame,
       removeBuild: (DataFrame, Seq[String]) => DataFrame,
       validate: String => Unit = _ => ()): String = {
-    val key = manifestKey(lines)
-    // detect "this call will build" BEFORE the ensure: generation GC
-    // (Derived.retireSuperseded) runs only when a fresh generation
-    // actually published — never on the memoized/warm read path
-    val dir = Derived.dirFor(s, family, src, version = s"m$key")
-    val fresh = !new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS")
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-      .exists(new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS"))
     // whether the staged artifact may carry the _SRCV2 trust marker:
     // true for every path whose src values are decoded BY CONSTRUCTION
     // (full rebuild; evolve from a trusted base). An add-only evolve
     // copies base rows verbatim, so stamping unconditionally would
     // LAUNDER a marker-less pre-decode base into a "trusted" artifact
-    // and a later removal tick would silently subtract nothing
-    // (ADVICE r19 medium) — the add-only leg must carry the base's own
-    // trust (marker or passing content probe) forward instead.
+    // and a later removal tick would silently subtract nothing — the
+    // add-only leg must carry the base's own trust (marker or passing
+    // content probe) forward instead.
     var stampSrcMarker = true
-    val published = Derived.ensure(s, family, src, version = s"m$key") { tmp =>
+    Derived.ensure(s, family, src, version = s"m${manifestKey(lines)}") { tmp =>
       val rows = bestOverlapBase(s, family, src, lines,
         subtractable = removeBuild != null) match {
         case Some((prevDir, prev)) =>
@@ -615,11 +595,11 @@ object Storage {
               stampSrcMarker = removalBaseTrusted(s, prevDir, prevRows)
               prevRows
             }
-            // the centralized vintage gate (ADVICE r18 + review): a
-            // marker-less base whose src column carries %-escapes may
-            // be pre-decode vintage — decline here so every family's
-            // removal leg shares one rule, and marker-present bases on
-            // literal-% paths keep their fast path
+            // the centralized vintage gate: a marker-less base whose
+            // src column carries %-escapes may be pre-decode vintage —
+            // decline here so every family's removal leg shares one
+            // rule, and marker-present bases on literal-% paths keep
+            // their fast path
             else if (!removalBaseTrusted(s, prevDir, prevRows)) null
             else removeBuild(prevRows, removed)
           val evolved =
@@ -663,20 +643,25 @@ object Storage {
       // violation throws here, before the publish rename, so a bad
       // build fails loudly instead of serving a corrupt artifact
       validate(tmp)
-      val fs = new org.apache.hadoop.fs.Path(tmp)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      // src-format marker: proves this artifact stores DECODED src, so
-      // future removal ticks skip the vintage content probe. Withheld
-      // when an add-only evolve copied rows from an untrusted base —
-      // the next removal tick then re-runs the content probe honestly.
-      if (stampSrcMarker)
-        fs.create(new org.apache.hadoop.fs.Path(tmp, SrcFormatMarker)).close()
-      val out = fs.create(new org.apache.hadoop.fs.Path(tmp, BloomManifest))
-      try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-      finally out.close()
+      stampManifest(s, tmp, lines, trusted = stampSrcMarker)
     }
-    if (fresh) Derived.retireSuperseded(s, family, src, published)
-    published
+  }
+
+  /** Stamp a staged artifact with the listing it was built from
+    * ([[BloomManifest]]) and, when `trusted`, the [[SrcFormatMarker]]:
+    * it proves the artifact stores DECODED src, so future removal ticks
+    * skip the vintage content probe. Withheld when an add-only evolve
+    * copied rows from an untrusted base — the next removal tick then
+    * re-runs the content probe honestly.
+    */
+  private[graft] def stampManifest(s: SparkSession, tmp: String,
+      lines: Seq[String], trusted: Boolean = true): Unit = {
+    val fs = new org.apache.hadoop.fs.Path(tmp)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (trusted) fs.create(new org.apache.hadoop.fs.Path(tmp, SrcFormatMarker)).close()
+    val out = fs.create(new org.apache.hadoop.fs.Path(tmp, BloomManifest))
+    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
+    finally out.close()
   }
 
   /** Persisted form of the Bloom index, keyed by dataset dir + the FULL

@@ -478,8 +478,11 @@ object MediaFixtures {
   private def jdkKey: String =
     System.getProperty("java.version", "unknown").replaceAll("[^0-9A-Za-z.]", "_")
 
+  private[graft] val FixtureFamily = "graft_media_fixture"
+  private[graft] val VolumeFamily = "graft_media_volume"
+
   def tablePath(s: SparkSession, d: String): String = {
-    val dir = Derived.ensure(s, "graft_media_fixture", s"$d/documents.parquet",
+    val dir = Derived.ensure(s, FixtureFamily, s"$d/documents.parquet",
       version = s"v4-jdk$jdkKey", marker = "documents_media/_SUCCESS") { tmp =>
       import s.implicits._
       assets().toDF("media_id", "kind", "payload")
@@ -533,13 +536,15 @@ object MediaFixtures {
     }
   }
 
-  /** An sf-proportional media corpus of `n` assets (VERDICT r13 #8):
-    * generated EXECUTOR-SIDE over spark.range — no driver
-    * materialization, any partitioning, the shape a real multimodal
-    * ingest has at scale — and persisted once per (source mtime, n).
+  /** An sf-proportional media corpus of `n` assets: generated
+    * EXECUTOR-SIDE over spark.range — no driver materialization, any
+    * partitioning, the shape a real multimodal ingest has at scale —
+    * and persisted once per (source mtime, n). Each publish retires
+    * this dataset's older volumes past the keep budget, other sizes
+    * included; a retired size is rebuilt on its next call.
     */
   def volumeTablePath(s: SparkSession, d: String, n: Long): String = {
-    val dir = Derived.ensure(s, "graft_media_volume", s"$d/documents.parquet",
+    val dir = Derived.ensure(s, VolumeFamily, s"$d/documents.parquet",
       version = s"v3-$n-jdk$jdkKey", marker = "media_volume/_SUCCESS") { tmp =>
       import s.implicits._
       s.range(0, n, 1, math.max(1, math.min(n / 64 + 1, 64)).toInt)

@@ -59,6 +59,8 @@ class GcOrphansSpec extends AnyFunSuite {
     ops.LlmPipeline.ensureIvfIndex(spark, d)
     ops.LlmPipeline.ensureJsonlExport(spark, d)
     ops.Multimodal.ensurePhashTable(spark, d)
+    graft.sources.MediaFixtures.tablePath(spark, d)
+    graft.sources.MediaFixtures.volumeTablePath(spark, d, 20L)
   }
 
   private def label(d: String): String =
@@ -80,6 +82,14 @@ class GcOrphansSpec extends AnyFunSuite {
     val fams = ops.Procedures.artifactFamilies
     fams.foreach(f => assert(entries(f, a).nonEmpty,
       s"fixture gap: no $f entry for dataset A"))
+    // the converse: no family store the ensures wrote is missing from
+    // the sweep list (a missing one leaks every abandoned dataset)
+    val holding = fs.listStatus(new org.apache.hadoop.fs.Path(sys.props("java.io.tmpdir")))
+      .toSeq.filter(_.isDirectory).map(_.getPath.getName)
+      .filter(f => scala.util.Try(entries(f, a).nonEmpty).getOrElse(false))
+    assert(holding.filterNot(fams.contains).isEmpty,
+      s"family stores with dataset A entries missing from artifactFamilies: " +
+        holding.filterNot(fams.contains).sorted)
     val aNgram = ops.LlmPipeline.ensureNgramPostings(spark, a)
     val bNgram = ops.LlmPipeline.ensureNgramPostings(spark, b)
     fs.delete(new org.apache.hadoop.fs.Path(a), true)
