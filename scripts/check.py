@@ -127,7 +127,8 @@ def substrate_stats_witness(con, files0, sf_dir):
     recompute each family's on-disk bytes with os.walk and its row
     count by re-reading the artifact parquet in DuckDB, locating the
     CURRENT artifact exactly the way Derived.dirFor does (md5-digest
-    label + source-table mtime in ms).
+    label + source-table mtime in ms + a version under the current
+    format tag).
     """
     import hashlib
     import re
@@ -149,15 +150,20 @@ def substrate_stats_witness(con, files0, sf_dir):
     parent = os.path.normpath(os.path.abspath(sf_dir))
     label = ("d" + hashlib.md5(parent.encode()).hexdigest()[:8] + "_"
              + re.sub(r"[^A-Za-z0-9._-]", "_", parent))
+    # mirrors Storage.FormatTag: the version of a current substrate is
+    # "<tag>m<manifest digest>", so a generation written under an older
+    # tag (not yet retired) is not a candidate
+    format_tag = "v3"
     for family, n_rows, n_bytes in rows:
         fam_glob, table = fam_map[family]
         mtime_ms = int(os.path.getmtime(os.path.join(sf_dir, table)) * 1000)
-        cands = [d for d in glob.glob(f"{tmp}/{fam_glob}/{label}_{mtime_ms}*")
+        stem = f"{label}_{mtime_ms}_{format_tag}m"
+        cands = [d for d in glob.glob(f"{tmp}/{fam_glob}/{stem}*")
                  if os.path.isdir(d)
                  and ".build-" not in d and ".old-" not in d]
         if len(cands) != 1:
             return False, (f"{family}: {len(cands)} candidate artifact dirs "
-                           f"for {label}_{mtime_ms} (cannot witness)")
+                           f"for {stem} (cannot witness)")
         # skip '.<name>.crc' checksum shadows: Hadoop's LocalFileSystem
         # writes them but getContentSummary (what the query reports)
         # excludes checksum files — they are FS bookkeeping, not bytes

@@ -188,14 +188,8 @@ object LlmPipeline {
   private def substrateRemove(s: SparkSession)(
       prev: DataFrame, removed: Seq[String]): DataFrame = {
     import s.implicits._
-    // pre-provenance bases decline; pre-decode vintage (encoded src —
-    // the anti-join would subtract nothing, ADVICE r18) is gated
-    // centrally in Storage.ensureManifestKeyedWithLines
-    if (!prev.columns.contains("src")) null
-    else {
-      val gone = removed.map(Storage.normSrcStr).toDF("gone_src")
-      prev.join(broadcast(gone), col("src") === col("gone_src"), "left_anti")
-    }
+    val gone = removed.map(Storage.normSrcStr).toDF("gone_src")
+    prev.join(broadcast(gone), col("src") === col("gone_src"), "left_anti")
   }
 
   /** Per-row substrate lifecycle: `rowsFor(paths)` builds the substrate
@@ -1904,18 +1898,18 @@ object LlmPipeline {
     */
   private[graft] def ivfIndexDir(s: SparkSession, d: String): String = {
     val src = s"$d/embeddings.parquet"
-    val ver = s"v2m${ivfManifestKey(s, d)}"
+    val ver = ivfVersion(s, d)
     // refits live as '-r<n>' generations of the same key — resolve to
     // the newest complete one (the dir ensureIvfIndex would serve)
     Derived.resolveGeneration(s, IvfFamily, src, ver, IvfMarker)
       .getOrElse(Derived.dirFor(s, IvfFamily, src, version = ver))
   }
 
-  /** The manifest component of the IVF artifact key — shared by
-    * dirFor and ensure so the two can never disagree on the dir.
+  /** The version of the current IVF artifact — shared by dirFor and
+    * the readiness probe so the two can never disagree on the dir.
     */
-  private def ivfManifestKey(s: SparkSession, d: String): String =
-    Storage.manifestKey(Storage.manifestLines(s, s"$d/embeddings.parquet"))
+  private def ivfVersion(s: SparkSession, d: String): String =
+    Storage.manifestVersion(Storage.manifestLines(s, s"$d/embeddings.parquet"))
 
   /** Metadata-only probe: is the CURRENT IVF index (this manifest key,
     * any refit generation) already published? One listing + marker
@@ -1924,7 +1918,7 @@ object LlmPipeline {
     */
   private[graft] def ivfIndexReady(s: SparkSession, d: String): Boolean =
     Derived.resolveGeneration(s, IvfFamily, s"$d/embeddings.parquet",
-      s"v2m${ivfManifestKey(s, d)}", IvfMarker).isDefined
+      ivfVersion(s, d), IvfMarker).isDefined
 
   /** The INDEX-BUILD job: fit the coarse quantizer once and persist the
     * searchable state — bucket assignments (vec_id, q, bucket) and the
@@ -2057,7 +2051,7 @@ object LlmPipeline {
       val src = s"$d/embeddings.parquet"
       val lines = Storage.manifestLines(s, src)
       Derived.replaceVersioned(s, IvfFamily, src,
-        version = s"v2m${Storage.manifestKey(lines)}", marker = IvfMarker) { tmp =>
+        version = Storage.manifestVersion(lines), marker = IvfMarker) { tmp =>
         buildIvfIndexFrom(s,
           s.read.parquet(Storage.manifestPath(lines): _*), tmp)
         Storage.stampManifest(s, tmp, lines)
@@ -2095,7 +2089,6 @@ object LlmPipeline {
     val src = s"$d/embeddings.parquet"
     val idxDir = ensureIvfIndex(s, d)
     val asg0 = s.read.parquet(s"$idxDir/assignments")
-    if (!asg0.columns.contains("appended")) return false // old format
     val nApp = asg0.where(col("appended")).count()
     if (nApp == 0) return false
     val hot = asg0.where(col("appended"))
@@ -2105,7 +2098,7 @@ object LlmPipeline {
     if (hot.isEmpty) return false
     val lines = Storage.manifestLines(s, src)
     Derived.replaceVersioned(s, IvfFamily, src,
-      version = s"v2m${Storage.manifestKey(lines)}", marker = IvfMarker) { tmp =>
+      version = Storage.manifestVersion(lines), marker = IvfMarker) { tmp =>
       splitCellsInto(s, idxDir, hot, tmp)
       Storage.stampManifest(s, tmp, lines)
     }
@@ -2239,7 +2232,7 @@ object LlmPipeline {
     // pinned full-build read, AND the written _MANIFEST — never two
     // separate snapshots that a concurrent append could split
     val lines = Storage.manifestLines(s, src)
-    val ver = s"v2m${Storage.manifestKey(lines)}"
+    val ver = Storage.manifestVersion(lines)
     // a recluster refit publishes as a '-r<n>' GENERATION of this same
     // manifest key (Derived.replaceVersioned — readers of the previous
     // generation keep their files); resolve to the newest before the
@@ -2251,26 +2244,9 @@ object LlmPipeline {
     }
     val published = Derived.ensure(s, IvfFamily, src,
       version = ver, marker = IvfMarker) { tmp =>
-      // a base from before per-row provenance + staleness stats + the
-      // base/appended census flag cannot extend or subtract — fall
-      // through to the full build
-      def currentFormat(dir: String): Boolean = {
-        val fs = new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.exists(new org.apache.hadoop.fs.Path(s"$dir/stats")) && {
-          val cols = s.read.parquet(s"$dir/assignments").columns
-          cols.contains("src") && cols.contains("appended")
-        }
-      }
       Storage.bestOverlapBase(s, IvfFamily, src, lines,
         marker = IvfMarker) match {
-        // a removal tick additionally requires a trusted-src base:
-        // marker-present ⇒ decoded by construction; marker-less falls
-        // back to the content probe (encoded src would anti-join out
-        // nothing)
-        case Some((prevDir, prev)) if currentFormat(prevDir) &&
-            ((prev -- lines.toSet).isEmpty || Storage.removalBaseTrusted(
-              s, prevDir, s.read.parquet(s"$prevDir/assignments"))) =>
+        case Some((prevDir, prev)) =>
           // evolve under FROZEN centroids: subtract the removed files'
           // vectors (anti-join on src provenance — the reference's
           // node-offline cascade, controller/FileTable.java:59-97),
@@ -2282,7 +2258,7 @@ object LlmPipeline {
           evolveIvfIndex(s, prevDir,
             Storage.manifestPath((prev -- lines.toSet).toSeq.sorted),
             Storage.manifestPath(lines.filterNot(prev)), tmp)
-        case _ => // full build over the PINNED listing, not a live
+        case None => // full build over the PINNED listing, not a live
           // dir scan — artifact and manifest from the same snapshot
           buildIvfIndexFrom(s,
             s.read.parquet(Storage.manifestPath(lines): _*), tmp)
@@ -3419,11 +3395,6 @@ object LlmPipeline {
 
   private[graft] def ensureWinnowFps(s: SparkSession, d: String): String = {
     val table = s"$d/documents.parquet"
-    // migration sweep: pre-r19 fingerprints live under the retired
-    // un-suffixed family name, stranded outside every current prefix
-    // (the K rename invalidated them by design; this reclaims the
-    // bytes — at sf100 the K=8 artifact was ~9 GB)
-    Derived.retireRetiredFamily(s, "graft-winnow-fps", table)
     ensureRowSubstrate(s, WinnowFpsFamily, table)(winnowFpsRows(s, _))
   }
 
@@ -3454,13 +3425,13 @@ object LlmPipeline {
     * (SqlSurface.registerDerivedViews).
     */
   private[graft] def substratesReady(s: SparkSession, d: String): Boolean = {
-    val keys = scala.collection.mutable.Map.empty[String, String]
+    val versions = scala.collection.mutable.Map.empty[String, String]
     substrates.forall { sub =>
       val table = s"$d/${sub.table}"
-      val key = keys.getOrElseUpdate(table,
-        Storage.manifestKey(Storage.manifestLines(s, table)))
+      val ver = versions.getOrElseUpdate(table,
+        Storage.manifestVersion(Storage.manifestLines(s, table)))
       val p = new org.apache.hadoop.fs.Path(
-        s"${Derived.dirFor(s, sub.family, table, version = s"m$key")}/_SUCCESS")
+        s"${Derived.dirFor(s, sub.family, table, version = ver)}/_SUCCESS")
       p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
     }
   }
@@ -3468,8 +3439,8 @@ object LlmPipeline {
   /** q_substrate_stats — per-family footprint of the persisted dedup
     * substrates, SQL-visible (the winnow artifact was a ~9 GB outlier
     * nobody could SEE without shelling du): one row per family with
-    * its published path, row count (parquet footer metadata — no data
-    * scan), and on-disk bytes. Six bounded FS/footer probes —
+    * its row count (parquet footer metadata — no data scan) and
+    * on-disk bytes. Six bounded FS/footer probes —
     * metadata-sized at any corpus scale. No DuckDB oracle (the
     * artifact dirs are engine-local state, the ivf_staleness
     * rationale); LlmPipelineSpec pins shape and row-count consistency.

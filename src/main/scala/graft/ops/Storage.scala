@@ -85,10 +85,10 @@ object Storage {
     * absolute path, so the manifest's Hadoop `Path.toString`
     * (`file:/x y` — Path stores a URI but toString returns the decoded
     * form) and Spark's `input_file_name()` (`file:///x%20y` — the
-    * FileScan carries the URL-ENCODED SparkPath) compare equal (ADVICE
-    * r17: without the decode, a table path with any URI-escapable
-    * character made the removal anti-join match nothing — removed
-    * files' rows survived evolution, modified files double-counted).
+    * FileScan carries the URL-ENCODED SparkPath) compare equal (without
+    * the decode, a table path with any URI-escapable character makes
+    * the removal anti-join match nothing — removed files' rows survive
+    * evolution, modified files double-count).
     * Decode is on the COLUMN side only: that is the only encoded side.
     * `+` is protected first because url_decode applies form semantics
     * (`+` → space) where URI paths keep `+` literal; try_url_decode +
@@ -103,51 +103,12 @@ object Storage {
   private[graft] def normSrcStr(p: String): String =
     p.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
 
-  /** Format-version marker written into every artifact published since
-    * the percent-decode era: its PRESENCE proves the src column stores
-    * decoded values, so a removal tick never needs the content probe
-    * below — which matters for the one path the probe cannot
-    * distinguish: a dataset dir that GENUINELY contains a literal %XX
-    * sequence would otherwise decline + full-rebuild on EVERY removal
-    * tick forever (the rebuilt artifact re-stores the same literal
-    * '%XX' and re-trips the probe — the "only pays once" claim held
-    * only for escapable-but-literal-%-free paths).
-    */
-  private[graft] val SrcFormatMarker = "_SRCV2"
-
-  /** Pre-decode vintage detection (ADVICE r18): artifacts persisted
-    * before [[normSrcCol]] gained the percent-decode store URL-ENCODED
-    * src values (`/x%20y`), so a removal anti-join against decoded
-    * manifest paths would silently subtract NOTHING — exactly the r17
-    * bug the decode fixed for new artifacts, resurfacing through an
-    * old base. A base whose src column still carries a percent escape
-    * must decline to evolve and fall through to the honest full
-    * rebuild — CONSULTED ONLY when the base predates
-    * [[SrcFormatMarker]] (marker present ⇒ decoded by construction,
-    * no probe, no false positive on literal-% paths). limit(1)
-    * short-circuits the scan; the check runs only on removal ticks.
-    */
-  private[graft] def srcPreDecodeVintage(prev: DataFrame): Boolean =
-    prev.columns.contains("src") &&
-      prev.filter(col("src").rlike("%[0-9a-fA-F]{2}")).limit(1).count() > 0
-
-  /** The central removal-tick vintage gate: marker-present bases are
-    * trusted; marker-less bases fall back to the content probe.
-    */
-  private[graft] def removalBaseTrusted(s: SparkSession, prevDir: String,
-      prevRows: DataFrame): Boolean = {
-    val m = new org.apache.hadoop.fs.Path(prevDir, SrcFormatMarker)
-    m.getFileSystem(s.sparkContext.hadoopConfiguration).exists(m) ||
-      !srcPreDecodeVintage(prevRows)
-  }
-
   private[graft] val ZonemapFamily = "graft-zonemap"
 
   /** Persisted, append-extendable, removal-subtractable zone map — the
-    * manifest-keyed lifecycle (VERDICT r15 #4; removal leg VERDICT r16
-    * #3): a pure append unions the delta files' partial rows with the
-    * previous artifact verbatim; a pure REMOVAL (files lost, none
-    * gained — the reference's node-offline cascade,
+    * manifest-keyed lifecycle: a pure append unions the delta files'
+    * partial rows with the previous artifact verbatim; a pure REMOVAL
+    * (files lost, none gained — the reference's node-offline cascade,
     * controller/FileTable.java:59-97, as lake maintenance) anti-joins
     * the dropped part files' rows out of the previous artifact —
     * exact because the artifact is per-(part file, file_id) partials
@@ -177,16 +138,32 @@ object Storage {
     val lines = manifestLines(s, src)
     val partials = ensureZoneMapWithLines(s, d, lines)
     Derived.ensure(s, ZonemapMergedFamily, src,
-      version = s"m${manifestKey(lines)}") { tmp =>
+      version = manifestVersion(lines)) { tmp =>
       zonemapMerge(s.read.parquet(partials))
         .coalesce(1).write.mode("overwrite").parquet(tmp)
     }
   }
 
-  private[graft] def manifestKey(lines: Seq[String]): String =
-    java.security.MessageDigest.getInstance("MD5")
+  /** Row-format tag of every manifest-keyed artifact (zone map, Bloom
+    * index, dedup substrates, IVF index). Bump it when any of their row
+    * formats changes: artifacts written under an older tag are never
+    * served and never evolved from ([[bestOverlapBase]]) — they are
+    * rebuilt from the source, not migrated, and the ordinary
+    * generation GC (Derived.retireSuperseded) reclaims them. scripts/
+    * check.py mirrors it to locate the current substrate artifacts.
+    */
+  private[graft] val FormatTag = "v3"
+
+  /** The version key of a manifest-keyed artifact: [[FormatTag]], then
+    * `m` and a 12-hex digest of its listing — the one spelling every
+    * dirFor/ensure/resolveGeneration of these families uses.
+    */
+  private[graft] def manifestVersion(lines: Seq[String]): String = {
+    val key = java.security.MessageDigest.getInstance("MD5")
       .digest(lines.mkString("\n").getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(12)
+    s"${FormatTag}m$key"
+  }
 
   /** Spec entry: the zone-map lifecycle over a caller-pinned listing —
     * how StorageSpec simulates the append-during-build race
@@ -197,20 +174,14 @@ object Storage {
     ensureManifestKeyedWithLines(s, ZonemapFamily, s"$d/lineitem.parquet", lines)(
       fullBuild = pinned => zonemapPartialsFor(s.read.parquet(pinned: _*)),
       deltaBuild = (prevRows, delta) =>
-        if (!prevRows.columns.contains("src")) null // pre-provenance: decline
-        else prevRows.unionByName(zonemapPartialsFor(s.read.parquet(delta: _*))),
+        prevRows.unionByName(zonemapPartialsFor(s.read.parquet(delta: _*))),
       removeBuild = (prevRows, removed) => {
         import s.implicits._
-        // pre-provenance bases decline (pre-decode vintage is gated
-        // centrally in ensureManifestKeyedWithLines)
-        if (!prevRows.columns.contains("src")) null
-        else {
-          // anti-join, not isin: the removed list is file-count-sized
-          // (~10⁶ paths at 100 TB) — a broadcast relation, never a
-          // million-literal predicate
-          val gone = removed.map(normSrcStr).toDF("gone_src")
-          prevRows.join(broadcast(gone), col("src") === col("gone_src"), "left_anti")
-        }
+        // anti-join, not isin: the removed list is file-count-sized
+        // (~10⁶ paths at 100 TB) — a broadcast relation, never a
+        // million-literal predicate
+        val gone = removed.map(normSrcStr).toDF("gone_src")
+        prevRows.join(broadcast(gone), col("src") === col("gone_src"), "left_anti")
       })
 
   /** Prune window for q_zonemap_prune (inclusive ship-date range). */
@@ -423,7 +394,7 @@ object Storage {
     * (sorted; `_`/`.`-prefixed bookkeeping files excluded — the same
     * set a parquet scan reads). The hidden-name test applies to EVERY
     * path component between the table root and the leaf, not just the
-    * leaf (ADVICE r16): `fs.listFiles` recurses into hidden directories
+    * leaf: `fs.listFiles` recurses into hidden directories
     * — a `_temporary` leftover from a crashed append holds part files
     * whose leaf names look clean, but Spark's InMemoryFileIndex never
     * reads them, so admitting them would make the manifest claim
@@ -459,32 +430,35 @@ object Storage {
     * drops in one manifest change); an unsubtractable one
     * (`subtractable = false`, the Bloom bit set) only accepts strict
     * SUBSET bases, because a base with removals would force the full
-    * rebuild even when a cheaper pure-append base exists. Skips
-    * in-flight '.build-' staging dirs (ADVICE r16: a concurrent JVM's
-    * temp dir carries its marker + _MANIFEST BEFORE the publish rename
-    * — selecting it races the rename and reads a vanishing path).
+    * rebuild even when a cheaper pure-append base exists. Only bases
+    * whose version carries the current [[FormatTag]] qualify: rows of
+    * an older format are never carried forward. Skips in-flight
+    * '.build-' staging dirs (a concurrent JVM's temp dir carries its
+    * marker + _MANIFEST BEFORE the publish rename — selecting it races
+    * the rename and reads a vanishing path) and '.old-' trash (a retire
+    * renames the outgoing artifact there before deleting; a crash
+    * between the two would otherwise strand a selectable stale base).
     * Enumerates the family dir by the dataset's label prefix
     * (Derived.labelFor: same formula as dirFor, no drift).
     */
   private[graft] def bestOverlapBase(s: SparkSession, family: String, src: String,
       current: Seq[String], marker: String = "_SUCCESS",
       subtractable: Boolean = true): Option[(String, Set[String])] = {
-    val fs = new org.apache.hadoop.fs.Path(Derived.familyDir(family))
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
     val fam = new org.apache.hadoop.fs.Path(Derived.familyDir(family))
+    val fs = fam.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(fam) || current.isEmpty) return None
     val prefix = Derived.labelFor(src) + "_"
+    // dirFor's `<label>_<mtime>_<version>` with a current-tag version
+    // (a '-r<n>' refit generation included)
+    val currentTag = s"\\d+_${FormatTag}m.*"
     val cur = current.toSet
     fs.listStatus(fam).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix) &&
-        // skip in-flight '.build-' staging AND '.old-' trash (ADVICE
-        // r17: Derived.replace/retireSuperseded rename the outgoing
-        // artifact to an '.old-' sibling before deleting; selecting it
-        // as the evolve base races its deletion, and a crash between
-        // trash-rename and delete would strand it as a selectable
-        // stale base forever)
-        !st.getPath.getName.contains(".build-") &&
-        !st.getPath.getName.contains(".old-"))
+      .filter { st =>
+        val n = st.getPath.getName
+        st.isDirectory && n.startsWith(prefix) &&
+          n.stripPrefix(prefix).matches(currentTag) &&
+          !Derived.isStagingOrTrash(n)
+      }
       .flatMap { st =>
         val dir = st.getPath
         val ok = fs.exists(new org.apache.hadoop.fs.Path(dir, marker)) &&
@@ -561,11 +535,10 @@ object Storage {
     * (first build) runs `fullBuild`. An unsubtractable index
     * (`removeBuild = null`, the Bloom bit-OR) only ever sees
     * pure-append bases (bestOverlapBase filters for it) and
-    * full-rebuilds on any removal; a removeBuild may also DECLINE at
-    * runtime (return null — e.g. the base predates per-row provenance)
-    * and fall through to the honest rebuild. Covered corpus bytes are
-    * never re-read on the evolve path. The builder output is published
-    * atomically with its manifest (Derived.ensure).
+    * full-rebuilds on any removal. Every base is of the current
+    * [[FormatTag]], so its rows are of the builders' own format. Covered
+    * corpus bytes are never re-read on the evolve path. The builder
+    * output is published atomically with its manifest (Derived.ensure).
     */
   private[graft] def ensureManifestKeyedWithLines(s: SparkSession,
       family: String, src: String, lines: Seq[String])(
@@ -573,16 +546,7 @@ object Storage {
       deltaBuild: (DataFrame, Seq[String]) => DataFrame,
       removeBuild: (DataFrame, Seq[String]) => DataFrame,
       validate: String => Unit = _ => ()): String = {
-    // whether the staged artifact may carry the _SRCV2 trust marker:
-    // true for every path whose src values are decoded BY CONSTRUCTION
-    // (full rebuild; evolve from a trusted base). An add-only evolve
-    // copies base rows verbatim, so stamping unconditionally would
-    // LAUNDER a marker-less pre-decode base into a "trusted" artifact
-    // and a later removal tick would silently subtract nothing — the
-    // add-only leg must carry the base's own trust (marker or passing
-    // content probe) forward instead.
-    var stampSrcMarker = true
-    Derived.ensure(s, family, src, version = s"m${manifestKey(lines)}") { tmp =>
+    Derived.ensure(s, family, src, version = manifestVersion(lines)) { tmp =>
       val rows = bestOverlapBase(s, family, src, lines,
         subtractable = removeBuild != null) match {
         case Some((prevDir, prev)) =>
@@ -591,28 +555,8 @@ object Storage {
           val added = manifestPath(lines.filterNot(prev))
           val prevRows = s.read.parquet(prevDir)
           val afterRemove =
-            if (removed.isEmpty) {
-              stampSrcMarker = removalBaseTrusted(s, prevDir, prevRows)
-              prevRows
-            }
-            // the centralized vintage gate: a marker-less base whose
-            // src column carries %-escapes may be pre-decode vintage —
-            // decline here so every family's removal leg shares one
-            // rule, and marker-present bases on literal-% paths keep
-            // their fast path
-            else if (!removalBaseTrusted(s, prevDir, prevRows)) null
-            else removeBuild(prevRows, removed)
-          val evolved =
-            if (afterRemove == null) null
-            else if (added.isEmpty) afterRemove
-            else deltaBuild(afterRemove, added)
-          if (evolved == null) {
-            // either builder may DECLINE (null) — e.g. the base
-            // artifact predates the current row format
-            log.warn(s"$family: base $prevDir cannot evolve — full rebuild")
-            stampSrcMarker = true // fresh decode, trusted by construction
-            fullBuild(manifestPath(lines))
-          } else evolved
+            if (removed.isEmpty) prevRows else removeBuild(prevRows, removed)
+          if (added.isEmpty) afterRemove else deltaBuild(afterRemove, added)
         case None =>
           // refuse the unsound shortcut LOUDLY: if an overlapping base
           // exists but this index cannot subtract (Bloom: bits OR in,
@@ -643,22 +587,18 @@ object Storage {
       // violation throws here, before the publish rename, so a bad
       // build fails loudly instead of serving a corrupt artifact
       validate(tmp)
-      stampManifest(s, tmp, lines, trusted = stampSrcMarker)
+      stampManifest(s, tmp, lines)
     }
   }
 
   /** Stamp a staged artifact with the listing it was built from
-    * ([[BloomManifest]]) and, when `trusted`, the [[SrcFormatMarker]]:
-    * it proves the artifact stores DECODED src, so future removal ticks
-    * skip the vintage content probe. Withheld when an add-only evolve
-    * copied rows from an untrusted base — the next removal tick then
-    * re-runs the content probe honestly.
+    * ([[BloomManifest]]) — what [[bestOverlapBase]] diffs a later
+    * listing against.
     */
   private[graft] def stampManifest(s: SparkSession, tmp: String,
-      lines: Seq[String], trusted: Boolean = true): Unit = {
+      lines: Seq[String]): Unit = {
     val fs = new org.apache.hadoop.fs.Path(tmp)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (trusted) fs.create(new org.apache.hadoop.fs.Path(tmp, SrcFormatMarker)).close()
     val out = fs.create(new org.apache.hadoop.fs.Path(tmp, BloomManifest))
     try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
     finally out.close()
@@ -669,8 +609,8 @@ object Storage {
     * driver-regenerated fixture must miss, or a stale index would serve
     * wrong prune sets to the oracle gate. Same build-once/probe-many
     * lifecycle as the IVF index (LlmPipeline.ensureIvfIndex), PLUS the
-    * append lifecycle a daily-ingest lake needs (VERDICT r15 #4): when
-    * the current listing strictly extends a previously published
+    * append lifecycle a daily-ingest lake needs: when the current
+    * listing strictly extends a previously published
     * artifact's manifest, the build scans ONLY the delta files and
     * unions them with the previous artifact's metadata-sized rows —
     * never re-reading covered corpus bytes (StorageSpec proves this by
@@ -696,7 +636,7 @@ object Storage {
           .distinct(),
       // bits OR in, never out: a removed file's positions may also be
       // witnessed by surviving rows, so subtraction is unsound — the
-      // lifecycle refuses loudly and rebuilds (VERDICT r16 #3)
+      // lifecycle refuses loudly and rebuilds
       removeBuild = null)
   }
 

@@ -147,20 +147,14 @@ class GcOrphansSpec extends AnyFunSuite {
     }
   }
 
-  test("provenance resolves from the sidecar, or the _MANIFEST for pre-sidecar artifacts") {
+  test("provenance resolves from the sidecar; an entry without one is skipped") {
     val d = mkDataset(4)
     val idx = ops.Storage.ensureZoneMap(spark, d)
     val dirPath = new org.apache.hadoop.fs.Path(idx)
     val sidecar = new org.apache.hadoop.fs.Path(idx, ops.Derived.SrcSidecar)
     assert(fs.exists(sidecar), "publish must stamp the provenance sidecar")
     assert(ops.Derived.recordedSource(fs, dirPath).contains(s"$d/lineitem.parquet"))
-    // pre-sidecar vintage: provenance falls back to the manifest lines
-    fs.delete(sidecar, false)
-    val viaManifest = ops.Derived.recordedSource(fs, dirPath)
-    assert(viaManifest.isDefined &&
-      viaManifest.get.endsWith(s"${new org.apache.hadoop.fs.Path(d).getName}/lineitem.parquet"),
-      s"manifest fallback resolved $viaManifest")
-    // neither record → unknown provenance → the GC must SKIP, not guess
+    // no sidecar → unknown provenance → the GC must SKIP, not guess
     val bare = s"${ops.Derived.familyDir(ops.Storage.ZonemapFamily)}/" +
       s"${label(d)}_mfeedbeef"
     fs.mkdirs(new org.apache.hadoop.fs.Path(bare))

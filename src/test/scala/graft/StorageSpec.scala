@@ -10,6 +10,15 @@ class StorageSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val d = SparkTestSession.sf0001
 
+  /** A published manifest-keyed artifact dir, renamed to the version
+    * the untagged format wrote (`…_m<key>`): what older code left.
+    */
+  private def untagged(dir: String): org.apache.hadoop.fs.Path = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    new org.apache.hadoop.fs.Path(p.getParent,
+      p.getName.replace(s"_${ops.Storage.FormatTag}m", "_m"))
+  }
+
   test("zonemap build: one row per file, bounds ordered, counts total") {
     val zm = ops.Storage.zonemapBuild(spark, d).cache()
     val li = Tables.lineitem(spark, d)
@@ -495,11 +504,6 @@ class StorageSpec extends AnyFunSuite {
           java.sql.Timestamp.valueOf(f"1995-0${1 + dayOff}%d-11 00:00:00"), 1.0))
         .toDF("l_orderkey", "l_suppkey", "l_partkey", "l_linenumber",
           "l_shipdate", "l_quantity")
-    // the detector itself: encoded values flag, decoded values pass
-    assert(ops.Storage.srcPreDecodeVintage(
-      Seq("/tmp/with%20space/part-0").toDF("src")))
-    assert(!ops.Storage.srcPreDecodeVintage(
-      Seq("/tmp/with space/part-0").toDF("src")))
     // end-to-end in an escapable dir: doctor the published artifact
     // back to the pre-r18 vintage (src stored ENCODED), then hand it a
     // removal tick — the old code's anti-join would subtract nothing
@@ -514,9 +518,8 @@ class StorageSpec extends AnyFunSuite {
     liRows(6L until 12L, 1).coalesce(1).write.mode("append").parquet(table)
     val base = ops.Storage.ensureZoneMap(spark, dir)
     // rewrite the artifact's src column to the encoded form, keeping
-    // _MANIFEST/_SUCCESS so it stays a selectable evolve base; drop
-    // the _SRCV2 format marker too — a genuine pre-decode artifact
-    // predates it (marker present would rightly skip the probe)
+    // _MANIFEST/_SUCCESS; then rename it to the version the untagged
+    // format wrote — a genuine pre-decode artifact predates the tag
     val doctored = spark.read.parquet(base)
       .withColumn("src", regexp_replace(col("src"), " ", "%20"))
     val stage = s"/tmp/graft-test-vintage-stage-${java.util.UUID.randomUUID()}"
@@ -524,12 +527,11 @@ class StorageSpec extends AnyFunSuite {
     fs.listStatus(new org.apache.hadoop.fs.Path(base))
       .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
       .foreach(st => fs.delete(st.getPath, false))
-    fs.delete(new org.apache.hadoop.fs.Path(base,
-      ops.Storage.SrcFormatMarker), false)
     fs.listStatus(new org.apache.hadoop.fs.Path(stage))
       .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
       .foreach(st => fs.rename(st.getPath,
         new org.apache.hadoop.fs.Path(base, st.getPath.getName)))
+    assert(fs.rename(new org.apache.hadoop.fs.Path(base), untagged(base)))
     // retention drops the day-1 file → removal tick against the
     // doctored base must DECLINE and full-rebuild from survivors
     fs.listStatus(new org.apache.hadoop.fs.Path(table))
@@ -543,7 +545,7 @@ class StorageSpec extends AnyFunSuite {
       s"old-vintage base must decline and rebuild: expected day-0's 6 chunks, got $got")
   }
 
-  test("add-only evolve from an untrusted base does not launder the _SRCV2 marker (ADVICE r19)") {
+  test("removal after an append over an older-format base subtracts exactly") {
     import spark.implicits._
     def liRows(ids: Seq[Long], dayOff: Int) =
       ids.map(f => (f, 100L + f % 7, 200L + (f + dayOff) % 11, 1L,
@@ -559,7 +561,8 @@ class StorageSpec extends AnyFunSuite {
       .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
       .head.getPath
     val base = ops.Storage.ensureZoneMap(spark, dir)
-    // doctor the base to the pre-decode vintage: src ENCODED, no marker
+    // doctor the base to the pre-decode vintage: src ENCODED, under the
+    // version the untagged format wrote
     val doctored = spark.read.parquet(base)
       .withColumn("src", regexp_replace(col("src"), " ", "%20"))
     val stage = s"/tmp/graft-test-launder-stage-${java.util.UUID.randomUUID()}"
@@ -567,32 +570,25 @@ class StorageSpec extends AnyFunSuite {
     fs.listStatus(new org.apache.hadoop.fs.Path(base))
       .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
       .foreach(st => fs.delete(st.getPath, false))
-    fs.delete(new org.apache.hadoop.fs.Path(base,
-      ops.Storage.SrcFormatMarker), false)
     fs.listStatus(new org.apache.hadoop.fs.Path(stage))
       .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
       .foreach(st => fs.rename(st.getPath,
         new org.apache.hadoop.fs.Path(base, st.getPath.getName)))
-    // ADD-ONLY tick: the evolve copies the doctored rows verbatim, so
-    // the published artifact must NOT carry the trust marker it never
-    // verified — stamping here would make the encoded rows permanently
-    // "trusted" and a later removal would silently subtract nothing
+    assert(fs.rename(new org.apache.hadoop.fs.Path(base), untagged(base)))
+    // append tick: the older-format base is not an evolve base, so the
+    // published artifact is a full build with decoded src
     liRows(6L until 12L, 1).coalesce(1).write.mode("append").parquet(table)
     val evolved = ops.Storage.ensureZoneMap(spark, dir)
     assert(evolved != base)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(evolved,
-      ops.Storage.SrcFormatMarker)),
-      "add-only evolve from a marker-less pre-decode base stamped _SRCV2")
-    // the removal tick the gate exists for: retention drops day-0; the
-    // marker-less evolved base must re-probe, decline, and full-rebuild
-    // from the surviving day-1 file — a laundered marker would instead
-    // keep all 12 chunks (anti-join against encoded src removes nothing)
+    // removal tick: retention drops day-0; the evolve from the current
+    // artifact must subtract it — encoded src carried forward from the
+    // doctored base would instead keep all 12 chunks
     fs.delete(day0Part, false)
     val idx = ops.Storage.ensureZoneMap(spark, dir)
     val got = ops.Storage.zonemapMerge(spark.read.parquet(idx))
       .agg(sum("n_chunks")).head.getLong(0)
     assert(got == 6L,
-      s"untrusted evolved base must decline removal: expected day-1's 6 chunks, got $got")
+      s"removal after the append must subtract day-0: expected day-1's 6 chunks, got $got")
   }
 
   test("literal-%XX dataset with the format marker keeps the removal fast path") {
@@ -603,10 +599,10 @@ class StorageSpec extends AnyFunSuite {
         .toDF("l_orderkey", "l_suppkey", "l_partkey", "l_linenumber",
           "l_shipdate", "l_quantity")
     // the dir name CONTAINS a literal %20: the decoded src values keep
-    // it, so the content probe alone would flag this NEW artifact as
-    // pre-decode vintage on EVERY removal tick — permanent full
-    // rebuilds. The _SRCV2 marker written at build time must keep the
-    // evolve fast path instead.
+    // it, so a content probe for encoded src would flag this NEW
+    // artifact as pre-decode vintage on EVERY removal tick — permanent
+    // full rebuilds. A current-format base must keep the evolve fast
+    // path instead.
     val dir = s"/tmp/graft-test-litpct-${java.util.UUID.randomUUID()}/with%20literal"
     val table = s"$dir/lineitem.parquet"
     val fs = new org.apache.hadoop.fs.Path(table)
@@ -616,9 +612,7 @@ class StorageSpec extends AnyFunSuite {
       .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
       .head.getPath
     liRows(6L until 12L, 1).coalesce(1).write.mode("append").parquet(table)
-    val base = ops.Storage.ensureZoneMap(spark, dir)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(base,
-      ops.Storage.SrcFormatMarker)), "new artifacts carry the format marker")
+    ops.Storage.ensureZoneMap(spark, dir)
     // retention drops day-1; the SURVIVOR goes corrupt in place, so a
     // full rebuild would die on its footer — only the artifact-evolve
     // fast path can answer
@@ -750,47 +744,105 @@ class StorageSpec extends AnyFunSuite {
     assert(fs.exists(new org.apache.hadoop.fs.Path(cur)))
   }
 
-  test("legacy-label and retired-family artifacts reclaim once TTL-aged") {
+  test("an older-format generation retires through the generation GC once TTL-aged") {
     import spark.implicits._
-    val dir = s"/tmp/graft-test-legacygc-${java.util.UUID.randomUUID()}"
+    def liRows(ids: Seq[Long], dayOff: Int) =
+      ids.map(f => (f, 100L + f % 7, 200L + (f + dayOff) % 11, 1L,
+          java.sql.Timestamp.valueOf(f"1995-0${1 + dayOff}%d-11 00:00:00"), 1.0))
+        .toDF("l_orderkey", "l_suppkey", "l_partkey", "l_linenumber",
+          "l_shipdate", "l_quantity")
+    val dir = s"/tmp/graft-test-oldtag-${java.util.UUID.randomUUID()}"
     val table = s"$dir/lineitem.parquet"
-    Seq((1L, 2L, 3L, 1L,
-        java.sql.Timestamp.valueOf("1995-01-11 00:00:00"), 1.0))
-      .toDF("l_orderkey", "l_suppkey", "l_partkey", "l_linenumber",
-        "l_shipdate", "l_quantity")
-      .coalesce(1).write.parquet(table)
-    val cur = ops.Storage.ensureZoneMap(spark, dir)
-    val fam = ops.Derived.familyDir(ops.Storage.ZonemapFamily)
-    val fs = new org.apache.hadoop.fs.Path(fam)
+    val fs = new org.apache.hadoop.fs.Path(table)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a pre-digest (r18-vintage) artifact of THIS dataset: matches no
-    // current prefix, so only the legacy sweep can ever reclaim it
-    val legacyLabel = "d" + new org.apache.hadoop.fs.Path(table)
-      .getParent.toString.replaceAll("[^A-Za-z0-9._-]", "_")
-    val aged = new org.apache.hadoop.fs.Path(s"$fam/${legacyLabel}_m01dead")
-    val young = new org.apache.hadoop.fs.Path(s"$fam/${legacyLabel}_m02dead")
-    fs.mkdirs(aged); fs.mkdirs(young)
-    fs.setTimes(aged,
-      System.currentTimeMillis() - ops.Derived.orphanTtlMs - 60000, -1)
-    try {
-      ops.Derived.retireSuperseded(spark, ops.Storage.ZonemapFamily, table, cur)
-      assert(!fs.exists(aged), "TTL-aged legacy-label artifact not reclaimed")
-      assert(fs.exists(young), "young legacy dir spared (TTL gate)")
-      assert(fs.exists(new org.apache.hadoop.fs.Path(cur)))
-    } finally { fs.delete(aged, true); fs.delete(young, true) }
-    // a RETIRED family (renamed away, e.g. the winnow K bump): the
-    // successor's migration sweep reclaims the dataset's entries and
-    // the empty family dir itself
-    val rfam = s"graft-test-retired-${java.util.UUID.randomUUID().toString.take(8)}"
-    val rdir = new org.apache.hadoop.fs.Path(
-      s"${ops.Derived.familyDir(rfam)}/${ops.Derived.labelFor(table)}_m03dead")
-    fs.mkdirs(rdir)
-    fs.setTimes(rdir,
-      System.currentTimeMillis() - ops.Derived.orphanTtlMs - 60000, -1)
-    ops.Derived.retireRetiredFamily(spark, rfam, table)
-    assert(!fs.exists(rdir), "retired-family artifact not reclaimed")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(ops.Derived.familyDir(rfam))),
-      "emptied retired family dir should be removed")
+    liRows(0L until 6L, 0).coalesce(1).write.parquet(table)
+    val gen1 = ops.Storage.ensureZoneMap(spark, dir)
+    // a complete generation older code published for this dataset,
+    // aged past the TTL: nothing serves it, and the next publish's GC
+    // must count it as one more superseded generation
+    val old = untagged(ops.Derived.dirFor(spark, ops.Storage.ZonemapFamily,
+      table, version = ops.Storage.manifestVersion(Seq("0\t0\tgone"))))
+    fs.mkdirs(old)
+    fs.create(new org.apache.hadoop.fs.Path(old, "_SUCCESS")).close()
+    fs.setTimes(old,
+      System.currentTimeMillis() - ops.Derived.generationTtlMs - 60000, -1)
+    liRows(6L until 12L, 1).coalesce(1).write.mode("append").parquet(table)
+    val gen2 = ops.Storage.ensureZoneMap(spark, dir)
+    assert(!fs.exists(old), "TTL-aged older-format generation not retired")
+    assert(fs.exists(new org.apache.hadoop.fs.Path(gen1)),
+      "the young spare generation stays (keep budget)")
+    assert(fs.exists(new org.apache.hadoop.fs.Path(gen2)))
+  }
+
+  test("a base under an older format's version is rebuilt, not evolved: append and removal ticks equal a full rebuild") {
+    import spark.implicits._
+    def liRows(ids: Seq[Long], dayOff: Int) =
+      ids.flatMap(f => (0 until 3).map(c =>
+        (f, 100L + f % 7, 200L + (f * 3 + c + dayOff) % 11, c.toLong + 1,
+          java.sql.Timestamp.valueOf(f"1995-0${1 + dayOff}%d-1${c}%d 00:00:00"),
+          (f % 50 + c).toDouble)))
+        .toDF("l_orderkey", "l_suppkey", "l_partkey", "l_linenumber",
+          "l_shipdate", "l_quantity")
+    def canon(df: org.apache.spark.sql.DataFrame) =
+      ops.Storage.zonemapMerge(df)
+        .selectExpr("file_id", "n_chunks", "CAST(min_ship AS STRING)",
+          "CAST(max_ship AS STRING)", "min_part", "max_part", "size_units")
+        .collect().map(_.toSeq).toSet
+    def fullRebuild(rows: org.apache.spark.sql.DataFrame) = {
+      val mirror = s"/tmp/graft-test-oldbase-mirror-${java.util.UUID.randomUUID()}"
+      rows.write.parquet(s"$mirror/lineitem.parquet")
+      canon(spark.read.parquet(ops.Storage.ensureZoneMap(spark, mirror)))
+    }
+    // the current artifact of `dir`, moved to the version the untagged
+    // format wrote (decoded src, _SUCCESS and _MANIFEST kept), plus one
+    // planted row whose src is `keepSrc`: a full build never has it, so
+    // it shows whether a later tick carried the base's rows forward
+    def plantOldFormatBase(dir: String, keepSrc: String): Unit = {
+      val cur = ops.Storage.ensureZoneMap(spark, dir)
+      val fs = new org.apache.hadoop.fs.Path(cur)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val rows = spark.read.parquet(cur)
+      val planted = rows.where(col("src") === keepSrc).limit(1)
+        .withColumn("file_id", col("file_id") + 1000000L)
+      assert(planted.count() == 1, s"no artifact row has src $keepSrc")
+      val old = untagged(cur)
+      rows.unionByName(planted).coalesce(1).write.parquet(old.toString)
+      fs.rename(new org.apache.hadoop.fs.Path(cur, "_MANIFEST"),
+        new org.apache.hadoop.fs.Path(old, "_MANIFEST"))
+      fs.delete(new org.apache.hadoop.fs.Path(cur), true)
+    }
+    def parts(table: String) = {
+      val p = new org.apache.hadoop.fs.Path(table)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+        .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
+        .map(_.getPath).sortBy(_.getName).toSeq
+    }
+    val day0 = liRows(0L until 10L, 0)
+    val day1 = liRows(5L until 15L, 1)
+
+    // append tick over an older-format base
+    val a = s"/tmp/graft-test-oldbase-append-${java.util.UUID.randomUUID()}"
+    day0.coalesce(1).write.parquet(s"$a/lineitem.parquet")
+    val a0 = ops.Storage.normSrcStr(parts(s"$a/lineitem.parquet").head.toString)
+    plantOldFormatBase(a, a0)
+    day1.coalesce(1).write.mode("append").parquet(s"$a/lineitem.parquet")
+    val appended = canon(spark.read.parquet(ops.Storage.ensureZoneMap(spark, a)))
+    assert(appended == fullRebuild(day0 unionByName day1),
+      "append tick evolved from an older-format base")
+
+    // removal tick over an older-format base: day-1 is dropped, the
+    // planted row sits on the surviving day-0 file
+    val r = s"/tmp/graft-test-oldbase-remove-${java.util.UUID.randomUUID()}"
+    day0.coalesce(1).write.parquet(s"$r/lineitem.parquet")
+    val r0 = parts(s"$r/lineitem.parquet").head
+    day1.coalesce(1).write.mode("append").parquet(s"$r/lineitem.parquet")
+    plantOldFormatBase(r, ops.Storage.normSrcStr(r0.toString))
+    parts(s"$r/lineitem.parquet").filterNot(_ == r0).foreach { p =>
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false)
+    }
+    val removed = canon(spark.read.parquet(ops.Storage.ensureZoneMap(spark, r)))
+    assert(removed == fullRebuild(day0),
+      "removal tick evolved from an older-format base")
   }
 
   test("labelFor disambiguates datasets the sanitizer collapses (ADVICE r18)") {
