@@ -51,7 +51,7 @@ object Bench {
     // charged for process bring-up. Each query's own planning/codegen
     // still lands inside its timing.
     spark.range(1000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).count()
+    ParquetMeta.read(spark, s"$sfDir/lineitem.parquet").limit(1).count()
     // SPARK_GRAFT_ITERS > 1 (opt-in): run the whole registry N times and
     // report per-query MEDIANS — the single-shot numbers have been
     // contention-noise across rounds (same code, 2-6x swings), and a
@@ -86,12 +86,18 @@ object Bench {
     // Attribution is by stage id, so late-arriving listener events still
     // land correctly; the full map is written after spark.stop(), by
     // which point the listener bus has drained.
+    // The same listener counts each query's Spark jobs (builder jobs
+    // included), so a change that adds or removes jobs shows per query.
     val shuffleAgg = new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
+    val jobsAgg = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.LongAdder]()
     val stageToGroup = new java.util.concurrent.ConcurrentHashMap[Int, String]()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         val g = Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-        if (g != null) js.stageIds.foreach(sid => stageToGroup.put(sid, g))
+        if (g != null) {
+          js.stageIds.foreach(sid => stageToGroup.put(sid, g))
+          jobsAgg.computeIfAbsent(g, _ => new java.util.concurrent.atomic.LongAdder).increment()
+        }
       }
       override def onStageCompleted(
           sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
@@ -172,8 +178,10 @@ object Bench {
     }.mkString("{", ",", "}")
     val Seq(readB, writeB, spillB) = (0 to 2).map(i =>
       shuffleAgg.values.asScala.map(_(i)).sum / iters)
+    val jobCounts = jobsAgg.asScala.toSeq.sortBy(_._1).map { case (k, n) => k -> n.sum / iters }
+    val jobs = jobCounts.map { case (k, n) => s"\"$k\":$n" }.mkString("{", ",", "}")
     val calib = s""""loadavg_start":$loadavg,"calib_ms":$calibMs"""
-    val full = s"""{"metric":"total","value":$total,"unit":"sec",$calib,"errors":$errs,"queries":$qs,"shuffle":$shuffle,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec",$calib,"errors":$errs,"queries":$qs,"shuffle":$shuffle,"jobs":$jobs,"jobs_total":${jobCounts.map(_._2).sum},"sf":"$sfDir"}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get("/tmp/graft_bench_full.json"),
       full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case scala.util.control.NonFatal(_) => () }

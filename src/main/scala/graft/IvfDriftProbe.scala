@@ -41,7 +41,7 @@ object IvfDriftProbe {
   private def recallAtK(spark: SparkSession, idx: String,
       probeIds: Seq[Long]): Double = {
     import spark.implicits._
-    val asg = spark.read.parquet(s"$idx/assignments")
+    val asg = ParquetMeta.read(spark, s"$idx/assignments")
       .select(col("vec_id"), col("q"), col("bucket"))
       .withColumn("n2", expr(
         "aggregate(zip_with(q, q, (a, b) -> a * b), 0L, (acc, x) -> acc + x)"))
@@ -75,7 +75,7 @@ object IvfDriftProbe {
     * into a near-corpus scan when drifted mass all falls in one cell.
     */
   private def maxCellShare(spark: SparkSession, idx: String): Double = {
-    val app = spark.read.parquet(s"$idx/assignments")
+    val app = ParquetMeta.read(spark, s"$idx/assignments")
       .where(col("vec_id") >= 100000L)
     val total = app.count().toDouble
     if (total == 0) 0.0
@@ -111,7 +111,7 @@ object IvfDriftProbe {
     * every assignment.
     */
   private def mixedBase(spark: SparkSession, idx: String): Long = {
-    val asg = spark.read.parquet(s"$idx/assignments")
+    val asg = ParquetMeta.read(spark, s"$idx/assignments")
     val appCells = asg.where(col("vec_id") >= 100000L)
       .select("bucket").distinct()
     asg.where(col("vec_id") < 100000L)

@@ -268,7 +268,7 @@ object Probe {
     val marker = new java.io.File(out, "_BUILT")
     if (marker.exists()) return out
     tables.foreach { f =>
-      val src = spark.read.parquet(f.getPath)
+      val src = ParquetMeta.read(spark, f.getPath)
       val scaled = IdOffsets.get(f.getName.stripSuffix(".parquet")) match {
         case Some(ids) =>
           (0 until mult).map { i =>
@@ -293,7 +293,7 @@ object Probe {
   private def mediaDecode(spark: SparkSession, base: String, mult: Int): Unit = {
     import spark.implicits._
     val n = 1000L * mult
-    val tbl = spark.read.parquet(
+    val tbl = ParquetMeta.read(spark, 
       graft.sources.MediaFixtures.volumeTablePath(spark, base, n))
     def bytes(df: DataFrame) = df.agg(sum(length(col("payload")))).head().getLong(0)
     def assets(kind: String) = tbl.where(col("kind") === kind)

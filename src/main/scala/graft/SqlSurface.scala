@@ -58,9 +58,9 @@ object SqlSurface {
       buildIfAbsent: Boolean): Unit = {
     if (buildIfAbsent || ops.LlmPipeline.ivfIndexReady(spark, sfDir)) {
       val ivfDir = ops.LlmPipeline.ensureIvfIndex(spark, sfDir)
-      spark.read.parquet(s"$ivfDir/assignments")
+      ParquetMeta.read(spark, s"$ivfDir/assignments")
         .createOrReplaceTempView("ivf_assignments")
-      spark.read.parquet(s"$ivfDir/stats")
+      ParquetMeta.read(spark, s"$ivfDir/stats")
         .createOrReplaceTempView("ivf_stats")
     }
     if (buildIfAbsent || ops.LlmPipeline.substratesReady(spark, sfDir))

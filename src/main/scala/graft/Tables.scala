@@ -18,18 +18,18 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, TimestampNTZType}
   */
 object Tables {
 
-  /** Session memo for the base-table reads: every `spark.read.parquet`
-    * eagerly resolves the relation on the driver (file listing and a
-    * footer read for schema inference), and the registry's queries
-    * would otherwise re-pay that for every table they touch. Nothing is
-    * persisted or precomputed: each action still computes from the
-    * parquet bytes.
+  /** Session memo for the base-table reads: every read eagerly
+    * resolves the relation on the driver (file listing and a footer
+    * read for the schema, [[ParquetMeta.read]]), and the registry's
+    * queries would otherwise re-pay that for every table they touch.
+    * Nothing is persisted or precomputed: each action still computes
+    * from the parquet bytes.
     */
   private val readMemo = new SessionMemo[DataFrame]
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    readMemo(spark, path)(normNtz(spark.read.parquet(path)))
+    readMemo(spark, path)(normNtz(ParquetMeta.read(spark, path)))
   }
 
   /** Normalize TIMESTAMP_NTZ columns to TIMESTAMP (LTZ). The fixture

@@ -331,8 +331,10 @@ object Derived {
     * vanishes from bestOverlapBase's enumeration atomically; a reader
     * that races the window and loses re-ensures against the current
     * generation. The dataset's dirs are enumerated by label, whatever
-    * their version, so generations written under an older format tag
-    * retire here too. The same pass sweeps TTL-aged orphan '.build-'/
+    * their version. A generation written under an older format tag
+    * (Storage.olderFormat) is not a spare: no later ensure serves or
+    * evolves from it, so it retires once TTL-aged whatever the budget.
+    * The same pass sweeps TTL-aged orphan '.build-'/
     * '.old-' leftovers from crashed builds. A concurrent JVM evolving
     * FROM a just-retired base fails its build loudly and retries into
     * a full rebuild — never a wrong artifact.
@@ -350,10 +352,10 @@ object Derived {
       .partition(st => isStagingOrTrash(st.getPath.getName))
     transient.filter(st => now - st.getModificationTime > orphanTtlMs)
       .foreach(st => fs.delete(st.getPath, true))
-    published.filter(st => st.getPath.getName != keepName &&
+    val (older, spares) = published.filter(st => st.getPath.getName != keepName &&
         fs.exists(new org.apache.hadoop.fs.Path(st.getPath, marker)))
-      .sortBy(-_.getModificationTime)
-      .drop(keepGenerations)
+      .partition(st => Storage.olderFormat(st.getPath.getName.stripPrefix(prefix)))
+    (older ++ spares.sortBy(-_.getModificationTime).drop(keepGenerations))
       // TTL gate in addition to the count budget: young superseded
       // generations stay for in-flight readers (see generationTtlMs)
       .filter(st => now - st.getModificationTime > generationTtlMs)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{SessionMemo, Tables}
+import graft.{ParquetMeta, SessionMemo, Tables}
 import graft.ops.Pin.PinOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -131,7 +131,7 @@ object LlmPipeline {
     // aggregate is too small to repay the exchange the way the
     // shingle-volume postings scan does.
     minhashBandedMemo(s, s"$d/documents.parquet")(
-      s.read.parquet(ensureMinhashBanded(s, d))
+      ParquetMeta.read(s, ensureMinhashBanded(s, d))
         .select("doc_id", "band", "band_key"))
 
   /** Session memo for the banded-signature artifact scan: SIX call
@@ -202,9 +202,9 @@ object LlmPipeline {
     * doc_id re-ingested into a second file would fragment into two
     * signature row-sets and silently diverge from the whole-corpus
     * groupBy semantics the SQL/oracle mirrors compute. The staged
-    * artifact is validated before publish — one (doc_id → src)
-    * uniqueness agg over ARTIFACT rows, never a corpus re-read — so a
-    * violating corpus fails the build loudly.
+    * artifact is validated before publish ([[checkIngestContract]]:
+    * its footers, or an aggregate over ARTIFACT rows, never a corpus
+    * re-read), so a violating corpus fails the build loudly.
     */
   private[graft] def ensureRowSubstrate(s: SparkSession, family: String,
       table: String)(rowsFor: Seq[String] => DataFrame): String = {
@@ -213,26 +213,65 @@ object LlmPipeline {
       fullBuild = pinned => rowsFor(pinned),
       deltaBuild = (prev, added) => prev.unionByName(rowsFor(added)),
       removeBuild = substrateRemove(s),
-      // The uniqueness scan is VACUOUS when the manifest holds a single
-      // data file — every artifact row then carries the same src by
-      // construction, so a doc_id cannot span two part files. Skipping
-      // it saves a full staged-artifact read + aggregate job per cold
-      // build at single-file corpora (every test SF; the ensure leg was
-      // measured at >3/4 of the postings build) while the multi-file
-      // corpora the contract exists for still pay the honest check.
-      validate = tmp => if (lines.length > 1) {
-        val staged = s.read.parquet(tmp)
-        if (staged.columns.contains("doc_id") && staged.columns.contains("src")) {
-          val bad = staged.groupBy("doc_id")
-            .agg(min("src").as("src_a"), max("src").as("src_b"))
-            .filter(col("src_a") =!= col("src_b")).limit(1).collect()
-          require(bad.isEmpty,
-            s"$family: doc_id ${bad.head.get(0)} spans part files " +
-              s"${bad.head.getString(1)} and ${bad.head.getString(2)} — " +
-              "the ingest contract requires a doc_id to live in exactly " +
-              "one part file (re-ingested doc in a delta file?)")
-        }
-      })
+      // The check is VACUOUS when the manifest holds a single data
+      // file — every artifact row then carries the same src by
+      // construction, so a doc_id cannot span two part files; the
+      // multi-file corpora the contract exists for are checked.
+      validate = tmp => if (lines.length > 1) checkIngestContract(s, family, tmp))
+  }
+
+  /** Fail unless every doc_id of the artifact at `dir` lives in exactly
+    * one part file (one `src`); a no-op for artifacts without both
+    * columns. The proof comes from the footers when it can
+    * ([[docIdsDisjointBySrc]]: O(files), no job — the aggregate is a
+    * full shuffle of the artifact); otherwise one (doc_id → src)
+    * uniqueness aggregate over the artifact rows decides.
+    */
+  private[graft] def checkIngestContract(s: SparkSession, family: String,
+      dir: String): Unit = {
+    val footers = ParquetMeta.footers(s, dir)
+    val cols = footers.headOption.fold(Set.empty[String])(_.schema.fieldNames.toSet)
+    if (cols("doc_id") && cols("src") && !docIdsDisjointBySrc(footers)) {
+      val bad = ParquetMeta.read(s, dir).groupBy("doc_id")
+        .agg(min("src").as("src_a"), max("src").as("src_b"))
+        .filter(col("src_a") =!= col("src_b")).limit(1).collect()
+      require(bad.isEmpty,
+        s"$family: doc_id ${bad.head.get(0)} spans part files " +
+          s"${bad.head.getString(1)} and ${bad.head.getString(2)} — " +
+          "the ingest contract requires a doc_id to live in exactly " +
+          "one part file (re-ingested doc in a delta file?)")
+    }
+  }
+
+  /** The ingest contract proven from footer statistics alone: every
+    * non-empty row group holds one `src` (min = max) and no null
+    * `doc_id` or `src`, and the per-`src` [min, max] ranges of an
+    * integer `doc_id` are pairwise disjoint — a doc_id in two part
+    * files would lie in both ranges. False (not proven) whenever a
+    * statistic is missing or a row group mixes part files, e.g. a
+    * build whose map stage was fanned out or compacted.
+    */
+  private[graft] def docIdsDisjointBySrc(footers: Seq[ParquetMeta.Footer]): Boolean = {
+    import org.apache.parquet.column.statistics.{BinaryStatistics, IntStatistics, LongStatistics, Statistics}
+    def noNulls(st: Statistics[_]) =
+      st.hasNonNullValue && st.isNumNullsSet && st.getNumNulls == 0
+    val groups = footers.flatMap(_.rowGroups).filter(_.rows > 0).map { rg =>
+      val src = rg.stats.get("src").collect {
+        case b: BinaryStatistics if noNulls(b) && b.genericGetMin == b.genericGetMax =>
+          b.genericGetMin.toStringUsingUTF8
+      }
+      val ids = rg.stats.get("doc_id").collect {
+        case l: LongStatistics if noNulls(l) => (l.getMin, l.getMax)
+        case i: IntStatistics if noNulls(i) => (i.getMin.toLong, i.getMax.toLong)
+      }
+      src.zip(ids)
+    }
+    groups.forall(_.isDefined) && {
+      val ranges = groups.flatten.groupMapReduce(_._1)(_._2) {
+        case ((lo1, hi1), (lo2, hi2)) => (lo1 min lo2, hi1 max hi2)
+      }.values.toSeq.sortBy(_._1)
+      ranges.zip(ranges.drop(1)).forall { case ((_, hi), (lo, _)) => hi < lo }
+    }
   }
 
   /** Inverted-index rows for a set of documents part files: one row per
@@ -247,7 +286,7 @@ object LlmPipeline {
     // single-split scan would also publish a one-file artifact and make
     // every consumer's scan single-task.
     withTk(Tables.fanOut(
-      s.read.parquet(paths: _*)
+      ParquetMeta.read(s, paths: _*)
         .select(col("doc_id"), Storage.normSrcCol(input_file_name()).as("src"),
           col("text")),
       col("doc_id")))
@@ -275,7 +314,7 @@ object LlmPipeline {
   private[graft] def ensureMinhashBanded(s: SparkSession, d: String): String = {
     val table = s"$d/documents.parquet"
     val lines = Storage.manifestLines(s, table)
-    lazy val posts = s.read.parquet(ensureNgramPostings(s, d))
+    lazy val posts = ParquetMeta.read(s, ensureNgramPostings(s, d))
     def rowsFor(paths: Seq[String], full: Boolean): DataFrame = {
       import s.implicits._
       val base =
@@ -299,7 +338,7 @@ object LlmPipeline {
     // same fanOut rationale as ngramPostingsRows; keyed on doc_id so the
     // (doc_id, src) aggregate reuses the exchange
     val hs = withTk(Tables.fanOut(
-      s.read.parquet(paths: _*)
+      ParquetMeta.read(s, paths: _*)
         .select(col("doc_id"), Storage.normSrcCol(input_file_name()).as("src"),
           col("text")),
       col("doc_id")))
@@ -326,7 +365,7 @@ object LlmPipeline {
     * Pure per-row projection — no shuffle anywhere in the build.
     */
   private def embedBucketedRows(s: SparkSession, paths: Seq[String]): DataFrame =
-    s.read.parquet(paths: _*)
+    ParquetMeta.read(s, paths: _*)
       .select(col("vec_id"), col("label"), expr(quant).as("q"),
         Storage.normSrcCol(input_file_name()).as("src"))
       .withColumn("n2", expr(dotL("q", "q")))
@@ -664,7 +703,7 @@ object LlmPipeline {
     */
   private[graft] def simhashSig(s: SparkSession, d: String): DataFrame =
     simhashSigMemo(s, s"$d/documents.parquet")(
-      s.read.parquet(ensureSimhashSig(s, d)).select("doc_id", "simhash"))
+      ParquetMeta.read(s, ensureSimhashSig(s, d)).select("doc_id", "simhash"))
 
   private val simhashSigMemo = new SessionMemo[DataFrame]
 
@@ -898,7 +937,7 @@ object LlmPipeline {
     */
   private[graft] def ngramPostings(s: SparkSession, d: String): DataFrame =
     ngramPostingsMemo(s, s"$d/documents.parquet")(
-      s.read.parquet(ensureNgramPostings(s, d)).select("doc_id", "sh"))
+      ParquetMeta.read(s, ensureNgramPostings(s, d)).select("doc_id", "sh"))
 
   /** Session memo for the inverted-index scan: SEVEN registry queries
     * consume these rows (ngram/collapsed-jaccard pairs, boilerplate,
@@ -1088,7 +1127,7 @@ object LlmPipeline {
     */
   private[graft] def embedBucketed(s: SparkSession, d: String): DataFrame =
     embedBucketedMemo(s, s"$d/embeddings.parquet")(
-      s.read.parquet(ensureEmbedBucketed(s, d))
+      ParquetMeta.read(s, ensureEmbedBucketed(s, d))
         .select("vec_id", "label", "q", "n2", "bucket"))
 
   private val embedBucketedMemo = new SessionMemo[DataFrame]
@@ -1858,8 +1897,7 @@ object LlmPipeline {
     import org.apache.spark.ml.functions.array_to_vector
     // pin the training frame ONCE (guide §5 caching: reused by the
     // k-means|| init passes + 5 Lloyd iterations + the final transform —
-    // ~8 parquet re-scans otherwise; spark.ml itself warns when the fit
-    // input is uncached). Output-preserving: same rows, same
+    // ~8 parquet re-scans otherwise). Output-preserving: same rows, same
     // partitioning, same seed ⇒ identical centroids and assignments
     // (the persisted-dump oracle and the probe ≡ per-run spec gate it).
     val e = Pin.pin(Tables.embeddings(s, d)
@@ -1869,7 +1907,11 @@ object LlmPipeline {
     // 5 Lloyd iterations: the coarse quantizer only needs rough cells
     // (faiss trains IVF lists the same way); fixed seed keeps the
     // assignment deterministic for the spec regardless of convergence.
-    val km = new KMeans().setK(8).setSeed(42L).setMaxIter(5)
+    // The solver is a constant: `auto` runs a Summarizer job over the
+    // input only to choose between `row` and `block`, and it chooses
+    // `row` for these dense 64-dim vectors; the centers are the same
+    // (LlmPipelineSpec).
+    val km = new KMeans().setK(8).setSeed(42L).setMaxIter(5).setSolver("row")
       .setFeaturesCol("fv").setPredictionCol("bucket")
     km.fit(e).transform(e).select(col("vec_id"), col("q"), col("bucket"))
   }
@@ -1932,9 +1974,9 @@ object LlmPipeline {
     buildIvfIndexFrom(s, Tables.embeddings(s, d), indexDir)
 
   /** The build body over a caller-supplied embeddings frame — the
-    * manifest-keyed ensure passes `s.read.parquet(pinnedPaths: _*)` so
-    * artifact content and _MANIFEST derive from the same listing
-    * (the ADVICE r16 TOCTOU fix: a file appended between the listing
+    * manifest-keyed ensure passes `ParquetMeta.read(s, pinnedPaths: _*)`
+    * so artifact content and _MANIFEST derive from the same listing
+    * (a file appended between the listing
     * and a live directory scan would be baked into the assignments but
     * absent from the manifest, and the next ensure would assign its
     * vectors AGAIN as delta — duplicate vec_id rows).
@@ -1943,8 +1985,9 @@ object LlmPipeline {
       indexDir: String): Unit = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
-    // pinned once for the same reason as ivfKmeansFit: the init + Lloyd
-    // passes and the final transform otherwise re-scan the parquet ~8×.
+    // pinned once, and the solver fixed, for the same reasons as
+    // ivfKmeansFit: the init + Lloyd passes and the final transform
+    // otherwise re-scan the parquet ~8×.
     // input_file_name() is evaluated BELOW the checkpoint, so the src
     // values are materialized before lineage is cut.
     val e = Pin.pin(emb
@@ -1956,7 +1999,7 @@ object LlmPipeline {
         // per-data-file stats design. Probes prune the column away;
         // on disk it dictionary-encodes to ~nothing.
         Storage.normSrcCol(input_file_name()).as("src")))
-    val model = new KMeans().setK(8).setSeed(42L).setMaxIter(5)
+    val model = new KMeans().setK(8).setSeed(42L).setMaxIter(5).setSolver("row")
       .setFeaturesCol("fv").setPredictionCol("bucket").fit(e)
     val assigned = model.transform(e)
       .select(col("vec_id"), col("q"), col("bucket"), col("src"),
@@ -1995,7 +2038,7 @@ object LlmPipeline {
     * probe ≡ per-run result and fit-once/probe-twice identity.
     */
   def simSearchIvfKmeansProbe(s: SparkSession, d: String): DataFrame =
-    ivfKmeansProbe(s.read.parquet(s"${ensureIvfIndex(s, d)}/assignments"))
+    ivfKmeansProbe(ParquetMeta.read(s, s"${ensureIvfIndex(s, d)}/assignments"))
 
   /** Recluster when appended vectors sit this much farther (mean exact
     * squared L2 to their assigned frozen centroid) from the cells than
@@ -2053,7 +2096,7 @@ object LlmPipeline {
       Derived.replaceVersioned(s, IvfFamily, src,
         version = Storage.manifestVersion(lines), marker = IvfMarker) { tmp =>
         buildIvfIndexFrom(s,
-          s.read.parquet(Storage.manifestPath(lines): _*), tmp)
+          ParquetMeta.read(s, Storage.manifestPath(lines): _*), tmp)
         Storage.stampManifest(s, tmp, lines)
       }
       true
@@ -2088,7 +2131,7 @@ object LlmPipeline {
     import s.implicits._
     val src = s"$d/embeddings.parquet"
     val idxDir = ensureIvfIndex(s, d)
-    val asg0 = s.read.parquet(s"$idxDir/assignments")
+    val asg0 = ParquetMeta.read(s, s"$idxDir/assignments")
     val nApp = asg0.where(col("appended")).count()
     if (nApp == 0) return false
     val hot = asg0.where(col("appended"))
@@ -2114,8 +2157,8 @@ object LlmPipeline {
       hot: Seq[Int], tmp: String): Unit = {
     import s.implicits._
     import org.apache.spark.ml.clustering.KMeans
-    val asg = s.read.parquet(s"$prevDir/assignments")
-    val cents = s.read.parquet(s"$prevDir/centroids")
+    val asg = ParquetMeta.read(s, s"$prevDir/assignments")
+    val cents = ParquetMeta.read(s, s"$prevDir/centroids")
     var nextId = cents.agg(max("cent_id")).head.getInt(0) + 1
     val fvExpr = "transform(q, x -> CAST(x AS DOUBLE) / 1000.0)"
     val cold = asg.where(!col("bucket").isin(hot.map(Int.box): _*))
@@ -2160,7 +2203,7 @@ object LlmPipeline {
   }
 
   def ivfStaleness(s: SparkSession, d: String): DataFrame = {
-    val st = s.read.parquet(s"${ensureIvfIndex(s, d)}/stats")
+    val st = ParquetMeta.read(s, s"${ensureIvfIndex(s, d)}/stats")
     val base = st.where(col("kind") === "build")
       .select(col("n_vecs").as("n_base_raw"), col("mean_dist2").as("base_mean_dist2"))
     val delta = st.where(col("kind") === "delta")
@@ -2261,7 +2304,7 @@ object LlmPipeline {
         case None => // full build over the PINNED listing, not a live
           // dir scan — artifact and manifest from the same snapshot
           buildIvfIndexFrom(s,
-            s.read.parquet(Storage.manifestPath(lines): _*), tmp)
+            ParquetMeta.read(s, Storage.manifestPath(lines): _*), tmp)
       }
       Storage.stampManifest(s, tmp, lines)
     }
@@ -2285,7 +2328,7 @@ object LlmPipeline {
   private def evolveIvfIndex(s: SparkSession, prevDir: String,
       removed: Seq[String], added: Seq[String], tmp: String): Unit = {
     import s.implicits._
-    val prevAsg = s.read.parquet(s"$prevDir/assignments")
+    val prevAsg = ParquetMeta.read(s, s"$prevDir/assignments")
     val gone = removed.map(Storage.normSrcStr).toDF("gone_src")
     val surviving =
       if (removed.isEmpty) prevAsg
@@ -2308,8 +2351,8 @@ object LlmPipeline {
     val assigned =
       if (added.isEmpty) None
       else {
-        val cents = s.read.parquet(s"$prevDir/centroids")
-        val deltaE = s.read.parquet(added: _*)
+        val cents = ParquetMeta.read(s, s"$prevDir/centroids")
+        val deltaE = ParquetMeta.read(s, added: _*)
           .select(col("vec_id"),
             col("embedding").cast("array<double>").as("fv"),
             expr(quant).as("q"),
@@ -2332,15 +2375,15 @@ object LlmPipeline {
     // distance-to-frozen-centroid next to the build-time baseline, and
     // each removal's base/appended row census (ADVICE r17) — what
     // ivfStaleness reads to decide the recluster flag
-    val withDelta = assigned.fold(s.read.parquet(s"$prevDir/stats")) { a =>
-      s.read.parquet(s"$prevDir/stats").unionByName(
+    val withDelta = assigned.fold(ParquetMeta.read(s, s"$prevDir/stats")) { a =>
+      ParquetMeta.read(s, s"$prevDir/stats").unionByName(
         a.agg(count(lit(1)).as("n_vecs"), avg(col("dist2")).as("mean_dist2"))
           .select(lit("delta").as("kind"), col("n_vecs"), col("mean_dist2")))
     }
     removedAdj.fold(withDelta)(withDelta.unionByName(_))
       .coalesce(1).write.mode("overwrite").parquet(s"$tmp/stats")
     // centroids stay FROZEN and copy LAST: the commit marker
-    s.read.parquet(s"$prevDir/centroids").coalesce(1)
+    ParquetMeta.read(s, s"$prevDir/centroids").coalesce(1)
       .write.mode("overwrite").parquet(s"$tmp/centroids")
   }
 
@@ -3363,7 +3406,7 @@ object LlmPipeline {
     */
   private def winnowFps(s: SparkSession, d: String): DataFrame =
     winnowFpsMemo(s, s"$d/documents.parquet")(
-      s.read.parquet(ensureWinnowFps(s, d)).select("doc_id", "h"))
+      ParquetMeta.read(s, ensureWinnowFps(s, d)).select("doc_id", "h"))
 
   // K is baked into the artifact rows, so the family name carries it:
   // a K change invalidates persisted fingerprints from the older
@@ -3377,7 +3420,7 @@ object LlmPipeline {
     // since it is undefined above one; the W×-volume window hashing
     // runs above it
     Tables.fanOut(
-      s.read.parquet(paths: _*)
+      ParquetMeta.read(s, paths: _*)
         .where(col("n_chars") >= SubWinW)
         .select(col("doc_id"), Storage.normSrcCol(input_file_name()).as("src"),
           col("text"), col("n_chars")),
@@ -3452,15 +3495,7 @@ object LlmPipeline {
       val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
       val bytes = fs.getContentSummary(p).getLength
       // footer row counts, never a data scan
-      val nRows = fs.listStatus(p).toSeq
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .map { st =>
-          val in = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              st.getPath, s.sparkContext.hadoopConfiguration))
-          try in.getRecordCount finally in.close()
-        }.sum
-      (sub.name, nRows, bytes)
+      (sub.name, ParquetMeta.footers(s, dir).map(_.rows).sum, bytes)
     }
     import s.implicits._
     rows.toDF("family", "n_rows", "bytes").orderBy("family")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{ParquetMeta, Tables}
 import graft.ops.Pin.PinOps
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -964,7 +964,7 @@ object Multimodal {
     // fanOut above the input_file_name projection, which an exchange
     // would void, and below the per-doc image decode
     phashCoreSrc(graft.Tables.fanOut(
-      s.read.parquet(paths: _*)
+      ParquetMeta.read(s, paths: _*)
         .select(col("doc_id"),
           Storage.normSrcCol(input_file_name()).as("src"),
           coalesce(col("text"), lit("")).cast("binary").as("payload")),
@@ -995,7 +995,7 @@ object Multimodal {
     // read the PERSISTED hash table (ensurePhashTable): the decode ran
     // once at ingest; the query is banding + verify over 16-hex rows
     dedupPhashFromHashes(
-      s.read.parquet(ensurePhashTable(s, d)).select("doc_id", "phash_hex"))
+      ParquetMeta.read(s, ensurePhashTable(s, d)).select("doc_id", "phash_hex"))
 
   /** The hash→band→verify pipeline over an (id, payload) Dataset — the
     * spec drives this with REAL planted images; the registry query

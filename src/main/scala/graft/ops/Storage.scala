@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{ParquetMeta, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -39,7 +39,7 @@ object Storage {
     * usable for both range and point predicates.
     */
   def zonemapBuild(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(ensureZoneMapMerged(s, d)).orderBy("file_id")
+    ParquetMeta.read(s, ensureZoneMapMerged(s, d)).orderBy("file_id")
 
   /** PARTIAL zone-map rows — per (source part file, file_id) — over any
     * lineitem-shaped frame; shared by the full build, the delta pass,
@@ -139,7 +139,7 @@ object Storage {
     val partials = ensureZoneMapWithLines(s, d, lines)
     Derived.ensure(s, ZonemapMergedFamily, src,
       version = manifestVersion(lines)) { tmp =>
-      zonemapMerge(s.read.parquet(partials))
+      zonemapMerge(ParquetMeta.read(s, partials))
         .coalesce(1).write.mode("overwrite").parquet(tmp)
     }
   }
@@ -153,6 +153,21 @@ object Storage {
     * check.py mirrors it to locate the current substrate artifacts.
     */
   private[graft] val FormatTag = "v3"
+
+  /** `<mtime>_<version>` (an artifact dir name after its dataset label)
+    * of a current-[[FormatTag]] version, a `-r<n>` refit generation
+    * included.
+    */
+  private val CurrentTagName = s"\\d+_${FormatTag}m.*"
+
+  /** Whether `<mtime>_<version>` names a manifest-keyed generation of
+    * an older [[FormatTag]] (`m<key>`, `v2m<key>`, …): never served,
+    * never an evolve base, so the generation GC does not keep it as a
+    * spare.
+    */
+  private[graft] def olderFormat(afterLabel: String): Boolean =
+    afterLabel.matches("\\d+_[a-z0-9]*m[0-9a-f]{12}(-r\\d+)?") &&
+      !afterLabel.matches(CurrentTagName)
 
   /** The version key of a manifest-keyed artifact: [[FormatTag]], then
     * `m` and a 12-hex digest of its listing — the one spelling every
@@ -172,9 +187,9 @@ object Storage {
   private[graft] def ensureZoneMapWithLines(s: SparkSession, d: String,
       lines: Seq[String]): String =
     ensureManifestKeyedWithLines(s, ZonemapFamily, s"$d/lineitem.parquet", lines)(
-      fullBuild = pinned => zonemapPartialsFor(s.read.parquet(pinned: _*)),
+      fullBuild = pinned => zonemapPartialsFor(ParquetMeta.read(s, pinned: _*)),
       deltaBuild = (prevRows, delta) =>
-        prevRows.unionByName(zonemapPartialsFor(s.read.parquet(delta: _*))),
+        prevRows.unionByName(zonemapPartialsFor(ParquetMeta.read(s, delta: _*))),
       removeBuild = (prevRows, removed) => {
         import s.implicits._
         // anti-join, not isin: the removed list is file-count-sized
@@ -199,7 +214,7 @@ object Storage {
     * between a metadata lookup + targeted scan and a full-table pass.
     */
   def zonemapPrune(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(ensureZoneMapMerged(s, d))
+    ParquetMeta.read(s, ensureZoneMapMerged(s, d))
       .where(col("max_ship") >= lit(PruneLo).cast("timestamp") &&
         col("min_ship") <= lit(PruneHi).cast("timestamp"))
       .select("file_id", "n_chunks", "size_units")
@@ -385,7 +400,7 @@ object Storage {
     * 318 s + 298 s: two full passes over 610M rows for one index).
     */
   def fileindexBuild(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(ensureBloomIndex(s, d)).orderBy("file_id", "bit_pos")
+    ParquetMeta.read(s, ensureBloomIndex(s, d)).orderBy("file_id", "bit_pos")
 
   private[graft] val BloomFamily = "graft-bloom-index"
   private[graft] val BloomManifest = "_MANIFEST"
@@ -394,30 +409,32 @@ object Storage {
     * (sorted; `_`/`.`-prefixed bookkeeping files excluded — the same
     * set a parquet scan reads). The hidden-name test applies to EVERY
     * path component between the table root and the leaf, not just the
-    * leaf: `fs.listFiles` recurses into hidden directories
-    * — a `_temporary` leftover from a crashed append holds part files
-    * whose leaf names look clean, but Spark's InMemoryFileIndex never
-    * reads them, so admitting them would make the manifest claim
-    * coverage of rows the artifact never ingested. The line triple is
-    * the identity an append-aware ensure compares: a file with the same
-    * path but new length or mtime is a MODIFICATION, never an append.
+    * leaf: a `_temporary` leftover from a crashed append holds part
+    * files whose leaf names look clean, but Spark's InMemoryFileIndex
+    * never reads them, so admitting them would make the manifest claim
+    * coverage of rows the artifact never ingested. The walk prunes a
+    * hidden directory instead of descending into it, and uses plain
+    * `listStatus`: `listFiles` builds a LocatedFileStatus per file,
+    * which on the local FS without native Hadoop forks an `ls -ld`
+    * each. The line triple is the identity an append-aware ensure
+    * compares: a file with the same path but new length or mtime is a
+    * MODIFICATION, never an append.
     */
   private[graft] def manifestLines(s: SparkSession, table: String): Seq[String] = {
     val p = new org.apache.hadoop.fs.Path(table)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Nil
-    val root = fs.makeQualified(p).toString
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val st = it.next()
-      val rel = st.getPath.toString.stripPrefix(root).stripPrefix("/")
-      val anyHidden = rel.split('/')
-        .exists(c => c.startsWith("_") || c.startsWith("."))
-      if (st.isFile && !anyHidden)
-        out += s"${st.getLen}\t${st.getModificationTime}\t${st.getPath}"
-    }
-    out.sorted.toSeq
+    def line(st: org.apache.hadoop.fs.FileStatus) =
+      s"${st.getLen}\t${st.getModificationTime}\t${st.getPath}"
+    def walk(dir: org.apache.hadoop.fs.Path): Seq[String] =
+      fs.listStatus(dir).toSeq.flatMap { st =>
+        val n = st.getPath.getName
+        if (n.startsWith("_") || n.startsWith(".")) Nil
+        else if (st.isDirectory) walk(st.getPath)
+        else Seq(line(st))
+      }
+    val root = try Some(fs.getFileStatus(p))
+      catch { case _: java.io.FileNotFoundException => None }
+    root.fold(Seq.empty[String])(r => if (r.isFile) Seq(line(r)) else walk(p).sorted)
   }
 
   private[graft] def manifestPath(lines: Seq[String]): Seq[String] =
@@ -448,15 +465,12 @@ object Storage {
     val fs = fam.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(fam) || current.isEmpty) return None
     val prefix = Derived.labelFor(src) + "_"
-    // dirFor's `<label>_<mtime>_<version>` with a current-tag version
-    // (a '-r<n>' refit generation included)
-    val currentTag = s"\\d+_${FormatTag}m.*"
     val cur = current.toSet
     fs.listStatus(fam).toSeq
       .filter { st =>
         val n = st.getPath.getName
         st.isDirectory && n.startsWith(prefix) &&
-          n.stripPrefix(prefix).matches(currentTag) &&
+          n.stripPrefix(prefix).matches(CurrentTagName) &&
           !Derived.isStagingOrTrash(n)
       }
       .flatMap { st =>
@@ -505,7 +519,7 @@ object Storage {
     val target = math.max(1L, (bytes + (64L << 20) - 1) / (64L << 20)).toInt
     if (parts.length > target * 4 && bytes < (2L << 30)) {
       val tmp2 = new org.apache.hadoop.fs.Path(tmp + ".compact")
-      s.read.parquet(tmp).coalesce(target)
+      ParquetMeta.read(s, tmp).coalesce(target)
         .write.mode("overwrite").parquet(tmp2.toString)
       fs.delete(p, true)
       if (!fs.rename(tmp2, p))
@@ -553,7 +567,7 @@ object Storage {
           postBaseSelectHook(prevDir)
           val removed = manifestPath((prev -- lines.toSet).toSeq.sorted)
           val added = manifestPath(lines.filterNot(prev))
-          val prevRows = s.read.parquet(prevDir)
+          val prevRows = ParquetMeta.read(s, prevDir)
           val afterRemove =
             if (removed.isEmpty) prevRows else removeBuild(prevRows, removed)
           if (added.isEmpty) afterRemove else deltaBuild(afterRemove, added)
@@ -626,12 +640,12 @@ object Storage {
   private[graft] def ensureBloomIndex(s: SparkSession, d: String): String = {
     val src = s"$d/lineitem.parquet"
     ensureManifestKeyedWithLines(s, BloomFamily, src, manifestLines(s, src))(
-      fullBuild = pinned => bloomRowsFor(s.read.parquet(pinned: _*)),
+      fullBuild = pinned => bloomRowsFor(ParquetMeta.read(s, pinned: _*)),
       deltaBuild = (prevRows, delta) =>
         // delta rows ∪ previous artifact, re-distinct'd: a file_id whose
         // rows span covered and new part files would otherwise duplicate.
         // Set-identical to the full build (the projection is per-row).
-        bloomRowsFor(s.read.parquet(delta: _*))
+        bloomRowsFor(ParquetMeta.read(s, delta: _*))
           .unionByName(prevRows)
           .distinct(),
       // bits OR in, never out: a removed file's positions may also be
@@ -660,7 +674,7 @@ object Storage {
       .select(explode(expr(s"array_distinct(array(${pExprs.mkString(", ")}))"))
         .as("bit_pos"))
     val need = ppos.agg(count(lit(1)).as("n_need"))
-    s.read.parquet(ensureBloomIndex(s, d))
+    ParquetMeta.read(s, ensureBloomIndex(s, d))
       .join(broadcast(ppos), Seq("bit_pos"))
       .groupBy("file_id").agg(count(lit(1)).as("n_hit"))
       .crossJoin(broadcast(need))

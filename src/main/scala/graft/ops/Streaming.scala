@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{ParquetMeta, Tables}
 import graft.ops.Pin.PinOps
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -409,7 +409,7 @@ object Streaming {
           else if (fs.exists(bakPath)) Some(bakPath.toString)
           else None
         val prev = prevDir
-          .map(p => s.read.parquet(p).select("node", "ts"))
+          .map(p => ParquetMeta.read(s, p).select("node", "ts"))
           .getOrElse(incoming.limit(0))
         val merged = prev.unionByName(incoming)
           .groupBy("node").agg(max(col("ts")).as("ts"))

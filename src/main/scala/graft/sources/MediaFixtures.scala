@@ -3,6 +3,7 @@ package graft.sources
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.US_ASCII
 
+import graft.ParquetMeta
 import graft.ops.Derived
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -493,7 +494,7 @@ object MediaFixtures {
   }
 
   def table(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(tablePath(s, d))
+    ParquetMeta.read(s, tablePath(s, d))
 
   /** One volume-corpus asset as a pure function of its id — dims/rates/
     * container cycle deterministically, so the corpus is retry-stable

@@ -2295,4 +2295,19 @@ class LlmPipelineSpec extends AnyFunSuite {
     assert(top.forall { case (_, c) => c >= -1.0001 && c <= 1.0001 })
     assert(top.map(_._2).sliding(2).forall(w => w(0) >= w(1)), "not sorted desc")
   }
+
+  test("IVF KMeans: the pinned `row` solver gives the same centers as `auto` on the fixture embeddings") {
+    import org.apache.spark.ml.clustering.KMeans
+    import org.apache.spark.ml.functions.array_to_vector
+    for (d <- Seq(SparkTestSession.sf0001, SparkTestSession.sf001)) {
+      val e = Tables.embeddings(spark, d)
+        .select(array_to_vector(col("embedding").cast("array<double>")).as("fv"))
+        .cache()
+      def centers(solver: String) = new KMeans().setK(8).setSeed(42L).setMaxIter(5)
+        .setSolver(solver).setFeaturesCol("fv").fit(e)
+        .clusterCenters.map(_.toArray.toSeq).toSeq
+      try assert(centers("row") == centers("auto"), s"$d: row and auto centers differ")
+      finally e.unpersist()
+    }
+  }
 }

@@ -5,8 +5,9 @@ import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-/** ParquetMeta.stripSparkSchema — the footer surgery that makes
-  * SfGen output read back like the driver's arrow-written fixtures.
+/** ParquetMeta: the footer surgery that makes SfGen output read back
+  * like the arrow-written reference fixtures (stripSparkSchema), and
+  * the footer reader behind every flat parquet read (read).
   */
 class ParquetMetaSpec extends AnyFunSuite {
   private def spark = SparkTestSession.spark
@@ -72,5 +73,86 @@ class ParquetMetaSpec extends AnyFunSuite {
     val df = Tables(spark, base, "events")
     assert(df.schema("ts").dataType == TimestampType)
     assert(df.count() == 1000)
+  }
+
+  /** The footer-schema read resolves exactly what Spark's inference
+    * resolves, and launches no job doing it.
+    */
+  private def assertFooterRead(path: String): Unit = {
+    val want = spark.read.parquet(path).schema
+    val (df, jobs) = SparkTestSession.jobsIn(ParquetMeta.read(spark, path))
+    assert(df.schema == want, s"$path: footer schema ${df.schema} != inferred $want")
+    assert(jobs == 0, s"$path: resolving the read launched $jobs job(s)")
+  }
+
+  private val fixtureTables = Seq("region", "nation", "customer", "supplier",
+    "part", "orders", "lineitem", "events", "documents", "embeddings")
+
+  test("footer schema equals Spark's inferred schema for every fixture table, with no job") {
+    for (sf <- Seq(SparkTestSession.sf0001, SparkTestSession.sf001);
+         t <- fixtureTables)
+      assertFooterRead(s"$sf/$t.parquet")
+  }
+
+  test("footer schema equals Spark's inferred schema for every parquet artifact family") {
+    val d = SparkTestSession.sf0001
+    ops.Storage.ensureZoneMapMerged(spark, d)
+    ops.Storage.ensureBloomIndex(spark, d)
+    ops.LlmPipeline.substrates.foreach(_.ensure(spark, d))
+    ops.LlmPipeline.ensureIvfIndex(spark, d)
+    sources.MediaFixtures.tablePath(spark, d)
+    sources.MediaFixtures.volumeTablePath(spark, d, 20L)
+    val fs = new org.apache.hadoop.fs.Path(d)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def visible(st: org.apache.hadoop.fs.FileStatus) =
+      !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith(".")
+    // every dir under a published artifact that directly holds parquet
+    def parquetDirs(p: org.apache.hadoop.fs.Path): Seq[String] = {
+      val kids = fs.listStatus(p).toSeq.filter(visible)
+      val here = if (kids.exists(k => k.isFile && k.getPath.getName.endsWith(".parquet")))
+        Seq(p.toString) else Nil
+      here ++ kids.filter(_.isDirectory).flatMap(k => parquetDirs(k.getPath))
+    }
+    val label = ops.Derived.labelFor(s"$d/documents.parquet") + "_"
+    val checked = ops.Procedures.artifactFamilies.filter { fam =>
+      val root = new org.apache.hadoop.fs.Path(ops.Derived.familyDir(fam))
+      val dirs = fs.listStatus(root).toSeq
+        .filter(st => st.isDirectory && st.getPath.getName.startsWith(label) &&
+          !ops.Derived.isStagingOrTrash(st.getPath.getName))
+        .flatMap(st => parquetDirs(st.getPath))
+      dirs.foreach(assertFooterRead)
+      dirs.nonEmpty
+    }
+    // the JSONL export is the one family that publishes no parquet
+    assert(checked.toSet == ops.Procedures.artifactFamilies.toSet -
+      ops.LlmPipeline.JsonlExportFamily, s"families checked: $checked")
+  }
+
+  test("footer read keeps a Spark-written NTZ schema; a partitioned dir takes Spark's own discovery") {
+    val base = Files.createTempDirectory("pmeta4").toString
+    writeNtz(s"$base/ntz.parquet")
+    assertFooterRead(s"$base/ntz.parquet")
+    assert(ParquetMeta.read(spark, s"$base/ntz.parquet").schema("ts").dataType ==
+      TimestampNTZType)
+    // the partitioned layout ChunkIngest/JsonlCorpus write: the fallback
+    // resolves it (Spark's inference job runs) and keeps the partition column
+    val parted = s"$base/parted.parquet"
+    spark.range(20).selectExpr("id", "id % 3 AS k")
+      .write.partitionBy("k").parquet(parted)
+    val (df, jobs) = SparkTestSession.jobsIn(ParquetMeta.read(spark, parted))
+    assert(df.schema == spark.read.parquet(parted).schema)
+    assert(df.columns.contains("k") && df.count() == 20)
+    assert(jobs >= 1, "a partitioned dir must take Spark's own resolution")
+  }
+
+  test("footers report per-row-group row counts and column statistics") {
+    val dir = Files.createTempDirectory("pmeta5").toString + "/t.parquet"
+    writeNtz(dir)
+    val fs = ParquetMeta.footers(spark, dir)
+    assert(fs.size == 2 && fs.map(_.rows).sum == 1000)
+    val ids = fs.flatMap(_.rowGroups).map(_.stats("id"))
+    assert(ids.forall(st => st.hasNonNullValue && st.getNumNulls == 0))
+    assert(ids.map(_.genericGetMin.asInstanceOf[java.lang.Long].longValue).min == 0L)
+    assert(ids.map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue).max == 999L)
   }
 }

@@ -51,4 +51,37 @@ object SparkTestSession {
     sys.env.getOrElse("GRAFT_TEST_MASTER", "local[4,2]"), 4, extraConfs(sys.env))
 
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** The sf0.01 fixture beside [[sf0001]]. */
+  val sf001 = s"${new java.io.File(sf0001).getParent}/sf0.01"
+
+  /** `body`'s result and the number of Spark jobs it launched from this
+    * thread. A marker job in its own group runs after `body`; the
+    * listener bus delivers events in order, so once the marker's start
+    * is seen every job of `body` has been counted.
+    */
+  def jobsIn[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-in-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-marker"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => n.incrementAndGet()
+          case Some(`marker`) => seen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, group)
+      val r = try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never seen")
+      (r, n.get)
+    } finally sc.removeSparkListener(l)
+  }
 }

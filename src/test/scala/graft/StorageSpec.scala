@@ -380,6 +380,24 @@ class StorageSpec extends AnyFunSuite {
     assert(lines.size == fs.listStatus(new org.apache.hadoop.fs.Path(table))
       .count(st => st.isFile && !st.getPath.getName.startsWith("_") &&
         !st.getPath.getName.startsWith(".")))
+    // a visible subdirectory is walked into, and the lines are byte-for-
+    // byte those of a recursive listFiles with every hidden path
+    // component filtered out
+    val nested = new org.apache.hadoop.fs.Path(s"$table/k=1/part-00000-nested.parquet")
+    val out2 = fs.create(nested)
+    try out2.write("nested".getBytes("UTF-8")) finally out2.close()
+    val root = fs.makeQualified(new org.apache.hadoop.fs.Path(table)).toString
+    val it = fs.listFiles(new org.apache.hadoop.fs.Path(table), true)
+    val want = scala.collection.mutable.ArrayBuffer.empty[String]
+    while (it.hasNext) {
+      val st = it.next()
+      val rel = st.getPath.toString.stripPrefix(root).stripPrefix("/")
+      if (!rel.split('/').exists(c => c.startsWith("_") || c.startsWith(".")))
+        want += s"${st.getLen}\t${st.getModificationTime}\t${st.getPath}"
+    }
+    val lines2 = ops.Storage.manifestLines(spark, table)
+    assert(lines2.exists(_.endsWith("/k=1/part-00000-nested.parquet")), s"$lines2")
+    assert(lines2 == want.sorted.toSeq, s"$lines2 != ${want.sorted}")
   }
 
   test("mixed manifest tick: one artifact evolve handles retention drop + ingest append together") {
@@ -772,6 +790,30 @@ class StorageSpec extends AnyFunSuite {
     assert(fs.exists(new org.apache.hadoop.fs.Path(gen1)),
       "the young spare generation stays (keep budget)")
     assert(fs.exists(new org.apache.hadoop.fs.Path(gen2)))
+  }
+
+  test("a TTL-aged older-format generation retires on the dataset's first current-format publish") {
+    import spark.implicits._
+    val dir = s"/tmp/graft-test-oldtag1-${java.util.UUID.randomUUID()}"
+    val table = s"$dir/lineitem.parquet"
+    val fs = new org.apache.hadoop.fs.Path(table)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (0L until 6L).map(f => (f, 100L + f % 7, 200L + f % 11, 1L,
+        java.sql.Timestamp.valueOf("1995-01-11 00:00:00"), 1.0))
+      .toDF("l_orderkey", "l_suppkey", "l_partkey", "l_linenumber",
+        "l_shipdate", "l_quantity")
+      .coalesce(1).write.parquet(table)
+    // no later ensure serves or evolves from an older format's
+    // generation, so it is no spare of the keep budget
+    val old = untagged(ops.Derived.dirFor(spark, ops.Storage.ZonemapFamily,
+      table, version = ops.Storage.manifestVersion(Seq("0\t0\tgone"))))
+    fs.mkdirs(old)
+    fs.create(new org.apache.hadoop.fs.Path(old, "_SUCCESS")).close()
+    fs.setTimes(old,
+      System.currentTimeMillis() - ops.Derived.generationTtlMs - 60000, -1)
+    val cur = ops.Storage.ensureZoneMap(spark, dir)
+    assert(!fs.exists(old), "older-format generation kept as the spare")
+    assert(fs.exists(new org.apache.hadoop.fs.Path(cur)))
   }
 
   test("a base under an older format's version is rebuilt, not evolved: append and removal ticks equal a full rebuild") {

@@ -195,4 +195,40 @@ class SubstrateSpec extends AnyFunSuite {
     assert(e.getMessage.contains("spans part files"),
       s"the staged-artifact validation must name the violation: ${e.getMessage}")
   }
+
+  /** The postings family's contract check over a published artifact. */
+  private def contractCheck(posts: String): Unit =
+    ops.LlmPipeline.checkIngestContract(spark,
+      ops.LlmPipeline.NgramPostingsFamily, posts)
+
+  private def published(dir: String): Boolean =
+    fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))
+
+  test("ingest contract: contiguous per-file doc_ids are proven from the footers, with no validation job") {
+    // one postings part file per corpus file needs an unfanned scan:
+    // as many files as task slots, each its own split
+    assume(spark.sparkContext.defaultParallelism == 4,
+      "the proof needs one scan task per corpus file")
+    val dir = s"/tmp/graft-test-subfooter-${java.util.UUID.randomUUID()}"
+    (0 until 4).foreach(f => writeDocs(dir, (f * 12L) until (f * 12L + 12L), f))
+    val posts = ops.LlmPipeline.ensureNgramPostings(spark, dir)
+    assert(published(posts))
+    assert(ops.LlmPipeline.docIdsDisjointBySrc(ParquetMeta.footers(spark, posts)),
+      "one src per row group and disjoint per-src doc_id ranges")
+    val (_, jobs) = SparkTestSession.jobsIn(contractCheck(posts))
+    assert(jobs == 0, s"the footer proof held, yet the check launched $jobs job(s)")
+  }
+
+  test("ingest contract: interleaved doc_ids across files take the aggregate and still publish") {
+    val dir = s"/tmp/graft-test-subinterleave-${java.util.UUID.randomUUID()}"
+    writeDocs(dir, (0L until 24L).filter(_ % 2 == 0), 0)
+    writeDocs(dir, (0L until 24L).filter(_ % 2 == 1), 1)
+    val posts = ops.LlmPipeline.ensureNgramPostings(spark, dir)
+    assert(published(posts))
+    assert(!ops.LlmPipeline.docIdsDisjointBySrc(ParquetMeta.footers(spark, posts)),
+      "overlapping per-src doc_id ranges are no proof")
+    val (_, jobs) = SparkTestSession.jobsIn(contractCheck(posts))
+    assert(jobs >= 1, "an unproven contract must be decided by the aggregate")
+    assert(ops.LlmPipeline.ngramPostings(spark, dir).count() > 0)
+  }
 }
