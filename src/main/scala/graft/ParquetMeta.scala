@@ -143,11 +143,14 @@ object ParquetMeta {
     */
   def footers(s: SparkSession, dir: String): Seq[Footer] = {
     val p = new HPath(dir)
-    val files = p.getFileSystem(s.sparkContext.hadoopConfiguration).listStatus(p)
-      .filter(st => st.isFile && visible(st.getPath.getName)).map(_.getPath)
-    files.toSeq.asJava.parallelStream().map[Footer](footer(s, _))
-      .collect(java.util.stream.Collectors.toList[Footer]()).asScala.toSeq
+    footersOf(s, p.getFileSystem(s.sparkContext.hadoopConfiguration).listStatus(p)
+      .filter(st => st.isFile && visible(st.getPath.getName)).map(_.getPath).toSeq)
   }
+
+  /** Footers of `files`, in order, read concurrently on the driver. */
+  def footersOf(s: SparkSession, files: Seq[HPath]): Seq[Footer] =
+    files.asJava.parallelStream().map[Footer](footer(s, _))
+      .collect(java.util.stream.Collectors.toList[Footer]()).asScala.toSeq
 
   private def visible(name: String): Boolean =
     !name.startsWith("_") && !name.startsWith(".")

@@ -160,11 +160,4 @@ object Tables {
     * AS DOUBLE). (SURVEY §7.4 rule 1.)
     */
   def dsum(c: Column): Column = sum(c.cast(DecimalType(18, 2))).cast(DoubleType)
-
-  /** Exact mean via decimal sum / count — both engines end in the same
-    * IEEE double÷bigint. Mirror: CAST(SUM(CAST(x AS DECIMAL(18,2))) AS
-    * DOUBLE) / COUNT(x).
-    */
-  def davg(c: Column): Column =
-    sum(c.cast(DecimalType(18, 2))).cast(DoubleType) / count(c)
 }

@@ -414,6 +414,13 @@ object Chunks {
       "SELECT l_orderkey, md5(string_agg(chunk_md5, '' ORDER BY l_linenumber)) AS file_md5 " +
       "FROM chunks GROUP BY l_orderkey ORDER BY l_orderkey"
 
+  // per-node heartbeat summary over the per-file rows (n_seqs, min_seq)
+  private val heartbeatSummaryOracle =
+    "SELECT node_id, count(*) AS n_files, CAST(sum(n_seqs) AS BIGINT) AS n_chunks, " +
+      "min(filename) AS first_file, " +
+      "CAST(arg_min(n_seqs, filename) AS BIGINT) AS first_file_n_seqs, " +
+      "CAST(arg_min(min_seq, filename) AS BIGINT) AS first_file_min_seq "
+
   val oracle: Map[String, String] = Map(
     "q_chunk_split" ->
       ("SELECT o_orderkey, size, n_chunks, " +
@@ -481,11 +488,7 @@ object Chunks {
       ("WITH pf AS (SELECT l_suppkey AS node_id, " +
         "'f_' || lpad(CAST(l_orderkey AS VARCHAR), 12, '0') AS filename, " +
         "count(DISTINCT l_linenumber) AS n_seqs, min(l_linenumber) AS min_seq " +
-        "FROM lineitem GROUP BY 1, 2) " +
-        "SELECT node_id, count(*) AS n_files, CAST(sum(n_seqs) AS BIGINT) AS n_chunks, " +
-        "min(filename) AS first_file, " +
-        "CAST(arg_min(n_seqs, filename) AS BIGINT) AS first_file_n_seqs, " +
-        "CAST(arg_min(min_seq, filename) AS BIGINT) AS first_file_min_seq " +
+        s"FROM lineitem GROUP BY 1, 2) $heartbeatSummaryOracle" +
         "FROM pf GROUP BY node_id ORDER BY node_id"),
     "q_heartbeat_map_delta" ->
       (s"WITH pf AS (SELECT l_suppkey AS node_id, " +
@@ -493,11 +496,7 @@ object Chunks {
         "count(DISTINCT l_linenumber) AS n_seqs, min(l_linenumber) AS min_seq, max(l_shipdate) AS last_touch " +
         s"FROM lineitem WHERE l_shipdate >= TIMESTAMP '${DeltaPeriodLo}' GROUP BY 1, 2), " +
         "r AS (SELECT *, row_number() OVER (PARTITION BY node_id " +
-        "ORDER BY last_touch DESC, filename) AS rk FROM pf) " +
-        "SELECT node_id, count(*) AS n_files, CAST(sum(n_seqs) AS BIGINT) AS n_chunks, " +
-        "min(filename) AS first_file, " +
-        "CAST(arg_min(n_seqs, filename) AS BIGINT) AS first_file_n_seqs, " +
-        "CAST(arg_min(min_seq, filename) AS BIGINT) AS first_file_min_seq " +
+        s"ORDER BY last_touch DESC, filename) AS rk FROM pf) $heartbeatSummaryOracle" +
         s"FROM r WHERE rk <= ${DeltaTopK} GROUP BY node_id ORDER BY node_id"),
     "q_heartbeat_map_explode" ->
       ("SELECT l_suppkey AS node_id, " +
@@ -530,6 +529,14 @@ object Chunks {
         "SELECT l_orderkey, md5(array_join(transform(sort_array(collect_list(" +
         "named_struct('seq', l_linenumber, 'hash', chunk_md5))), x -> x.hash), '')) AS file_md5 " +
         "FROM chunks GROUP BY l_orderkey ORDER BY l_orderkey")
+    // per-node summary read back THROUGH the heartbeat map `hb.payload`
+    val heartbeatSummary =
+      "SELECT node_id, CAST(size(map_keys(payload)) AS BIGINT) AS n_files, " +
+        "aggregate(map_values(payload), CAST(0 AS BIGINT), (acc, x) -> acc + size(x)) AS n_chunks, " +
+        "array_min(map_keys(payload)) AS first_file, " +
+        "CAST(size(element_at(payload, array_min(map_keys(payload)))) AS BIGINT) AS first_file_n_seqs, " +
+        "CAST(array_min(element_at(payload, array_min(map_keys(payload)))) AS BIGINT) AS first_file_min_seq " +
+        "FROM hb ORDER BY node_id"
     Map(
       // non-oracle (seeded-random sample — rows-only-compared in
       // SqlSurfaceSpec): same rand(42) + tie-break the DataFrame uses
@@ -564,13 +571,7 @@ object Chunks {
       // relational DuckDB mirrors — the SQL front door exercises the
       // same map surface the DataFrame builders do
       "q_heartbeat_map" ->
-        (s"$heartbeatCtes " +
-          "SELECT node_id, CAST(size(map_keys(payload)) AS BIGINT) AS n_files, " +
-          "aggregate(map_values(payload), CAST(0 AS BIGINT), (acc, x) -> acc + size(x)) AS n_chunks, " +
-          "array_min(map_keys(payload)) AS first_file, " +
-          "CAST(size(element_at(payload, array_min(map_keys(payload)))) AS BIGINT) AS first_file_n_seqs, " +
-          "CAST(array_min(element_at(payload, array_min(map_keys(payload)))) AS BIGINT) AS first_file_min_seq " +
-          "FROM hb ORDER BY node_id"),
+        s"$heartbeatCtes $heartbeatSummary",
       "q_heartbeat_map_delta" ->
         ("WITH pf AS (SELECT l_suppkey AS node_id, " +
           "concat('f_', lpad(CAST(l_orderkey AS STRING), 12, '0')) AS filename, " +
@@ -580,13 +581,7 @@ object Chunks {
           "r AS (SELECT *, row_number() OVER (PARTITION BY node_id " +
           "ORDER BY last_touch DESC, filename) AS rk FROM pf), " +
           "hb AS (SELECT node_id, map_from_entries(collect_list(struct(filename, seqs))) AS payload " +
-          s"FROM r WHERE rk <= $DeltaTopK GROUP BY node_id) " +
-          "SELECT node_id, CAST(size(map_keys(payload)) AS BIGINT) AS n_files, " +
-          "aggregate(map_values(payload), CAST(0 AS BIGINT), (acc, x) -> acc + size(x)) AS n_chunks, " +
-          "array_min(map_keys(payload)) AS first_file, " +
-          "CAST(size(element_at(payload, array_min(map_keys(payload)))) AS BIGINT) AS first_file_n_seqs, " +
-          "CAST(array_min(element_at(payload, array_min(map_keys(payload)))) AS BIGINT) AS first_file_min_seq " +
-          "FROM hb ORDER BY node_id"),
+          s"FROM r WHERE rk <= $DeltaTopK GROUP BY node_id) $heartbeatSummary"),
       "q_heartbeat_map_explode" ->
         (s"$heartbeatCtes, " +
           "ex AS (SELECT node_id, explode(payload) AS (filename, seqs) FROM hb) " +

@@ -164,11 +164,10 @@ object LlmPipeline {
   /** The dedup tier's corpus-derived substrates — ngram postings,
     * banded MinHash signatures, SimHash signatures, bucketed
     * embeddings, winnow fingerprints — as manifest-keyed PERSISTED
-    * artifacts (VERDICT r17 #1: they were
-    * per-session memos, so a cold session re-paid a linear corpus scan
-    * per family; q_dedup_overflow_report's 598.8 s sf100 standalone
-    * receipt was exactly that gap). Every substrate row is PER-DOC (a
-    * doc lives in exactly one part file) and carries normalized src
+    * artifacts (as per-session memos, a cold session re-paid a linear
+    * corpus scan per family; q_dedup_overflow_report's 598.8 s sf100
+    * standalone receipt was exactly that gap). Every substrate row is
+    * PER-DOC (a doc lives in exactly one part file) and carries normalized src
     * provenance, so the zone-map lifecycle applies verbatim
     * (Storage.ensureManifestKeyedWithLines): a pure append builds rows
     * for the delta files only and unions; a retention drop anti-joins
@@ -203,8 +202,8 @@ object LlmPipeline {
     * signature row-sets and silently diverge from the whole-corpus
     * groupBy semantics the SQL/oracle mirrors compute. The staged
     * artifact is validated before publish ([[checkIngestContract]]:
-    * its footers, or an aggregate over ARTIFACT rows, never a corpus
-    * re-read), so a violating corpus fails the build loudly.
+    * the corpus footers, or an aggregate over ARTIFACT rows, never a
+    * corpus re-read), so a violating corpus fails the build loudly.
     */
   private[graft] def ensureRowSubstrate(s: SparkSession, family: String,
       table: String)(rowsFor: Seq[String] => DataFrame): String = {
@@ -213,25 +212,26 @@ object LlmPipeline {
       fullBuild = pinned => rowsFor(pinned),
       deltaBuild = (prev, added) => prev.unionByName(rowsFor(added)),
       removeBuild = substrateRemove(s),
-      // The check is VACUOUS when the manifest holds a single data
-      // file — every artifact row then carries the same src by
-      // construction, so a doc_id cannot span two part files; the
-      // multi-file corpora the contract exists for are checked.
-      validate = tmp => if (lines.length > 1) checkIngestContract(s, family, tmp))
+      validate = tmp => checkIngestContract(s, family, tmp, Storage.manifestPath(lines)))
   }
 
   /** Fail unless every doc_id of the artifact at `dir` lives in exactly
-    * one part file (one `src`); a no-op for artifacts without both
-    * columns. The proof comes from the footers when it can
-    * ([[docIdsDisjointBySrc]]: O(files), no job — the aggregate is a
-    * full shuffle of the artifact); otherwise one (doc_id → src)
-    * uniqueness aggregate over the artifact rows decides.
+    * one of the `corpus` files — the FULL current manifest the artifact
+    * was built from, never a delta list. Vacuous for a single-file
+    * corpus: every artifact row then carries the same src. The proof
+    * comes from the corpus footers when it can ([[docIdsDisjointByFile]]:
+    * O(files), no job, whatever file layout the build wrote — the
+    * aggregate is a full shuffle of the artifact); otherwise one
+    * (doc_id → src) uniqueness aggregate over the artifact rows decides
+    * (a no-op for artifacts without both columns).
     */
   private[graft] def checkIngestContract(s: SparkSession, family: String,
-      dir: String): Unit = {
-    val footers = ParquetMeta.footers(s, dir)
-    val cols = footers.headOption.fold(Set.empty[String])(_.schema.fieldNames.toSet)
-    if (cols("doc_id") && cols("src") && !docIdsDisjointBySrc(footers)) {
+      dir: String, corpus: Seq[String]): Unit = {
+    def proven = scala.util.Try(docIdsDisjointByFile(
+      ParquetMeta.footersOf(s, corpus.map(new org.apache.hadoop.fs.Path(_))))).getOrElse(false)
+    lazy val cols =
+      ParquetMeta.footers(s, dir).headOption.fold(Set.empty[String])(_.schema.fieldNames.toSet)
+    if (corpus.length > 1 && !proven && cols("doc_id") && cols("src")) {
       val bad = ParquetMeta.read(s, dir).groupBy("doc_id")
         .agg(min("src").as("src_a"), max("src").as("src_b"))
         .filter(col("src_a") =!= col("src_b")).limit(1).collect()
@@ -243,33 +243,25 @@ object LlmPipeline {
     }
   }
 
-  /** The ingest contract proven from footer statistics alone: every
-    * non-empty row group holds one `src` (min = max) and no null
-    * `doc_id` or `src`, and the per-`src` [min, max] ranges of an
-    * integer `doc_id` are pairwise disjoint — a doc_id in two part
-    * files would lie in both ranges. False (not proven) whenever a
-    * statistic is missing or a row group mixes part files, e.g. a
-    * build whose map stage was fanned out or compacted.
+  /** The ingest contract proven from the corpus files' own footers
+    * (one per file): every non-empty row group has integer `doc_id`
+    * statistics with no nulls, and the per-file [min, max] `doc_id`
+    * ranges are pairwise disjoint — a doc_id in two files would lie in
+    * both ranges. Needs no artifact statistics, so it holds whatever
+    * layout the build wrote (fanned out, compacted). False (not proven)
+    * whenever a statistic is missing or two files' ranges overlap.
     */
-  private[graft] def docIdsDisjointBySrc(footers: Seq[ParquetMeta.Footer]): Boolean = {
-    import org.apache.parquet.column.statistics.{BinaryStatistics, IntStatistics, LongStatistics, Statistics}
+  private[graft] def docIdsDisjointByFile(footers: Seq[ParquetMeta.Footer]): Boolean = {
+    import org.apache.parquet.column.statistics.{IntStatistics, LongStatistics, Statistics}
     def noNulls(st: Statistics[_]) =
       st.hasNonNullValue && st.isNumNullsSet && st.getNumNulls == 0
-    val groups = footers.flatMap(_.rowGroups).filter(_.rows > 0).map { rg =>
-      val src = rg.stats.get("src").collect {
-        case b: BinaryStatistics if noNulls(b) && b.genericGetMin == b.genericGetMax =>
-          b.genericGetMin.toStringUsingUTF8
-      }
-      val ids = rg.stats.get("doc_id").collect {
-        case l: LongStatistics if noNulls(l) => (l.getMin, l.getMax)
-        case i: IntStatistics if noNulls(i) => (i.getMin.toLong, i.getMax.toLong)
-      }
-      src.zip(ids)
-    }
-    groups.forall(_.isDefined) && {
-      val ranges = groups.flatten.groupMapReduce(_._1)(_._2) {
-        case ((lo1, hi1), (lo2, hi2)) => (lo1 min lo2, hi1 max hi2)
-      }.values.toSeq.sortBy(_._1)
+    val files = footers.map(_.rowGroups.filter(_.rows > 0).map(_.stats.get("doc_id").collect {
+      case l: LongStatistics if noNulls(l) => (l.getMin, l.getMax)
+      case i: IntStatistics if noNulls(i) => (i.getMin.toLong, i.getMax.toLong)
+    }))
+    files.forall(_.forall(_.isDefined)) && {
+      val ranges = files.map(_.flatten).filter(_.nonEmpty)
+        .map(rs => (rs.map(_._1).min, rs.map(_._2).max)).sortBy(_._1)
       ranges.zip(ranges.drop(1)).forall { case ((_, hi), (lo, _)) => hi < lo }
     }
   }
@@ -750,9 +742,8 @@ object LlmPipeline {
 
   /** #44 q_dedup_near — near-duplicate pairs at shingle-set Jaccard >
     * 1/2 (distance < 0.5), computed end-to-end by the repo's OWN
-    * scale-fenced chain (VERDICT r14 #4: spark.ml's
-    * approxSimilarityJoin, whose uncapped in-bucket join was the last
-    * quadratic surface and the whole sf10 bench tail, is retired to
+    * scale-fenced chain (spark.ml's approxSimilarityJoin, whose
+    * uncapped in-bucket join was the last quadratic surface and the whole sf10 bench tail, is retired to
     * the spec-only cross-check dedupNearUncollapsed):
     *   1. EXACT-collapse verbatim copies to their min-id
     *      representative (hash-groupBy, linear);
@@ -783,7 +774,7 @@ object LlmPipeline {
     val reps = members.groupBy("norm_key").agg(min("doc_id").as("rep"))
     val docRep = members.join(reps, "norm_key")
       .select(col("doc_id"), col("rep")).pinned()
-    // Short-circuit on a duplicate-FREE corpus (VERDICT r12 #6): when
+    // Short-circuit on a duplicate-FREE corpus: when
     // every doc is its own representative the expansion is an identity
     // map and the intra-group pairs are empty, so the re-expansion
     // equi-joins, the corpus-sized intra self-join, and the union are
@@ -838,7 +829,7 @@ object LlmPipeline {
     * (LlmPipelineSpec: both families must recall every planted
     * near-dup); never registered: approxSimilarityJoin with no
     * within-bucket cap is the documented 100×-corpus OOM casualty
-    * (BENCHNOTES r11) and the retired sf10 bench tail (VERDICT r14 #4).
+    * (BENCHNOTES r11) and the retired sf10 bench tail.
     */
   private[graft] def dedupNearUncollapsed(s: SparkSession, d: String): DataFrame =
     nearLshJoin(withTk(Tables.documents(s, d))
@@ -1275,7 +1266,7 @@ object LlmPipeline {
       .limit(100)
 
   /** q_dedup_overflow_report — the caps, visible through the SQL front
-    * door (VERDICT r16 #5): one row per hot block a capped pair
+    * door: one row per hot block a capped pair
     * generator SKIPPED, unioned across the five bucketed dedup families
     * (minhash bands, simhash bands, ngram df-cap postings, embed
     * (label, bucket) blocks, semantic buckets) with a family tag. A
@@ -2006,8 +1997,8 @@ object LlmPipeline {
         org.apache.spark.ml.functions.vector_to_array(col("fv")).as("fvarr"))
     assigned.select(col("vec_id"), col("q"), col("bucket"), col("src"),
         // base/appended provenance: what lets a later REMOVAL tick
-        // decrement the right side of the staleness census (ADVICE r17:
-        // n_base was never decremented, understating appended_frac)
+        // decrement the right side of the staleness census (without it
+        // n_base is never decremented, understating appended_frac)
         lit(false).as("appended"))
       .write.mode("overwrite").parquet(s"$indexDir/assignments")
     val centroids = model.clusterCenters.toSeq.zipWithIndex.map {
@@ -2015,7 +2006,7 @@ object LlmPipeline {
     }
     import s.implicits._
     val centsDf = centroids.toDF("cent_id", "center")
-    // staleness baseline (VERDICT r16 #4): the build-time mean exact
+    // staleness baseline: the build-time mean exact
     // squared L2 distance-to-assigned-centroid — the distribution every
     // later append's delta is compared against. One metadata-sized row.
     assigned.join(broadcast(centsDf), col("bucket") === col("cent_id"))
@@ -2060,7 +2051,7 @@ object LlmPipeline {
   private[graft] val IvfStaleFrac = 0.5
 
   /** q_ivf_staleness — the index-maintenance verdict the frozen-centroid
-    * append contract requires (VERDICT r16 #4): ONE metadata-sized row
+    * append contract requires: ONE metadata-sized row
     * from the persisted stats table answering "how far has the appended
     * distribution drifted from the clustered one, and is a recluster
     * due?". base/delta mean distances are exact per-vector squared L2
@@ -2211,7 +2202,7 @@ object LlmPipeline {
         // n-weighted mean across appends: Σ(nᵢ·meanᵢ)/Σnᵢ
         (sum(col("n_vecs") * col("mean_dist2")) / sum(col("n_vecs")))
           .as("delta_mean_dist2"))
-    // removal adjustments (ADVICE r17): evolveIvfIndex records each
+    // removal adjustments: evolveIvfIndex records each
     // removal's base/appended row census, so n_base here tracks the
     // LIVE base — without it, heavy retention drops understated
     // appended_frac and the IvfStaleFrac leg under-fired (the one
@@ -2333,7 +2324,7 @@ object LlmPipeline {
     val surviving =
       if (removed.isEmpty) prevAsg
       else prevAsg.join(broadcast(gone), col("src") === col("gone_src"), "left_anti")
-    // removal census for the staleness verdict (ADVICE r17): how many
+    // removal census for the staleness verdict: how many
     // dropped rows were base vs appended — one agg over INDEX rows
     // (already in hand for the anti-join), recorded as adjustment rows
     // so the verdict itself stays a metadata-row read. Means stay as
@@ -2371,9 +2362,9 @@ object LlmPipeline {
       }
     assigned.fold(surviving)(a => surviving.unionByName(a.drop("dist2")))
       .write.mode("overwrite").parquet(s"$tmp/assignments")
-    // staleness accounting (VERDICT r16 #4): record each delta's mean
+    // staleness accounting: record each delta's mean
     // distance-to-frozen-centroid next to the build-time baseline, and
-    // each removal's base/appended row census (ADVICE r17) — what
+    // each removal's base/appended row census — what
     // ivfStaleness reads to decide the recluster flag
     val withDelta = assigned.fold(ParquetMeta.read(s, s"$prevDir/stats")) { a =>
       ParquetMeta.read(s, s"$prevDir/stats").unionByName(
@@ -2603,8 +2594,8 @@ object LlmPipeline {
   private def bpeLoop(s: SparkSession, d: String): (Seq[DataFrame], DataFrame) =
     bpeLoopDeep(s, d, BpeIters, pinEvery = 1, stopWhenExhausted = false)
 
-  /** Depth-K BPE training (VERDICT r14 #2 — the chained pinned-plan
-    * pattern past toy depth). Realistic tokenizer training runs K in
+  /** Depth-K BPE training (the chained pinned-plan pattern past toy
+    * depth). Realistic tokenizer training runs K in
     * the tens of thousands; what changes at depth is LOOP MECHANICS,
     * not per-iteration semantics:
     *   - `pinEvery`: localCheckpoint the word state every N merges
@@ -3521,7 +3512,7 @@ object LlmPipeline {
 
   /** Hard corpus-volume ceiling (total text chars) for the stride-1
     * exact form — the HotBucketCap discipline applied to the query's
-    * own input (VERDICT r12 #4): stride-1's window table is inherently
+    * own input: stride-1's window table is inherently
     * W× the corpus volume, measured at 578 s on the ~150M-char 100×
     * stress — a cost no caller should pay SILENTLY. Above the cap the
     * query fails loudly, naming the scale-safe alternatives, instead of
@@ -3579,9 +3570,9 @@ object LlmPipeline {
     * yields at least one shared fingerprint, at ~2/(k+1) of the
     * stride-1 index volume.
     */
-  // 16 (was 8 through r18): the winnow artifact was the footprint
+  // 16 (was 8): the winnow artifact was the footprint
   // outlier at sf100 (~9 GB vs 1.3 GB for the other four text
-  // substrates combined — VERDICT r18 next #6). Fingerprint density is
+  // substrates combined). Fingerprint density is
   // ~2/(K+1), so K=16 halves the persisted index (0.222 -> 0.118 of
   // positions) while the detection guarantee (spans >= W + K - 1 = 47
   // chars) stays under the 50-char span threshold the stride-1 form
@@ -3838,7 +3829,7 @@ object LlmPipeline {
             .flatMap(_.toLongOption))
           .foldLeft(-1L)(math.max)
       if (id <= ckptFloor) {
-        // make silent data loss at least observable (ADVICE r19): a
+        // make silent data loss at least observable: a
         // TRUE replay of a folded batch is by-design invisible, but a
         // RESET stream checkpoint (ids restart at 0) against an
         // existing compacted log drops genuinely new data here — a
@@ -3965,7 +3956,7 @@ object LlmPipeline {
     */
   private[graft] var cmsCrashPoint: Int = 0
 
-  /** In-flight-reader grace for the covered-file sweep (ADVICE r19):
+  /** In-flight-reader grace for the covered-file sweep:
     * a cmsMergedEstimates that LISTED the log before a checkpoint
     * published may still scan the covered files it planned — deleting
     * them immediately after the rename FileNotFounds that reader at
@@ -4762,8 +4753,8 @@ object LlmPipeline {
   /** Set by [[ensureIvfIndex]] when a session publishes or resolves the
     * persisted IVF-KMeans index: the DuckDB oracle for the trained-ANN
     * rows reads the DUMPED assignments table by path and replays the
-    * bucket-pruned probe exactly (VERDICT r18 missing #5 — graduates
-    * q_sim_search_ivf_kmeans(_probe) from rows-only to hash-checked;
+    * bucket-pruned probe exactly (so q_sim_search_ivf_kmeans(_probe)
+    * are hash-checked, not rows-only;
     * the KMeans FIT stays non-SQL, but the fit's OUTPUT is a parquet
     * table both engines can read, like q_sim_search_ivfpq's witness).
     * Verify dumps oracleSql AFTER running every query, so the var is
@@ -4780,14 +4771,11 @@ object LlmPipeline {
       // (vec_id, q, bucket) rows: integer dots, then the same
       // double-division/sqrt float ops in the same order — bit-equal
       // cos on both engines (the q_sim_search_lsh pattern)
-      def dotDuck(a: String, b: String) =
-        s"CAST(list_sum(list_transform(list_zip($a, $b), p -> p[1] * p[2])) AS BIGINT)"
       val sql =
         s"WITH a AS (SELECT vec_id, q, bucket FROM '$dir/assignments/*.parquet'), " +
           "pn AS (SELECT q AS qa, bucket AS probe_bucket, " +
           s"${dotDuck("q", "q")} AS n2a FROM a WHERE vec_id = 0) " +
-          s"SELECT v.vec_id, v.bucket, CAST(${dotDuck("pn.qa", "v.q")} AS DOUBLE) " +
-          s"/ sqrt(CAST(pn.n2a AS DOUBLE) * CAST(${dotDuck("v.q", "v.q")} AS DOUBLE)) AS cos " +
+          s"SELECT v.vec_id, v.bucket, ${probeCos(dotDuck, "pn.qa", "pn.n2a", "v.q")} " +
           "FROM a v, pn WHERE v.bucket = pn.probe_bucket AND v.vec_id <> 0 " +
           "ORDER BY cos DESC, vec_id LIMIT 5"
       // the maintenance verdict is the same dump-replay shape: every
@@ -4821,6 +4809,323 @@ object LlmPipeline {
         "q_sim_search_ivf_kmeans_probe" -> sql,
         "q_ivf_staleness" -> staleSql)
     }.getOrElse(Map.empty)
+
+  // ---- SQL fragments shared by the DuckDB oracle (staticOracle) and the
+  // Spark-SQL surface (sparkSql): one named copy of each block that two
+  // texts share. Where the dialects differ, the differing sub-expression
+  // is an argument; a fragment never branches on its caller's dialect.
+  // SqlTextDump (test scope) proves a refactor here leaves every
+  // rendered text byte-identical.
+
+  /** Exact integer dot of two DuckDB integer lists. */
+  private def dotDuck(a: String, b: String) =
+    s"CAST(list_sum(list_transform(list_zip($a, $b), p -> p[1] * p[2])) AS BIGINT)"
+
+  /** Cosine of a probe (`qa`, norm² `n2a`) and candidate vector `v`:
+    * integer dots in the dialect's `dot`, then the same float ops in the
+    * same order, so both engines compute bit-equal cos.
+    */
+  private def probeCos(dot: (String, String) => String, qa: String, n2a: String, v: String) =
+    s"CAST(${dot(qa, v)} AS DOUBLE) / " +
+      s"sqrt(CAST($n2a AS DOUBLE) * CAST(${dot(v, v)} AS DOUBLE)) AS cos"
+
+  /** Sign-LSH buckets: `q` (quantized embeddings) and `b` (vec_id, q, bucket). */
+  private def lshCtes(quant: String, planeDot: Int => String) =
+    s"WITH q AS (SELECT vec_id, $quant AS q FROM embeddings), " +
+      s"b AS (SELECT vec_id, q, CAST(${lshBucketExpr(planeDot)} AS INTEGER) AS bucket FROM q)"
+
+  /** Multi-probe sign-LSH: per-plane dots d0..d3, then each vector's
+    * bucket and the flip bit naming its second probed bucket.
+    */
+  private def lshMpCtes(quant: String, planeDot: Int => String) =
+    s"WITH q AS (SELECT vec_id, $quant AS q FROM embeddings), " +
+      s"dd AS (SELECT vec_id, q, ${(0 until 4).map(p => s"${planeDot(p)} AS d$p").mkString(", ")} FROM q), " +
+      s"b AS (SELECT vec_id, q, CAST(${lshBucketExpr(p => s"d$p")} AS INTEGER) AS bucket, " +
+      s"CAST($lshFlipExpr AS INTEGER) AS flip FROM dd)"
+
+  /** Recall@RecallK of the bucketed ANN per probe `pr`: exact top-k `tr`
+    * vs the top-k `an` among candidates of `sc` that pass `annWhere`.
+    */
+  private def recallTail(annWhere: String, zero: String, div: String) =
+    "tr AS (SELECT probe_id, cand_id FROM (SELECT probe_id, cand_id, " +
+      "row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, cand_id) AS rn " +
+      s"FROM sc) WHERE rn <= $RecallK), " +
+      "an AS (SELECT probe_id, cand_id FROM (SELECT probe_id, cand_id, " +
+      "row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, cand_id) AS rn " +
+      s"FROM sc WHERE $annWhere) WHERE rn <= $RecallK), " +
+      "ca AS (SELECT probe_id, count(*) AS n_ann FROM an GROUP BY 1), " +
+      "ch AS (SELECT t.probe_id, count(*) AS n_hit FROM tr t " +
+      "JOIN an a ON a.probe_id = t.probe_id AND a.cand_id = t.cand_id GROUP BY 1) " +
+      s"SELECT p.probe_id, COALESCE(ca.n_ann, $zero) AS n_ann, " +
+      s"COALESCE(ch.n_hit, $zero) AS n_hit, " +
+      s"COALESCE(ch.n_hit, $zero) * 1000000 $div $RecallK AS recall_ppm " +
+      "FROM pr p LEFT JOIN ca ON ca.probe_id = p.probe_id " +
+      "LEFT JOIN ch ON ch.probe_id = p.probe_id ORDER BY p.probe_id"
+
+  /** PQ over subvectors `subs`: codebook `cb` (the first PqK vectors),
+    * each vector's packed-argmin `codes`, the probe's ADC table `adc`
+    * (PqM × PqK rows) and the ADC top-5. `subD2` is the dialect's exact
+    * squared L2 between `sub` and `csub`.
+    */
+  private def pqTail(subD2: String) =
+    s"cb AS (SELECT CAST(vec_id AS INTEGER) AS c, j, sub AS csub " +
+      s"FROM subs WHERE vec_id < $PqK), " +
+      s"codes AS (SELECT vec_id, j, CAST(min($subD2 * $PqK + c) " +
+      s"% $PqK AS INTEGER) AS code " +
+      "FROM subs JOIN cb USING (j) GROUP BY vec_id, j), " +
+      s"adc AS (SELECT j, c, $subD2 AS t " +
+      "FROM subs JOIN cb USING (j) WHERE vec_id = 0) " +
+      "SELECT codes.vec_id, CAST(sum(adc.t) AS BIGINT) AS adist2 " +
+      "FROM codes JOIN adc ON codes.j = adc.j AND codes.code = adc.c " +
+      "WHERE codes.vec_id <> 0 " +
+      "GROUP BY codes.vec_id ORDER BY adist2 ASC, vec_id ASC LIMIT 5"
+
+  /** Capped-bucket candidate pairs over a banded MinHash relation `src`
+    * (mirrors minhashPairsFromBanded): `ok` keeps buckets of at most
+    * HotBucketCap members; the join pairs the docs sharing one.
+    */
+  private def bandOk(src: String) =
+    s"ok AS (SELECT band, band_key FROM $src GROUP BY band, band_key " +
+      s"HAVING count(*) <= $HotBucketCap)"
+  private def bandPairsJoin(src: String) =
+    s"SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b FROM $src a " +
+      "JOIN ok ON ok.band = a.band AND ok.band_key = a.band_key " +
+      s"JOIN $src b ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id"
+  private def bandPairs(src: String, name: String) =
+    s"${bandOk(src)}, $name AS (${bandPairsJoin(src)})"
+
+  /** Exact shingle-set sizes `sz` and pair intersections `iv` for the
+    * candidate pairs `pr` over their hashed distinct shingles `hv`.
+    */
+  private val pairInterCtes =
+    "sz AS (SELECT doc_id, count(*) AS n FROM hv GROUP BY doc_id), " +
+      "iv AS (SELECT p.doc_a, p.doc_b, count(*) AS n_inter FROM pr p " +
+      "JOIN hv a ON a.doc_id = p.doc_a " +
+      "JOIN hv b ON b.doc_id = p.doc_b AND b.h = a.h " +
+      "GROUP BY p.doc_a, p.doc_b)"
+
+  /** The verified near-duplicate pairs of `iv`: 2·|∩| > |∪| in integers. */
+  private def verifiedPairs(one: String) =
+    "SELECT iv.doc_a, iv.doc_b, " +
+      s"$one - CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter) AS jaccard_dist " +
+      "FROM iv JOIN sz sa ON sa.doc_id = iv.doc_a JOIN sz sb ON sb.doc_id = iv.doc_b " +
+      "WHERE 2 * n_inter > sa.n + sb.n - n_inter"
+
+  /** q_dedup_near's banding input: `bands` restricted to the min-doc_id
+    * representative of each exact-copy group (`docrep`).
+    */
+  private val nearRepBands =
+    "mem AS (SELECT doc_id, md5(coalesce(text, '')) AS norm_key FROM documents), " +
+      "grp AS (SELECT norm_key, min(doc_id) AS rep FROM mem GROUP BY norm_key), " +
+      "docrep AS (SELECT m.doc_id, g.rep FROM mem m JOIN grp g ON g.norm_key = m.norm_key), " +
+      "rb AS (SELECT b.doc_id, b.band, b.band_key FROM bands b " +
+      "JOIN docrep dr ON dr.doc_id = b.doc_id AND dr.rep = b.doc_id)"
+
+  /** Re-expands the verified rep pairs `rp` through the copy groups. */
+  private def nearExpand(zero: String) =
+    "ex AS (SELECT least(ma.doc_id, mb.doc_id) AS doc_a, " +
+      "greatest(ma.doc_id, mb.doc_id) AS doc_b, jaccard_dist " +
+      "FROM rp JOIN docrep ma ON ma.rep = rp.doc_a JOIN docrep mb ON mb.rep = rp.doc_b " +
+      s"UNION ALL SELECT m1.doc_id, m2.doc_id, $zero " +
+      "FROM docrep m1 JOIN docrep m2 ON m1.rep = m2.rep AND m1.doc_id < m2.doc_id) " +
+      "SELECT doc_a, doc_b, jaccard_dist FROM ex ORDER BY doc_a, doc_b"
+
+  // the cc family's cluster reports over the label table `lab`
+  private val ccClusterStats =
+    "SELECT l.rep_id, count(*) AS n_docs, count(*) - 1 AS n_dropped, " +
+      "CAST(sum(CASE WHEN d.doc_id <> l.rep_id THEN d.n_chars ELSE 0 END) AS BIGINT) AS chars_dropped " +
+      "FROM lab l JOIN documents d ON d.doc_id = l.doc_id " +
+      "GROUP BY l.rep_id ORDER BY l.rep_id"
+  private def ccCrossSource(groupBy: String) =
+    "SELECT rs.source AS rep_source, ds.source AS dup_source, count(*) AS n_docs " +
+      "FROM lab l JOIN documents ds ON ds.doc_id = l.doc_id " +
+      "JOIN documents rs ON rs.doc_id = l.rep_id " +
+      "WHERE l.doc_id <> l.rep_id " +
+      s"GROUP BY $groupBy ORDER BY rep_source, dup_source"
+
+  /** q_dedup_incremental over the source-tagged bands `sb`: batch (src0)
+    * docs against the capped history buckets.
+    */
+  private val incrementalTail =
+    "hist AS (SELECT doc_id AS hist_id, band, band_key FROM sb " +
+      "WHERE source <> 'src0'), " +
+      "okb AS (SELECT band, band_key FROM hist GROUP BY band, band_key " +
+      s"HAVING count(DISTINCT hist_id) <= $HotBucketCap), " +
+      "batch AS (SELECT doc_id, band, band_key FROM sb WHERE source = 'src0') " +
+      "SELECT b.doc_id, count(DISTINCT h.hist_id) AS n_hist_dups, " +
+      "min(h.hist_id) AS first_hist_id " +
+      "FROM batch b JOIN okb o ON o.band = b.band AND o.band_key = b.band_key " +
+      "JOIN hist h ON h.band = b.band AND h.band_key = b.band_key " +
+      "GROUP BY b.doc_id ORDER BY b.doc_id"
+
+  /** The five capped families' overflow group-counts over their CTEs
+    * (bands, sim_bands, ng_ds, em_n), keys cast to the dialect's `str`.
+    */
+  private def overflowUnion(str: String) =
+    "SELECT family, key1, key2, n_members FROM (" +
+      s"SELECT 'minhash' AS family, CAST(band AS $str) AS key1, " +
+      "band_key AS key2, count(*) AS n_members FROM bands " +
+      s"GROUP BY 1, 2, 3 HAVING count(*) > $HotBucketCap " +
+      "UNION ALL " +
+      s"SELECT 'simhash', CAST(b AS $str), CAST(bv AS $str), count(*) FROM sim_bands " +
+      s"GROUP BY 1, 2, 3 HAVING count(*) > $HotBucketCap " +
+      "UNION ALL " +
+      s"SELECT 'ngram', CAST(sh AS $str), '', count(DISTINCT doc_id) FROM ng_ds " +
+      s"GROUP BY 1, 2, 3 HAVING count(DISTINCT doc_id) > $NgramDfCap " +
+      "UNION ALL " +
+      s"SELECT 'embed', CAST(label AS $str), CAST(bucket AS $str), count(*) FROM em_n " +
+      s"GROUP BY 1, 2, 3 HAVING count(*) > $HotBucketCap " +
+      "UNION ALL " +
+      s"SELECT 'semantic', CAST(bucket AS $str), '', count(*) FROM em_n " +
+      s"GROUP BY 1, 2, 3 HAVING count(*) > $HotBucketCap" +
+      ") ORDER BY family, key1, key2"
+
+  /** Exact shingle Jaccard over the postings `ds` (q_dedup_ngram and
+    * its collapsed form). df-cap mirror: only shingles present in
+    * 2..NgramDfCap DISTINCT docs count toward |∩| (mirrors
+    * ngramPairsFromPostings's size(collect_set(doc_id)) <= cap). COUNT
+    * DISTINCT on both doc_id here and sh in `inter` because ds can carry
+    * duplicate (doc, sh) rows when two distinct shingle strings of one
+    * doc collide in the 60-bit hash — list_distinct dedups strings, not
+    * hashes; a raw count(*) would then diverge from Spark's set-based cap
+    * and double-count the shared shingle.
+    */
+  private val ngramJaccardTail =
+    "sizes AS (SELECT doc_id, count(*) AS n_sh FROM ds GROUP BY doc_id), " +
+      "ok AS (SELECT sh FROM ds GROUP BY sh " +
+      s"HAVING count(DISTINCT doc_id) > 1 AND count(DISTINCT doc_id) <= $NgramDfCap), " +
+      "inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(DISTINCT a.sh) AS n_inter " +
+      "FROM ds a JOIN ok ON ok.sh = a.sh " +
+      "JOIN ds b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2) " +
+      "SELECT doc_a, doc_b, " +
+      "CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) AS jaccard " +
+      "FROM inter JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b " +
+      "ORDER BY jaccard DESC, doc_a, doc_b LIMIT 100"
+
+  /** Benchmark contamination over the postings CTE `dsCte`: every 20th
+    * doc is the benchmark; count each other doc's shared shingles.
+    */
+  private def decontamSql(dsCte: String, zero: String) =
+    s"$dsCte, " +
+      "bench AS (SELECT DISTINCT sh FROM ds WHERE doc_id % 20 = 0), " +
+      "hits AS (SELECT doc_id, count(*) AS n_hits FROM ds JOIN bench USING (sh) " +
+      "WHERE doc_id % 20 <> 0 GROUP BY doc_id) " +
+      s"SELECT d.doc_id, COALESCE(hits.n_hits, $zero) AS n_hits " +
+      "FROM documents d LEFT JOIN hits ON hits.doc_id = d.doc_id " +
+      "WHERE d.doc_id % 20 <> 0 ORDER BY d.doc_id"
+
+  /** Pairwise source overlap over the postings CTE `dsCte`. */
+  private def sourceOverlapSql(dsCte: String, overlapPpm: String) =
+    s"$dsCte, " +
+      "ss AS (SELECT DISTINCT d.source, ds.sh FROM ds " +
+      "JOIN documents d ON d.doc_id = ds.doc_id), " +
+      "sizes AS (SELECT source, count(*) AS n_sh FROM ss GROUP BY source), " +
+      "ok AS (SELECT sh FROM ss GROUP BY sh " +
+      s"HAVING count(*) >= 2 AND count(*) <= $SourceDfCap), " +
+      "p AS (SELECT a.source AS src_a, b.source AS src_b, count(*) AS n_shared " +
+      "FROM ss a JOIN ok ON ok.sh = a.sh JOIN ss b ON a.sh = b.sh " +
+      "AND a.source < b.source GROUP BY 1, 2) " +
+      "SELECT src_a, src_b, n_shared, " +
+      s"$overlapPpm AS overlap_ppm " +
+      "FROM p JOIN sizes sa ON sa.source = src_a " +
+      "JOIN sizes sb ON sb.source = src_b ORDER BY src_a, src_b"
+
+  /** Sequence packing: each doc's bin by exclusive running token sum per source. */
+  private def packBinsSql(src: String, bin: String) =
+    "c AS (SELECT doc_id, source, n_tokens, " +
+      s"sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id) - n_tokens AS cum_excl FROM $src) " +
+      s"SELECT doc_id, source, n_tokens, $bin AS bin " +
+      "FROM c ORDER BY source, doc_id"
+
+  /** The quality filter's rejection rules in priority order, over
+    * n_tokens, n_stop, n_chars, n_sh and n_dup: (predicate, reason).
+    */
+  private val qfRules = Seq(
+    s"n_tokens < $QfMinTokens" -> "too_short",
+    s"n_stop * $QfStopDivisor < n_tokens" -> "low_stopword",
+    s"(n_chars - (n_tokens - 1)) * 10 > $QfLongTokTenths * n_tokens" -> "long_tokens",
+    s"n_dup * $QfRepDivisor > n_sh" -> "repetitive")
+  private val qfReason =
+    qfRules.map { case (p, r) => s"WHEN $p THEN '$r' " }.mkString("CASE ", "", "ELSE 'ok' END AS reason")
+  private val qfKeep = qfRules.map { case (p, _) => s"NOT ($p)" }.mkString(" AND ")
+
+  private val textQualitySelect =
+    "SELECT doc_id, n_tokens, n_stop, CAST(n_stop AS DOUBLE) / n_tokens AS stop_ratio, " +
+      "CAST(n_chars - (n_tokens - 1) AS DOUBLE) / n_tokens AS avg_tok_len, " +
+      "least(CAST(n_tokens AS DOUBLE) / 100, CAST(1 AS DOUBLE)) * 0.4 + " +
+      "(CAST(n_stop AS DOUBLE) / n_tokens) * 0.3 + " +
+      "least((CAST(n_chars - (n_tokens - 1) AS DOUBLE) / n_tokens) / 8, CAST(1 AS DOUBLE)) * 0.3 AS quality " +
+      "FROM t ORDER BY doc_id"
+
+  /** Per-label outlier top-k over per-dim sums `g` of the exploded `e`. */
+  private val outliersTail =
+    "FROM e JOIN g ON g.label = e.label AND g.dim = e.dim " +
+      "GROUP BY e.label, e.vec_id), " +
+      "r AS (SELECT label, vec_id, score, row_number() OVER " +
+      "(PARTITION BY label ORDER BY score DESC, vec_id) AS rn FROM s) " +
+      s"SELECT label, vec_id, score FROM r WHERE rn <= $OutlierTopK " +
+      "ORDER BY label, score DESC, vec_id"
+
+  /** Per-doc token counts over the dialect's token generator `tokens`. */
+  private def textDiversitySql(tokens: String) =
+    s"WITH t AS (SELECT doc_id, $tokens AS w FROM documents), " +
+      "c AS (SELECT doc_id, w, count(*) AS c FROM t GROUP BY doc_id, w) " +
+      "SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens, " +
+      "CAST(count(*) AS BIGINT) AS n_distinct, " +
+      "CAST(sum(c * c) AS BIGINT) AS simpson_num " +
+      "FROM c GROUP BY doc_id ORDER BY doc_id"
+
+  /** Top-5 tokens per language over the dialect's token generator. */
+  private def textTokensSql(tokens: String) =
+    "SELECT lang, rn, tok, n FROM (SELECT lang, tok, count(*) AS n, " +
+      "row_number() OVER (PARTITION BY lang ORDER BY count(*) DESC, tok ASC) AS rn " +
+      s"FROM (SELECT lang, $tokens AS tok FROM documents) " +
+      "GROUP BY lang, tok) WHERE rn <= 5 ORDER BY lang, rn"
+
+  // Substring dedup over per-position window hashes `w` (doc_id, pos, h).
+  // Winnowed fingerprints `fp`: the min hash of every WinnowK window.
+  private val winnowFp =
+    "fp AS (SELECT DISTINCT doc_id, h FROM (SELECT doc_id, " +
+      "min(h) OVER (PARTITION BY doc_id ORDER BY pos " +
+      s"ROWS BETWEEN CURRENT ROW AND ${WinnowK - 1} FOLLOWING) AS h FROM w))"
+  private def dfCappedHashes(name: String, src: String) =
+    s"$name AS (SELECT h FROM $src GROUP BY h HAVING count(*) BETWEEN 2 AND $SubDfCap)"
+  private def winnowPairs(g: String) =
+    s"FROM fp a JOIN $g USING (h) JOIN fp b USING (h) WHERE a.doc_id < b.doc_id " +
+      "GROUP BY 1, 2"
+  // stride-1 span accounting: runs of consecutive covered positions per pair
+  private def spanRuns(g: String) =
+    "ds AS (SELECT DISTINCT doc_id, h FROM w), " +
+      s"${dfCappedHashes(g, "ds")}, " +
+      "cov AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.pos " +
+      s"FROM w a JOIN $g USING (h) JOIN ds b USING (h) WHERE a.doc_id < b.doc_id), " +
+      "r AS (SELECT doc_a, doc_b, pos, pos - row_number() " +
+      "OVER (PARTITION BY doc_a, doc_b ORDER BY pos) AS grp FROM cov), " +
+      "runs AS (SELECT doc_a, doc_b, grp, count(*) AS run_len FROM r GROUP BY 1, 2, 3)"
+  private val substringWinnowTail =
+    s"$winnowFp, ${dfCappedHashes("g", "fp")} " +
+      "SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, " +
+      "CAST(count(*) AS BIGINT) AS n_shared_fps " +
+      s"${winnowPairs("g")} ORDER BY doc_a, doc_b"
+  private val substringSpanTail =
+    s"${spanRuns("g")} SELECT doc_a, doc_b, CAST(sum(run_len) AS BIGINT) AS n_cov_pos, " +
+      s"CAST(max(run_len) + ${SubWinW - 1} AS BIGINT) AS longest_span " +
+      s"FROM runs GROUP BY 1, 2 HAVING max(run_len) + ${SubWinW - 1} >= $SubMinSpan " +
+      "ORDER BY doc_a, doc_b"
+  // the auto form: stride-1 spans below SubAutoVolCap corpus chars
+  // (scalar subquery over `vol`), winnowing above
+  private val substringAutoTail =
+    s"${spanRuns("g1")}, " +
+      "s1 AS (SELECT doc_a, doc_b, CAST(sum(run_len) AS BIGINT) AS n_matches, " +
+      "'stride1' AS mode FROM runs GROUP BY 1, 2 " +
+      s"HAVING max(run_len) + ${SubWinW - 1} >= $SubMinSpan), " +
+      s"$winnowFp, ${dfCappedHashes("g2", "fp")}, " +
+      "wn AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, " +
+      "CAST(count(*) AS BIGINT) AS n_matches, 'winnow' AS mode " +
+      s"${winnowPairs("g2")}) " +
+      s"SELECT * FROM s1 WHERE (SELECT v FROM vol) <= $SubAutoVolCap " +
+      s"UNION ALL SELECT * FROM wn WHERE (SELECT v FROM vol) > $SubAutoVolCap " +
+      "ORDER BY doc_a, doc_b"
 
   def oracle: Map[String, String] = staticOracle ++ ivfKmeansDumpOracle
 
@@ -4856,22 +5161,58 @@ object LlmPipeline {
         s"bands AS (${(0 until 4).map(bandSel).mkString(" UNION ALL ")})"
     }
 
-    // ONE copy of the cc family's capped-pairs → symmetric-edges →
-    // reachability CTE chain (q_dedup_cc / _cluster_stats /
-    // _cross_source): three hand-copies edited out of lockstep would
-    // make the family's oracles disagree with each other and with the
-    // shared ccLabelsFor (the sparkSql map's ccUnrolled rule).
+    // reachability over the symmetric edges of `pairs` (a, b): UNION
+    // dedups, so the frontier is the reachability set and terminates
+    def reachDuck(a: String, b: String, id: String) =
+      s"edges AS (SELECT $a AS u, $b AS v FROM pairs UNION ALL SELECT $b, $a FROM pairs), " +
+        s"reach($id, lbl) AS (SELECT u, u FROM edges " +
+        s"UNION SELECT e.v, r.lbl FROM reach r JOIN edges e ON e.u = r.$id)"
+    // the cc family's capped-pairs → symmetric-edges → reachability
+    // chain (q_dedup_cc / _cluster_stats / _cross_source), mirroring the
+    // shared ccLabelsFor
     val ccReachDuck =
-      "ok AS (SELECT band, band_key FROM bands GROUP BY band, band_key " +
-        s"HAVING count(*) <= ${LlmPipeline.HotBucketCap}), " +
-        "pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b " +
-        "FROM bands a JOIN ok ON ok.band = a.band AND ok.band_key = a.band_key " +
-        "JOIN bands b ON a.band = b.band AND a.band_key = b.band_key " +
-        "AND a.doc_id < b.doc_id), " +
-        "edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs " +
-        "UNION ALL SELECT doc_b, doc_a FROM pairs), " +
-        "reach(doc_id, lbl) AS (SELECT u, u FROM edges " +
-        "UNION SELECT e.v, r.lbl FROM reach r JOIN edges e ON e.u = r.doc_id)"
+      s"${minhashBandsDuck.replaceFirst("WITH ", "WITH RECURSIVE ")}, " +
+        s"${bandPairs("bands", "pairs")}, ${reachDuck("doc_a", "doc_b", "doc_id")}"
+    val ccLabDuck = s"$ccReachDuck, lab AS (SELECT doc_id, min(lbl) AS rep_id FROM reach GROUP BY doc_id) "
+    // the banded chain's verify stage: distinct hashed shingles of the
+    // paired docs, then exact sizes and intersections
+    val verifyDuck =
+      "din AS (SELECT doc_a AS doc_id FROM pr UNION SELECT doc_b FROM pr), " +
+        s"shv AS (SELECT doc_id, unnest(list_distinct($shinglesDuck)) AS s " +
+        "FROM documents WHERE doc_id IN (SELECT doc_id FROM din)), " +
+        "hv AS (SELECT doc_id, " +
+        s"CAST(concat('0x', substring(md5(s), 1, 15)) AS BIGINT) AS h FROM shv), $pairInterCtes"
+    // the postings CTE (mirrors ngramPostings: per-doc DISTINCT shingles,
+    // 60-bit integer keys)
+    val dsShDuck =
+      s"CAST(concat('0x', substring(md5(unnest(list_distinct($shinglesDuck))), 1, 15)) AS BIGINT) AS sh"
+    val dsDuck = s"WITH ds AS (SELECT doc_id, $dsShDuck FROM documents)"
+    val bucketDuck = lshBucketExpr(lshPlaneDotDuck)
+    def cosDuck(p: String, v: String) =
+      s"${dotDuck(s"$p.qa", s"$v.q")} / sqrt(CAST($p.n2a AS DOUBLE) * " +
+        s"CAST(${dotDuck(s"$v.q", s"$v.q")} AS DOUBLE)) AS cos"
+    // exact integer squared-L2 between two lists
+    def d2Duck(a: String, b: String) =
+      s"CAST(list_sum(list_transform(list_zip($a, $b), p -> (p[1] - p[2]) * (p[1] - p[2]))) AS BIGINT)"
+    // SimHash (mirrors dedupSimhash): 32 signed bit votes → 32-bit hash
+    val bitSums = (1 to 32).map(b =>
+      s"CAST(sum(CASE WHEN (h >> ${b - 1}) & 1 = 1 THEN 1 ELSE -1 END) AS BIGINT) AS v$b")
+      .mkString(", ")
+    val shSum = (1 to 32).map(b =>
+      s"(CASE WHEN v$b > 0 THEN CAST(power(2, ${32 - b}) AS BIGINT) ELSE CAST(0 AS BIGINT) END)")
+      .mkString(" + ")
+    val simHashDuck = s"CAST(concat('0x', substring(md5(unnest($shinglesDuck)), 1, 15)) AS BIGINT) AS h"
+    val subWinDuck =
+      "w AS (SELECT doc_id, CAST(u AS BIGINT) AS pos, " +
+        "CAST(concat('0x', substring(md5(substring(text, CAST(u AS INT), " +
+        s"$SubWinW)), 1, 15)) AS BIGINT) AS h " +
+        s"FROM documents, unnest(generate_series(1, n_chars - ${SubWinW - 1})) AS t(u) " +
+        s"WHERE n_chars >= $SubWinW)"
+    val mixTokensDuck =
+      "WITH t AS (SELECT source, " +
+        "CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens FROM documents), " +
+        "ps AS (SELECT source, CAST(sum(n_tokens) AS BIGINT) AS source_tokens " +
+        "FROM t GROUP BY source), "
 
     Map(
       "q_dedup_exact" ->
@@ -4882,24 +5223,13 @@ object LlmPipeline {
         (s"$minhashBandsDuck " +
           "SELECT doc_id, band, band_key FROM bands ORDER BY doc_id, band"),
       "q_dedup_minhash_pairs" ->
-        (s"$minhashBandsDuck, " +
-          "ok AS (SELECT band, band_key FROM bands GROUP BY band, band_key " +
-          s"HAVING count(*) <= ${LlmPipeline.HotBucketCap}) " +
-          "SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b " +
-          "FROM bands a JOIN ok ON ok.band = a.band AND ok.band_key = a.band_key " +
-          "JOIN bands b ON a.band = b.band AND a.band_key = b.band_key " +
-          "AND a.doc_id < b.doc_id ORDER BY doc_a, doc_b"),
+        (s"$minhashBandsDuck, ${bandOk("bands")} " +
+          s"${bandPairsJoin("bands")} ORDER BY doc_a, doc_b"),
       // full-distance CASE mirrors the Spark side's banded
       // levenshtein(a, b, K) early exit (-1 past the threshold) and the
       // length lower-bound shortcut, both result-neutral by the metric
       "q_dedup_editdist" ->
-        (s"$minhashBandsDuck, " +
-          "ok AS (SELECT band, band_key FROM bands GROUP BY band, band_key " +
-          s"HAVING count(*) <= ${LlmPipeline.HotBucketCap}), " +
-          "p AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b " +
-          "FROM bands a JOIN ok ON ok.band = a.band AND ok.band_key = a.band_key " +
-          "JOIN bands b ON a.band = b.band AND a.band_key = b.band_key " +
-          "AND a.doc_id < b.doc_id) " +
+        (s"$minhashBandsDuck, ${bandPairs("bands", "p")} " +
           "SELECT doc_a, doc_b, " +
           s"CAST(CASE WHEN levenshtein(da.text, db.text) <= $EditDistMax " +
           s"THEN levenshtein(da.text, db.text) ELSE -1 END AS BIGINT) AS edit_dist, " +
@@ -4911,52 +5241,17 @@ object LlmPipeline {
       // frontier is the reachability set and terminates). Mirrors the
       // Spark side's min-label-propagation fixpoint exactly.
       "q_dedup_cc" ->
-        (s"${minhashBandsDuck.replaceFirst("WITH ", "WITH RECURSIVE ")}, " +
-          ccReachDuck + " " +
-          "SELECT doc_id, min(lbl) AS rep_id FROM reach GROUP BY doc_id " +
+        (s"$ccReachDuck SELECT doc_id, min(lbl) AS rep_id FROM reach GROUP BY doc_id " +
           "ORDER BY doc_id"),
-      "q_dedup_cluster_stats" ->
-        (s"${minhashBandsDuck.replaceFirst("WITH ", "WITH RECURSIVE ")}, " +
-          ccReachDuck + ", " +
-          "lab AS (SELECT doc_id, min(lbl) AS rep_id FROM reach GROUP BY doc_id) " +
-          "SELECT l.rep_id, count(*) AS n_docs, count(*) - 1 AS n_dropped, " +
-          "CAST(sum(CASE WHEN d.doc_id <> l.rep_id THEN d.n_chars ELSE 0 END) AS BIGINT) AS chars_dropped " +
-          "FROM lab l JOIN documents d ON d.doc_id = l.doc_id " +
-          "GROUP BY l.rep_id ORDER BY l.rep_id"),
-      "q_dedup_cross_source" ->
-        (s"${minhashBandsDuck.replaceFirst("WITH ", "WITH RECURSIVE ")}, " +
-          ccReachDuck + ", " +
-          "lab AS (SELECT doc_id, min(lbl) AS rep_id FROM reach GROUP BY doc_id) " +
-          "SELECT rs.source AS rep_source, ds.source AS dup_source, count(*) AS n_docs " +
-          "FROM lab l JOIN documents ds ON ds.doc_id = l.doc_id " +
-          "JOIN documents rs ON rs.doc_id = l.rep_id " +
-          "WHERE l.doc_id <> l.rep_id " +
-          "GROUP BY 1, 2 ORDER BY rep_source, dup_source"),
+      "q_dedup_cluster_stats" -> (ccLabDuck + ccClusterStats),
+      "q_dedup_cross_source" -> (ccLabDuck + ccCrossSource("1, 2")),
       "q_dedup_incremental" ->
         (s"$minhashBandsDuck, " +
           "src AS (SELECT doc_id, source FROM documents), " +
           "sb AS (SELECT b.doc_id, b.band, b.band_key, s.source " +
-          "FROM bands b JOIN src s ON s.doc_id = b.doc_id), " +
-          "hist AS (SELECT doc_id AS hist_id, band, band_key FROM sb " +
-          "WHERE source <> 'src0'), " +
-          "okb AS (SELECT band, band_key FROM hist GROUP BY band, band_key " +
-          s"HAVING count(DISTINCT hist_id) <= ${LlmPipeline.HotBucketCap}), " +
-          "batch AS (SELECT doc_id, band, band_key FROM sb WHERE source = 'src0') " +
-          "SELECT b.doc_id, count(DISTINCT h.hist_id) AS n_hist_dups, " +
-          "min(h.hist_id) AS first_hist_id " +
-          "FROM batch b JOIN okb o ON o.band = b.band AND o.band_key = b.band_key " +
-          "JOIN hist h ON h.band = b.band AND h.band_key = b.band_key " +
-          "GROUP BY b.doc_id ORDER BY b.doc_id"),
-      "q_dedup_simhash" -> {
-        val bitSums = (1 to 32).map(b =>
-          s"CAST(sum(CASE WHEN (h >> ${b - 1}) & 1 = 1 THEN 1 ELSE -1 END) AS BIGINT) AS v$b")
-          .mkString(", ")
-        val shSum = (1 to 32).map(b =>
-          s"(CASE WHEN v$b > 0 THEN CAST(power(2, ${32 - b}) AS BIGINT) ELSE CAST(0 AS BIGINT) END)")
-          .mkString(" + ")
-        s"WITH hs AS (SELECT doc_id, " +
-          s"CAST(concat('0x', substring(md5(unnest($shinglesDuck)), 1, 15)) AS BIGINT) AS h " +
-          "FROM documents), " +
+          s"FROM bands b JOIN src s ON s.doc_id = b.doc_id), $incrementalTail"),
+      "q_dedup_simhash" ->
+        (s"WITH hs AS (SELECT doc_id, $simHashDuck FROM documents), " +
           s"bits AS (SELECT doc_id, $bitSums FROM hs GROUP BY doc_id), " +
           s"sh AS (SELECT doc_id, $shSum AS simhash FROM bits), " +
           "bands AS (SELECT doc_id, simhash, b, " +
@@ -4968,115 +5263,54 @@ object LlmPipeline {
           "bit_count(xor(a.simhash, b.simhash)) AS hamming " +
           "FROM bands a JOIN ok ON ok.b = a.b AND ok.bv = a.bv " +
           "JOIN bands b ON a.b = b.b AND a.bv = b.bv AND a.doc_id < b.doc_id " +
-          "WHERE bit_count(xor(a.simhash, b.simhash)) <= 8 ORDER BY doc_a, doc_b"
-      },
-      "q_dedup_ngram" ->
-        (s"WITH ds AS (SELECT doc_id, " +
-          s"CAST(concat('0x', substring(md5(unnest(list_distinct($shinglesDuck))), 1, 15)) AS BIGINT) AS sh " +
-          "FROM documents), " +
-          "sizes AS (SELECT doc_id, count(*) AS n_sh FROM ds GROUP BY doc_id), " +
-          // df-cap mirror: only shingles present in 2..NgramDfCap DISTINCT
-          // docs count toward |∩| (mirrors ngramPairsFromPostings's
-          // size(collect_set(doc_id)) <= cap). COUNT DISTINCT on both
-          // doc_id here and sh in `inter` because ds can carry duplicate
-          // (doc, sh) rows when two distinct shingle strings of one doc
-          // collide in the 60-bit hash — list_distinct dedups strings,
-          // not hashes; a raw count(*) would then diverge from Spark's
-          // set-based cap and double-count the shared shingle
-          "ok AS (SELECT sh FROM ds GROUP BY sh " +
-          s"HAVING count(DISTINCT doc_id) > 1 AND count(DISTINCT doc_id) <= ${LlmPipeline.NgramDfCap}), " +
-          "inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(DISTINCT a.sh) AS n_inter " +
-          "FROM ds a JOIN ok ON ok.sh = a.sh " +
-          "JOIN ds b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2) " +
-          "SELECT doc_a, doc_b, " +
-          "CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) AS jaccard " +
-          "FROM inter JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b " +
-          "ORDER BY jaccard DESC, doc_a, doc_b LIMIT 100"),
-      "q_dedup_embed" -> {
-        val bucketDuck = lshBucketExpr(lshPlaneDotDuck)
-        s"WITH q AS (SELECT vec_id, label, $quantDuck AS q FROM embeddings), " +
-          "n AS (SELECT vec_id, label, q, " +
-          "CAST(list_sum(list_transform(list_zip(q, q), p -> p[1] * p[2])) AS BIGINT) AS n2, " +
+          "WHERE bit_count(xor(a.simhash, b.simhash)) <= 8 ORDER BY doc_a, doc_b"),
+      "q_dedup_ngram" -> s"$dsDuck, $ngramJaccardTail",
+      "q_dedup_embed" ->
+        (s"WITH q AS (SELECT vec_id, label, $quantDuck AS q FROM embeddings), " +
+          s"n AS (SELECT vec_id, label, q, ${dotDuck("q", "q")} AS n2, " +
           s"CAST($bucketDuck AS INTEGER) AS bucket FROM q), " +
           "ok AS (SELECT label, bucket FROM n GROUP BY 1, 2 " +
           s"HAVING count(*) > 1 AND count(*) <= $HotBucketCap) " +
-          "SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, " +
-          "CAST(list_sum(list_transform(list_zip(a.q, b.q), p -> p[1] * p[2])) AS BIGINT) " +
+          s"SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, ${dotDuck("a.q", "b.q")} " +
           "/ sqrt(CAST(a.n2 AS DOUBLE) * CAST(b.n2 AS DOUBLE)) AS cos " +
           "FROM n a JOIN ok ON ok.label = a.label AND ok.bucket = a.bucket " +
           "JOIN n b ON a.label = b.label AND a.bucket = b.bucket AND a.vec_id < b.vec_id " +
-          "ORDER BY cos DESC, vec_a, vec_b LIMIT 100"
-      },
-      "q_dedup_semantic" -> {
-        val bucketDuck = lshBucketExpr(lshPlaneDotDuck)
-        s"WITH RECURSIVE q AS (SELECT vec_id, $quantDuck AS q FROM embeddings), " +
-          "n AS (SELECT vec_id, q, " +
-          "CAST(list_sum(list_transform(list_zip(q, q), p -> p[1] * p[2])) AS BIGINT) AS n2, " +
+          "ORDER BY cos DESC, vec_a, vec_b LIMIT 100"),
+      "q_dedup_semantic" ->
+        (s"WITH RECURSIVE q AS (SELECT vec_id, $quantDuck AS q FROM embeddings), " +
+          s"n AS (SELECT vec_id, q, ${dotDuck("q", "q")} AS n2, " +
           s"CAST($bucketDuck AS INTEGER) AS bucket FROM q), " +
           "okb AS (SELECT bucket FROM n GROUP BY 1 " +
           s"HAVING count(*) > 1 AND count(*) <= $HotBucketCap), " +
-          "cand AS (SELECT a.vec_id AS va, b.vec_id AS vb, " +
-          "CAST(list_sum(list_transform(list_zip(a.q, b.q), p -> p[1] * p[2])) AS BIGINT) AS dp, " +
+          s"cand AS (SELECT a.vec_id AS va, b.vec_id AS vb, ${dotDuck("a.q", "b.q")} AS dp, " +
           "a.n2 AS n2a, b.n2 AS n2b " +
           "FROM n a JOIN okb ON okb.bucket = a.bucket " +
           "JOIN n b ON a.bucket = b.bucket AND a.vec_id < b.vec_id), " +
           "pairs AS (SELECT va, vb FROM cand WHERE dp > 0 " +
           s"AND CAST(dp AS HUGEINT) * CAST(dp AS HUGEINT) * $SemTauDen >= " +
           s"$SemTauNum * CAST(n2a AS HUGEINT) * CAST(n2b AS HUGEINT)), " +
-          "edges AS (SELECT va AS u, vb AS v FROM pairs " +
-          "UNION ALL SELECT vb, va FROM pairs), " +
-          "reach(vec_id, lbl) AS (SELECT u, u FROM edges " +
-          "UNION SELECT e.v, r.lbl FROM reach r JOIN edges e ON e.u = r.vec_id), " +
+          s"${reachDuck("va", "vb", "vec_id")}, " +
           "lab AS (SELECT vec_id, min(lbl) AS rep_id FROM reach GROUP BY vec_id) " +
           "SELECT e.vec_id, coalesce(l.rep_id, e.vec_id) AS rep_id, " +
           "coalesce(l.rep_id, e.vec_id) = e.vec_id AS keep " +
           "FROM embeddings e LEFT JOIN lab l ON l.vec_id = e.vec_id " +
-          "ORDER BY e.vec_id"
-      },
+          "ORDER BY e.vec_id"),
       // Five group-count mirrors of the capped families' overflow
       // predicates, unioned under a family tag — stringified keys so the
       // heterogeneous block keys share one relation. Empty on the
       // fixtures; the planted-hot-block spec drives each non-empty path.
-      "q_dedup_overflow_report" -> {
-        val bucketDuck = lshBucketExpr(lshPlaneDotDuck)
-        val bitSums = (1 to 32).map(b =>
-          s"CAST(sum(CASE WHEN (h >> ${b - 1}) & 1 = 1 THEN 1 ELSE -1 END) AS BIGINT) AS v$b")
-          .mkString(", ")
-        val shSum = (1 to 32).map(b =>
-          s"(CASE WHEN v$b > 0 THEN CAST(power(2, ${32 - b}) AS BIGINT) ELSE CAST(0 AS BIGINT) END)")
-          .mkString(" + ")
-        s"$minhashBandsDuck, " +
-          "sim_hs AS (SELECT doc_id, " +
-          s"CAST(concat('0x', substring(md5(unnest($shinglesDuck)), 1, 15)) AS BIGINT) AS h " +
-          "FROM documents), " +
+      "q_dedup_overflow_report" ->
+        (s"$minhashBandsDuck, " +
+          s"sim_hs AS (SELECT doc_id, $simHashDuck FROM documents), " +
           s"sim_bits AS (SELECT doc_id, $bitSums FROM sim_hs GROUP BY doc_id), " +
           s"sim_sig AS (SELECT doc_id, $shSum AS simhash FROM sim_bits), " +
           "sim_bands AS (SELECT doc_id, b, " +
           "CAST(floor(simhash / power(256, 3 - b)) AS BIGINT) % 256 AS bv " +
           "FROM sim_sig, (SELECT unnest(generate_series(0, 3)) AS b) bb), " +
-          "ng_ds AS (SELECT doc_id, " +
-          s"CAST(concat('0x', substring(md5(unnest(list_distinct($shinglesDuck))), 1, 15)) AS BIGINT) AS sh " +
-          "FROM documents), " +
+          s"ng_ds AS (SELECT doc_id, $dsShDuck FROM documents), " +
           s"em_q AS (SELECT vec_id, label, $quantDuck AS q FROM embeddings), " +
           s"em_n AS (SELECT vec_id, label, CAST($bucketDuck AS INTEGER) AS bucket FROM em_q) " +
-          "SELECT family, key1, key2, n_members FROM (" +
-          "SELECT 'minhash' AS family, CAST(band AS VARCHAR) AS key1, " +
-          "band_key AS key2, count(*) AS n_members FROM bands " +
-          s"GROUP BY 1, 2, 3 HAVING count(*) > ${LlmPipeline.HotBucketCap} " +
-          "UNION ALL " +
-          "SELECT 'simhash', CAST(b AS VARCHAR), CAST(bv AS VARCHAR), count(*) FROM sim_bands " +
-          s"GROUP BY 1, 2, 3 HAVING count(*) > ${LlmPipeline.HotBucketCap} " +
-          "UNION ALL " +
-          "SELECT 'ngram', CAST(sh AS VARCHAR), '', count(DISTINCT doc_id) FROM ng_ds " +
-          s"GROUP BY 1, 2, 3 HAVING count(DISTINCT doc_id) > ${LlmPipeline.NgramDfCap} " +
-          "UNION ALL " +
-          "SELECT 'embed', CAST(label AS VARCHAR), CAST(bucket AS VARCHAR), count(*) FROM em_n " +
-          s"GROUP BY 1, 2, 3 HAVING count(*) > ${LlmPipeline.HotBucketCap} " +
-          "UNION ALL " +
-          "SELECT 'semantic', CAST(bucket AS VARCHAR), '', count(*) FROM em_n " +
-          s"GROUP BY 1, 2, 3 HAVING count(*) > ${LlmPipeline.HotBucketCap}" +
-          ") ORDER BY family, key1, key2"
-      },
+          overflowUnion("VARCHAR")),
       "q_embed_centroids" ->
         (s"WITH q AS (SELECT label, $quantDuck AS q FROM embeddings), " +
           "e AS (SELECT label, u - 1 AS dim, q[u] AS qv FROM " +
@@ -5103,59 +5337,39 @@ object LlmPipeline {
           "count(*) AS nd FROM e GROUP BY label, dim), " +
           "s AS (SELECT e.label, e.vec_id, " +
           "CAST(sum((g.nd * e.qv - g.sd) * (g.nd * e.qv - g.sd)) AS BIGINT) AS score " +
-          "FROM e JOIN g ON g.label = e.label AND g.dim = e.dim " +
-          "GROUP BY e.label, e.vec_id), " +
-          "r AS (SELECT label, vec_id, score, row_number() OVER " +
-          "(PARTITION BY label ORDER BY score DESC, vec_id) AS rn FROM s) " +
-          s"SELECT label, vec_id, score FROM r WHERE rn <= $OutlierTopK " +
-          "ORDER BY label, score DESC, vec_id"),
+          outliersTail),
       "q_sim_search" ->
         (s"WITH q AS (SELECT vec_id, $quantDuck AS q FROM embeddings), " +
-          "n AS (SELECT vec_id, q, " +
-          "CAST(list_sum(list_transform(list_zip(q, q), p -> p[1] * p[2])) AS BIGINT) AS n2 FROM q) " +
-          "SELECT b.vec_id AS vec_id, " +
-          "CAST(list_sum(list_transform(list_zip(a.q, b.q), p -> p[1] * p[2])) AS BIGINT) " +
+          s"n AS (SELECT vec_id, q, ${dotDuck("q", "q")} AS n2 FROM q) " +
+          s"SELECT b.vec_id AS vec_id, ${dotDuck("a.q", "b.q")} " +
           "/ sqrt(CAST(a.n2 AS DOUBLE) * CAST(b.n2 AS DOUBLE)) AS cos " +
           "FROM n a, n b WHERE a.vec_id = 0 AND b.vec_id <> 0 " +
           "ORDER BY cos DESC, vec_id LIMIT 10"),
       "q_sim_search_ivf" ->
         (s"WITH q AS (SELECT vec_id, $quantDuck AS q FROM embeddings), " +
           "cents AS (SELECT vec_id AS cent_id, q AS qc FROM q WHERE vec_id < 8), " +
-          "dists AS (SELECT vec_id, q, cent_id, " +
-          "CAST(list_sum(list_transform(list_zip(q, qc), p -> (p[1] - p[2]) * (p[1] - p[2]))) AS BIGINT) AS dist2 " +
-          "FROM q, cents), " +
+          s"dists AS (SELECT vec_id, q, cent_id, ${d2Duck("q", "qc")} AS dist2 FROM q, cents), " +
           "assigned AS (SELECT vec_id, q, cent_id FROM dists " +
           "QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dist2 ASC, cent_id ASC) = 1), " +
-          "pn AS (SELECT q AS qa, cent_id AS probe_cent, " +
-          "CAST(list_sum(list_transform(list_zip(q, q), p -> p[1] * p[2])) AS BIGINT) AS n2a " +
+          s"pn AS (SELECT q AS qa, cent_id AS probe_cent, ${dotDuck("q", "q")} AS n2a " +
           "FROM assigned WHERE vec_id = 0) " +
-          "SELECT b.vec_id, b.cent_id, " +
-          "CAST(list_sum(list_transform(list_zip(pn.qa, b.q), p -> p[1] * p[2])) AS BIGINT) " +
-          "/ sqrt(CAST(pn.n2a AS DOUBLE) * CAST(" +
-          "CAST(list_sum(list_transform(list_zip(b.q, b.q), p -> p[1] * p[2])) AS BIGINT) AS DOUBLE)) AS cos " +
+          s"SELECT b.vec_id, b.cent_id, ${cosDuck("pn", "b")} " +
           "FROM assigned b, pn WHERE b.cent_id = pn.probe_cent AND b.vec_id <> 0 " +
           "ORDER BY cos DESC, vec_id LIMIT 5"),
       "q_sim_search_ivf2" ->
         // nprobe=2 mirror: the probe joins its TWO nearest centroids
         (s"WITH q AS (SELECT vec_id, $quantDuck AS q FROM embeddings), " +
           "cents AS (SELECT vec_id AS cent_id, q AS qc FROM q WHERE vec_id < 8), " +
-          "dists0 AS (SELECT vec_id, q, cent_id, " +
-          "CAST(list_sum(list_transform(list_zip(q, qc), p -> (p[1] - p[2]) * (p[1] - p[2]))) AS BIGINT) AS dist2 " +
-          "FROM q, cents), " +
+          s"dists0 AS (SELECT vec_id, q, cent_id, ${d2Duck("q", "qc")} AS dist2 FROM q, cents), " +
           "dists AS (SELECT *, row_number() OVER " +
           "(PARTITION BY vec_id ORDER BY dist2 ASC, cent_id ASC) AS rn FROM dists0), " +
           "assigned AS (SELECT vec_id, q, cent_id FROM dists WHERE rn = 1), " +
-          "pn AS (SELECT q AS qa, cent_id AS probe_cent, " +
-          "CAST(list_sum(list_transform(list_zip(q, q), p -> p[1] * p[2])) AS BIGINT) AS n2a " +
+          s"pn AS (SELECT q AS qa, cent_id AS probe_cent, ${dotDuck("q", "q")} AS n2a " +
           "FROM dists WHERE vec_id = 0 AND rn <= 2) " +
-          "SELECT b.vec_id, b.cent_id, " +
-          "CAST(list_sum(list_transform(list_zip(pn.qa, b.q), p -> p[1] * p[2])) AS BIGINT) " +
-          "/ sqrt(CAST(pn.n2a AS DOUBLE) * CAST(" +
-          "CAST(list_sum(list_transform(list_zip(b.q, b.q), p -> p[1] * p[2])) AS BIGINT) AS DOUBLE)) AS cos " +
+          s"SELECT b.vec_id, b.cent_id, ${cosDuck("pn", "b")} " +
           "FROM assigned b JOIN pn ON b.cent_id = pn.probe_cent WHERE b.vec_id <> 0 " +
           "ORDER BY cos DESC, vec_id LIMIT 5"),
       "q_lsh_bucket_stats" -> {
-        val bucketDuck = lshBucketExpr(lshPlaneDotDuck)
         // BIGINT (not DECIMAL(38,0)) on purpose: DuckDB's `//` over a
         // DECIMAL operand is DOUBLE division (134843.75), and the BIGINT
         // cast then ROUNDS where Spark's DIV floors — caught by the
@@ -5174,99 +5388,39 @@ object LlmPipeline {
           "CAST(CAST(n_vecs AS BIGINT) * n_buckets * 1000000 // total_vecs AS BIGINT) AS load_micros " +
           "FROM pb CROSS JOIN g ORDER BY bucket"
       },
-      "q_ann_recall_mp" -> {
-        val ds = (0 until 4).map(p => s"${lshPlaneDotDuck(p)} AS d$p").mkString(", ")
-        val bucketDuck = lshBucketExpr(p => s"d$p")
-        val flipDuck = lshFlipExpr
-        s"WITH q AS (SELECT vec_id, $quantDuck AS q FROM embeddings), " +
-          s"dd AS (SELECT vec_id, q, $ds FROM q), " +
-          s"b AS (SELECT vec_id, q, CAST($bucketDuck AS INTEGER) AS bucket, " +
-          s"CAST($flipDuck AS INTEGER) AS flip FROM dd), " +
-          s"pr AS (SELECT vec_id AS probe_id, q AS qa, bucket AS b1, " +
+      "q_ann_recall_mp" ->
+        (s"${lshMpCtes(quantDuck, lshPlaneDotDuck)}, " +
+          "pr AS (SELECT vec_id AS probe_id, q AS qa, bucket AS b1, " +
           "CAST(xor(bucket, flip) AS INTEGER) AS b2, " +
-          "CAST(list_sum(list_transform(list_zip(q, q), p -> p[1] * p[2])) AS BIGINT) AS n2a " +
+          s"${dotDuck("q", "q")} AS n2a " +
           s"FROM b WHERE vec_id < $RecallProbes), " +
           "sc AS (SELECT pr.probe_id, v.vec_id AS cand_id, v.bucket, pr.b1, pr.b2, " +
-          "CAST(list_sum(list_transform(list_zip(pr.qa, v.q), p -> p[1] * p[2])) AS BIGINT) " +
-          "/ sqrt(CAST(pr.n2a AS DOUBLE) * CAST(" +
-          "CAST(list_sum(list_transform(list_zip(v.q, v.q), p -> p[1] * p[2])) AS BIGINT) AS DOUBLE)) AS cos " +
+          s"${cosDuck("pr", "v")} " +
           "FROM b v, pr WHERE v.vec_id <> pr.probe_id), " +
-          "tr AS (SELECT probe_id, cand_id FROM (SELECT probe_id, cand_id, " +
-          "row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, cand_id) AS rn " +
-          s"FROM sc) WHERE rn <= $RecallK), " +
-          "an AS (SELECT probe_id, cand_id FROM (SELECT probe_id, cand_id, " +
-          "row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, cand_id) AS rn " +
-          s"FROM sc WHERE bucket = b1 OR bucket = b2) WHERE rn <= $RecallK), " +
-          "ca AS (SELECT probe_id, count(*) AS n_ann FROM an GROUP BY 1), " +
-          "ch AS (SELECT t.probe_id, count(*) AS n_hit FROM tr t " +
-          "JOIN an a ON a.probe_id = t.probe_id AND a.cand_id = t.cand_id GROUP BY 1) " +
-          "SELECT p.probe_id, COALESCE(ca.n_ann, 0) AS n_ann, " +
-          "COALESCE(ch.n_hit, 0) AS n_hit, " +
-          s"COALESCE(ch.n_hit, 0) * 1000000 // $RecallK AS recall_ppm " +
-          "FROM pr p LEFT JOIN ca ON ca.probe_id = p.probe_id " +
-          "LEFT JOIN ch ON ch.probe_id = p.probe_id ORDER BY p.probe_id"
-      },
-      "q_ann_recall" -> {
-        val bucketDuck = lshBucketExpr(lshPlaneDotDuck)
-        s"WITH q AS (SELECT vec_id, $quantDuck AS q FROM embeddings), " +
-          s"b AS (SELECT vec_id, q, CAST($bucketDuck AS INTEGER) AS bucket FROM q), " +
-          s"pr AS (SELECT vec_id AS probe_id, q AS qa, bucket AS probe_bucket, " +
-          "CAST(list_sum(list_transform(list_zip(q, q), p -> p[1] * p[2])) AS BIGINT) AS n2a " +
-          s"FROM b WHERE vec_id < $RecallProbes), " +
+          recallTail("bucket = b1 OR bucket = b2", "0", "//")),
+      "q_ann_recall" ->
+        (s"${lshCtes(quantDuck, lshPlaneDotDuck)}, " +
+          "pr AS (SELECT vec_id AS probe_id, q AS qa, bucket AS probe_bucket, " +
+          s"${dotDuck("q", "q")} AS n2a FROM b WHERE vec_id < $RecallProbes), " +
           "sc AS (SELECT pr.probe_id, v.vec_id AS cand_id, v.bucket, pr.probe_bucket, " +
-          "CAST(list_sum(list_transform(list_zip(pr.qa, v.q), p -> p[1] * p[2])) AS BIGINT) " +
-          "/ sqrt(CAST(pr.n2a AS DOUBLE) * CAST(" +
-          "CAST(list_sum(list_transform(list_zip(v.q, v.q), p -> p[1] * p[2])) AS BIGINT) AS DOUBLE)) AS cos " +
-          "FROM b v, pr WHERE v.vec_id <> pr.probe_id), " +
-          "tr AS (SELECT probe_id, cand_id FROM (SELECT probe_id, cand_id, " +
-          "row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, cand_id) AS rn " +
-          s"FROM sc) WHERE rn <= $RecallK), " +
-          "an AS (SELECT probe_id, cand_id FROM (SELECT probe_id, cand_id, " +
-          "row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, cand_id) AS rn " +
-          s"FROM sc WHERE bucket = probe_bucket) WHERE rn <= $RecallK), " +
-          "ca AS (SELECT probe_id, count(*) AS n_ann FROM an GROUP BY 1), " +
-          "ch AS (SELECT t.probe_id, count(*) AS n_hit FROM tr t " +
-          "JOIN an a ON a.probe_id = t.probe_id AND a.cand_id = t.cand_id GROUP BY 1) " +
-          "SELECT p.probe_id, COALESCE(ca.n_ann, 0) AS n_ann, " +
-          "COALESCE(ch.n_hit, 0) AS n_hit, " +
-          s"COALESCE(ch.n_hit, 0) * 1000000 // $RecallK AS recall_ppm " +
-          "FROM pr p LEFT JOIN ca ON ca.probe_id = p.probe_id " +
-          "LEFT JOIN ch ON ch.probe_id = p.probe_id ORDER BY p.probe_id"
-      },
-      "q_sim_search_lsh" -> {
-        val bucketDuck = lshBucketExpr(lshPlaneDotDuck)
-        s"WITH q AS (SELECT vec_id, $quantDuck AS q FROM embeddings), " +
-          s"b AS (SELECT vec_id, q, CAST($bucketDuck AS INTEGER) AS bucket FROM q), " +
-          "pn AS (SELECT q AS qa, bucket AS probe_bucket, " +
-          "CAST(list_sum(list_transform(list_zip(q, q), p -> p[1] * p[2])) AS BIGINT) AS n2a " +
+          s"${cosDuck("pr", "v")} FROM b v, pr WHERE v.vec_id <> pr.probe_id), " +
+          recallTail("bucket = probe_bucket", "0", "//")),
+      "q_sim_search_lsh" ->
+        (s"${lshCtes(quantDuck, lshPlaneDotDuck)}, " +
+          s"pn AS (SELECT q AS qa, bucket AS probe_bucket, ${dotDuck("q", "q")} AS n2a " +
           "FROM b WHERE vec_id = 0) " +
-          "SELECT v.vec_id, v.bucket, " +
-          "CAST(list_sum(list_transform(list_zip(pn.qa, v.q), p -> p[1] * p[2])) AS BIGINT) " +
-          "/ sqrt(CAST(pn.n2a AS DOUBLE) * CAST(" +
-          "CAST(list_sum(list_transform(list_zip(v.q, v.q), p -> p[1] * p[2])) AS BIGINT) AS DOUBLE)) AS cos " +
+          s"SELECT v.vec_id, v.bucket, ${cosDuck("pn", "v")} " +
           "FROM b v, pn WHERE v.bucket = pn.probe_bucket AND v.vec_id <> 0 " +
-          "ORDER BY cos DESC, vec_id LIMIT 5"
-      },
-      "q_sim_search_lsh_mp" -> {
-        val dotsDuck = (0 until 4).map(p => s"${lshPlaneDotDuck(p)} AS d$p").mkString(", ")
-        val bucketDuck = lshBucketExpr(p => s"d$p")
-        // lowest-index minimal |margin| plane, mirroring flipExpr exactly
-        val flipDuck = lshFlipExpr
-        s"WITH q AS (SELECT vec_id, $quantDuck AS q FROM embeddings), " +
-          s"dd AS (SELECT vec_id, q, $dotsDuck FROM q), " +
-          s"b AS (SELECT vec_id, q, CAST($bucketDuck AS INTEGER) AS bucket, " +
-          s"CAST($flipDuck AS INTEGER) AS flip FROM dd), " +
-          "pn AS (SELECT q AS qa, " +
-          "CAST(list_sum(list_transform(list_zip(q, q), p -> p[1] * p[2])) AS BIGINT) AS n2a, " +
+          "ORDER BY cos DESC, vec_id LIMIT 5"),
+      // lowest-index minimal |margin| plane, mirroring flipExpr exactly
+      "q_sim_search_lsh_mp" ->
+        (s"${lshMpCtes(quantDuck, lshPlaneDotDuck)}, " +
+          s"pn AS (SELECT q AS qa, ${dotDuck("q", "q")} AS n2a, " +
           "unnest([bucket, CAST(xor(bucket, flip) AS INTEGER)]) AS probe_bucket " +
           "FROM b WHERE vec_id = 0) " +
-          "SELECT v.vec_id, v.bucket, " +
-          "CAST(list_sum(list_transform(list_zip(pn.qa, v.q), p -> p[1] * p[2])) AS BIGINT) " +
-          "/ sqrt(CAST(pn.n2a AS DOUBLE) * CAST(" +
-          "CAST(list_sum(list_transform(list_zip(v.q, v.q), p -> p[1] * p[2])) AS BIGINT) AS DOUBLE)) AS cos " +
+          s"SELECT v.vec_id, v.bucket, ${cosDuck("pn", "v")} " +
           "FROM b v, pn WHERE v.bucket = pn.probe_bucket AND v.vec_id <> 0 " +
-          "ORDER BY cos DESC, vec_id LIMIT 5"
-      },
+          "ORDER BY cos DESC, vec_id LIMIT 5"),
       "q_sim_search_pq" -> {
         // PqM-way subvector split: 1-based inclusive list slices
         val subsDuck = (0 until PqM).map { j =>
@@ -5274,30 +5428,10 @@ object LlmPipeline {
           val hi = (j + 1) * PqSubDim
           s"SELECT vec_id, $j AS j, q[$lo:$hi] AS sub FROM q"
         }.mkString(" UNION ALL ")
-        // exact integer squared-L2 between 8-dim subvectors
-        def d2(a: String, b: String) =
-          s"CAST(list_sum(list_transform(list_zip($a, $b), " +
-            "p -> (p[1] - p[2]) * (p[1] - p[2]))) AS BIGINT)"
         s"WITH q AS (SELECT vec_id, $quantDuck AS q FROM embeddings), " +
-          s"subs AS ($subsDuck), " +
-          s"cb AS (SELECT CAST(vec_id AS INTEGER) AS c, j, sub AS csub " +
-          s"FROM subs WHERE vec_id < $PqK), " +
-          // encode: packed argmin over the PqK codes of each subspace
-          s"codes AS (SELECT vec_id, j, CAST(min(${d2("sub", "csub")} * $PqK + c) " +
-          s"% $PqK AS INTEGER) AS code " +
-          "FROM subs JOIN cb USING (j) GROUP BY vec_id, j), " +
-          // ADC table: probe subvector ↔ every code (PqM × PqK rows)
-          s"adc AS (SELECT j, c, ${d2("sub", "csub")} AS t " +
-          "FROM subs JOIN cb USING (j) WHERE vec_id = 0) " +
-          "SELECT codes.vec_id, CAST(sum(adc.t) AS BIGINT) AS adist2 " +
-          "FROM codes JOIN adc ON codes.j = adc.j AND codes.code = adc.c " +
-          "WHERE codes.vec_id <> 0 " +
-          "GROUP BY codes.vec_id ORDER BY adist2 ASC, vec_id ASC LIMIT 5"
+          s"subs AS ($subsDuck), ${pqTail(d2Duck("sub", "csub"))}"
       },
       "q_sim_search_ivfpq" -> {
-        def d2(a: String, b: String) =
-          s"CAST(list_sum(list_transform(list_zip($a, $b), " +
-            "p -> (p[1] - p[2]) * (p[1] - p[2]))) AS BIGINT)"
         def slices(src: String, arr: String, extra: String) =
           (0 until PqM).map { j =>
             val lo = j * PqSubDim + 1
@@ -5306,7 +5440,7 @@ object LlmPipeline {
           }.mkString(" UNION ALL ")
         s"WITH q AS (SELECT vec_id, $quantDuck AS q FROM embeddings), " +
           s"cents AS (SELECT vec_id AS cent_id, q AS qc FROM q WHERE vec_id < $IvfNlist), " +
-          s"dists AS (SELECT vec_id, q, cent_id, ${d2("q", "qc")} AS dist2 FROM q, cents), " +
+          s"dists AS (SELECT vec_id, q, cent_id, ${d2Duck("q", "qc")} AS dist2 FROM q, cents), " +
           "assigned AS (SELECT vec_id, q, cent_id FROM dists " +
           "QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dist2 ASC, cent_id ASC) = 1), " +
           "resid AS (SELECT a.vec_id, a.cent_id, " +
@@ -5316,7 +5450,7 @@ object LlmPipeline {
           s"cb AS (SELECT CAST(vec_id - $PqK AS INTEGER) AS c, j, s AS csub " +
           s"FROM subs WHERE vec_id >= $PqK AND vec_id < ${2 * PqK}), " +
           s"codes AS (SELECT vec_id, cent_id, j, " +
-          s"CAST(min(${d2("s", "csub")} * $PqK + c) % $PqK AS INTEGER) AS code " +
+          s"CAST(min(${d2Duck("s", "csub")} * $PqK + c) % $PqK AS INTEGER) AS code " +
           "FROM subs JOIN cb USING (j) GROUP BY vec_id, cent_id, j), " +
           "pcells AS (SELECT cent_id AS pcent, q FROM dists WHERE vec_id = 0 " +
           s"QUALIFY row_number() OVER (ORDER BY dist2 ASC, cent_id ASC) <= $IvfPqNprobe), " +
@@ -5324,7 +5458,7 @@ object LlmPipeline {
           "list_transform(list_zip(p.q, c.qc), z -> z[1] - z[2]) AS pr " +
           "FROM pcells p JOIN cents c ON p.pcent = c.cent_id), " +
           s"psubs AS (${slices("presid", "pr", "pcent")}), " +
-          s"adc AS (SELECT pcent, j, c, ${d2("s", "csub")} AS t " +
+          s"adc AS (SELECT pcent, j, c, ${d2Duck("s", "csub")} AS t " +
           "FROM psubs JOIN cb USING (j)) " +
           "SELECT v.vec_id, v.cent_id, CAST(sum(adc.t) AS BIGINT) AS adist2 " +
           "FROM codes v JOIN adc ON v.cent_id = adc.pcent " +
@@ -5332,11 +5466,7 @@ object LlmPipeline {
           "WHERE v.vec_id <> 0 GROUP BY v.vec_id, v.cent_id " +
           "ORDER BY adist2 ASC, vec_id ASC LIMIT 5"
       },
-      "q_text_tokens" ->
-        ("SELECT lang, rn, tok, n FROM (SELECT lang, tok, count(*) AS n, " +
-          "row_number() OVER (PARTITION BY lang ORDER BY count(*) DESC, tok ASC) AS rn " +
-          "FROM (SELECT lang, unnest(string_split(text, ' ')) AS tok FROM documents) " +
-          "GROUP BY lang, tok) WHERE rn <= 5 ORDER BY lang, rn"),
+      "q_text_tokens" -> textTokensSql("unnest(string_split(text, ' '))"),
       "q_text_stats" ->
         ("SELECT source, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars, " +
           "CAST(sum(n_chars) * 1000000 // count(n_chars) AS BIGINT) AS avg_chars_micros, " +
@@ -5350,14 +5480,7 @@ object LlmPipeline {
         (s"WITH t AS (SELECT doc_id, n_chars, " +
           "CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens, " +
           s"CAST(len(list_filter(string_split(text,' '), t -> list_contains([$stop], t))) AS BIGINT) AS n_stop " +
-          "FROM documents) " +
-          "SELECT doc_id, n_tokens, n_stop, " +
-          "CAST(n_stop AS DOUBLE) / n_tokens AS stop_ratio, " +
-          "CAST(n_chars - (n_tokens - 1) AS DOUBLE) / n_tokens AS avg_tok_len, " +
-          "least(CAST(n_tokens AS DOUBLE) / 100, CAST(1 AS DOUBLE)) * 0.4 " +
-          "+ (CAST(n_stop AS DOUBLE) / n_tokens) * 0.3 " +
-          "+ least((CAST(n_chars - (n_tokens - 1) AS DOUBLE) / n_tokens) / 8, CAST(1 AS DOUBLE)) * 0.3 AS quality " +
-          "FROM t ORDER BY doc_id"),
+          s"FROM documents) $textQualitySelect"),
       "q_text_token_count" ->
         ("SELECT doc_id, CAST(len(string_split(text,' ')) AS BIGINT) AS ws_tokens, " +
           "CAST(len(regexp_extract_all(text, '[a-z]{1,4}')) AS BIGINT) AS bpe_ish_tokens, " +
@@ -5445,23 +5568,7 @@ object LlmPipeline {
           "FROM dense a JOIN dense b ON a.bucket = b.bucket AND a.source < b.source " +
           "GROUP BY 1, 2 ORDER BY src_a, src_b"),
       "q_dedup_verify" ->
-        (s"$minhashBandsDuck, " +
-          "ok AS (SELECT band, band_key FROM bands GROUP BY band, band_key " +
-          s"HAVING count(*) <= ${LlmPipeline.HotBucketCap}), " +
-          "pr AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b " +
-          "FROM bands a JOIN ok ON ok.band = a.band AND ok.band_key = a.band_key " +
-          "JOIN bands b ON a.band = b.band AND a.band_key = b.band_key " +
-          "AND a.doc_id < b.doc_id), " +
-          "din AS (SELECT doc_a AS doc_id FROM pr UNION SELECT doc_b FROM pr), " +
-          s"shv AS (SELECT doc_id, unnest(list_distinct($shinglesDuck)) AS s " +
-          "FROM documents WHERE doc_id IN (SELECT doc_id FROM din)), " +
-          "hv AS (SELECT doc_id, " +
-          "CAST(concat('0x', substring(md5(s), 1, 15)) AS BIGINT) AS h FROM shv), " +
-          "sz AS (SELECT doc_id, count(*) AS n FROM hv GROUP BY doc_id), " +
-          "iv AS (SELECT p.doc_a, p.doc_b, count(*) AS n_inter FROM pr p " +
-          "JOIN hv a ON a.doc_id = p.doc_a " +
-          "JOIN hv b ON b.doc_id = p.doc_b AND b.h = a.h " +
-          "GROUP BY p.doc_a, p.doc_b), " +
+        (s"$minhashBandsDuck, ${bandPairs("bands", "pr")}, $verifyDuck, " +
           "jv AS (SELECT p.doc_a, p.doc_b, " +
           "CAST(coalesce(iv.n_inter, 0) * 1000000 // " +
           "(sa.n + sb.n - coalesce(iv.n_inter, 0)) AS BIGINT) AS jaccard_ppm " +
@@ -5477,65 +5584,15 @@ object LlmPipeline {
       // within capped buckets, confirms 2·|∩| > |∪| in integers, and
       // (for q_dedup_near) re-expands through the copy groups.
       "q_dedup_near" ->
-        (s"$minhashBandsDuck, " +
-          "mem AS (SELECT doc_id, md5(coalesce(text, '')) AS norm_key FROM documents), " +
-          "grp AS (SELECT norm_key, min(doc_id) AS rep FROM mem GROUP BY norm_key), " +
-          "docrep AS (SELECT m.doc_id, g.rep FROM mem m JOIN grp g ON g.norm_key = m.norm_key), " +
-          "rb AS (SELECT b.doc_id, b.band, b.band_key FROM bands b " +
-          "JOIN docrep dr ON dr.doc_id = b.doc_id AND dr.rep = b.doc_id), " +
-          "ok AS (SELECT band, band_key FROM rb GROUP BY band, band_key " +
-          s"HAVING count(*) <= ${LlmPipeline.HotBucketCap}), " +
-          "pr AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b " +
-          "FROM rb a JOIN ok ON ok.band = a.band AND ok.band_key = a.band_key " +
-          "JOIN rb b ON a.band = b.band AND a.band_key = b.band_key " +
-          "AND a.doc_id < b.doc_id), " +
-          "din AS (SELECT doc_a AS doc_id FROM pr UNION SELECT doc_b FROM pr), " +
-          s"shv AS (SELECT doc_id, unnest(list_distinct($shinglesDuck)) AS s " +
-          "FROM documents WHERE doc_id IN (SELECT doc_id FROM din)), " +
-          "hv AS (SELECT doc_id, " +
-          "CAST(concat('0x', substring(md5(s), 1, 15)) AS BIGINT) AS h FROM shv), " +
-          "sz AS (SELECT doc_id, count(*) AS n FROM hv GROUP BY doc_id), " +
-          "iv AS (SELECT p.doc_a, p.doc_b, count(*) AS n_inter FROM pr p " +
-          "JOIN hv a ON a.doc_id = p.doc_a " +
-          "JOIN hv b ON b.doc_id = p.doc_b AND b.h = a.h " +
-          "GROUP BY p.doc_a, p.doc_b), " +
-          "rp AS (SELECT iv.doc_a, iv.doc_b, " +
-          "1.0 - CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter) AS jaccard_dist " +
-          "FROM iv JOIN sz sa ON sa.doc_id = iv.doc_a JOIN sz sb ON sb.doc_id = iv.doc_b " +
-          "WHERE 2 * n_inter > sa.n + sb.n - n_inter), " +
-          "ex AS (SELECT least(ma.doc_id, mb.doc_id) AS doc_a, " +
-          "greatest(ma.doc_id, mb.doc_id) AS doc_b, jaccard_dist " +
-          "FROM rp JOIN docrep ma ON ma.rep = rp.doc_a JOIN docrep mb ON mb.rep = rp.doc_b " +
-          "UNION ALL SELECT m1.doc_id, m2.doc_id, CAST(0.0 AS DOUBLE) " +
-          "FROM docrep m1 JOIN docrep m2 ON m1.rep = m2.rep AND m1.doc_id < m2.doc_id) " +
-          "SELECT doc_a, doc_b, jaccard_dist FROM ex ORDER BY doc_a, doc_b"),
+        (s"$minhashBandsDuck, $nearRepBands, ${bandPairs("rb", "pr")}, $verifyDuck, " +
+          s"rp AS (${verifiedPairs("1.0")}), ${nearExpand("CAST(0.0 AS DOUBLE)")}"),
       "q_dedup_near_collapsed" ->
         (s"$minhashBandsDuck, " +
           "mem AS (SELECT doc_id, md5(coalesce(text, '')) AS norm_key FROM documents), " +
           "grp AS (SELECT norm_key, min(doc_id) AS rep FROM mem GROUP BY norm_key), " +
           "rb AS (SELECT b.doc_id, b.band, b.band_key FROM bands b " +
           "JOIN grp g ON g.rep = b.doc_id), " +
-          "ok AS (SELECT band, band_key FROM rb GROUP BY band, band_key " +
-          s"HAVING count(*) <= ${LlmPipeline.HotBucketCap}), " +
-          "pr AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b " +
-          "FROM rb a JOIN ok ON ok.band = a.band AND ok.band_key = a.band_key " +
-          "JOIN rb b ON a.band = b.band AND a.band_key = b.band_key " +
-          "AND a.doc_id < b.doc_id), " +
-          "din AS (SELECT doc_a AS doc_id FROM pr UNION SELECT doc_b FROM pr), " +
-          s"shv AS (SELECT doc_id, unnest(list_distinct($shinglesDuck)) AS s " +
-          "FROM documents WHERE doc_id IN (SELECT doc_id FROM din)), " +
-          "hv AS (SELECT doc_id, " +
-          "CAST(concat('0x', substring(md5(s), 1, 15)) AS BIGINT) AS h FROM shv), " +
-          "sz AS (SELECT doc_id, count(*) AS n FROM hv GROUP BY doc_id), " +
-          "iv AS (SELECT p.doc_a, p.doc_b, count(*) AS n_inter FROM pr p " +
-          "JOIN hv a ON a.doc_id = p.doc_a " +
-          "JOIN hv b ON b.doc_id = p.doc_b AND b.h = a.h " +
-          "GROUP BY p.doc_a, p.doc_b) " +
-          "SELECT iv.doc_a, iv.doc_b, " +
-          "1.0 - CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter) AS jaccard_dist " +
-          "FROM iv JOIN sz sa ON sa.doc_id = iv.doc_a JOIN sz sb ON sb.doc_id = iv.doc_b " +
-          "WHERE 2 * n_inter > sa.n + sb.n - n_inter " +
-          "ORDER BY doc_a, doc_b"),
+          s"${bandPairs("rb", "pr")}, $verifyDuck ${verifiedPairs("1.0")} ORDER BY doc_a, doc_b"),
       "q_split_assign" ->
         ("WITH d0 AS (SELECT source, coalesce(text, '') AS text, " +
           "CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 AS b " +
@@ -5561,9 +5618,7 @@ object LlmPipeline {
           "vocab_tokens * 1000000 // total_tokens AS coverage_ppm " +
           "FROM cv ORDER BY source"),
       "q_contamination_frac" ->
-        (s"WITH ds AS (SELECT doc_id, " +
-          s"CAST(concat('0x', substring(md5(unnest(list_distinct($shinglesDuck))), 1, 15)) AS BIGINT) AS sh " +
-          "FROM documents), " +
+        (s"$dsDuck, " +
           "bench AS (SELECT DISTINCT sh FROM ds WHERE doc_id % 20 = 0), " +
           "sz AS (SELECT doc_id, count(*) AS n_sh FROM ds WHERE doc_id % 20 <> 0 GROUP BY doc_id), " +
           "hits AS (SELECT doc_id, count(*) AS n_hits FROM ds " +
@@ -5593,45 +5648,13 @@ object LlmPipeline {
           "THEN 0 ELSE c.cnt END) AS BIGINT) AS n_dropped " +
           "FROM c JOIN cuts ON cuts.source = c.source " +
           "GROUP BY c.source ORDER BY c.source"),
-      "q_decontaminate" ->
-        (s"WITH ds AS (SELECT doc_id, " +
-          s"CAST(concat('0x', substring(md5(unnest(list_distinct($shinglesDuck))), 1, 15)) AS BIGINT) AS sh " +
-          "FROM documents), " +
-          "bench AS (SELECT DISTINCT sh FROM ds WHERE doc_id % 20 = 0), " +
-          "hits AS (SELECT doc_id, count(*) AS n_hits FROM ds " +
-          "JOIN bench USING (sh) WHERE doc_id % 20 <> 0 GROUP BY doc_id) " +
-          "SELECT d.doc_id, COALESCE(hits.n_hits, 0) AS n_hits " +
-          "FROM documents d LEFT JOIN hits ON hits.doc_id = d.doc_id " +
-          "WHERE d.doc_id % 20 <> 0 ORDER BY d.doc_id"),
+      "q_decontaminate" -> decontamSql(dsDuck, "0"),
       // identical-by-construction to q_decontaminate: the bloom stages
       // only PREFILTER (no false negatives) and the confirm join removes
       // false positives, so the exact SQL is the oracle
-      "q_decontaminate_bloom" ->
-        (s"WITH ds AS (SELECT doc_id, " +
-          s"CAST(concat('0x', substring(md5(unnest(list_distinct($shinglesDuck))), 1, 15)) AS BIGINT) AS sh " +
-          "FROM documents), " +
-          "bench AS (SELECT DISTINCT sh FROM ds WHERE doc_id % 20 = 0), " +
-          "hits AS (SELECT doc_id, count(*) AS n_hits FROM ds " +
-          "JOIN bench USING (sh) WHERE doc_id % 20 <> 0 GROUP BY doc_id) " +
-          "SELECT d.doc_id, COALESCE(hits.n_hits, 0) AS n_hits " +
-          "FROM documents d LEFT JOIN hits ON hits.doc_id = d.doc_id " +
-          "WHERE d.doc_id % 20 <> 0 ORDER BY d.doc_id"),
+      "q_decontaminate_bloom" -> decontamSql(dsDuck, "0"),
       "q_source_overlap" ->
-        (s"WITH ds AS (SELECT doc_id, " +
-          s"CAST(concat('0x', substring(md5(unnest(list_distinct($shinglesDuck))), 1, 15)) AS BIGINT) AS sh " +
-          "FROM documents), " +
-          "ss AS (SELECT DISTINCT d.source, ds.sh FROM ds " +
-          "JOIN documents d ON d.doc_id = ds.doc_id), " +
-          "sizes AS (SELECT source, count(*) AS n_sh FROM ss GROUP BY source), " +
-          "ok AS (SELECT sh FROM ss GROUP BY sh " +
-          s"HAVING count(*) >= 2 AND count(*) <= ${LlmPipeline.SourceDfCap}), " +
-          "p AS (SELECT a.source AS src_a, b.source AS src_b, count(*) AS n_shared " +
-          "FROM ss a JOIN ok ON ok.sh = a.sh JOIN ss b ON a.sh = b.sh " +
-          "AND a.source < b.source GROUP BY 1, 2) " +
-          "SELECT src_a, src_b, n_shared, " +
-          "CAST(n_shared * 1000000 // least(sa.n_sh, sb.n_sh) AS BIGINT) AS overlap_ppm " +
-          "FROM p JOIN sizes sa ON sa.source = src_a " +
-          "JOIN sizes sb ON sb.source = src_b ORDER BY src_a, src_b"),
+        sourceOverlapSql(dsDuck, "CAST(n_shared * 1000000 // least(sa.n_sh, sb.n_sh) AS BIGINT)"),
       "q_text_tfidf" ->
         ("WITH tf0 AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents), " +
           "tfc AS (SELECT doc_id, term, count(*) AS tf FROM tf0 GROUP BY doc_id, term), " +
@@ -5644,9 +5667,8 @@ object LlmPipeline {
           "ORDER BY score_micros DESC, term ASC) AS rn FROM sc) " +
           "SELECT doc_id, rn, term, tf, df, score_micros FROM r WHERE rn <= 3 " +
           "ORDER BY doc_id, rn"),
-      "q_quality_filter" -> {
-        val stop = profiles.flatMap(_._2).distinct.map(w => s"'$w'").mkString(", ")
-        "WITH d0 AS (SELECT doc_id, n_chars, coalesce(text, '') AS text FROM documents), " +
+      "q_quality_filter" ->
+        ("WITH d0 AS (SELECT doc_id, n_chars, coalesce(text, '') AS text FROM documents), " +
           "t AS (SELECT doc_id, n_chars, " +
           "CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens, " +
           s"CAST(len(list_filter(string_split(text, ' '), t -> list_contains([$stop], t))) AS BIGINT) AS n_stop, " +
@@ -5654,14 +5676,8 @@ object LlmPipeline {
           "m AS (SELECT doc_id, n_chars, n_tokens, n_stop, " +
           "CAST(len(sh) AS BIGINT) AS n_sh, " +
           "CAST(len(sh) - len(list_distinct(sh)) AS BIGINT) AS n_dup FROM t), " +
-          "v AS (SELECT doc_id, CASE " +
-          s"WHEN n_tokens < ${LlmPipeline.QfMinTokens} THEN 'too_short' " +
-          s"WHEN n_stop * ${LlmPipeline.QfStopDivisor} < n_tokens THEN 'low_stopword' " +
-          s"WHEN (n_chars - (n_tokens - 1)) * 10 > ${LlmPipeline.QfLongTokTenths} * n_tokens THEN 'long_tokens' " +
-          s"WHEN n_dup * ${LlmPipeline.QfRepDivisor} > n_sh THEN 'repetitive' " +
-          "ELSE 'ok' END AS reason FROM m) " +
-          "SELECT doc_id, reason = 'ok' AS keep, reason FROM v ORDER BY doc_id"
-      },
+          s"v AS (SELECT doc_id, $qfReason FROM m) " +
+          "SELECT doc_id, reason = 'ok' AS keep, reason FROM v ORDER BY doc_id"),
       "q_dedup_keep_best" ->
         ("WITH g AS (SELECT md5(lower(trim(text))) AS norm_md5, doc_id, n_chars FROM documents), " +
           "r AS (SELECT norm_md5, doc_id AS keep_id, n_chars AS best_chars, " +
@@ -5669,9 +5685,8 @@ object LlmPipeline {
           "count(*) OVER (PARTITION BY norm_md5) AS n_copies FROM g) " +
           "SELECT keep_id, best_chars, n_copies, norm_md5 FROM r WHERE rn = 1 " +
           "ORDER BY keep_id"),
-      "q_pipeline_curate" -> {
-        val stop = profiles.flatMap(_._2).distinct.map(w => s"'$w'").mkString(", ")
-        "WITH d0 AS (SELECT doc_id, n_chars, source, coalesce(text, '') AS text FROM documents), " +
+      "q_pipeline_curate" ->
+        ("WITH d0 AS (SELECT doc_id, n_chars, source, coalesce(text, '') AS text FROM documents), " +
           "t AS (SELECT doc_id, n_chars, source, text, " +
           "CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens, " +
           s"CAST(len(list_filter(string_split(text, ' '), t -> list_contains([$stop], t))) AS BIGINT) AS n_stop, " +
@@ -5679,46 +5694,29 @@ object LlmPipeline {
           "m AS (SELECT *, CAST(len(sh) AS BIGINT) AS n_sh, " +
           "CAST(len(sh) - len(list_distinct(sh)) AS BIGINT) AS n_dup FROM t), " +
           s"ok AS (SELECT doc_id, source, n_tokens, n_chars, md5(lower(trim(text))) AS nm FROM m " +
-          s"WHERE NOT (n_tokens < ${LlmPipeline.QfMinTokens}) " +
-          s"AND NOT (n_stop * ${LlmPipeline.QfStopDivisor} < n_tokens) " +
-          s"AND NOT ((n_chars - (n_tokens - 1)) * 10 > ${LlmPipeline.QfLongTokTenths} * n_tokens) " +
-          s"AND NOT (n_dup * ${LlmPipeline.QfRepDivisor} > n_sh)), " +
+          s"WHERE $qfKeep), " +
           "keep AS (SELECT doc_id FROM (SELECT doc_id, row_number() OVER " +
           "(PARTITION BY nm ORDER BY n_chars DESC, doc_id ASC) AS rn FROM ok) WHERE rn = 1), " +
           "dd AS (SELECT o.doc_id, o.source, o.n_tokens FROM ok o JOIN keep k ON k.doc_id = o.doc_id), " +
-          "c AS (SELECT doc_id, source, n_tokens, " +
-          "sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id) - n_tokens AS cum_excl FROM dd) " +
-          s"SELECT doc_id, source, n_tokens, CAST(cum_excl // ${LlmPipeline.PackBudget} AS BIGINT) AS bin " +
-          "FROM c ORDER BY source, doc_id"
-      },
+          packBinsSql("dd", s"CAST(cum_excl // $PackBudget AS BIGINT)")),
       "q_corpus_shuffle" ->
         ("SELECT doc_id, md5(concat('shuf|42|', CAST(doc_id AS VARCHAR))) AS shuffle_key " +
           "FROM documents ORDER BY shuffle_key, doc_id"),
       "q_pack_sequences" ->
         ("WITH t AS (SELECT doc_id, source, " +
           "CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens FROM documents), " +
-          "c AS (SELECT doc_id, source, n_tokens, " +
-          "sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id) - n_tokens AS cum_excl " +
-          "FROM t) " +
           // DuckDB widens window sum(BIGINT) to HUGEINT and `//` preserves it;
           // Spark emits int64 — pin the oracle type or the value-hash gate fails.
-          s"SELECT doc_id, source, n_tokens, CAST(cum_excl // ${LlmPipeline.PackBudget} AS BIGINT) AS bin " +
-          "FROM c ORDER BY source, doc_id"),
+          packBinsSql("t", s"CAST(cum_excl // $PackBudget AS BIGINT)")),
       "q_mix_weights" ->
-        ("WITH t AS (SELECT source, " +
-          "CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens FROM documents), " +
-          "ps AS (SELECT source, CAST(sum(n_tokens) AS BIGINT) AS source_tokens " +
-          "FROM t GROUP BY source), " +
+        (mixTokensDuck +
           "g AS (SELECT CAST(sum(source_tokens) AS BIGINT) AS total_tokens, " +
           "count(*) AS n_sources FROM ps) " +
           "SELECT source, source_tokens, " +
           "CAST(total_tokens * 1000000 // (n_sources * source_tokens) AS BIGINT) AS weight_micros " +
           "FROM ps, g ORDER BY source"),
       "q_mix_temperature" ->
-        ("WITH t AS (SELECT source, " +
-          "CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens FROM documents), " +
-          "ps AS (SELECT source, CAST(sum(n_tokens) AS BIGINT) AS source_tokens " +
-          "FROM t GROUP BY source), " +
+        (mixTokensDuck +
           // sqrt is IEEE-exact on both engines; pin to integer micros
           // with round() BEFORE the ratio so no IEEE division reaches
           // the hashed output
@@ -5732,9 +5730,7 @@ object LlmPipeline {
           "CAST(s_scaled * 1000000 // z AS BIGINT) AS share_ppm " +
           "FROM sc, g ORDER BY source"),
       "q_boilerplate_score" ->
-        (s"WITH ds AS (SELECT doc_id, " +
-          s"CAST(concat('0x', substring(md5(unnest(list_distinct($shinglesDuck))), 1, 15)) AS BIGINT) AS sh " +
-          "FROM documents), " +
+        (s"$dsDuck, " +
           "dfs AS (SELECT sh, count(DISTINCT doc_id) AS df FROM ds GROUP BY sh) " +
           "SELECT d.doc_id, count(*) AS n_sh, " +
           s"CAST(sum(CASE WHEN dfs.df > $BoilerplateDfCap THEN 1 ELSE 0 END) AS BIGINT) AS n_common, " +
@@ -5796,86 +5792,20 @@ object LlmPipeline {
           "CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) " +
           s"% $WSampleUBits) + 1) AS priority " +
           s"FROM documents ORDER BY priority DESC, doc_id LIMIT $WSampleK"),
-      "q_dedup_substring_winnow" ->
-        (s"WITH w AS (SELECT doc_id, CAST(u AS BIGINT) AS pos, " +
-          "CAST(concat('0x', substring(md5(substring(text, CAST(u AS INT), " +
-          s"$SubWinW)), 1, 15)) AS BIGINT) AS h " +
-          s"FROM documents, unnest(generate_series(1, n_chars - ${SubWinW - 1})) AS t(u) " +
-          s"WHERE n_chars >= $SubWinW), " +
-          "fp AS (SELECT DISTINCT doc_id, h FROM (SELECT doc_id, " +
-          "min(h) OVER (PARTITION BY doc_id ORDER BY pos " +
-          s"ROWS BETWEEN CURRENT ROW AND ${WinnowK - 1} FOLLOWING) AS h FROM w)), " +
-          s"g AS (SELECT h FROM fp GROUP BY h HAVING count(*) BETWEEN 2 AND $SubDfCap) " +
-          "SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, " +
-          "CAST(count(*) AS BIGINT) AS n_shared_fps " +
-          "FROM fp a JOIN g USING (h) JOIN fp b USING (h) WHERE a.doc_id < b.doc_id " +
-          "GROUP BY 1, 2 ORDER BY doc_a, doc_b"),
-      "q_dedup_substring" ->
-        (s"WITH w AS (SELECT doc_id, CAST(u AS BIGINT) AS pos, " +
-          "CAST(concat('0x', substring(md5(substring(text, CAST(u AS INT), " +
-          s"$SubWinW)), 1, 15)) AS BIGINT) AS h " +
-          s"FROM documents, unnest(generate_series(1, n_chars - ${SubWinW - 1})) AS t(u) " +
-          s"WHERE n_chars >= $SubWinW), " +
-          "ds AS (SELECT DISTINCT doc_id, h FROM w), " +
-          s"g AS (SELECT h FROM ds GROUP BY h HAVING count(*) BETWEEN 2 AND $SubDfCap), " +
-          "cov AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.pos " +
-          "FROM w a JOIN g USING (h) JOIN ds b USING (h) WHERE a.doc_id < b.doc_id), " +
-          "r AS (SELECT doc_a, doc_b, pos, pos - row_number() " +
-          "OVER (PARTITION BY doc_a, doc_b ORDER BY pos) AS grp FROM cov), " +
-          "runs AS (SELECT doc_a, doc_b, grp, count(*) AS run_len FROM r GROUP BY 1, 2, 3) " +
-          "SELECT doc_a, doc_b, CAST(sum(run_len) AS BIGINT) AS n_cov_pos, " +
-          s"CAST(max(run_len) + ${SubWinW - 1} AS BIGINT) AS longest_span " +
-          s"FROM runs GROUP BY 1, 2 HAVING max(run_len) + ${SubWinW - 1} >= $SubMinSpan " +
-          "ORDER BY doc_a, doc_b"),
+      "q_dedup_substring_winnow" -> s"WITH $subWinDuck, $substringWinnowTail",
+      "q_dedup_substring" -> s"WITH $subWinDuck, $substringSpanTail",
       // mirrors dedupSubstringAuto's volume branch IN SQL (scalar
       // subquery gates on sum(n_chars)), so the auto form stays
       // hash-checked on whichever side the corpus lands
       "q_dedup_substring_auto" ->
         ("WITH vol AS (SELECT coalesce(sum(n_chars), 0) AS v FROM documents), " +
-          "w AS (SELECT doc_id, CAST(u AS BIGINT) AS pos, " +
-          "CAST(concat('0x', substring(md5(substring(text, CAST(u AS INT), " +
-          s"$SubWinW)), 1, 15)) AS BIGINT) AS h " +
-          s"FROM documents, unnest(generate_series(1, n_chars - ${SubWinW - 1})) AS t(u) " +
-          s"WHERE n_chars >= $SubWinW), " +
-          "ds AS (SELECT DISTINCT doc_id, h FROM w), " +
-          s"g1 AS (SELECT h FROM ds GROUP BY h HAVING count(*) BETWEEN 2 AND $SubDfCap), " +
-          "cov AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.pos " +
-          "FROM w a JOIN g1 USING (h) JOIN ds b USING (h) WHERE a.doc_id < b.doc_id), " +
-          "r AS (SELECT doc_a, doc_b, pos, pos - row_number() " +
-          "OVER (PARTITION BY doc_a, doc_b ORDER BY pos) AS grp FROM cov), " +
-          "runs AS (SELECT doc_a, doc_b, grp, count(*) AS run_len FROM r GROUP BY 1, 2, 3), " +
-          "s1 AS (SELECT doc_a, doc_b, CAST(sum(run_len) AS BIGINT) AS n_matches, " +
-          "'stride1' AS mode FROM runs GROUP BY 1, 2 " +
-          s"HAVING max(run_len) + ${SubWinW - 1} >= $SubMinSpan), " +
-          "fp AS (SELECT DISTINCT doc_id, h FROM (SELECT doc_id, " +
-          "min(h) OVER (PARTITION BY doc_id ORDER BY pos " +
-          s"ROWS BETWEEN CURRENT ROW AND ${WinnowK - 1} FOLLOWING) AS h FROM w)), " +
-          s"g2 AS (SELECT h FROM fp GROUP BY h HAVING count(*) BETWEEN 2 AND $SubDfCap), " +
-          "wn AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, " +
-          "CAST(count(*) AS BIGINT) AS n_matches, 'winnow' AS mode " +
-          "FROM fp a JOIN g2 USING (h) JOIN fp b USING (h) WHERE a.doc_id < b.doc_id " +
-          "GROUP BY 1, 2) " +
-          s"SELECT * FROM s1 WHERE (SELECT v FROM vol) <= $SubAutoVolCap " +
-          s"UNION ALL SELECT * FROM wn WHERE (SELECT v FROM vol) > $SubAutoVolCap " +
-          "ORDER BY doc_a, doc_b"),
+          s"$subWinDuck, $substringAutoTail"),
       // collapse-stage hash anchor: exact-collapse to min-id reps, then
       // the q_dedup_ngram exact-Jaccard core restricted to reps
       "q_dedup_collapsed_jaccard" ->
         ("WITH reps AS (SELECT min(doc_id) AS doc_id FROM documents " +
           "GROUP BY md5(coalesce(text, ''))), " +
-          "ds AS (SELECT doc_id, " +
-          s"CAST(concat('0x', substring(md5(unnest(list_distinct($shinglesDuck))), 1, 15)) AS BIGINT) AS sh " +
-          "FROM documents JOIN reps USING (doc_id)), " +
-          "sizes AS (SELECT doc_id, count(*) AS n_sh FROM ds GROUP BY doc_id), " +
-          "ok AS (SELECT sh FROM ds GROUP BY sh " +
-          s"HAVING count(DISTINCT doc_id) > 1 AND count(DISTINCT doc_id) <= ${LlmPipeline.NgramDfCap}), " +
-          "inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(DISTINCT a.sh) AS n_inter " +
-          "FROM ds a JOIN ok ON ok.sh = a.sh " +
-          "JOIN ds b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2) " +
-          "SELECT doc_a, doc_b, " +
-          "CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) AS jaccard " +
-          "FROM inter JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b " +
-          "ORDER BY jaccard DESC, doc_a, doc_b LIMIT 100"),
+          s"ds AS (SELECT doc_id, $dsShDuck FROM documents JOIN reps USING (doc_id)), $ngramJaccardTail"),
       "q_lm_fluency" ->
         ("WITH tk AS (SELECT doc_id, string_split(coalesce(text, ''), ' ') AS t FROM documents), " +
           "bg AS (SELECT doc_id, t[CAST(u AS INT)] AS w1, " +
@@ -5887,13 +5817,7 @@ object LlmPipeline {
           "CAST(sum((nb * 1000000) // nu) // count(*) AS BIGINT) AS fluency_ppm " +
           "FROM bg JOIN cb USING (bigram) JOIN cu USING (w1) " +
           "GROUP BY doc_id ORDER BY doc_id"),
-      "q_text_diversity" ->
-        ("WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents), " +
-          "c AS (SELECT doc_id, w, count(*) AS c FROM t GROUP BY doc_id, w) " +
-          "SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens, " +
-          "CAST(count(*) AS BIGINT) AS n_distinct, " +
-          "CAST(sum(c * c) AS BIGINT) AS simpson_num " +
-          "FROM c GROUP BY doc_id ORDER BY doc_id"),
+      "q_text_diversity" -> textDiversitySql("unnest(string_split(text, ' '))"),
       // dialect-neutral text (plain BIGINT % arithmetic): runs verbatim
       // in DuckDB (oracle) and Spark (SQL front door)
       "q_shard_manifest" ->
@@ -5958,37 +5882,55 @@ object LlmPipeline {
       s"(CASE WHEN v$b > 0 THEN CAST(pow(2, ${32 - b}) AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
     }.mkString(" + ")
     def plane(p: Int) = s"array(${LshPlanes(p).map(w => s"${w}L").mkString(", ")})"
-    // Unrolled min-label propagation for the cc-family text surface
-    // (CcSqlRounds rounds — see that constant's scaladoc for why not
-    // WITH RECURSIVE). Self-loops fold each node's own label into the
-    // neighbor min, so every round is ONE equi join + ONE combining min
-    // aggregate — label tables stay |nodes|-sized (no recursive path
-    // explosion). Shared by q_dedup_cc and q_dedup_cluster_stats.
-    val ccUnrolled = {
-      val ccPairs = s"$minhashCtes, ok AS (SELECT band, band_key FROM bands " +
-        s"GROUP BY band, band_key HAVING count(*) <= $HotBucketCap), " +
-        "pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b FROM bands a " +
-        "JOIN ok ON ok.band = a.band AND ok.band_key = a.band_key " +
-        "JOIN bands b ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id), " +
-        "edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs " +
-        "UNION ALL SELECT doc_b, doc_a FROM pairs " +
-        "UNION ALL SELECT doc_a, doc_a FROM pairs " +
-        "UNION ALL SELECT doc_b, doc_b FROM pairs), " +
-        "l0 AS (SELECT v AS doc_id, min(u) AS rep_id FROM edges GROUP BY v)"
+    def planeDot(p: Int) = dot("q", plane(p))
+    val bucket = lshBucketExpr(planeDot)
+    def cos(qa: String, n2a: String, v: String) = probeCos(dot, qa, n2a, v)
+    // same exact-integer squared-L2, via the codegen'd native dot
+    def d2(a: String, b: String) = s"(${dot(a, a)} - 2 * ${dot(a, b)} + ${dot(b, b)})"
+    // Unrolled min-label propagation over the undirected `pairs` (a, b),
+    // named `id` (CcSqlRounds rounds — see that constant's scaladoc for
+    // why not WITH RECURSIVE). Self-loops fold each node's own label into
+    // the neighbor min, so every round is ONE equi join + ONE combining
+    // min aggregate — label tables stay |nodes|-sized (no recursive path
+    // explosion). Convergence guard: a component whose propagation radius
+    // exceeds CcSqlRounds would silently return non-converged rep_ids;
+    // instead `chk` asserts the last round was a fixpoint (l_N ≡ l_{N-1}
+    // — EXCEPT over two |nodes|-sized label tables, cheap) and fails
+    // loudly (`failWhat` names the query) if not. Ends in `lconv`.
+    def labelProp(a: String, b: String, id: String, failWhat: String) = {
       val rounds = (1 to CcSqlRounds).map { k =>
-        s"l$k AS (SELECT e.v AS doc_id, min(l.rep_id) AS rep_id " +
-          s"FROM edges e JOIN l${k - 1} l ON l.doc_id = e.u GROUP BY e.v)"
+        s"l$k AS (SELECT e.v AS $id, min(l.rep_id) AS rep_id " +
+          s"FROM edges e JOIN l${k - 1} l ON l.$id = e.u GROUP BY e.v)"
       }.mkString(", ")
-      // Convergence guard: a component whose propagation radius exceeds
-      // CcSqlRounds would silently return non-converged rep_ids; instead
-      // assert the last round was a fixpoint (l_N ≡ l_{N-1} — EXCEPT over
-      // two |nodes|-sized label tables, cheap) and fail loudly if not.
-      val chk = s"chk AS (SELECT assert_true((SELECT count(*) FROM " +
+      s"edges AS (SELECT $a AS u, $b AS v FROM pairs UNION ALL SELECT $b, $a FROM pairs " +
+        s"UNION ALL SELECT $a, $a FROM pairs UNION ALL SELECT $b, $b FROM pairs), " +
+        s"l0 AS (SELECT v AS $id, min(u) AS rep_id FROM edges GROUP BY v), $rounds, " +
+        s"chk AS (SELECT assert_true((SELECT count(*) FROM " +
         s"(SELECT * FROM l$CcSqlRounds EXCEPT SELECT * FROM l${CcSqlRounds - 1})) = 0, " +
-        s"'q_dedup_cc SQL surface: min-label propagation not converged after $CcSqlRounds rounds') AS ok)"
-      s"$ccPairs, $rounds, $chk, " +
-        s"lconv AS (SELECT l.doc_id, l.rep_id FROM l$CcSqlRounds l CROSS JOIN chk)"
+        s"'$failWhat not converged after $CcSqlRounds rounds') AS ok), " +
+        s"lconv AS (SELECT l.$id, l.rep_id FROM l$CcSqlRounds l CROSS JOIN chk)"
     }
+    // the cc family (q_dedup_cc / _cluster_stats / _cross_source)
+    val ccUnrolled = s"$minhashCtes, ${bandPairs("bands", "pairs")}, " +
+      labelProp("doc_a", "doc_b", "doc_id", "q_dedup_cc SQL surface: min-label propagation")
+    val ccLab = s"$ccUnrolled, lab AS (SELECT doc_id, rep_id FROM lconv) "
+    // the banded chain's verify stage (see the oracle's verifyDuck)
+    val verifyS =
+      "din AS (SELECT doc_a AS doc_id FROM pr UNION SELECT doc_b AS doc_id FROM pr), " +
+        s"shv AS (SELECT doc_id, explode(array_distinct($shS)) AS s FROM dtk " +
+        "WHERE doc_id IN (SELECT doc_id FROM din)), " +
+        s"hv AS (SELECT doc_id, ${hash("s")} AS h FROM shv), $pairInterCtes"
+    val subWinS =
+      "w AS (SELECT doc_id, pos, " +
+        "CAST(conv(substring(md5(substring(text, CAST(pos AS INT), " +
+        s"$SubWinW)), 1, 15), 16, 10) AS BIGINT) AS h " +
+        "FROM (SELECT doc_id, text, " +
+        s"explode(sequence(CAST(1 AS BIGINT), n_chars - ${SubWinW - 1})) AS pos " +
+        s"FROM documents WHERE n_chars >= $SubWinW))"
+    val mixTokensS =
+      "WITH t AS (SELECT source, CAST(size(split(text, ' ')) AS BIGINT) AS n_tokens " +
+        "FROM documents), " +
+        "ps AS (SELECT source, sum(n_tokens) AS source_tokens FROM t GROUP BY source), "
     val ivfSql = (nprobe: Int) =>
       s"WITH q AS (SELECT vec_id, $quantS AS q FROM embeddings), " +
         "cents AS (SELECT vec_id AS cent_id, q AS qc FROM q WHERE vec_id < 8), " +
@@ -5998,8 +5940,7 @@ object LlmPipeline {
         "assigned AS (SELECT vec_id, q, cent_id FROM dists WHERE rn = 1), " +
         s"pn AS (SELECT q AS qa, cent_id AS probe_cent, ${dot("q", "q")} AS n2a " +
         s"FROM dists WHERE vec_id = 0 AND rn <= $nprobe) " +
-        s"SELECT b.vec_id, b.cent_id, CAST(${dot("pn.qa", "b.q")} AS DOUBLE) / " +
-        s"sqrt(CAST(pn.n2a AS DOUBLE) * CAST(${dot("b.q", "b.q")} AS DOUBLE)) AS cos " +
+        s"SELECT b.vec_id, b.cent_id, ${cos("pn.qa", "pn.n2a", "b.q")} " +
         "FROM assigned b JOIN pn ON b.cent_id = pn.probe_cent WHERE b.vec_id <> 0 " +
         "ORDER BY cos DESC, vec_id LIMIT 5"
     Map(
@@ -6008,24 +5949,16 @@ object LlmPipeline {
           "FROM documents ORDER BY shuffle_key, doc_id"),
       "q_pack_sequences" ->
         ("WITH t AS (SELECT doc_id, source, CAST(size(split(text, ' ')) AS BIGINT) AS n_tokens " +
-          "FROM documents), " +
-          "c AS (SELECT doc_id, source, n_tokens, " +
-          "sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id) - n_tokens AS cum_excl FROM t) " +
-          s"SELECT doc_id, source, n_tokens, cum_excl DIV $PackBudget AS bin " +
-          "FROM c ORDER BY source, doc_id"),
+          s"FROM documents), ${packBinsSql("t", s"cum_excl DIV $PackBudget")}"),
       "q_mix_weights" ->
-        ("WITH t AS (SELECT source, CAST(size(split(text, ' ')) AS BIGINT) AS n_tokens " +
-          "FROM documents), " +
-          "ps AS (SELECT source, sum(n_tokens) AS source_tokens FROM t GROUP BY source), " +
+        (mixTokensS +
           "g AS (SELECT sum(source_tokens) AS total_tokens, count(*) AS n_sources FROM ps) " +
           "SELECT source, source_tokens, " +
           "CAST(CAST(total_tokens AS DECIMAL(38,0)) * 1000000 DIV " +
           "(CAST(n_sources AS DECIMAL(38,0)) * source_tokens) AS BIGINT) AS weight_micros " +
           "FROM ps CROSS JOIN g ORDER BY source"),
       "q_mix_temperature" ->
-        ("WITH t AS (SELECT source, CAST(size(split(text, ' ')) AS BIGINT) AS n_tokens " +
-          "FROM documents), " +
-          "ps AS (SELECT source, sum(n_tokens) AS source_tokens FROM t GROUP BY source), " +
+        (mixTokensS +
           "sc AS (SELECT source, source_tokens, " +
           "CAST(round(sqrt(CAST(source_tokens AS DOUBLE)) * 1000000) AS BIGINT) " +
           "AS s_scaled FROM ps), " +
@@ -6041,11 +5974,7 @@ object LlmPipeline {
         ("SELECT doc_id, CAST(size(split(text, ' ')) AS BIGINT) AS ws_tokens, " +
           "CAST(regexp_count(text, '[a-z]{1,4}') AS BIGINT) AS bpe_ish_tokens, n_chars " +
           "FROM documents ORDER BY doc_id"),
-      "q_text_tokens" ->
-        ("SELECT lang, rn, tok, n FROM (SELECT lang, tok, count(*) AS n, " +
-          "row_number() OVER (PARTITION BY lang ORDER BY count(*) DESC, tok ASC) AS rn " +
-          "FROM (SELECT lang, explode(split(text, ' ')) AS tok FROM documents) " +
-          "GROUP BY lang, tok) WHERE rn <= 5 ORDER BY lang, rn"),
+      "q_text_tokens" -> textTokensSql("explode(split(text, ' '))"),
       "q_text_langid" -> {
         val hits = profiles.map { case (lang, ws) =>
           val lst = ws.map(w => s"'$w'").mkString(", ")
@@ -6059,13 +5988,7 @@ object LlmPipeline {
       "q_text_quality" ->
         (s"WITH t AS (SELECT doc_id, n_chars, CAST(size(split(text, ' ')) AS BIGINT) AS n_tokens, " +
           s"CAST(size(filter(split(text, ' '), t -> array_contains(array($stop), t))) AS BIGINT) AS n_stop " +
-          "FROM documents) " +
-          "SELECT doc_id, n_tokens, n_stop, CAST(n_stop AS DOUBLE) / n_tokens AS stop_ratio, " +
-          "CAST(n_chars - (n_tokens - 1) AS DOUBLE) / n_tokens AS avg_tok_len, " +
-          "least(CAST(n_tokens AS DOUBLE) / 100, CAST(1 AS DOUBLE)) * 0.4 + " +
-          "(CAST(n_stop AS DOUBLE) / n_tokens) * 0.3 + " +
-          "least((CAST(n_chars - (n_tokens - 1) AS DOUBLE) / n_tokens) / 8, CAST(1 AS DOUBLE)) * 0.3 AS quality " +
-          "FROM t ORDER BY doc_id"),
+          s"FROM documents) $textQualitySelect"),
       "q_text_clean" ->
         (s"WITH $dtk, " +
           s"k AS (SELECT doc_id, tk, filter(tk, t -> NOT array_contains(array($stop), t)) AS kept FROM dtk) " +
@@ -6083,39 +6006,12 @@ object LlmPipeline {
           "CAST(size(array_distinct(sh)) AS BIGINT) AS n_distinct, " +
           "CAST(size(sh) - size(array_distinct(sh)) AS DOUBLE) / size(sh) AS dup_ratio " +
           "FROM t ORDER BY doc_id"),
-      "q_decontaminate" ->
-        (s"$dsCte, " +
-          "bench AS (SELECT DISTINCT sh FROM ds WHERE doc_id % 20 = 0), " +
-          "hits AS (SELECT doc_id, count(*) AS n_hits FROM ds JOIN bench USING (sh) " +
-          "WHERE doc_id % 20 <> 0 GROUP BY doc_id) " +
-          "SELECT d.doc_id, COALESCE(hits.n_hits, CAST(0 AS BIGINT)) AS n_hits " +
-          "FROM documents d LEFT JOIN hits ON hits.doc_id = d.doc_id " +
-          "WHERE d.doc_id % 20 <> 0 ORDER BY d.doc_id"),
+      "q_decontaminate" -> decontamSql(dsCte, "CAST(0 AS BIGINT)"),
       // the bloom stages are result-neutral, so the SQL text surface is
       // the exact decontaminate query (the DataFrame form is the
       // physical-plan optimization)
-      "q_decontaminate_bloom" ->
-        (s"$dsCte, " +
-          "bench AS (SELECT DISTINCT sh FROM ds WHERE doc_id % 20 = 0), " +
-          "hits AS (SELECT doc_id, count(*) AS n_hits FROM ds JOIN bench USING (sh) " +
-          "WHERE doc_id % 20 <> 0 GROUP BY doc_id) " +
-          "SELECT d.doc_id, COALESCE(hits.n_hits, CAST(0 AS BIGINT)) AS n_hits " +
-          "FROM documents d LEFT JOIN hits ON hits.doc_id = d.doc_id " +
-          "WHERE d.doc_id % 20 <> 0 ORDER BY d.doc_id"),
-      "q_source_overlap" ->
-        (s"$dsCte, " +
-          "ss AS (SELECT DISTINCT d.source, ds.sh FROM ds " +
-          "JOIN documents d ON d.doc_id = ds.doc_id), " +
-          "sizes AS (SELECT source, count(*) AS n_sh FROM ss GROUP BY source), " +
-          "ok AS (SELECT sh FROM ss GROUP BY sh " +
-          s"HAVING count(*) >= 2 AND count(*) <= $SourceDfCap), " +
-          "p AS (SELECT a.source AS src_a, b.source AS src_b, count(*) AS n_shared " +
-          "FROM ss a JOIN ok ON ok.sh = a.sh JOIN ss b ON a.sh = b.sh " +
-          "AND a.source < b.source GROUP BY 1, 2) " +
-          "SELECT src_a, src_b, n_shared, " +
-          "n_shared * 1000000 DIV least(sa.n_sh, sb.n_sh) AS overlap_ppm " +
-          "FROM p JOIN sizes sa ON sa.source = src_a " +
-          "JOIN sizes sb ON sb.source = src_b ORDER BY src_a, src_b"),
+      "q_decontaminate_bloom" -> decontamSql(dsCte, "CAST(0 AS BIGINT)"),
+      "q_source_overlap" -> sourceOverlapSql(dsCte, "n_shared * 1000000 DIV least(sa.n_sh, sb.n_sh)"),
       "q_text_tfidf" ->
         ("WITH tf0 AS (SELECT doc_id, explode(split(text, ' ')) AS term FROM documents), " +
           "tfc AS (SELECT doc_id, term, count(*) AS tf FROM tf0 GROUP BY doc_id, term), " +
@@ -6137,12 +6033,7 @@ object LlmPipeline {
           "m AS (SELECT doc_id, n_chars, n_tokens, n_stop, " +
           "CAST(size(sh) AS BIGINT) AS n_sh, " +
           "CAST(size(sh) - size(array_distinct(sh)) AS BIGINT) AS n_dup FROM t), " +
-          "v AS (SELECT doc_id, CASE " +
-          s"WHEN n_tokens < $QfMinTokens THEN 'too_short' " +
-          s"WHEN n_stop * $QfStopDivisor < n_tokens THEN 'low_stopword' " +
-          s"WHEN (n_chars - (n_tokens - 1)) * 10 > $QfLongTokTenths * n_tokens THEN 'long_tokens' " +
-          s"WHEN n_dup * $QfRepDivisor > n_sh THEN 'repetitive' " +
-          "ELSE 'ok' END AS reason FROM m) " +
+          s"v AS (SELECT doc_id, $qfReason FROM m) " +
           "SELECT doc_id, reason = 'ok' AS keep, reason FROM v ORDER BY doc_id"),
       "q_pipeline_curate" ->
         ("WITH d0 AS (SELECT doc_id, n_chars, source, coalesce(text, '') AS text FROM documents), " +
@@ -6153,43 +6044,19 @@ object LlmPipeline {
           "m AS (SELECT *, CAST(size(sh) AS BIGINT) AS n_sh, " +
           "CAST(size(sh) - size(array_distinct(sh)) AS BIGINT) AS n_dup FROM t), " +
           "ok AS (SELECT doc_id, source, n_tokens, n_chars, md5(lower(trim(text))) AS nm FROM m " +
-          s"WHERE NOT (n_tokens < $QfMinTokens) " +
-          s"AND NOT (n_stop * $QfStopDivisor < n_tokens) " +
-          s"AND NOT ((n_chars - (n_tokens - 1)) * 10 > $QfLongTokTenths * n_tokens) " +
-          s"AND NOT (n_dup * $QfRepDivisor > n_sh)), " +
+          s"WHERE $qfKeep), " +
           "keep AS (SELECT doc_id FROM (SELECT doc_id, row_number() OVER " +
           "(PARTITION BY nm ORDER BY n_chars DESC, doc_id ASC) AS rn FROM ok) WHERE rn = 1), " +
           "dd AS (SELECT o.doc_id, o.source, o.n_tokens FROM ok o JOIN keep k ON k.doc_id = o.doc_id), " +
-          "c AS (SELECT doc_id, source, n_tokens, " +
-          "sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id) - n_tokens AS cum_excl FROM dd) " +
-          s"SELECT doc_id, source, n_tokens, cum_excl DIV $PackBudget AS bin " +
-          "FROM c ORDER BY source, doc_id"),
-      "q_dedup_ngram" ->
-        (s"$dsCte, " +
-          "sizes AS (SELECT doc_id, count(*) AS n_sh FROM ds GROUP BY doc_id), " +
-          s"ok AS (SELECT sh FROM ds GROUP BY sh HAVING count(DISTINCT doc_id) > 1 " +
-          s"AND count(DISTINCT doc_id) <= $NgramDfCap), " +
-          "inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(DISTINCT a.sh) AS n_inter " +
-          "FROM ds a JOIN ok ON ok.sh = a.sh JOIN ds b ON a.sh = b.sh AND a.doc_id < b.doc_id " +
-          "GROUP BY 1, 2) " +
-          "SELECT doc_a, doc_b, CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) AS jaccard " +
-          "FROM inter JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b " +
-          "ORDER BY jaccard DESC, doc_a, doc_b LIMIT 100"),
+          packBinsSql("dd", s"cum_excl DIV $PackBudget")),
+      "q_dedup_ngram" -> s"$dsCte, $ngramJaccardTail",
       "q_dedup_minhash_sig" ->
         (s"$minhashCtes SELECT doc_id, band, band_key FROM bands ORDER BY doc_id, band"),
       "q_dedup_minhash_pairs" ->
-        (s"$minhashCtes, ok AS (SELECT band, band_key FROM bands " +
-          s"GROUP BY band, band_key HAVING count(*) <= $HotBucketCap) " +
-          "SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b FROM bands a " +
-          "JOIN ok ON ok.band = a.band AND ok.band_key = a.band_key " +
-          "JOIN bands b ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id " +
-          "ORDER BY doc_a, doc_b"),
+        (s"$minhashCtes, ${bandOk("bands")} " +
+          s"${bandPairsJoin("bands")} ORDER BY doc_a, doc_b"),
       "q_dedup_editdist" ->
-        (s"$minhashCtes, ok AS (SELECT band, band_key FROM bands " +
-          s"GROUP BY band, band_key HAVING count(*) <= $HotBucketCap), " +
-          "p AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b FROM bands a " +
-          "JOIN ok ON ok.band = a.band AND ok.band_key = a.band_key " +
-          "JOIN bands b ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id) " +
+        (s"$minhashCtes, ${bandPairs("bands", "p")} " +
           "SELECT doc_a, doc_b, " +
           s"CAST(CASE WHEN abs(length(da.text) - length(db.text)) > $EditDistMax THEN -1 " +
           s"ELSE levenshtein(da.text, db.text, $EditDistMax) END AS BIGINT) AS edit_dist, " +
@@ -6199,34 +6066,13 @@ object LlmPipeline {
           "JOIN documents db ON db.doc_id = p.doc_b ORDER BY doc_a, doc_b"),
       "q_dedup_cc" ->
         (s"$ccUnrolled SELECT doc_id, rep_id FROM lconv ORDER BY doc_id"),
-      "q_dedup_cluster_stats" ->
-        (s"$ccUnrolled, lab AS (SELECT doc_id, rep_id FROM lconv) " +
-          "SELECT l.rep_id, count(*) AS n_docs, count(*) - 1 AS n_dropped, " +
-          "CAST(sum(CASE WHEN d.doc_id <> l.rep_id THEN d.n_chars ELSE 0 END) AS BIGINT) AS chars_dropped " +
-          "FROM lab l JOIN documents d ON d.doc_id = l.doc_id " +
-          "GROUP BY l.rep_id ORDER BY l.rep_id"),
-      "q_dedup_cross_source" ->
-        (s"$ccUnrolled, lab AS (SELECT doc_id, rep_id FROM lconv) " +
-          "SELECT rs.source AS rep_source, ds.source AS dup_source, count(*) AS n_docs " +
-          "FROM lab l JOIN documents ds ON ds.doc_id = l.doc_id " +
-          "JOIN documents rs ON rs.doc_id = l.rep_id " +
-          "WHERE l.doc_id <> l.rep_id " +
-          "GROUP BY rs.source, ds.source ORDER BY rep_source, dup_source"),
+      "q_dedup_cluster_stats" -> (ccLab + ccClusterStats),
+      "q_dedup_cross_source" -> (ccLab + ccCrossSource("rs.source, ds.source")),
       "q_dedup_incremental" ->
         (s"$minhashCtes, " +
           "sb AS (SELECT b.doc_id, b.band, b.band_key, s.source " +
           "FROM bands b JOIN (SELECT doc_id, source FROM documents) s " +
-          "ON s.doc_id = b.doc_id), " +
-          "hist AS (SELECT doc_id AS hist_id, band, band_key FROM sb " +
-          "WHERE source <> 'src0'), " +
-          "okb AS (SELECT band, band_key FROM hist GROUP BY band, band_key " +
-          s"HAVING count(DISTINCT hist_id) <= $HotBucketCap), " +
-          "batch AS (SELECT doc_id, band, band_key FROM sb WHERE source = 'src0') " +
-          "SELECT b.doc_id, count(DISTINCT h.hist_id) AS n_hist_dups, " +
-          "min(h.hist_id) AS first_hist_id " +
-          "FROM batch b JOIN okb o ON o.band = b.band AND o.band_key = b.band_key " +
-          "JOIN hist h ON h.band = b.band AND h.band_key = b.band_key " +
-          "GROUP BY b.doc_id ORDER BY b.doc_id"),
+          s"ON s.doc_id = b.doc_id), $incrementalTail"),
       "q_dedup_simhash" ->
         (s"WITH $dtk, " +
           s"hs AS (SELECT doc_id, ${hash("s")} AS h FROM " +
@@ -6242,11 +6088,8 @@ object LlmPipeline {
           "FROM bands a JOIN ok ON ok.b = a.b AND ok.bv = a.bv " +
           "JOIN bands b ON a.b = b.b AND a.bv = b.bv AND a.doc_id < b.doc_id " +
           "WHERE bit_count(a.simhash ^ b.simhash) <= 8 ORDER BY doc_a, doc_b"),
-      "q_dedup_embed" -> {
-        val bucket = (0 until 4).map { p =>
-          s"(CASE WHEN ${dot("q", plane(p))} >= 0 THEN ${1 << p} ELSE 0 END)"
-        }.mkString(" + ")
-        s"WITH q AS (SELECT vec_id, label, $quantS AS q FROM embeddings), " +
+      "q_dedup_embed" ->
+        (s"WITH q AS (SELECT vec_id, label, $quantS AS q FROM embeddings), " +
           s"n AS (SELECT vec_id, label, q, ${dot("q", "q")} AS n2, " +
           s"CAST($bucket AS INTEGER) AS bucket FROM q), " +
           "ok AS (SELECT label, bucket FROM n GROUP BY 1, 2 " +
@@ -6255,18 +6098,14 @@ object LlmPipeline {
           "sqrt(CAST(a.n2 AS DOUBLE) * CAST(b.n2 AS DOUBLE)) AS cos " +
           "FROM n a JOIN ok ON ok.label = a.label AND ok.bucket = a.bucket " +
           "JOIN n b ON a.label = b.label AND a.bucket = b.bucket AND a.vec_id < b.vec_id " +
-          "ORDER BY cos DESC, vec_a, vec_b LIMIT 100"
-      },
-      "q_dedup_semantic" -> {
-        // the ccUnrolled pattern over cosine-thresholded vec pairs:
-        // Spark rejects the cycle-safe recursive UNION, so min-label
-        // propagation unrolls CcSqlRounds rounds (components are
-        // within-bucket near-cliques; diameter 2-3) with the same
-        // assert_true fixpoint guard
-        val bucket = (0 until 4).map { p =>
-          s"(CASE WHEN ${dot("q", plane(p))} >= 0 THEN ${1 << p} ELSE 0 END)"
-        }.mkString(" + ")
-        val ctes = s"WITH q AS (SELECT vec_id, $quantS AS q FROM embeddings), " +
+          "ORDER BY cos DESC, vec_a, vec_b LIMIT 100"),
+      // the ccUnrolled pattern over cosine-thresholded vec pairs:
+      // Spark rejects the cycle-safe recursive UNION, so min-label
+      // propagation unrolls CcSqlRounds rounds (components are
+      // within-bucket near-cliques; diameter 2-3) with the same
+      // assert_true fixpoint guard
+      "q_dedup_semantic" ->
+        (s"WITH q AS (SELECT vec_id, $quantS AS q FROM embeddings), " +
           s"n AS (SELECT vec_id, q, ${dot("q", "q")} AS n2, " +
           s"CAST($bucket AS INTEGER) AS bucket FROM q), " +
           "okb AS (SELECT bucket FROM n GROUP BY 1 " +
@@ -6278,34 +6117,17 @@ object LlmPipeline {
           "pairs AS (SELECT va, vb FROM cand WHERE dp > 0 " +
           s"AND CAST(dp AS DECIMAL(38,0)) * CAST(dp AS DECIMAL(38,0)) * $SemTauDen >= " +
           s"$SemTauNum * CAST(n2a AS DECIMAL(38,0)) * CAST(n2b AS DECIMAL(38,0))), " +
-          "edges AS (SELECT va AS u, vb AS v FROM pairs " +
-          "UNION ALL SELECT vb, va FROM pairs " +
-          "UNION ALL SELECT va, va FROM pairs " +
-          "UNION ALL SELECT vb, vb FROM pairs), " +
-          "l0 AS (SELECT v AS vec_id, min(u) AS rep_id FROM edges GROUP BY v)"
-        val rounds = (1 to CcSqlRounds).map { k =>
-          s"l$k AS (SELECT e.v AS vec_id, min(l.rep_id) AS rep_id " +
-            s"FROM edges e JOIN l${k - 1} l ON l.vec_id = e.u GROUP BY e.v)"
-        }.mkString(", ")
-        val chk = s"chk AS (SELECT assert_true((SELECT count(*) FROM " +
-          s"(SELECT * FROM l$CcSqlRounds EXCEPT SELECT * FROM l${CcSqlRounds - 1})) = 0, " +
-          s"'q_dedup_semantic SQL surface: propagation not converged after $CcSqlRounds rounds') AS ok)"
-        s"$ctes, $rounds, $chk, " +
-          s"lconv AS (SELECT l.vec_id, l.rep_id FROM l$CcSqlRounds l CROSS JOIN chk) " +
+          labelProp("va", "vb", "vec_id", "q_dedup_semantic SQL surface: propagation") + " " +
           "SELECT e.vec_id, coalesce(l.rep_id, e.vec_id) AS rep_id, " +
           "coalesce(l.rep_id, e.vec_id) = e.vec_id AS keep " +
           "FROM embeddings e LEFT JOIN lconv l ON l.vec_id = e.vec_id " +
-          "ORDER BY e.vec_id"
-      },
+          "ORDER BY e.vec_id"),
       "q_substrate_stats" -> substrateStatsSql,
       // Spark spelling of the five overflow group-counts (the oracle's
       // DuckDB list/unnest idioms don't parse here); same CTEs as the
       // per-family mirrors above
-      "q_dedup_overflow_report" -> {
-        val bucket = (0 until 4).map { p =>
-          s"(CASE WHEN ${dot("q", plane(p))} >= 0 THEN ${1 << p} ELSE 0 END)"
-        }.mkString(" + ")
-        s"$minhashCtes, " +
+      "q_dedup_overflow_report" ->
+        (s"$minhashCtes, " +
           s"sim_hs AS (SELECT doc_id, ${hash("s")} AS h FROM " +
           s"(SELECT doc_id, explode($shS) AS s FROM dtk)), " +
           s"sim_bits AS (SELECT doc_id, $bitCols FROM sim_hs GROUP BY doc_id), " +
@@ -6317,24 +6139,7 @@ object LlmPipeline {
           s"(SELECT doc_id, explode(array_distinct($shS)) AS s FROM dtk)), " +
           s"em_q AS (SELECT vec_id, label, $quantS AS q FROM embeddings), " +
           s"em_n AS (SELECT vec_id, label, CAST($bucket AS INTEGER) AS bucket FROM em_q) " +
-          "SELECT family, key1, key2, n_members FROM (" +
-          "SELECT 'minhash' AS family, CAST(band AS STRING) AS key1, " +
-          "band_key AS key2, count(*) AS n_members FROM bands " +
-          s"GROUP BY 1, 2, 3 HAVING count(*) > $HotBucketCap " +
-          "UNION ALL " +
-          "SELECT 'simhash', CAST(b AS STRING), CAST(bv AS STRING), count(*) FROM sim_bands " +
-          s"GROUP BY 1, 2, 3 HAVING count(*) > $HotBucketCap " +
-          "UNION ALL " +
-          "SELECT 'ngram', CAST(sh AS STRING), '', count(DISTINCT doc_id) FROM ng_ds " +
-          s"GROUP BY 1, 2, 3 HAVING count(DISTINCT doc_id) > $NgramDfCap " +
-          "UNION ALL " +
-          "SELECT 'embed', CAST(label AS STRING), CAST(bucket AS STRING), count(*) FROM em_n " +
-          s"GROUP BY 1, 2, 3 HAVING count(*) > $HotBucketCap " +
-          "UNION ALL " +
-          "SELECT 'semantic', CAST(bucket AS STRING), '', count(*) FROM em_n " +
-          s"GROUP BY 1, 2, 3 HAVING count(*) > $HotBucketCap" +
-          ") ORDER BY family, key1, key2"
-      },
+          overflowUnion("STRING")),
       "q_embed_centroids" ->
         (s"WITH q AS (SELECT label, $quantS AS q FROM embeddings), " +
           "e AS (SELECT label, posexplode(q) AS (dim, qv) FROM q), " +
@@ -6358,12 +6163,7 @@ object LlmPipeline {
           "FROM e GROUP BY label, dim), " +
           "s AS (SELECT e.label, e.vec_id, " +
           "sum((g.nd * e.qv - g.sd) * (g.nd * e.qv - g.sd)) AS score " +
-          "FROM e JOIN g ON g.label = e.label AND g.dim = e.dim " +
-          "GROUP BY e.label, e.vec_id), " +
-          "r AS (SELECT label, vec_id, score, row_number() OVER " +
-          "(PARTITION BY label ORDER BY score DESC, vec_id) AS rn FROM s) " +
-          s"SELECT label, vec_id, score FROM r WHERE rn <= $OutlierTopK " +
-          "ORDER BY label, score DESC, vec_id"),
+          outliersTail),
       "q_sim_search" ->
         (s"WITH q AS (SELECT vec_id, $quantS AS q FROM embeddings), " +
           s"n AS (SELECT vec_id, q, ${dot("q", "q")} AS n2 FROM q) " +
@@ -6373,138 +6173,56 @@ object LlmPipeline {
           "ORDER BY cos DESC, vec_id LIMIT 10"),
       "q_sim_search_ivf" -> ivfSql(1),
       "q_sim_search_ivf2" -> ivfSql(2),
-      "q_lsh_bucket_stats" -> {
-        val bucket = (0 until 4).map { p =>
-          s"(CASE WHEN ${dot("q", plane(p))} >= 0 THEN ${1 << p} ELSE 0 END)"
-        }.mkString(" + ")
-        s"WITH q AS (SELECT vec_id, $quantS AS q FROM embeddings), " +
+      "q_lsh_bucket_stats" ->
+        (s"WITH q AS (SELECT vec_id, $quantS AS q FROM embeddings), " +
           s"b AS (SELECT CAST($bucket AS INTEGER) AS bucket FROM q), " +
           "pb AS (SELECT bucket, count(*) AS n_vecs FROM b GROUP BY 1), " +
           "g AS (SELECT sum(n_vecs) AS total_vecs, count(*) AS n_buckets FROM pb) " +
           "SELECT bucket, n_vecs, " +
           "CAST(CAST(n_vecs AS DECIMAL(38,0)) * 1000000 DIV total_vecs AS BIGINT) AS share_ppm, " +
           "CAST(CAST(n_vecs AS DECIMAL(38,0)) * n_buckets * 1000000 DIV total_vecs AS BIGINT) AS load_micros " +
-          "FROM pb CROSS JOIN g ORDER BY bucket"
-      },
-      "q_ann_recall_mp" -> {
-        val ds = (0 until 4).map(p => s"${dot("q", plane(p))} AS d$p").mkString(", ")
-        val bucket = (0 until 4).map { p =>
-          s"(CASE WHEN d$p >= 0 THEN ${1 << p} ELSE 0 END)"
-        }.mkString(" + ")
-        val flip = "CASE WHEN abs(d0) <= abs(d1) AND abs(d0) <= abs(d2) AND abs(d0) <= abs(d3) THEN 1 " +
-          "WHEN abs(d1) <= abs(d2) AND abs(d1) <= abs(d3) THEN 2 " +
-          "WHEN abs(d2) <= abs(d3) THEN 4 ELSE 8 END"
-        s"WITH q AS (SELECT vec_id, $quantS AS q FROM embeddings), " +
-          s"dd AS (SELECT vec_id, q, $ds FROM q), " +
-          s"b AS (SELECT vec_id, q, CAST($bucket AS INTEGER) AS bucket, " +
-          s"CAST($flip AS INTEGER) AS flip FROM dd), " +
-          s"pr AS (SELECT vec_id AS probe_id, q AS qa, bucket AS b1, " +
+          "FROM pb CROSS JOIN g ORDER BY bucket"),
+      "q_ann_recall_mp" ->
+        (s"${lshMpCtes(quantS, planeDot)}, " +
+          "pr AS (SELECT vec_id AS probe_id, q AS qa, bucket AS b1, " +
           "CAST(bucket ^ flip AS INTEGER) AS b2, " +
           s"${dot("q", "q")} AS n2a FROM b WHERE vec_id < $RecallProbes), " +
           "sc AS (SELECT pr.probe_id, v.vec_id AS cand_id, v.bucket, pr.b1, pr.b2, " +
-          s"CAST(${dot("pr.qa", "v.q")} AS DOUBLE) / " +
-          s"sqrt(CAST(pr.n2a AS DOUBLE) * CAST(${dot("v.q", "v.q")} AS DOUBLE)) AS cos " +
+          s"${cos("pr.qa", "pr.n2a", "v.q")} " +
           "FROM b v CROSS JOIN pr WHERE v.vec_id <> pr.probe_id), " +
-          "tr AS (SELECT probe_id, cand_id FROM (SELECT probe_id, cand_id, " +
-          "row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, cand_id) AS rn " +
-          s"FROM sc) WHERE rn <= $RecallK), " +
-          "an AS (SELECT probe_id, cand_id FROM (SELECT probe_id, cand_id, " +
-          "row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, cand_id) AS rn " +
-          s"FROM sc WHERE bucket = b1 OR bucket = b2) WHERE rn <= $RecallK), " +
-          "ca AS (SELECT probe_id, count(*) AS n_ann FROM an GROUP BY 1), " +
-          "ch AS (SELECT t.probe_id, count(*) AS n_hit FROM tr t " +
-          "JOIN an a ON a.probe_id = t.probe_id AND a.cand_id = t.cand_id GROUP BY 1) " +
-          "SELECT p.probe_id, COALESCE(ca.n_ann, 0L) AS n_ann, " +
-          "COALESCE(ch.n_hit, 0L) AS n_hit, " +
-          s"COALESCE(ch.n_hit, 0L) * 1000000 DIV $RecallK AS recall_ppm " +
-          "FROM pr p LEFT JOIN ca ON ca.probe_id = p.probe_id " +
-          "LEFT JOIN ch ON ch.probe_id = p.probe_id ORDER BY p.probe_id"
-      },
-      "q_ann_recall" -> {
-        val bucket = (0 until 4).map { p =>
-          s"(CASE WHEN ${dot("q", plane(p))} >= 0 THEN ${1 << p} ELSE 0 END)"
-        }.mkString(" + ")
-        s"WITH q AS (SELECT vec_id, $quantS AS q FROM embeddings), " +
-          s"b AS (SELECT vec_id, q, CAST($bucket AS INTEGER) AS bucket FROM q), " +
-          s"pr AS (SELECT vec_id AS probe_id, q AS qa, bucket AS probe_bucket, " +
+          recallTail("bucket = b1 OR bucket = b2", "0L", "DIV")),
+      "q_ann_recall" ->
+        (s"${lshCtes(quantS, planeDot)}, " +
+          "pr AS (SELECT vec_id AS probe_id, q AS qa, bucket AS probe_bucket, " +
           s"${dot("q", "q")} AS n2a FROM b WHERE vec_id < $RecallProbes), " +
           "sc AS (SELECT pr.probe_id, v.vec_id AS cand_id, v.bucket, pr.probe_bucket, " +
-          s"CAST(${dot("pr.qa", "v.q")} AS DOUBLE) / " +
-          s"sqrt(CAST(pr.n2a AS DOUBLE) * CAST(${dot("v.q", "v.q")} AS DOUBLE)) AS cos " +
+          s"${cos("pr.qa", "pr.n2a", "v.q")} " +
           "FROM b v CROSS JOIN pr WHERE v.vec_id <> pr.probe_id), " +
-          "tr AS (SELECT probe_id, cand_id FROM (SELECT probe_id, cand_id, " +
-          "row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, cand_id) AS rn " +
-          s"FROM sc) WHERE rn <= $RecallK), " +
-          "an AS (SELECT probe_id, cand_id FROM (SELECT probe_id, cand_id, " +
-          "row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, cand_id) AS rn " +
-          s"FROM sc WHERE bucket = probe_bucket) WHERE rn <= $RecallK), " +
-          "ca AS (SELECT probe_id, count(*) AS n_ann FROM an GROUP BY 1), " +
-          "ch AS (SELECT t.probe_id, count(*) AS n_hit FROM tr t " +
-          "JOIN an a ON a.probe_id = t.probe_id AND a.cand_id = t.cand_id GROUP BY 1) " +
-          "SELECT p.probe_id, COALESCE(ca.n_ann, 0L) AS n_ann, " +
-          "COALESCE(ch.n_hit, 0L) AS n_hit, " +
-          s"COALESCE(ch.n_hit, 0L) * 1000000 DIV $RecallK AS recall_ppm " +
-          "FROM pr p LEFT JOIN ca ON ca.probe_id = p.probe_id " +
-          "LEFT JOIN ch ON ch.probe_id = p.probe_id ORDER BY p.probe_id"
-      },
-      "q_sim_search_lsh" -> {
-        val bucket = (0 until 4).map { p =>
-          s"(CASE WHEN ${dot("q", plane(p))} >= 0 THEN ${1 << p} ELSE 0 END)"
-        }.mkString(" + ")
-        s"WITH q AS (SELECT vec_id, $quantS AS q FROM embeddings), " +
-          s"b AS (SELECT vec_id, q, CAST($bucket AS INTEGER) AS bucket FROM q), " +
+          recallTail("bucket = probe_bucket", "0L", "DIV")),
+      "q_sim_search_lsh" ->
+        (s"${lshCtes(quantS, planeDot)}, " +
           s"pn AS (SELECT q AS qa, bucket AS probe_bucket, ${dot("q", "q")} AS n2a " +
           "FROM b WHERE vec_id = 0) " +
-          s"SELECT v.vec_id, v.bucket, CAST(${dot("pn.qa", "v.q")} AS DOUBLE) / " +
-          s"sqrt(CAST(pn.n2a AS DOUBLE) * CAST(${dot("v.q", "v.q")} AS DOUBLE)) AS cos " +
+          s"SELECT v.vec_id, v.bucket, ${cos("pn.qa", "pn.n2a", "v.q")} " +
           "FROM b v CROSS JOIN pn WHERE v.bucket = pn.probe_bucket AND v.vec_id <> 0 " +
-          "ORDER BY cos DESC, vec_id LIMIT 5"
-      },
-      "q_sim_search_lsh_mp" -> {
-        val ds = (0 until 4).map(p => s"${dot("q", plane(p))} AS d$p").mkString(", ")
-        val bucket = (0 until 4).map { p =>
-          s"(CASE WHEN d$p >= 0 THEN ${1 << p} ELSE 0 END)"
-        }.mkString(" + ")
-        val flip = "CASE WHEN abs(d0) <= abs(d1) AND abs(d0) <= abs(d2) AND abs(d0) <= abs(d3) THEN 1 " +
-          "WHEN abs(d1) <= abs(d2) AND abs(d1) <= abs(d3) THEN 2 " +
-          "WHEN abs(d2) <= abs(d3) THEN 4 ELSE 8 END"
-        s"WITH q AS (SELECT vec_id, $quantS AS q FROM embeddings), " +
-          s"dd AS (SELECT vec_id, q, $ds FROM q), " +
-          s"b AS (SELECT vec_id, q, CAST($bucket AS INTEGER) AS bucket, " +
-          s"CAST($flip AS INTEGER) AS flip FROM dd), " +
+          "ORDER BY cos DESC, vec_id LIMIT 5"),
+      "q_sim_search_lsh_mp" ->
+        (s"${lshMpCtes(quantS, planeDot)}, " +
           s"pn AS (SELECT qa, n2a, explode(array(bucket, CAST(bucket ^ flip AS INTEGER))) AS probe_bucket " +
           s"FROM (SELECT q AS qa, ${dot("q", "q")} AS n2a, bucket, flip FROM b WHERE vec_id = 0)) " +
-          s"SELECT v.vec_id, v.bucket, CAST(${dot("pn.qa", "v.q")} AS DOUBLE) / " +
-          s"sqrt(CAST(pn.n2a AS DOUBLE) * CAST(${dot("v.q", "v.q")} AS DOUBLE)) AS cos " +
+          s"SELECT v.vec_id, v.bucket, ${cos("pn.qa", "pn.n2a", "v.q")} " +
           "FROM b v CROSS JOIN pn WHERE v.bucket = pn.probe_bucket AND v.vec_id <> 0 " +
-          "ORDER BY cos DESC, vec_id LIMIT 5"
-      },
+          "ORDER BY cos DESC, vec_id LIMIT 5"),
       "q_sim_search_pq" -> {
         // slice(arr, start, LENGTH) — Spark's spelling of the oracle's
         // 1-based inclusive q[lo:hi]
         val subsSpark = (0 until PqM).map { j =>
           s"SELECT vec_id, $j AS j, slice(q, ${j * PqSubDim + 1}, $PqSubDim) AS sub FROM q"
         }.mkString(" UNION ALL ")
-        // same exact-integer squared-L2, via the codegen'd native dot
-        def d2(a: String, b: String) =
-          s"(${dot(a, a)} - 2 * ${dot(a, b)} + ${dot(b, b)})"
         s"WITH q AS (SELECT vec_id, $quantS AS q FROM embeddings), " +
-          s"subs AS ($subsSpark), " +
-          s"cb AS (SELECT CAST(vec_id AS INTEGER) AS c, j, sub AS csub " +
-          s"FROM subs WHERE vec_id < $PqK), " +
-          s"codes AS (SELECT vec_id, j, CAST(min(${d2("sub", "csub")} * $PqK + c) " +
-          s"% $PqK AS INTEGER) AS code " +
-          "FROM subs JOIN cb USING (j) GROUP BY vec_id, j), " +
-          s"adc AS (SELECT j, c, ${d2("sub", "csub")} AS t " +
-          "FROM subs JOIN cb USING (j) WHERE vec_id = 0) " +
-          "SELECT codes.vec_id, CAST(sum(adc.t) AS BIGINT) AS adist2 " +
-          "FROM codes JOIN adc ON codes.j = adc.j AND codes.code = adc.c " +
-          "WHERE codes.vec_id <> 0 " +
-          "GROUP BY codes.vec_id ORDER BY adist2 ASC, vec_id ASC LIMIT 5"
+          s"subs AS ($subsSpark), ${pqTail(d2("sub", "csub"))}"
       },
       "q_sim_search_ivfpq" -> {
-        def d2(a: String, b: String) =
-          s"(${dot(a, a)} - 2 * ${dot(a, b)} + ${dot(b, b)})"
         def slices(src: String, arr: String, extra: String) =
           (0 until PqM).map { j =>
             s"SELECT $extra, $j AS j, slice($arr, ${j * PqSubDim + 1}, $PqSubDim) AS s FROM $src"
@@ -6590,83 +6308,17 @@ object LlmPipeline {
           "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 15), 16, 10) AS BIGINT) " +
           s"% $WSampleUBits) + 1) AS priority " +
           s"FROM documents ORDER BY priority DESC, doc_id LIMIT $WSampleK"),
-      "q_dedup_substring_winnow" ->
-        (s"WITH w AS (SELECT doc_id, pos, " +
-          "CAST(conv(substring(md5(substring(text, CAST(pos AS INT), " +
-          s"$SubWinW)), 1, 15), 16, 10) AS BIGINT) AS h " +
-          "FROM (SELECT doc_id, text, " +
-          s"explode(sequence(CAST(1 AS BIGINT), n_chars - ${SubWinW - 1})) AS pos " +
-          s"FROM documents WHERE n_chars >= $SubWinW)), " +
-          "fp AS (SELECT DISTINCT doc_id, h FROM (SELECT doc_id, " +
-          "min(h) OVER (PARTITION BY doc_id ORDER BY pos " +
-          s"ROWS BETWEEN CURRENT ROW AND ${WinnowK - 1} FOLLOWING) AS h FROM w)), " +
-          s"g AS (SELECT h FROM fp GROUP BY h HAVING count(*) BETWEEN 2 AND $SubDfCap) " +
-          "SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, " +
-          "CAST(count(*) AS BIGINT) AS n_shared_fps " +
-          "FROM fp a JOIN g USING (h) JOIN fp b USING (h) WHERE a.doc_id < b.doc_id " +
-          "GROUP BY 1, 2 ORDER BY doc_a, doc_b"),
-      "q_dedup_substring" ->
-        (s"WITH w AS (SELECT doc_id, pos, " +
-          "CAST(conv(substring(md5(substring(text, CAST(pos AS INT), " +
-          s"$SubWinW)), 1, 15), 16, 10) AS BIGINT) AS h " +
-          "FROM (SELECT doc_id, text, " +
-          s"explode(sequence(CAST(1 AS BIGINT), n_chars - ${SubWinW - 1})) AS pos " +
-          s"FROM documents WHERE n_chars >= $SubWinW)), " +
-          "ds AS (SELECT DISTINCT doc_id, h FROM w), " +
-          s"g AS (SELECT h FROM ds GROUP BY h HAVING count(*) BETWEEN 2 AND $SubDfCap), " +
-          "cov AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.pos " +
-          "FROM w a JOIN g USING (h) JOIN ds b USING (h) WHERE a.doc_id < b.doc_id), " +
-          "r AS (SELECT doc_a, doc_b, pos, pos - row_number() " +
-          "OVER (PARTITION BY doc_a, doc_b ORDER BY pos) AS grp FROM cov), " +
-          "runs AS (SELECT doc_a, doc_b, grp, count(*) AS run_len FROM r GROUP BY 1, 2, 3) " +
-          "SELECT doc_a, doc_b, CAST(sum(run_len) AS BIGINT) AS n_cov_pos, " +
-          s"CAST(max(run_len) + ${SubWinW - 1} AS BIGINT) AS longest_span " +
-          s"FROM runs GROUP BY 1, 2 HAVING max(run_len) + ${SubWinW - 1} >= $SubMinSpan " +
-          "ORDER BY doc_a, doc_b"),
+      "q_dedup_substring_winnow" -> s"WITH $subWinS, $substringWinnowTail",
+      "q_dedup_substring" -> s"WITH $subWinS, $substringSpanTail",
       "q_dedup_substring_auto" ->
         ("WITH vol AS (SELECT coalesce(sum(n_chars), CAST(0 AS BIGINT)) AS v FROM documents), " +
-          "w AS (SELECT doc_id, pos, " +
-          "CAST(conv(substring(md5(substring(text, CAST(pos AS INT), " +
-          s"$SubWinW)), 1, 15), 16, 10) AS BIGINT) AS h " +
-          "FROM (SELECT doc_id, text, " +
-          s"explode(sequence(CAST(1 AS BIGINT), n_chars - ${SubWinW - 1})) AS pos " +
-          s"FROM documents WHERE n_chars >= $SubWinW)), " +
-          "ds AS (SELECT DISTINCT doc_id, h FROM w), " +
-          s"g1 AS (SELECT h FROM ds GROUP BY h HAVING count(*) BETWEEN 2 AND $SubDfCap), " +
-          "cov AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.pos " +
-          "FROM w a JOIN g1 USING (h) JOIN ds b USING (h) WHERE a.doc_id < b.doc_id), " +
-          "r AS (SELECT doc_a, doc_b, pos, pos - row_number() " +
-          "OVER (PARTITION BY doc_a, doc_b ORDER BY pos) AS grp FROM cov), " +
-          "runs AS (SELECT doc_a, doc_b, grp, count(*) AS run_len FROM r GROUP BY 1, 2, 3), " +
-          "s1 AS (SELECT doc_a, doc_b, CAST(sum(run_len) AS BIGINT) AS n_matches, " +
-          "'stride1' AS mode FROM runs GROUP BY 1, 2 " +
-          s"HAVING max(run_len) + ${SubWinW - 1} >= $SubMinSpan), " +
-          "fp AS (SELECT DISTINCT doc_id, h FROM (SELECT doc_id, " +
-          "min(h) OVER (PARTITION BY doc_id ORDER BY pos " +
-          s"ROWS BETWEEN CURRENT ROW AND ${WinnowK - 1} FOLLOWING) AS h FROM w)), " +
-          s"g2 AS (SELECT h FROM fp GROUP BY h HAVING count(*) BETWEEN 2 AND $SubDfCap), " +
-          "wn AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, " +
-          "CAST(count(*) AS BIGINT) AS n_matches, 'winnow' AS mode " +
-          "FROM fp a JOIN g2 USING (h) JOIN fp b USING (h) WHERE a.doc_id < b.doc_id " +
-          "GROUP BY 1, 2) " +
-          s"SELECT * FROM s1 WHERE (SELECT v FROM vol) <= $SubAutoVolCap " +
-          s"UNION ALL SELECT * FROM wn WHERE (SELECT v FROM vol) > $SubAutoVolCap " +
-          "ORDER BY doc_a, doc_b"),
+          s"$subWinS, $substringAutoTail"),
       "q_dedup_collapsed_jaccard" ->
         (s"WITH $dtk, reps AS (SELECT min(doc_id) AS doc_id FROM documents " +
           "GROUP BY md5(coalesce(text, ''))), " +
           s"ds AS (SELECT doc_id, ${hash("s")} AS sh FROM " +
           s"(SELECT doc_id, explode(array_distinct($shS)) AS s " +
-          "FROM dtk JOIN reps USING (doc_id))), " +
-          "sizes AS (SELECT doc_id, count(*) AS n_sh FROM ds GROUP BY doc_id), " +
-          s"ok AS (SELECT sh FROM ds GROUP BY sh HAVING count(DISTINCT doc_id) > 1 " +
-          s"AND count(DISTINCT doc_id) <= $NgramDfCap), " +
-          "inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(DISTINCT a.sh) AS n_inter " +
-          "FROM ds a JOIN ok ON ok.sh = a.sh JOIN ds b ON a.sh = b.sh AND a.doc_id < b.doc_id " +
-          "GROUP BY 1, 2) " +
-          "SELECT doc_a, doc_b, CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) AS jaccard " +
-          "FROM inter JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b " +
-          "ORDER BY jaccard DESC, doc_a, doc_b LIMIT 100"),
+          s"FROM dtk JOIN reps USING (doc_id))), $ngramJaccardTail"),
       "q_lm_fluency" ->
         ("WITH tk AS (SELECT doc_id, split(coalesce(text, ''), ' ') AS t FROM documents), " +
           "bg AS (SELECT doc_id, p.w1 AS w1, p.bigram AS bigram FROM (" +
@@ -6680,13 +6332,7 @@ object LlmPipeline {
           "CAST(sum((nb * 1000000) DIV nu) DIV count(*) AS BIGINT) AS fluency_ppm " +
           "FROM bg JOIN cb USING (bigram) JOIN cu USING (w1) " +
           "GROUP BY doc_id ORDER BY doc_id"),
-      "q_text_diversity" ->
-        ("WITH t AS (SELECT doc_id, explode(split(text, ' ')) AS w FROM documents), " +
-          "c AS (SELECT doc_id, w, count(*) AS c FROM t GROUP BY doc_id, w) " +
-          "SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens, " +
-          "CAST(count(*) AS BIGINT) AS n_distinct, " +
-          "CAST(sum(c * c) AS BIGINT) AS simpson_num " +
-          "FROM c GROUP BY doc_id ORDER BY doc_id"),
+      "q_text_diversity" -> textDiversitySql("explode(split(text, ' '))"),
       "q_doc_windows" ->
         (s"WITH t AS (SELECT doc_id, CAST(size(split(text, ' ')) AS BIGINT) AS n " +
           "FROM documents), " +
@@ -6744,21 +6390,7 @@ object LlmPipeline {
           "FROM dense a JOIN dense b ON a.bucket = b.bucket AND a.source < b.source " +
           "GROUP BY a.source, b.source ORDER BY src_a, src_b"),
       "q_dedup_verify" ->
-        (s"$minhashCtes, ok AS (SELECT band, band_key FROM bands " +
-          s"GROUP BY band, band_key HAVING count(*) <= $HotBucketCap), " +
-          "pr AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b FROM bands a " +
-          "JOIN ok ON ok.band = a.band AND ok.band_key = a.band_key " +
-          "JOIN bands b ON a.band = b.band AND a.band_key = b.band_key " +
-          "AND a.doc_id < b.doc_id), " +
-          "din AS (SELECT doc_a AS doc_id FROM pr UNION SELECT doc_b AS doc_id FROM pr), " +
-          s"shv AS (SELECT doc_id, explode(array_distinct($shS)) AS s FROM dtk " +
-          "WHERE doc_id IN (SELECT doc_id FROM din)), " +
-          s"hv AS (SELECT doc_id, ${hash("s")} AS h FROM shv), " +
-          "sz AS (SELECT doc_id, count(*) AS n FROM hv GROUP BY doc_id), " +
-          "iv AS (SELECT p.doc_a, p.doc_b, count(*) AS n_inter FROM pr p " +
-          "JOIN hv a ON a.doc_id = p.doc_a " +
-          "JOIN hv b ON b.doc_id = p.doc_b AND b.h = a.h " +
-          "GROUP BY p.doc_a, p.doc_b), " +
+        (s"$minhashCtes, ${bandPairs("bands", "pr")}, $verifyS, " +
           "jv AS (SELECT p.doc_a, p.doc_b, " +
           "coalesce(iv.n_inter, CAST(0 AS BIGINT)) * 1000000 DIV " +
           "(sa.n + sb.n - coalesce(iv.n_inter, CAST(0 AS BIGINT))) AS jaccard_ppm " +
@@ -6846,58 +6478,10 @@ object LlmPipeline {
           "GROUP BY md5(coalesce(text, ''))), " +
           "rb AS (SELECT b.doc_id, b.band, b.band_key FROM bands b " +
           "JOIN grp g ON g.rep = b.doc_id), " +
-          "ok AS (SELECT band, band_key FROM rb GROUP BY band, band_key " +
-          s"HAVING count(*) <= $HotBucketCap), " +
-          "pr AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b FROM rb a " +
-          "JOIN ok ON ok.band = a.band AND ok.band_key = a.band_key " +
-          "JOIN rb b ON a.band = b.band AND a.band_key = b.band_key " +
-          "AND a.doc_id < b.doc_id), " +
-          "din AS (SELECT doc_a AS doc_id FROM pr UNION SELECT doc_b AS doc_id FROM pr), " +
-          s"shv AS (SELECT doc_id, explode(array_distinct($shS)) AS s FROM dtk " +
-          "WHERE doc_id IN (SELECT doc_id FROM din)), " +
-          s"hv AS (SELECT doc_id, ${hash("s")} AS h FROM shv), " +
-          "sz AS (SELECT doc_id, count(*) AS n FROM hv GROUP BY doc_id), " +
-          "iv AS (SELECT p.doc_a, p.doc_b, count(*) AS n_inter FROM pr p " +
-          "JOIN hv a ON a.doc_id = p.doc_a " +
-          "JOIN hv b ON b.doc_id = p.doc_b AND b.h = a.h " +
-          "GROUP BY p.doc_a, p.doc_b) " +
-          "SELECT iv.doc_a, iv.doc_b, " +
-          "1.0D - CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter) AS jaccard_dist " +
-          "FROM iv JOIN sz sa ON sa.doc_id = iv.doc_a JOIN sz sb ON sb.doc_id = iv.doc_b " +
-          "WHERE 2 * n_inter > sa.n + sb.n - n_inter " +
-          "ORDER BY doc_a, doc_b"),
+          s"${bandPairs("rb", "pr")}, $verifyS ${verifiedPairs("1.0D")} ORDER BY doc_a, doc_b"),
       "q_dedup_near" ->
-        (s"$minhashCtes, " +
-          "mem AS (SELECT doc_id, md5(coalesce(text, '')) AS norm_key FROM documents), " +
-          "grp AS (SELECT norm_key, min(doc_id) AS rep FROM mem GROUP BY norm_key), " +
-          "docrep AS (SELECT m.doc_id, g.rep FROM mem m JOIN grp g ON g.norm_key = m.norm_key), " +
-          "rb AS (SELECT b.doc_id, b.band, b.band_key FROM bands b " +
-          "JOIN docrep dr ON dr.doc_id = b.doc_id AND dr.rep = b.doc_id), " +
-          "ok AS (SELECT band, band_key FROM rb GROUP BY band, band_key " +
-          s"HAVING count(*) <= $HotBucketCap), " +
-          "pr AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b FROM rb a " +
-          "JOIN ok ON ok.band = a.band AND ok.band_key = a.band_key " +
-          "JOIN rb b ON a.band = b.band AND a.band_key = b.band_key " +
-          "AND a.doc_id < b.doc_id), " +
-          "din AS (SELECT doc_a AS doc_id FROM pr UNION SELECT doc_b AS doc_id FROM pr), " +
-          s"shv AS (SELECT doc_id, explode(array_distinct($shS)) AS s FROM dtk " +
-          "WHERE doc_id IN (SELECT doc_id FROM din)), " +
-          s"hv AS (SELECT doc_id, ${hash("s")} AS h FROM shv), " +
-          "sz AS (SELECT doc_id, count(*) AS n FROM hv GROUP BY doc_id), " +
-          "iv AS (SELECT p.doc_a, p.doc_b, count(*) AS n_inter FROM pr p " +
-          "JOIN hv a ON a.doc_id = p.doc_a " +
-          "JOIN hv b ON b.doc_id = p.doc_b AND b.h = a.h " +
-          "GROUP BY p.doc_a, p.doc_b), " +
-          "rp AS (SELECT iv.doc_a, iv.doc_b, " +
-          "1.0D - CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter) AS jaccard_dist " +
-          "FROM iv JOIN sz sa ON sa.doc_id = iv.doc_a JOIN sz sb ON sb.doc_id = iv.doc_b " +
-          "WHERE 2 * n_inter > sa.n + sb.n - n_inter), " +
-          "ex AS (SELECT least(ma.doc_id, mb.doc_id) AS doc_a, " +
-          "greatest(ma.doc_id, mb.doc_id) AS doc_b, jaccard_dist " +
-          "FROM rp JOIN docrep ma ON ma.rep = rp.doc_a JOIN docrep mb ON mb.rep = rp.doc_b " +
-          "UNION ALL SELECT m1.doc_id, m2.doc_id, 0.0D " +
-          "FROM docrep m1 JOIN docrep m2 ON m1.rep = m2.rep AND m1.doc_id < m2.doc_id) " +
-          "SELECT doc_a, doc_b, jaccard_dist FROM ex ORDER BY doc_a, doc_b"),
+        (s"$minhashCtes, $nearRepBands, ${bandPairs("rb", "pr")}, $verifyS, " +
+          s"rp AS (${verifiedPairs("1.0D")}), ${nearExpand("0.0D")}"),
       // the same rand(seed)-filter sampleBy compiles to, spelled as text
       "q_sample_stratified" -> {
         val cases = SampleFractions.toSeq.sorted
@@ -6940,8 +6524,7 @@ object LlmPipeline {
   private def ivfKmeansProbeSql: String =
     s"WITH probe AS (SELECT q AS qa, ${dotL("q", "q")} AS n2a, bucket AS probe_bucket " +
       "FROM ivf_assignments WHERE vec_id = 0) " +
-      s"SELECT a.vec_id, a.bucket, CAST(${dotL("qa", "a.q")} AS DOUBLE) / " +
-      s"sqrt(CAST(n2a AS DOUBLE) * CAST(${dotL("a.q", "a.q")} AS DOUBLE)) AS cos " +
+      s"SELECT a.vec_id, a.bucket, ${probeCos(dotL, "qa", "n2a", "a.q")} " +
       "FROM ivf_assignments a JOIN probe ON a.bucket = probe.probe_bucket " +
       "WHERE a.vec_id <> 0 ORDER BY cos DESC, vec_id LIMIT 5"
 }

@@ -1337,17 +1337,45 @@ object Multimodal {
   private val widthSql = s"CAST(320 + 16 * (${hx.format(1)}) + (${hx.format(2)}) AS INTEGER)"
   private val heightSql = s"CAST(240 + 16 * (${hx.format(3)}) + (${hx.format(4)}) AS INTEGER)"
 
+  // The stub-decoder mirrors, shared by the oracle and the Spark-SQL
+  // surface: `blob` is the dialect's UTF-8 bytes of coalesce(text, ''),
+  // `div` its integer division.
+  private val duckBlob = "encode(coalesce(text, ''))"
+  private val sparkBlob = "CAST(coalesce(text, '') AS BINARY)"
+  private def stubHead(blob: String) =
+    s"SELECT doc_id, CAST(octet_length($blob) AS BIGINT) AS n_bytes, " +
+      "md5(coalesce(text, '')) AS content_md5, "
+  private val stubTail = "'stub-md5' AS decoder " +
+    "FROM documents ORDER BY doc_id"
+  private def decodeSql(blob: String) =
+    stubHead(blob) + s"$widthSql AS width, $heightSql AS height, " +
+      s"CAST(1 + (${hx.format(5)}) % 3 AS INTEGER) AS channels, " + stubTail
+  private def audioSql(blob: String, div: String) = {
+    val rate = s"8000 * (1 + (16 * (${hx.format(1)}) + (${hx.format(2)})) % 6)"
+    stubHead(blob) + s"CAST(1 + (${hx.format(3)}) % 2 AS INTEGER) AS n_channels, " +
+      s"CAST($rate AS INTEGER) AS sample_rate_hz, " +
+      s"CAST(8 * (1 + (${hx.format(4)}) % 2) AS INTEGER) AS bits_per_sample, " +
+      s"CAST(octet_length($blob) AS BIGINT) AS n_frames, " +
+      s"CAST(CAST(octet_length($blob) AS BIGINT) * 1000 $div " +
+      s"($rate) AS BIGINT) AS duration_ms, " + stubTail
+  }
+  private def videoSql(blob: String, div: String) =
+    stubHead(blob) + s"$widthSql AS width, $heightSql AS height, " +
+      s"CAST(40 * ((octet_length($blob) + 99) $div 100) AS BIGINT) AS duration_ms, " + stubTail
+
+  // phash candidate pairs: docs sharing a capped (band, bv) bucket of `ab`
+  private val phashCand =
+    "keep AS (SELECT band, bv FROM ab GROUP BY band, bv " +
+      s"HAVING count(*) <= $PhashBucketCap), " +
+      "b AS (SELECT ab.* FROM ab JOIN keep ON ab.band = keep.band AND ab.bv = keep.bv), " +
+      "cand AS (SELECT DISTINCT a.doc_id AS doc_a, c.doc_id AS doc_b " +
+      "FROM b a JOIN b c ON a.band = c.band AND a.bv = c.bv AND a.doc_id < c.doc_id)"
+
   val oracle: Map[String, String] = Map(
     // decoder is constant 'stub-md5' in the mirror: the text corpus has
     // no image-magic payloads (asserted per-SF by MultimodalSpec), so
     // the real header-parse path never fires on the fixture tables
-    "q_mm_decode" ->
-      ("SELECT doc_id, CAST(octet_length(encode(coalesce(text, ''))) AS BIGINT) AS n_bytes, " +
-        "md5(coalesce(text, '')) AS content_md5, " +
-        s"$widthSql AS width, $heightSql AS height, " +
-        s"CAST(1 + (${hx.format(5)}) % 3 AS INTEGER) AS channels, " +
-        "'stub-md5' AS decoder " +
-        "FROM documents ORDER BY doc_id"),
+    "q_mm_decode" -> decodeSql(duckBlob),
     // same stub premise: no codec-free image payloads in the text
     // corpus, so every phash is the md5 prefix the mirror recomputes;
     // the REAL aHash path is pinned by MultimodalSpec's planted images
@@ -1355,11 +1383,7 @@ object Multimodal {
       (s"WITH h AS (SELECT doc_id, substr(md5(coalesce(text, '')), 1, 16) AS ph FROM documents), " +
         s"ab AS (SELECT doc_id, i AS band, substr(ph, 1 + 2 * i, 2) AS bv " +
         s"FROM h CROSS JOIN range($PhashBands) t(i)), " +
-        "keep AS (SELECT band, bv FROM ab GROUP BY band, bv " +
-        s"HAVING count(*) <= $PhashBucketCap), " +
-        "b AS (SELECT ab.* FROM ab JOIN keep ON ab.band = keep.band AND ab.bv = keep.bv), " +
-        "cand AS (SELECT DISTINCT a.doc_id AS doc_a, c.doc_id AS doc_b " +
-        "FROM b a JOIN b c ON a.band = c.band AND a.bv = c.bv AND a.doc_id < c.doc_id), " +
+        s"$phashCand, " +
         "ham AS (SELECT c.doc_a, c.doc_b, " +
         "CAST(sum(bit_count(xor(strpos('0123456789abcdef', substr(ha.ph, i + 1, 1)) - 1, " +
         "strpos('0123456789abcdef', substr(hb.ph, i + 1, 1)) - 1))) AS BIGINT) AS hamming " +
@@ -1369,26 +1393,10 @@ object Multimodal {
         "FROM ham ORDER BY doc_a, doc_b"),
     // constant-decoder premise as q_mm_decode: the text corpus has no
     // RIFF/".snd" payloads (asserted per-SF), so only the stub fires
-    "q_mm_audio" ->
-      ("SELECT doc_id, CAST(octet_length(encode(coalesce(text, ''))) AS BIGINT) AS n_bytes, " +
-        "md5(coalesce(text, '')) AS content_md5, " +
-        s"CAST(1 + (${hx.format(3)}) % 2 AS INTEGER) AS n_channels, " +
-        s"CAST(8000 * (1 + (16 * (${hx.format(1)}) + (${hx.format(2)})) % 6) AS INTEGER) AS sample_rate_hz, " +
-        s"CAST(8 * (1 + (${hx.format(4)}) % 2) AS INTEGER) AS bits_per_sample, " +
-        "CAST(octet_length(encode(coalesce(text, ''))) AS BIGINT) AS n_frames, " +
-        "CAST(CAST(octet_length(encode(coalesce(text, ''))) AS BIGINT) * 1000 // " +
-        s"(8000 * (1 + (16 * (${hx.format(1)}) + (${hx.format(2)})) % 6)) AS BIGINT) AS duration_ms, " +
-        "'stub-md5' AS decoder " +
-        "FROM documents ORDER BY doc_id"),
+    "q_mm_audio" -> audioSql(duckBlob, "//"),
     // same constant-decoder premise: no ftyp/RIFF-AVI payloads in the
     // text corpus (asserted per-SF), so only the stub fires
-    "q_mm_video" ->
-      ("SELECT doc_id, CAST(octet_length(encode(coalesce(text, ''))) AS BIGINT) AS n_bytes, " +
-        "md5(coalesce(text, '')) AS content_md5, " +
-        s"$widthSql AS width, $heightSql AS height, " +
-        "CAST(40 * ((octet_length(encode(coalesce(text, ''))) + 99) // 100) AS BIGINT) AS duration_ms, " +
-        "'stub-md5' AS decoder " +
-        "FROM documents ORDER BY doc_id"),
+    "q_mm_video" -> videoSql(duckBlob, "//"),
     "q_mm_resize" ->
       (s"WITH dims AS (SELECT doc_id, $widthSql AS width, $heightSql AS height FROM documents), " +
         "sc AS (SELECT *, least(CAST(224 AS DOUBLE) / width, CAST(224 AS DOUBLE) / height) AS scale FROM dims) " +
@@ -1449,11 +1457,7 @@ object Multimodal {
       ("WITH h AS (SELECT doc_id, substring(md5(coalesce(text, '')), 1, 16) AS ph FROM documents), " +
         "ab AS (SELECT doc_id, band, substring(ph, 1 + 2 * band, 2) AS bv " +
         s"FROM h LATERAL VIEW explode(sequence(0, ${PhashBands - 1})) t AS band), " +
-        "keep AS (SELECT band, bv FROM ab GROUP BY band, bv " +
-        s"HAVING count(*) <= $PhashBucketCap), " +
-        "b AS (SELECT ab.* FROM ab JOIN keep ON ab.band = keep.band AND ab.bv = keep.bv), " +
-        "cand AS (SELECT DISTINCT a.doc_id AS doc_a, c.doc_id AS doc_b " +
-        "FROM b a JOIN b c ON a.band = c.band AND a.bv = c.bv AND a.doc_id < c.doc_id), " +
+        s"$phashCand, " +
         "j AS (SELECT c.doc_a, c.doc_b, ha.ph AS pa, hb.ph AS pb " +
         "FROM cand c JOIN h ha ON ha.doc_id = c.doc_a JOIN h hb ON hb.doc_id = c.doc_b), " +
         "ham AS (SELECT doc_a, doc_b, " +
@@ -1463,31 +1467,9 @@ object Multimodal {
         "FROM j) " +
         s"SELECT doc_a, doc_b, hamming, hamming <= $PhashMaxHamming AS is_dup " +
         "FROM ham ORDER BY doc_a, doc_b"),
-    "q_mm_decode" ->
-      ("SELECT doc_id, CAST(octet_length(CAST(coalesce(text, '') AS BINARY)) AS BIGINT) AS n_bytes, " +
-        "md5(coalesce(text, '')) AS content_md5, " +
-        s"$widthSql AS width, $heightSql AS height, " +
-        s"CAST(1 + (${hx.format(5)}) % 3 AS INTEGER) AS channels, " +
-        "'stub-md5' AS decoder " +
-        "FROM documents ORDER BY doc_id"),
-    "q_mm_audio" ->
-      ("SELECT doc_id, CAST(octet_length(CAST(coalesce(text, '') AS BINARY)) AS BIGINT) AS n_bytes, " +
-        "md5(coalesce(text, '')) AS content_md5, " +
-        s"CAST(1 + (${hx.format(3)}) % 2 AS INTEGER) AS n_channels, " +
-        s"CAST(8000 * (1 + (16 * (${hx.format(1)}) + (${hx.format(2)})) % 6) AS INTEGER) AS sample_rate_hz, " +
-        s"CAST(8 * (1 + (${hx.format(4)}) % 2) AS INTEGER) AS bits_per_sample, " +
-        "CAST(octet_length(CAST(coalesce(text, '') AS BINARY)) AS BIGINT) AS n_frames, " +
-        "CAST(CAST(octet_length(CAST(coalesce(text, '') AS BINARY)) AS BIGINT) * 1000 DIV " +
-        s"(8000 * (1 + (16 * (${hx.format(1)}) + (${hx.format(2)})) % 6)) AS BIGINT) AS duration_ms, " +
-        "'stub-md5' AS decoder " +
-        "FROM documents ORDER BY doc_id"),
-    "q_mm_video" ->
-      ("SELECT doc_id, CAST(octet_length(CAST(coalesce(text, '') AS BINARY)) AS BIGINT) AS n_bytes, " +
-        "md5(coalesce(text, '')) AS content_md5, " +
-        s"$widthSql AS width, $heightSql AS height, " +
-        "CAST(40 * ((octet_length(CAST(coalesce(text, '') AS BINARY)) + 99) DIV 100) AS BIGINT) AS duration_ms, " +
-        "'stub-md5' AS decoder " +
-        "FROM documents ORDER BY doc_id"),
+    "q_mm_decode" -> decodeSql(sparkBlob),
+    "q_mm_audio" -> audioSql(sparkBlob, "DIV"),
+    "q_mm_video" -> videoSql(sparkBlob, "DIV"),
     "q_mm_frame_sample" ->
       ("WITH f AS (SELECT doc_id, " +
         "CAST((octet_length(CAST(coalesce(text, '') AS BINARY)) + 99) DIV 100 AS BIGINT) AS n_frames FROM documents) " +

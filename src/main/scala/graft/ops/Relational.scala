@@ -1388,6 +1388,85 @@ object Relational {
     "q_scalar_hash"         -> (scalarHash _),
   )
 
+  // Texts shared by the DuckDB oracle and the Spark-SQL surface whose
+  // only dialect delta is the epoch-micros spelling: `us` converts a
+  // timestamp, `dateUs` a date (DuckDB epoch_us; Spark unix_micros,
+  // casting a date to TIMESTAMP first).
+  private def epochUs(c: String) = s"epoch_us($c)"
+  private def unixMicros(c: String) = s"unix_micros($c)"
+  private def dateMicros(c: String) = unixMicros(s"CAST($c AS TIMESTAMP)")
+  private def joinLargeOrdersSql(dateUs: String => String) =
+    s"SELECT c_name, c_custkey, o_orderkey, ${dateUs("o_orderdate")} AS od_us, " +
+      "CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS totalprice, " +
+      "CAST(sum_qty_d AS DOUBLE) AS sum_qty " +
+      "FROM orders " +
+      "JOIN (SELECT l_orderkey, SUM(CAST(l_quantity AS DECIMAL(18,2))) AS sum_qty_d " +
+      "FROM lineitem GROUP BY l_orderkey " +
+      "HAVING SUM(CAST(l_quantity AS DECIMAL(18,2))) > 250) b ON o_orderkey = b.l_orderkey " +
+      "JOIN customer ON o_custkey = c_custkey " +
+      "ORDER BY totalprice DESC, o_orderkey LIMIT 100"
+  private def joinShippingPrioritySql(dateUs: String => String) =
+    s"SELECT l_orderkey, ${dateUs("o_orderdate")} AS od_us, o_orderpriority, " +
+      "CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue " +
+      "FROM customer " +
+      "JOIN orders ON c_custkey = o_custkey " +
+      "JOIN lineitem ON l_orderkey = o_orderkey " +
+      "WHERE c_mktsegment = 'BUILDING' " +
+      "AND o_orderdate < TIMESTAMP '1998-06-01' AND l_shipdate > TIMESTAMP '1998-06-01' " +
+      "GROUP BY l_orderkey, o_orderdate, o_orderpriority " +
+      "ORDER BY revenue DESC, l_orderkey LIMIT 10"
+  // `shipdate` is the selected l_shipdate column
+  private def windowRunningSql(shipdate: String) =
+    s"SELECT l_suppkey, $shipdate, l_orderkey, l_linenumber, l_quantity, " +
+      "CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) OVER " +
+      "(PARTITION BY l_suppkey ORDER BY l_shipdate ASC, l_orderkey ASC, l_linenumber ASC " +
+      "RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_qty " +
+      "FROM lineitem " +
+      "ORDER BY l_suppkey, l_shipdate, l_orderkey, l_linenumber, l_quantity"
+  private def windowFirstLastSql(us: String => String) =
+    s"SELECT user_id, event_id, ${us("ts")} AS ts_us, event_type, " +
+      "first_value(event_type) OVER w AS first_type, " +
+      "last_value(event_type) OVER w AS last_type, " +
+      "nth_value(event_type, 2) OVER w AS second_type " +
+      "FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id " +
+      "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) " +
+      "ORDER BY user_id, ts_us, event_id"
+  private def windowTrailingSql(us: String => String) =
+    s"SELECT user_id, event_id, ${us("ts")} AS ts_us, " +
+      s"count(*) OVER (PARTITION BY user_id ORDER BY ${us("ts")} " +
+      "RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW) AS n_trailing_1h " +
+      "FROM events ORDER BY user_id, ts_us, event_id"
+  private def windowLagLeadSql(us: String => String) =
+    s"SELECT user_id, event_id, ${us("ts")} AS ts_us, value, " +
+      "lag(value) OVER w AS prev_value, lead(value) OVER w AS next_value, " +
+      "value - lag(value) OVER w AS delta FROM events " +
+      "WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id, value) " +
+      "ORDER BY user_id, ts_us, event_id, value"
+  private def windowNtileSql(us: String => String) =
+    s"SELECT user_id, event_id, ${us("ts")} AS ts_us, " +
+      "ntile(4) OVER (PARTITION BY user_id ORDER BY ts, event_id, value) AS quartile " +
+      "FROM events ORDER BY user_id, ts_us, event_id, quartile"
+  // SCD2: each order version valid until the customer's next order
+  private val scd2Versions =
+    "WITH v AS (SELECT o_custkey, o_orderkey, o_orderstatus, o_orderdate, " +
+      "lead(o_orderdate) OVER (PARTITION BY o_custkey " +
+      "ORDER BY o_orderdate, o_orderkey) AS valid_to FROM orders)"
+  private def scd2Interval(dateUs: String => String) =
+    "SELECT o_custkey, o_orderkey, o_orderstatus, " +
+      s"${dateUs("o_orderdate")} AS valid_from_us, ${dateUs("valid_to")} AS valid_to_us, " +
+      "valid_to IS NULL AS is_current FROM v"
+  private def scd2IntervalsSql(dateUs: String => String) =
+    s"$scd2Versions ${scd2Interval(dateUs)} " +
+      "ORDER BY o_custkey, valid_from_us, o_orderkey"
+  private def scd2AsofSql(dateUs: String => String, us: String => String) = {
+    val asOf = us("TIMESTAMP '1996-06-01 00:00:00'")
+    s"$scd2Versions, iv AS (${scd2Interval(dateUs)}) " +
+      "SELECT o_custkey, o_orderkey, o_orderstatus, valid_from_us, is_current " +
+      s"FROM iv WHERE valid_from_us <= $asOf " +
+      s"AND (valid_to_us IS NULL OR valid_to_us > $asOf) " +
+      "ORDER BY o_custkey"
+  }
+
   val oracle: Map[String, String] = Map(
     // dialect-neutral (CASE sums, LEFT JOIN, UNION ALL): runs verbatim
     // in DuckDB (oracle) and Spark (SQL front door)
@@ -1430,38 +1509,10 @@ object Relational {
         "cume_dist() OVER (PARTITION BY o_orderpriority " +
         "ORDER BY CAST(o_totalprice AS DECIMAL(18,2))) AS cume " +
         "FROM orders ORDER BY o_orderpriority, o_orderkey"),
-    "q_window_first_last" ->
-      ("SELECT user_id, event_id, epoch_us(ts) AS ts_us, event_type, " +
-        "first_value(event_type) OVER w AS first_type, " +
-        "last_value(event_type) OVER w AS last_type, " +
-        "nth_value(event_type, 2) OVER w AS second_type " +
-        "FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) " +
-        "ORDER BY user_id, ts_us, event_id"),
-    "q_scd2_intervals" ->
-      ("WITH v AS (SELECT o_custkey, o_orderkey, o_orderstatus, o_orderdate, " +
-        "lead(o_orderdate) OVER (PARTITION BY o_custkey " +
-        "ORDER BY o_orderdate, o_orderkey) AS valid_to FROM orders) " +
-        "SELECT o_custkey, o_orderkey, o_orderstatus, " +
-        "epoch_us(o_orderdate) AS valid_from_us, epoch_us(valid_to) AS valid_to_us, " +
-        "valid_to IS NULL AS is_current FROM v " +
-        "ORDER BY o_custkey, valid_from_us, o_orderkey"),
-    "q_window_trailing" ->
-      ("SELECT user_id, event_id, epoch_us(ts) AS ts_us, " +
-        "count(*) OVER (PARTITION BY user_id ORDER BY epoch_us(ts) " +
-        "RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW) AS n_trailing_1h " +
-        "FROM events ORDER BY user_id, ts_us, event_id"),
-    "q_scd2_asof" ->
-      ("WITH v AS (SELECT o_custkey, o_orderkey, o_orderstatus, o_orderdate, " +
-        "lead(o_orderdate) OVER (PARTITION BY o_custkey " +
-        "ORDER BY o_orderdate, o_orderkey) AS valid_to FROM orders), " +
-        "iv AS (SELECT o_custkey, o_orderkey, o_orderstatus, " +
-        "epoch_us(o_orderdate) AS valid_from_us, epoch_us(valid_to) AS valid_to_us, " +
-        "valid_to IS NULL AS is_current FROM v) " +
-        "SELECT o_custkey, o_orderkey, o_orderstatus, valid_from_us, is_current " +
-        "FROM iv WHERE valid_from_us <= epoch_us(TIMESTAMP '1996-06-01 00:00:00') " +
-        "AND (valid_to_us IS NULL OR valid_to_us > epoch_us(TIMESTAMP '1996-06-01 00:00:00')) " +
-        "ORDER BY o_custkey"),
+    "q_window_first_last" -> windowFirstLastSql(epochUs),
+    "q_scd2_intervals" -> scd2IntervalsSql(epochUs),
+    "q_window_trailing" -> windowTrailingSql(epochUs),
+    "q_scd2_asof" -> scd2AsofSql(epochUs, epochUs),
     "q_subquery_corr" ->
       ("WITH o AS (SELECT o_orderkey, o_custkey, " +
         "CAST(o_totalprice AS DECIMAL(18,2)) AS price FROM orders), " +
@@ -1491,26 +1542,8 @@ object Relational {
         "WHERE r_name = 'ASIA' " +
         "AND o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '1998-01-01' " +
         "GROUP BY n_name ORDER BY n_name"),
-    "q_join_shipping_priority" ->
-      ("SELECT l_orderkey, epoch_us(o_orderdate) AS od_us, o_orderpriority, " +
-        "CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue " +
-        "FROM customer " +
-        "JOIN orders ON c_custkey = o_custkey " +
-        "JOIN lineitem ON l_orderkey = o_orderkey " +
-        "WHERE c_mktsegment = 'BUILDING' " +
-        "AND o_orderdate < TIMESTAMP '1998-06-01' AND l_shipdate > TIMESTAMP '1998-06-01' " +
-        "GROUP BY l_orderkey, o_orderdate, o_orderpriority " +
-        "ORDER BY revenue DESC, l_orderkey LIMIT 10"),
-    "q_join_large_orders" ->
-      ("SELECT c_name, c_custkey, o_orderkey, epoch_us(o_orderdate) AS od_us, " +
-        "CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS totalprice, " +
-        "CAST(sum_qty_d AS DOUBLE) AS sum_qty " +
-        "FROM orders " +
-        "JOIN (SELECT l_orderkey, SUM(CAST(l_quantity AS DECIMAL(18,2))) AS sum_qty_d " +
-        "FROM lineitem GROUP BY l_orderkey " +
-        "HAVING SUM(CAST(l_quantity AS DECIMAL(18,2))) > 250) b ON o_orderkey = b.l_orderkey " +
-        "JOIN customer ON o_custkey = c_custkey " +
-        "ORDER BY totalprice DESC, o_orderkey LIMIT 100"),
+    "q_join_shipping_priority" -> joinShippingPrioritySql(epochUs),
+    "q_join_large_orders" -> joinLargeOrdersSql(epochUs),
     // deliberately the TEXTBOOK correlated form (triple lineitem scan,
     // EXISTS + NOT EXISTS): the engine runs the single-scan aggregate
     // rewrite, so a green row proves the rewrite, not the arithmetic
@@ -1730,16 +1763,8 @@ object Relational {
         "count(*) FILTER (WHERE o_orderstatus = 'F') AS n_f, " +
         "count(*) FILTER (WHERE o_orderstatus = 'P') AS n_p " +
         "FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority"),
-    "q_window_lag_lead" ->
-      ("SELECT user_id, event_id, epoch_us(ts) AS ts_us, value, " +
-        "lag(value) OVER w AS prev_value, lead(value) OVER w AS next_value, " +
-        "value - lag(value) OVER w AS delta FROM events " +
-        "WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id, value) " +
-        "ORDER BY user_id, ts_us, event_id, value"),
-    "q_window_ntile" ->
-      ("SELECT user_id, event_id, epoch_us(ts) AS ts_us, " +
-        "ntile(4) OVER (PARTITION BY user_id ORDER BY ts, event_id, value) AS quartile " +
-        "FROM events ORDER BY user_id, ts_us, event_id, quartile"),
+    "q_window_lag_lead" -> windowLagLeadSql(epochUs),
+    "q_window_ntile" -> windowNtileSql(epochUs),
     "q_agg_cube" ->
       ("SELECT l_returnflag, l_linestatus, count(*) AS n_items, " +
         "CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty " +
@@ -1807,13 +1832,7 @@ object Relational {
         "(SELECT o_custkey, o_orderkey, o_totalprice, " +
         "rank() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn " +
         "FROM orders) WHERE rn <= 3 ORDER BY o_custkey, rn"),
-    "q_window_running" ->
-      ("SELECT l_suppkey, l_shipdate, l_orderkey, l_linenumber, l_quantity, " +
-        "CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) OVER " +
-        "(PARTITION BY l_suppkey ORDER BY l_shipdate ASC, l_orderkey ASC, l_linenumber ASC " +
-        "RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_qty " +
-        "FROM lineitem " +
-        "ORDER BY l_suppkey, l_shipdate, l_orderkey, l_linenumber, l_quantity"),
+    "q_window_running" -> windowRunningSql("l_shipdate"),
     "q_union" ->
       ("SELECT event_id, user_id, event_type FROM events WHERE event_id < 200 " +
         "UNION SELECT event_id, user_id, event_type FROM events WHERE event_type = 'error' " +
@@ -1842,37 +1861,12 @@ object Relational {
     */
   val sparkSql: Map[String, String] = Map(
     // epoch_us → unix_micros is the only dialect delta
-    "q_join_large_orders" ->
-      ("SELECT c_name, c_custkey, o_orderkey, unix_micros(o_orderdate) AS od_us, " +
-        "CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS totalprice, " +
-        "CAST(sum_qty_d AS DOUBLE) AS sum_qty " +
-        "FROM orders " +
-        "JOIN (SELECT l_orderkey, SUM(CAST(l_quantity AS DECIMAL(18,2))) AS sum_qty_d " +
-        "FROM lineitem GROUP BY l_orderkey " +
-        "HAVING SUM(CAST(l_quantity AS DECIMAL(18,2))) > 250) b ON o_orderkey = b.l_orderkey " +
-        "JOIN customer ON o_custkey = c_custkey " +
-        "ORDER BY totalprice DESC, o_orderkey LIMIT 100"),
-    "q_join_shipping_priority" ->
-      ("SELECT l_orderkey, unix_micros(o_orderdate) AS od_us, o_orderpriority, " +
-        "CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue " +
-        "FROM customer " +
-        "JOIN orders ON c_custkey = o_custkey " +
-        "JOIN lineitem ON l_orderkey = o_orderkey " +
-        "WHERE c_mktsegment = 'BUILDING' " +
-        "AND o_orderdate < TIMESTAMP '1998-06-01' AND l_shipdate > TIMESTAMP '1998-06-01' " +
-        "GROUP BY l_orderkey, o_orderdate, o_orderpriority " +
-        "ORDER BY revenue DESC, l_orderkey LIMIT 10"),
+    "q_join_large_orders" -> joinLargeOrdersSql(unixMicros),
+    "q_join_shipping_priority" -> joinShippingPrioritySql(unixMicros),
     // raw l_shipdate in the output: NTZ cast matches the DataFrame form
     // (and the oracle's naive TIMESTAMP type class) — Spark reads the
     // naive parquet micros as LTZ, DuckDB as naive
-    "q_window_running" ->
-      ("SELECT l_suppkey, CAST(l_shipdate AS TIMESTAMP_NTZ) AS l_shipdate, " +
-        "l_orderkey, l_linenumber, l_quantity, " +
-        "CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) OVER " +
-        "(PARTITION BY l_suppkey ORDER BY l_shipdate ASC, l_orderkey ASC, l_linenumber ASC " +
-        "RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_qty " +
-        "FROM lineitem " +
-        "ORDER BY l_suppkey, l_shipdate, l_orderkey, l_linenumber, l_quantity"),
+    "q_window_running" -> windowRunningSql("CAST(l_shipdate AS TIMESTAMP_NTZ) AS l_shipdate"),
     // non-oracle (sketch outputs — rows-only-compared in SqlSurfaceSpec):
     // identical function calls to the DataFrame forms, so the sketches
     // are bit-identical, not just approximately equal
@@ -1904,49 +1898,11 @@ object Relational {
       ("SELECT event_id, get_json_object(props, '$.k') AS k_str, " +
         "CAST(get_json_object(props, '$.k') AS INTEGER) AS k_int " +
         "FROM events ORDER BY event_id"),
-    "q_window_first_last" ->
-      ("SELECT user_id, event_id, unix_micros(ts) AS ts_us, event_type, " +
-        "first_value(event_type) OVER w AS first_type, " +
-        "last_value(event_type) OVER w AS last_type, " +
-        "nth_value(event_type, 2) OVER w AS second_type FROM events " +
-        "WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) " +
-        "ORDER BY user_id, ts_us, event_id"),
-    "q_scd2_intervals" ->
-      ("WITH v AS (SELECT o_custkey, o_orderkey, o_orderstatus, o_orderdate, " +
-        "lead(o_orderdate) OVER (PARTITION BY o_custkey " +
-        "ORDER BY o_orderdate, o_orderkey) AS valid_to FROM orders) " +
-        "SELECT o_custkey, o_orderkey, o_orderstatus, " +
-        "unix_micros(CAST(o_orderdate AS TIMESTAMP)) AS valid_from_us, " +
-        "unix_micros(CAST(valid_to AS TIMESTAMP)) AS valid_to_us, " +
-        "valid_to IS NULL AS is_current FROM v " +
-        "ORDER BY o_custkey, valid_from_us, o_orderkey"),
-    "q_window_trailing" ->
-      ("SELECT user_id, event_id, unix_micros(ts) AS ts_us, " +
-        "count(*) OVER (PARTITION BY user_id ORDER BY unix_micros(ts) " +
-        "RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW) AS n_trailing_1h " +
-        "FROM events ORDER BY user_id, ts_us, event_id"),
-    "q_scd2_asof" ->
-      ("WITH v AS (SELECT o_custkey, o_orderkey, o_orderstatus, o_orderdate, " +
-        "lead(o_orderdate) OVER (PARTITION BY o_custkey " +
-        "ORDER BY o_orderdate, o_orderkey) AS valid_to FROM orders), " +
-        "iv AS (SELECT o_custkey, o_orderkey, o_orderstatus, " +
-        "unix_micros(CAST(o_orderdate AS TIMESTAMP)) AS valid_from_us, " +
-        "unix_micros(CAST(valid_to AS TIMESTAMP)) AS valid_to_us, " +
-        "valid_to IS NULL AS is_current FROM v) " +
-        "SELECT o_custkey, o_orderkey, o_orderstatus, valid_from_us, is_current " +
-        "FROM iv WHERE valid_from_us <= unix_micros(TIMESTAMP '1996-06-01 00:00:00') " +
-        "AND (valid_to_us IS NULL OR valid_to_us > unix_micros(TIMESTAMP '1996-06-01 00:00:00')) " +
-        "ORDER BY o_custkey"),
-    "q_window_lag_lead" ->
-      ("SELECT user_id, event_id, unix_micros(ts) AS ts_us, value, " +
-        "lag(value) OVER w AS prev_value, lead(value) OVER w AS next_value, " +
-        "value - lag(value) OVER w AS delta FROM events " +
-        "WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id, value) " +
-        "ORDER BY user_id, ts_us, event_id, value"),
-    "q_window_ntile" ->
-      ("SELECT user_id, event_id, unix_micros(ts) AS ts_us, " +
-        "ntile(4) OVER (PARTITION BY user_id ORDER BY ts, event_id, value) AS quartile " +
-        "FROM events ORDER BY user_id, ts_us, event_id, quartile"),
+    "q_window_first_last" -> windowFirstLastSql(unixMicros),
+    "q_scd2_intervals" -> scd2IntervalsSql(dateMicros),
+    "q_window_trailing" -> windowTrailingSql(unixMicros),
+    "q_scd2_asof" -> scd2AsofSql(dateMicros, unixMicros),
+    "q_window_lag_lead" -> windowLagLeadSql(unixMicros),
+    "q_window_ntile" -> windowNtileSql(unixMicros),
   )
 }

@@ -584,9 +584,12 @@ object Storage {
       rows.write.mode("overwrite").parquet(tmp)
       // Write-side sizing (guide §6): builders fan their map stages out
       // to every core (Tables.fanOut), which would otherwise publish
-      // one artifact FILE per map partition — 32 tiny files at test SFs
-      // (192 serial footer opens in q_substrate_stats alone measured a
-      // 3.2× regression). Compact ONLY the pathological layout, after
+      // one artifact FILE per map partition — 32 tiny files at test SFs,
+      // a file open and footer read for every later reader. (The 3.2×
+      // regression once measured here was q_substrate_stats' serial
+      // footer opens, which ParquetMeta.footers now reads concurrently;
+      // what the tiny-file layout costs today's readers is unmeasured.)
+      // Compact ONLY the pathological layout, after
       // the fact: when the staged artifact has many times more files
       // than its bytes justify (and is small enough that a local
       // rewrite is trivial), read it back and rewrite coalesced to
@@ -821,16 +824,21 @@ object Storage {
       s"WITH a AS (SELECT count(*) AS n_rows, $aggSelects FROM documents) " +
         s"$branches ORDER BY column_name"
     },
-    "q_fileindex_build" ->
-      (s"WITH b AS ($fileBloomDuck) " +
-        "SELECT file_id, bit_pos FROM b ORDER BY file_id, bit_pos"),
-    "q_fileindex_prune" ->
-      (s"WITH idx AS ($fileBloomDuck), " +
-        s"p AS (SELECT DISTINCT bit_pos FROM (${probePosDuck(1)} UNION ALL ${probePosDuck(2)})), " +
-        "n AS (SELECT count(*) AS n_need FROM p) " +
-        "SELECT file_id FROM idx JOIN p USING (bit_pos) CROSS JOIN n " +
-        "GROUP BY file_id, n_need HAVING count(*) = n_need " +
-        "ORDER BY file_id"))
+    "q_fileindex_build" -> fileIndexBuildSql(fileBloomDuck),
+    "q_fileindex_prune" -> fileIndexPruneSql(fileBloomDuck, probePosDuck))
+
+  // the file-index texts over the dialect's index rows `bloom` and probe
+  // positions `probePos(1|2)`
+  private def fileIndexBuildSql(bloom: String) =
+    s"WITH b AS ($bloom) " +
+      "SELECT file_id, bit_pos FROM b ORDER BY file_id, bit_pos"
+  private def fileIndexPruneSql(bloom: String, probePos: Int => String) =
+    s"WITH idx AS ($bloom), " +
+      s"p AS (SELECT DISTINCT bit_pos FROM (${probePos(1)} UNION ALL ${probePos(2)})), " +
+      "n AS (SELECT count(*) AS n_need FROM p) " +
+      "SELECT file_id FROM idx JOIN p USING (bit_pos) CROSS JOIN n " +
+      "GROUP BY file_id, n_need HAVING count(*) = n_need " +
+      "ORDER BY file_id"
 
   /** DuckDB form of the index rows — generated from the SAME position
     * template as the Spark builders (bloomHash/bloomPosPair).
@@ -878,16 +886,8 @@ object Storage {
         s"ORDER BY n_chunks DESC, part_key LIMIT $SkewTopN"),
     "q_profile_columns" ->
       oracle("q_profile_columns").replace(" AS VARCHAR)", " AS STRING)"),
-    "q_fileindex_build" ->
-      (s"WITH b AS ($fileBloomSpark) " +
-        "SELECT file_id, bit_pos FROM b ORDER BY file_id, bit_pos"),
-    "q_fileindex_prune" ->
-      (s"WITH idx AS ($fileBloomSpark), " +
-        s"p AS (SELECT DISTINCT bit_pos FROM (${probePosSpark(1)} UNION ALL ${probePosSpark(2)})), " +
-        "n AS (SELECT count(*) AS n_need FROM p) " +
-        "SELECT file_id FROM idx JOIN p USING (bit_pos) CROSS JOIN n " +
-        "GROUP BY file_id, n_need HAVING count(*) = n_need " +
-        "ORDER BY file_id"))
+    "q_fileindex_build" -> fileIndexBuildSql(fileBloomSpark),
+    "q_fileindex_prune" -> fileIndexPruneSql(fileBloomSpark, probePosSpark))
 
   /** Spark-SQL form of the index rows — same template, spark dialect. */
   private def fileBloomSpark: String =

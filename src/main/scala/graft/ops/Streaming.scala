@@ -516,6 +516,28 @@ object Streaming {
     "q_retention"         -> (retention _),
   )
 
+  // Texts shared by the oracle and the Spark-SQL surface; `us` is the
+  // dialect's epoch-micros function (DuckDB epoch_us, Spark unix_micros).
+  private def firstSeenSql(us: String) =
+    s"SELECT user_id, $us(min(ts)) AS first_us, count(*) AS n_events, " +
+      "min(ts) > TIMESTAMP '2024-01-02 00:00:00' AS late_joiner " +
+      "FROM events GROUP BY user_id ORDER BY user_id"
+  private def funnelSql(us: String) =
+    s"WITH s1 AS (SELECT user_id, min(CASE WHEN event_type = '${FunnelStages(0)}' " +
+      s"THEN $us(ts) END) AS t1 FROM events GROUP BY user_id), " +
+      s"s2 AS (SELECT e.user_id, min(CASE WHEN e.event_type = '${FunnelStages(1)}' " +
+      s"AND $us(e.ts) > s1.t1 THEN $us(e.ts) END) AS t2 " +
+      "FROM events e JOIN s1 ON s1.user_id = e.user_id GROUP BY e.user_id), " +
+      s"s3 AS (SELECT e.user_id, min(CASE WHEN e.event_type = '${FunnelStages(2)}' " +
+      s"AND $us(e.ts) > s2.t2 THEN $us(e.ts) END) AS t3 " +
+      "FROM events e JOIN s2 ON s2.user_id = e.user_id GROUP BY e.user_id), " +
+      "n AS (SELECT (SELECT count(*) FROM s1 WHERE t1 IS NOT NULL) AS n1, " +
+      "(SELECT count(*) FROM s2 WHERE t2 IS NOT NULL) AS n2, " +
+      "(SELECT count(*) FROM s3 WHERE t3 IS NOT NULL) AS n3) " +
+      s"SELECT '1_${FunnelStages(0)}' AS stage, n1 AS n_users FROM n " +
+      s"UNION ALL SELECT '2_${FunnelStages(1)}', n2 FROM n " +
+      s"UNION ALL SELECT '3_${FunnelStages(2)}', n3 FROM n ORDER BY stage"
+
   val oracle: Map[String, String] = Map(
     "q_stream_liveness" ->
       ("SELECT user_id, epoch_us(max(ts)) AS last_us, " +
@@ -523,10 +545,7 @@ object Streaming {
         s"CASE WHEN date_diff('second', max(ts), TIMESTAMP '$cutoff') > 604800 " +
         "THEN 'dead' ELSE 'alive' END AS status " +
         "FROM events GROUP BY user_id ORDER BY user_id"),
-    "q_stream_first_seen" ->
-      ("SELECT user_id, epoch_us(min(ts)) AS first_us, count(*) AS n_events, " +
-        "min(ts) > TIMESTAMP '2024-01-02 00:00:00' AS late_joiner " +
-        "FROM events GROUP BY user_id ORDER BY user_id"),
+    "q_stream_first_seen" -> firstSeenSql("epoch_us"),
     "q_stream_tumbling" ->
       ("SELECT epoch_us(time_bucket(INTERVAL '1 hour', ts)) AS ws_us, " +
         "event_type, count(*) AS n_events " +
@@ -587,21 +606,7 @@ object Streaming {
         "FROM n ORDER BY user_id, ts_us, event_id"),
     // per-stage join formulation — independent of the Spark side's
     // single-shuffle dependent-window form
-    "q_funnel" ->
-      (s"WITH s1 AS (SELECT user_id, min(CASE WHEN event_type = '${FunnelStages(0)}' " +
-        "THEN epoch_us(ts) END) AS t1 FROM events GROUP BY user_id), " +
-        s"s2 AS (SELECT e.user_id, min(CASE WHEN e.event_type = '${FunnelStages(1)}' " +
-        "AND epoch_us(e.ts) > s1.t1 THEN epoch_us(e.ts) END) AS t2 " +
-        "FROM events e JOIN s1 ON s1.user_id = e.user_id GROUP BY e.user_id), " +
-        s"s3 AS (SELECT e.user_id, min(CASE WHEN e.event_type = '${FunnelStages(2)}' " +
-        "AND epoch_us(e.ts) > s2.t2 THEN epoch_us(e.ts) END) AS t3 " +
-        "FROM events e JOIN s2 ON s2.user_id = e.user_id GROUP BY e.user_id), " +
-        "n AS (SELECT (SELECT count(*) FROM s1 WHERE t1 IS NOT NULL) AS n1, " +
-        "(SELECT count(*) FROM s2 WHERE t2 IS NOT NULL) AS n2, " +
-        "(SELECT count(*) FROM s3 WHERE t3 IS NOT NULL) AS n3) " +
-        s"SELECT '1_${FunnelStages(0)}' AS stage, n1 AS n_users FROM n " +
-        s"UNION ALL SELECT '2_${FunnelStages(1)}', n2 FROM n " +
-        s"UNION ALL SELECT '3_${FunnelStages(2)}', n3 FROM n ORDER BY stage"),
+    "q_funnel" -> funnelSql("epoch_us"),
     "q_retention" ->
       ("WITH act AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events), " +
         "f AS (SELECT user_id, min(day) AS cohort_day FROM act GROUP BY user_id) " +
@@ -626,10 +631,7 @@ object Streaming {
         s"CASE WHEN unix_timestamp(TIMESTAMP '$cutoff') - unix_timestamp(max(ts)) > 604800 " +
         "THEN 'dead' ELSE 'alive' END AS status " +
         "FROM events GROUP BY user_id ORDER BY user_id"),
-    "q_stream_first_seen" ->
-      ("SELECT user_id, unix_micros(min(ts)) AS first_us, count(*) AS n_events, " +
-        "min(ts) > TIMESTAMP '2024-01-02 00:00:00' AS late_joiner " +
-        "FROM events GROUP BY user_id ORDER BY user_id"),
+    "q_stream_first_seen" -> firstSeenSql("unix_micros"),
     "q_stream_tumbling" ->
       ("SELECT unix_micros(window.start) AS ws_us, event_type, count(*) AS n_events " +
         "FROM events GROUP BY window(ts, '1 hour'), event_type ORDER BY ws_us, event_type"),
@@ -670,21 +672,7 @@ object Streaming {
         "sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id " +
         "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq " +
         "FROM n ORDER BY user_id, ts_us, event_id"),
-    "q_funnel" ->
-      (s"WITH s1 AS (SELECT user_id, min(CASE WHEN event_type = '${FunnelStages(0)}' " +
-        "THEN unix_micros(ts) END) AS t1 FROM events GROUP BY user_id), " +
-        s"s2 AS (SELECT e.user_id, min(CASE WHEN e.event_type = '${FunnelStages(1)}' " +
-        "AND unix_micros(e.ts) > s1.t1 THEN unix_micros(e.ts) END) AS t2 " +
-        "FROM events e JOIN s1 ON s1.user_id = e.user_id GROUP BY e.user_id), " +
-        s"s3 AS (SELECT e.user_id, min(CASE WHEN e.event_type = '${FunnelStages(2)}' " +
-        "AND unix_micros(e.ts) > s2.t2 THEN unix_micros(e.ts) END) AS t3 " +
-        "FROM events e JOIN s2 ON s2.user_id = e.user_id GROUP BY e.user_id), " +
-        "n AS (SELECT (SELECT count(*) FROM s1 WHERE t1 IS NOT NULL) AS n1, " +
-        "(SELECT count(*) FROM s2 WHERE t2 IS NOT NULL) AS n2, " +
-        "(SELECT count(*) FROM s3 WHERE t3 IS NOT NULL) AS n3) " +
-        s"SELECT '1_${FunnelStages(0)}' AS stage, n1 AS n_users FROM n " +
-        s"UNION ALL SELECT '2_${FunnelStages(1)}', n2 FROM n " +
-        s"UNION ALL SELECT '3_${FunnelStages(2)}', n3 FROM n ORDER BY stage"),
+    "q_funnel" -> funnelSql("unix_micros"),
     "q_retention" ->
       ("WITH act AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events), " +
         "f AS (SELECT user_id, min(day) AS cohort_day FROM act GROUP BY user_id) " +

@@ -196,10 +196,18 @@ class SubstrateSpec extends AnyFunSuite {
       s"the staged-artifact validation must name the violation: ${e.getMessage}")
   }
 
-  /** The postings family's contract check over a published artifact. */
-  private def contractCheck(posts: String): Unit =
+  /** The documents files of the corpus at `dir`, as its manifest pins them. */
+  private def corpusFiles(dir: String): Seq[String] =
+    ops.Storage.manifestPath(ops.Storage.manifestLines(spark, s"$dir/documents.parquet"))
+
+  private def corpusFooters(dir: String) =
+    ParquetMeta.footersOf(spark, corpusFiles(dir).map(new org.apache.hadoop.fs.Path(_)))
+
+  /** The postings family's contract check over a published artifact of
+    * the corpus at `dir`. */
+  private def contractCheck(dir: String, posts: String): Unit =
     ops.LlmPipeline.checkIngestContract(spark,
-      ops.LlmPipeline.NgramPostingsFamily, posts)
+      ops.LlmPipeline.NgramPostingsFamily, posts, corpusFiles(dir))
 
   private def published(dir: String): Boolean =
     fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))
@@ -213,10 +221,28 @@ class SubstrateSpec extends AnyFunSuite {
     (0 until 4).foreach(f => writeDocs(dir, (f * 12L) until (f * 12L + 12L), f))
     val posts = ops.LlmPipeline.ensureNgramPostings(spark, dir)
     assert(published(posts))
-    assert(ops.LlmPipeline.docIdsDisjointBySrc(ParquetMeta.footers(spark, posts)),
-      "one src per row group and disjoint per-src doc_id ranges")
-    val (_, jobs) = SparkTestSession.jobsIn(contractCheck(posts))
+    assert(ops.LlmPipeline.docIdsDisjointByFile(corpusFooters(dir)),
+      "disjoint per-file doc_id ranges in the corpus footers")
+    val (_, jobs) = SparkTestSession.jobsIn(contractCheck(dir, posts))
     assert(jobs == 0, s"the footer proof held, yet the check launched $jobs job(s)")
+  }
+
+  test("ingest contract: a fanned-out build over contiguous corpus files is proven with no validation job") {
+    // two small files on four task slots: fanOut repartitions the scan,
+    // so the artifact's row groups mix both part files' rows
+    assume(spark.sparkContext.defaultParallelism == 4,
+      "the fanned-out layout is pinned on the 4-slot test master")
+    val dir = s"/tmp/graft-test-subfanned-${java.util.UUID.randomUUID()}"
+    (0 until 2).foreach(f => writeDocs(dir, (f * 12L) until (f * 12L + 12L), f))
+    val posts = ops.LlmPipeline.ensureNgramPostings(spark, dir)
+    assert(published(posts))
+    assert(ParquetMeta.footers(spark, posts).flatMap(_.rowGroups).exists(
+      _.stats.get("src").exists(st => st.genericGetMin != st.genericGetMax)),
+      "the fanned-out artifact mixes part files within a row group")
+    assert(ops.LlmPipeline.docIdsDisjointByFile(corpusFooters(dir)),
+      "disjoint per-file doc_id ranges in the corpus footers")
+    val (_, jobs) = SparkTestSession.jobsIn(contractCheck(dir, posts))
+    assert(jobs == 0, s"the corpus footers prove the contract, yet the check launched $jobs job(s)")
   }
 
   test("ingest contract: interleaved doc_ids across files take the aggregate and still publish") {
@@ -225,9 +251,9 @@ class SubstrateSpec extends AnyFunSuite {
     writeDocs(dir, (0L until 24L).filter(_ % 2 == 1), 1)
     val posts = ops.LlmPipeline.ensureNgramPostings(spark, dir)
     assert(published(posts))
-    assert(!ops.LlmPipeline.docIdsDisjointBySrc(ParquetMeta.footers(spark, posts)),
-      "overlapping per-src doc_id ranges are no proof")
-    val (_, jobs) = SparkTestSession.jobsIn(contractCheck(posts))
+    assert(!ops.LlmPipeline.docIdsDisjointByFile(corpusFooters(dir)),
+      "overlapping per-file doc_id ranges are no proof")
+    val (_, jobs) = SparkTestSession.jobsIn(contractCheck(dir, posts))
     assert(jobs >= 1, "an unproven contract must be decided by the aggregate")
     assert(ops.LlmPipeline.ngramPostings(spark, dir).count() > 0)
   }
