@@ -2,6 +2,8 @@ package graft.ops
 
 import graft.{ParquetMeta, SessionMemo, Tables}
 import graft.ops.Pin.PinOps
+import org.apache.spark.mllib.clustering.{KMeans, KMeansModel}
+import org.apache.spark.mllib.linalg.Vectors
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1860,7 +1862,8 @@ object LlmPipeline {
   }
 
   /** q_sim_search_ivf_kmeans — IVF-ANN with a REAL training step:
-    * spark.ml KMeans (k=8, fixed seed) learns the coarse quantizer,
+    * mllib's KMeans (k=8, fixed seed; [[ivfFit]]) learns the coarse
+    * quantizer per call, over the unpinned embeddings scan,
     * every vector is assigned to its nearest learned centroid, and the
     * probe (vec_id = 0) searches only its own centroid's bucket — the
     * faiss IVF-flat shape. ORACLE-CHECKED since r19: the KMeans FIT has
@@ -1871,7 +1874,7 @@ object LlmPipeline {
     * additionally pins determinism and recall vs the brute-force top-k.
     * The deterministic-centroid variant above stays corpus-SQL. Scale:
     * training samples/aggregates per-partition (k·dim state), assignment
-    * is a broadcast of k centroids, bucket scan shrinks the probed set
+    * is a projection carrying the k centroids, bucket scan shrinks the probed set
     * ~k×.
     */
   def simSearchIvfKmeans(s: SparkSession, d: String): DataFrame =
@@ -1884,28 +1887,42 @@ object LlmPipeline {
     * reference controller/FileTable.java:14-16).
     */
   private def ivfKmeansFit(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    // pin the training frame ONCE (guide §5 caching: reused by the
-    // k-means|| init passes + 5 Lloyd iterations + the final transform —
-    // ~8 parquet re-scans otherwise). Output-preserving: same rows, same
-    // partitioning, same seed ⇒ identical centroids and assignments
-    // (the persisted-dump oracle and the probe ≡ per-run spec gate it).
-    val e = Pin.pin(Tables.embeddings(s, d)
-      .select(col("vec_id"),
-        array_to_vector(col("embedding").cast("array<double>")).as("fv"),
-        expr(quant).as("q")))
-    // 5 Lloyd iterations: the coarse quantizer only needs rough cells
-    // (faiss trains IVF lists the same way); fixed seed keeps the
-    // assignment deterministic for the spec regardless of convergence.
-    // The solver is a constant: `auto` runs a Summarizer job over the
-    // input only to choose between `row` and `block`, and it chooses
-    // `row` for these dense 64-dim vectors; the centers are the same
-    // (LlmPipelineSpec).
-    val km = new KMeans().setK(8).setSeed(42L).setMaxIter(5).setSolver("row")
-      .setFeaturesCol("fv").setPredictionCol("bucket")
-    km.fit(e).transform(e).select(col("vec_id"), col("q"), col("bucket"))
+    val e = Tables.embeddings(s, d)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("fv"),
+        expr(quant).as("q"))
+    val model = ivfFit(e, k = 8)
+    e.select(col("vec_id"), col("q"), ivfAssign(model).as("bucket"))
   }
+
+  /** The coarse-quantizer fit: `k` centroids over the double-array
+    * column `fv` by mllib's k-means, seed 42, 5 Lloyd iterations (the
+    * coarse quantizer only needs rough cells — faiss trains IVF lists
+    * the same way — and the fixed seed keeps the assignment
+    * deterministic regardless of convergence). mllib's other defaults
+    * are the ones spark.ml passes (k-means|| with 2 init steps, tol
+    * 1e-4, Euclidean), so the centers are spark.ml's `row` solver's
+    * (LlmPipelineSpec). mllib persists its own training RDD across the
+    * init and Lloyd passes and drops it before returning. As spark.ml's
+    * fit does, a null vector or a null, NaN or infinite value fails the
+    * fit: embeddings come from outside the program.
+    */
+  private[graft] def ivfFit(df: DataFrame, k: Int): KMeansModel = {
+    val fv = col("fv")
+    val checked =
+      when(fv.isNull, raise_error(lit("Vectors MUST NOT be Null")))
+        .when(exists(fv, x => x.isNull || isnan(x) || abs(x) === Double.PositiveInfinity),
+          raise_error(concat(lit("Vector values MUST NOT be NaN or Infinity, but got "),
+            fv.cast("string"))))
+        .otherwise(fv)
+    new KMeans().setK(k).setSeed(42L).setMaxIterations(5)
+      .run(df.select(checked).rdd.map(r => Vectors.dense(r.getSeq[Double](0).toArray)))
+  }
+
+  /** The cell of each row's `fv` under a fitted quantizer: mllib's
+    * `predict`, the call spark.ml's `KMeansModel.transform` makes.
+    */
+  private[graft] def ivfAssign(model: KMeansModel): Column =
+    udf((v: Seq[Double]) => model.predict(Vectors.dense(v.toArray))).apply(col("fv"))
 
   /** Bucket-pruned cosine top-5 over a trained index (vec_id, q,
     * bucket) — shared by the per-run form and the persisted-index form,
@@ -1974,27 +1991,18 @@ object LlmPipeline {
     */
   private[graft] def buildIvfIndexFrom(s: SparkSession, emb: DataFrame,
       indexDir: String): Unit = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    // pinned once, and the solver fixed, for the same reasons as
-    // ivfKmeansFit: the init + Lloyd passes and the final transform
-    // otherwise re-scan the parquet ~8×.
-    // input_file_name() is evaluated BELOW the checkpoint, so the src
-    // values are materialized before lineage is cut.
-    val e = Pin.pin(emb
-      .select(col("vec_id"),
-        array_to_vector(col("embedding").cast("array<double>")).as("fv"),
+    // unpinned: mllib persists its own training input, so the scan runs
+    // once for the fit, once for the assignments and once for the stats
+    val e = emb
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("fv"),
         expr(quant).as("q"),
         // per-row provenance (normalized source part-file path): what
         // makes a pure REMOVAL subtractable later — the Iceberg/Delta
         // per-data-file stats design. Probes prune the column away;
         // on disk it dictionary-encodes to ~nothing.
-        Storage.normSrcCol(input_file_name()).as("src")))
-    val model = new KMeans().setK(8).setSeed(42L).setMaxIter(5).setSolver("row")
-      .setFeaturesCol("fv").setPredictionCol("bucket").fit(e)
-    val assigned = model.transform(e)
-      .select(col("vec_id"), col("q"), col("bucket"), col("src"),
-        org.apache.spark.ml.functions.vector_to_array(col("fv")).as("fvarr"))
+        Storage.normSrcCol(input_file_name()).as("src"))
+    val model = ivfFit(e, k = 8)
+    val assigned = e.withColumn("bucket", ivfAssign(model))
     assigned.select(col("vec_id"), col("q"), col("bucket"), col("src"),
         // base/appended provenance: what lets a later REMOVAL tick
         // decrement the right side of the staleness census (without it
@@ -2011,7 +2019,7 @@ object LlmPipeline {
     // later append's delta is compared against. One metadata-sized row.
     assigned.join(broadcast(centsDf), col("bucket") === col("cent_id"))
       .select(expr(
-        "aggregate(zip_with(fvarr, center, (a, b) -> (a - b) * (a - b)), " +
+        "aggregate(zip_with(fv, center, (a, b) -> (a - b) * (a - b)), " +
           "CAST(0 AS DOUBLE), (acc, x) -> acc + x)").as("dist2"))
       .agg(count(lit(1)).as("n_vecs"), avg(col("dist2")).as("mean_dist2"))
       .select(lit("build").as("kind"), col("n_vecs"), col("mean_dist2"))
@@ -2050,21 +2058,6 @@ object LlmPipeline {
     */
   private[graft] val IvfStaleFrac = 0.5
 
-  /** q_ivf_staleness — the index-maintenance verdict the frozen-centroid
-    * append contract requires: ONE metadata-sized row
-    * from the persisted stats table answering "how far has the appended
-    * distribution drifted from the clustered one, and is a recluster
-    * due?". base/delta mean distances are exact per-vector squared L2
-    * recorded at build/extend time (never recomputed — the corpus may
-    * be 100 TB); the verdict is
-    * `drift_ratio > IvfStaleRatio OR appended_frac > IvfStaleFrac`.
-    * No SQL oracle (KMeans state, the q_sim_search_ivf_kmeans rule);
-    * LlmPipelineSpec pins that a planted drifted append flips the flag
-    * and a same-distribution append does not. Reference analogue: the
-    * corruption monitor re-verifies stored state on a schedule instead
-    * of trusting it forever (storageNode/ChunkCorruptionMonitor.java:
-    * 31-75, public GitHub).
-    */
   /** The scheduled-retrain job the staleness verdict drives — the
     * recluster ACTION closing the staleness loop: when
     * q_ivf_staleness flags recluster, re-fit the coarse quantizer on
@@ -2147,7 +2140,6 @@ object LlmPipeline {
   private def splitCellsInto(s: SparkSession, prevDir: String,
       hot: Seq[Int], tmp: String): Unit = {
     import s.implicits._
-    import org.apache.spark.ml.clustering.KMeans
     val asg = ParquetMeta.read(s, s"$prevDir/assignments")
     val cents = ParquetMeta.read(s, s"$prevDir/centroids")
     var nextId = cents.agg(max("cent_id")).head.getInt(0) + 1
@@ -2161,13 +2153,11 @@ object LlmPipeline {
       if (members.select("q").distinct().limit(2).count() < 2)
         parts :+= members.select("vec_id", "q", "bucket", "src") // unsplittable
       else {
-        val feat = members.withColumn("fv",
-          org.apache.spark.ml.functions.array_to_vector(expr(fvExpr)))
-        val km = new KMeans().setK(2).setSeed(42L).setMaxIter(5)
-          .setFeaturesCol("fv").setPredictionCol("sub").fit(feat)
-        parts :+= km.transform(feat)
+        val feat = members.withColumn("fv", expr(fvExpr))
+        val km = ivfFit(feat, k = 2)
+        parts :+= feat
           .select(col("vec_id"), col("q"),
-            (col("sub") + lit(nextId)).cast("int").as("bucket"), col("src"))
+            (ivfAssign(km) + lit(nextId)).cast("int").as("bucket"), col("src"))
         newCents ++= km.clusterCenters.zipWithIndex.map { case (v, i) =>
           (nextId + i, v.toArray.toSeq)
         }
@@ -2193,6 +2183,21 @@ object LlmPipeline {
     keptCents.coalesce(1).write.mode("overwrite").parquet(s"$tmp/centroids")
   }
 
+  /** q_ivf_staleness — the index-maintenance verdict the frozen-centroid
+    * append contract requires: ONE metadata-sized row
+    * from the persisted stats table answering "how far has the appended
+    * distribution drifted from the clustered one, and is a recluster
+    * due?". base/delta mean distances are exact per-vector squared L2
+    * recorded at build/extend time (never recomputed — the corpus may
+    * be 100 TB); the verdict is
+    * `drift_ratio > IvfStaleRatio OR appended_frac > IvfStaleFrac`.
+    * No SQL oracle (KMeans state, the q_sim_search_ivf_kmeans rule);
+    * LlmPipelineSpec pins that a planted drifted append flips the flag
+    * and a same-distribution append does not. Reference analogue: the
+    * corruption monitor re-verifies stored state on a schedule instead
+    * of trusting it forever (storageNode/ChunkCorruptionMonitor.java:
+    * 31-75, public GitHub).
+    */
   def ivfStaleness(s: SparkSession, d: String): DataFrame = {
     val st = ParquetMeta.read(s, s"${ensureIvfIndex(s, d)}/stats")
     val base = st.where(col("kind") === "build")

@@ -335,9 +335,24 @@ object Storage {
     */
   private[graft] val ProbeSuppKey = 7L
 
-  /** Both positions from ONE md5 (Kirsch-Mitzenmacher double hashing:
-    * disjoint 10-bit ranges of the 60-bit hash) — halves the per-row
-    * hash cost vs a seed-per-position md5.
+  /** The 60-bit md5-prefix hash of `key`, DuckDB spelling. */
+  private def bloomHashDuck(key: String): String =
+    s"CAST(concat('0x', substring(md5($key), 1, 15)) AS BIGINT)"
+
+  /** The same hash in Spark: the native 60-bit hash
+    * (functions/Md5Prefix64) — value-identical to
+    * CAST(conv(substring(md5(k),1,15),16,10) AS BIGINT) without the hex
+    * round-trip; the positions are oracle-checked OUTPUT
+    * (q_fileindex_build), so the gate proves build/probe/oracle still
+    * agree. Registered by GraftExtensions AND GraftFunctions, so both the
+    * DataFrame builders and the Spark-SQL surface texts resolve it.
+    */
+  private def bloomHashSpark(key: String): String = s"md5_prefix64($key)"
+
+  /** Both positions of hash `h` from ONE md5 (Kirsch-Mitzenmacher double
+    * hashing: disjoint 10-bit ranges of the 60-bit hash) — halves the
+    * per-row hash cost vs a seed-per-position md5. `div` is the
+    * dialect's integer division (DuckDB `//`, Spark `DIV`).
     *
     * SINGLE SOURCE for the position formula, instantiated per dialect
     * (the zExpr/zorderSql template rule): the positions ARE the index's
@@ -346,23 +361,18 @@ object Storage {
     * disagreement produces false NEGATIVES, i.e. the prune drops files
     * that contain the key.
     */
-  private def bloomHash(key: String, duck: Boolean): String =
-    if (duck) s"CAST(concat('0x', substring(md5($key), 1, 15)) AS BIGINT)"
-    // the native 60-bit hash (functions/Md5Prefix64) — value-identical
-    // to CAST(conv(substring(md5(k),1,15),16,10) AS BIGINT) without the
-    // hex round-trip; the positions are oracle-checked OUTPUT
-    // (q_fileindex_build), so the gate proves build/probe/oracle still
-    // agree. Registered by GraftExtensions AND GraftFunctions, so both
-    // the DataFrame builders and the Spark-SQL surface texts resolve it.
-    else s"md5_prefix64($key)"
-
-  private def bloomPosPair(h: String, duck: Boolean): Seq[String] = {
-    val div = if (duck) "//" else "DIV"
+  private def bloomPosPair(h: String, div: String): Seq[String] =
     Seq(s"$h % $FileBloomBits", s"($h $div $FileBloomBits) % $FileBloomBits")
-  }
 
+  /** The positions of a probe `key`, Spark dialect. */
   private[graft] def bloomPoss(key: String): Seq[String] =
-    bloomPosPair(bloomHash(key, duck = false), duck = false)
+    bloomPosPair(bloomHashSpark(key), "DIV")
+
+  /** The texts [[bloomRowsFor]] parses: the hash of its key column `k`
+    * and the positions of its hash column `h`.
+    */
+  private[graft] def bloomRowHash: String = bloomHashSpark("k")
+  private[graft] def bloomRowPoss: Seq[String] = bloomPosPair("h", "DIV")
 
   /** The index rows (file_id, bit_pos), pre-ORDER BY — shared by build
     * (adds the output order) and prune (consumes unordered).
@@ -377,9 +387,8 @@ object Storage {
   private def bloomRowsFor(li: DataFrame): DataFrame =
     li.select(col("l_orderkey").as("file_id"),
         expr("CAST(l_suppkey AS STRING)").as("k"))
-      .withColumn("h", expr(bloomHash("k", duck = false)))
-      .select(col("file_id"), explode(array(
-        bloomPosPair("h", duck = false).map(expr): _*)).as("bit_pos"))
+      .withColumn("h", expr(bloomRowHash))
+      .select(col("file_id"), explode(array(bloomRowPoss.map(expr): _*)).as("bit_pos"))
       .distinct()
 
   /** q_fileindex_build — per-file Bloom membership index over the
@@ -841,20 +850,18 @@ object Storage {
       "ORDER BY file_id"
 
   /** DuckDB form of the index rows — generated from the SAME position
-    * template as the Spark builders (bloomHash/bloomPosPair).
+    * template as the Spark builders (bloomPosPair).
     */
   private def fileBloomDuck: String =
     s"SELECT DISTINCT file_id, bit_pos FROM (" +
       "SELECT l_orderkey AS file_id, " +
-      s"unnest([${bloomPosPair("h", duck = true).mkString(", ")}]) AS bit_pos " +
+      s"unnest([${bloomPosPair("h", "//").mkString(", ")}]) AS bit_pos " +
       "FROM (SELECT l_orderkey, " +
-      s"${bloomHash("CAST(l_suppkey AS VARCHAR)", duck = true)} AS h " +
+      s"${bloomHashDuck("CAST(l_suppkey AS VARCHAR)")} AS h " +
       "FROM lineitem))"
 
-  private def probePosDuck(i: Int): String = {
-    val p = bloomPosPair(bloomHash(s"'$ProbeSuppKey'", duck = true), duck = true)(i - 1)
-    s"SELECT $p AS bit_pos"
-  }
+  private def probePosDuck(i: Int): String =
+    s"SELECT ${bloomPosPair(bloomHashDuck(s"'$ProbeSuppKey'"), "//")(i - 1)} AS bit_pos"
 
   /** Spark-dialect overrides — the zone-map texts run verbatim in both
     * dialects; these two differ only in integer division (Spark `DIV` vs
@@ -893,13 +900,11 @@ object Storage {
   private def fileBloomSpark: String =
     s"SELECT DISTINCT file_id, bit_pos FROM (" +
       "SELECT l_orderkey AS file_id, " +
-      s"explode(array(${bloomPosPair("h", duck = false).mkString(", ")})) AS bit_pos " +
+      s"explode(array(${bloomRowPoss.mkString(", ")})) AS bit_pos " +
       "FROM (SELECT l_orderkey, " +
-      s"${bloomHash("CAST(l_suppkey AS STRING)", duck = false)} AS h " +
+      s"${bloomHashSpark("CAST(l_suppkey AS STRING)")} AS h " +
       "FROM lineitem))"
 
-  private def probePosSpark(i: Int): String = {
-    val p = bloomPosPair(bloomHash(s"'$ProbeSuppKey'", duck = false), duck = false)(i - 1)
-    s"SELECT $p AS bit_pos"
-  }
+  private def probePosSpark(i: Int): String =
+    s"SELECT ${bloomPoss(s"'$ProbeSuppKey'")(i - 1)} AS bit_pos"
 }

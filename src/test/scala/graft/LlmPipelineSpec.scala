@@ -2301,13 +2301,47 @@ class LlmPipelineSpec extends AnyFunSuite {
     import org.apache.spark.ml.functions.array_to_vector
     for (d <- Seq(SparkTestSession.sf0001, SparkTestSession.sf001)) {
       val e = Tables.embeddings(spark, d)
-        .select(array_to_vector(col("embedding").cast("array<double>")).as("fv"))
+        .select(col("embedding").cast("array<double>").as("fv"))
+        .withColumn("v", array_to_vector(col("fv")))
         .cache()
-      def centers(solver: String) = new KMeans().setK(8).setSeed(42L).setMaxIter(5)
-        .setSolver(solver).setFeaturesCol("fv").fit(e)
-        .clusterCenters.map(_.toArray.toSeq).toSeq
-      try assert(centers("row") == centers("auto"), s"$d: row and auto centers differ")
-      finally e.unpersist()
+      def fit(solver: String) = new KMeans().setK(8).setSeed(42L).setMaxIter(5)
+        .setSolver(solver).setFeaturesCol("v").fit(e)
+      def centers(solver: String) = fit(solver).clusterCenters.map(_.toArray.toSeq).toSeq
+      try {
+        assert(centers("row") == centers("auto"), s"$d: row and auto centers differ")
+        // the engine's one fit helper (mllib, no spark.ml wrapper) is
+        // spark.ml's row solver: same centers, same per-row buckets
+        val row = fit("row")
+        val helper = ops.LlmPipeline.ivfFit(e, k = 8)
+        assert(helper.clusterCenters.map(_.toArray.toSeq).toSeq == centers("row"),
+          s"$d: helper and row centers differ")
+        val buckets = row.transform(e)
+          .select(col("prediction"), ops.LlmPipeline.ivfAssign(helper).as("helper"))
+          .collect()
+        assert(buckets.nonEmpty && buckets.forall(r => r.getInt(0) == r.getInt(1)),
+          s"$d: helper buckets differ from KMeansModel.transform's")
+      } finally e.unpersist()
     }
+  }
+
+  test("q_sim_search_ivf_kmeans: the per-run fit leaves no RDD persisted") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    ops.LlmPipeline.simSearchIvfKmeans(spark, SparkTestSession.sf0001).count()
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"RDDs left persisted by the fit: $left")
+  }
+
+  test("q_sim_search_ivf_kmeans: an embedding holding a NaN fails the fit") {
+    import spark.implicits._
+    val dir = s"/tmp/graft-test-ivfnan-${java.util.UUID.randomUUID()}"
+    (0 until 40).map(i => (i.toLong,
+        Seq.tabulate(64)(j => if (i == 17 && j == 5) Float.NaN else ((i * 7 + j) % 13).toFloat),
+        i % 10))
+      .toDF("vec_id", "embedding", "label")
+      .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
+    val err = intercept[Exception](ops.LlmPipeline.simSearchIvfKmeans(spark, dir).count())
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("MUST NOT be NaN")),
+      s"fit failed for another reason: $err")
   }
 }

@@ -539,9 +539,10 @@ class PlanShapeSpec extends AnyFunSuite {
                                        // persisted) + the verify re-key
                                        // (same rationale as q_dedup_near)
       "q_dedup_collapsed_jaccard" -> 6, // collapse, band pairs, verify join
-      "q_sim_search_ivf_kmeans" -> 0,  // per-call KMeans fit on a pinned
-                                       // frame (ivfKmeansFit); broadcast
-                                       // probe + map-side top-k: no shuffle
+      "q_sim_search_ivf_kmeans" -> 0,  // per-call mllib KMeans fit
+                                       // (ivfFit); the assignment is a
+                                       // projection, broadcast probe +
+                                       // map-side top-k: no shuffle
       "q_dedup_ngram" -> 3,            // banded sigs + bucket pairs + order
       "q_boilerplate_score" -> 4,      // postings memo + df join + score agg
       "q_join_waiting_suppliers" -> 4, // fact-fact on orderkey (agg reuses

@@ -9,7 +9,10 @@ import java.nio.file.{Files, Paths}
   *
   * Lines are `oracle<TAB>name<TAB>text` for each `SparkEntry.oracleSql`
   * entry and `spark<TAB>name<TAB>text` for each `SqlSurface.overrides`
-  * entry, sorted by kind then name. Backslash, newline, carriage return
+  * entry, sorted by kind then name, then `expr<TAB>name<TAB>text` for
+  * the expression texts the DataFrame builders parse from shared SQL
+  * builders (the file-index probe positions and the hash and position
+  * texts of `Storage.bloomRowsFor`). Backslash, newline, carriage return
   * and tab inside a text are escaped as `\\`, `\n`, `\r`, `\t`. The IVF
   * dump oracles render only once an index dir is known, so a fixed one
   * is set first; no Spark session starts.
@@ -26,14 +29,20 @@ object SqlTextDump {
     ops.LlmPipeline.ivfOracleIndexDir = Some(IvfDir)
     def rows(kind: String, m: Map[String, String]) =
       m.toSeq.sortBy(_._1).map { case (k, v) => s"$kind\t$k\t${esc(v)}" }
-    rows("oracle", SparkEntry.oracleSql) ++ rows("spark", SqlSurface.overrides)
+    def numbered(name: String, texts: Seq[String]) =
+      texts.zipWithIndex.map { case (t, i) => s"$name.${i + 1}" -> t }
+    val exprs = numbered("bloomPoss", ops.Storage.bloomPoss(s"'${ops.Storage.ProbeSuppKey}'")) ++
+      Seq("bloomRowsFor.hash" -> ops.Storage.bloomRowHash) ++
+      numbered("bloomRowsFor.pos", ops.Storage.bloomRowPoss)
+    rows("oracle", SparkEntry.oracleSql) ++ rows("spark", SqlSurface.overrides) ++
+      rows("expr", exprs.toMap)
   }
 
   def main(args: Array[String]): Unit = {
     require(args.length == 1, "usage: SqlTextDump <out.tsv>")
     val out = lines
     Files.write(Paths.get(args(0)), out.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-    val oracle = out.count(_.startsWith("oracle\t"))
-    println(s"[sqltextdump] oracle=$oracle spark=${out.size - oracle} -> ${args(0)}")
+    def n(kind: String) = out.count(_.startsWith(s"$kind\t"))
+    println(s"[sqltextdump] oracle=${n("oracle")} spark=${n("spark")} expr=${n("expr")} -> ${args(0)}")
   }
 }
