@@ -2306,14 +2306,15 @@ class LlmPipelineSpec extends AnyFunSuite {
         .cache()
       def fit(solver: String) = new KMeans().setK(8).setSeed(42L).setMaxIter(5)
         .setSolver(solver).setFeaturesCol("v").fit(e)
-      def centers(solver: String) = fit(solver).clusterCenters.map(_.toArray.toSeq).toSeq
       try {
-        assert(centers("row") == centers("auto"), s"$d: row and auto centers differ")
+        val row = fit("row")
+        val rowCenters = row.clusterCenters.map(_.toArray.toSeq).toSeq
+        assert(rowCenters == fit("auto").clusterCenters.map(_.toArray.toSeq).toSeq,
+          s"$d: row and auto centers differ")
         // the engine's one fit helper (mllib, no spark.ml wrapper) is
         // spark.ml's row solver: same centers, same per-row buckets
-        val row = fit("row")
         val helper = ops.LlmPipeline.ivfFit(e, k = 8)
-        assert(helper.clusterCenters.map(_.toArray.toSeq).toSeq == centers("row"),
+        assert(helper.clusterCenters.map(_.toArray.toSeq).toSeq == rowCenters,
           s"$d: helper and row centers differ")
         val buckets = row.transform(e)
           .select(col("prediction"), ops.LlmPipeline.ivfAssign(helper).as("helper"))
@@ -2339,9 +2340,18 @@ class LlmPipelineSpec extends AnyFunSuite {
         i % 10))
       .toDF("vec_id", "embedding", "label")
       .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
-    val err = intercept[Exception](ops.LlmPipeline.simSearchIvfKmeans(spark, dir).count())
-    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
-      .exists(e => String.valueOf(e.getMessage).contains("MUST NOT be NaN")),
-      s"fit failed for another reason: $err")
+    intercept[Exception](ops.LlmPipeline.simSearchIvfKmeans(spark, dir).count())
+    // the fit helper itself rejects a NaN and a null vector, as spark.ml's
+    // fit does, whatever other column of the frame would fail later
+    def fitError(fv: org.apache.spark.sql.DataFrame, msg: String) = {
+      val err = intercept[Exception](ops.LlmPipeline.ivfFit(fv, k = 2))
+      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(e => String.valueOf(e.getMessage).contains(msg)),
+        s"fit failed for another reason than '$msg': $err")
+    }
+    fitError(spark.read.parquet(s"$dir/embeddings.parquet")
+      .select(col("embedding").cast("array<double>").as("fv")), "MUST NOT be NaN")
+    fitError(spark.range(3).select(lit(null).cast("array<double>").as("fv")),
+      "MUST NOT be Null")
   }
 }
