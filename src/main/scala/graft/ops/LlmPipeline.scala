@@ -1863,7 +1863,7 @@ object LlmPipeline {
 
   /** q_sim_search_ivf_kmeans — IVF-ANN with a REAL training step:
     * mllib's KMeans (k=8, fixed seed; [[ivfFit]]) learns the coarse
-    * quantizer per call, over the unpinned embeddings scan,
+    * quantizer per call over the embeddings scan,
     * every vector is assigned to its nearest learned centroid, and the
     * probe (vec_id = 0) searches only its own centroid's bucket — the
     * faiss IVF-flat shape. ORACLE-CHECKED since r19: the KMeans FIT has
@@ -1991,8 +1991,8 @@ object LlmPipeline {
     */
   private[graft] def buildIvfIndexFrom(s: SparkSession, emb: DataFrame,
       indexDir: String): Unit = {
-    // unpinned: mllib persists its own training input, so the scan runs
-    // once for the fit, once for the assignments and once for the stats
+    // no pin: mllib persists its own training input, and the scan
+    // runs three times (the fit, the assignments, the stats)
     val e = emb
       .select(col("vec_id"), col("embedding").cast("array<double>").as("fv"),
         expr(quant).as("q"),
