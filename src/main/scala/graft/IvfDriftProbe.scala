@@ -89,11 +89,11 @@ object IvfDriftProbe {
     val nApp = (NBase * frac).toInt
     vecs(spark, 0 until NBase, 0.0, 42).coalesce(1)
       .write.parquet(s"$dir/embeddings.parquet")
-    ops.LlmPipeline.ensureIvfIndex(spark, dir)
+    ops.Ann.ensureIvfIndex(spark, dir)
     vecs(spark, 100000 until (100000 + nApp), offset, 77).coalesce(1)
       .write.mode("append").parquet(s"$dir/embeddings.parquet")
-    val idx = ops.LlmPipeline.ensureIvfIndex(spark, dir)
-    val st = ops.LlmPipeline.ivfStaleness(spark, dir).collect().head
+    val idx = ops.Ann.ensureIvfIndex(spark, dir)
+    val st = ops.Ann.ivfStaleness(spark, dir).collect().head
     val rBase = recallAtK(spark, idx, (0L until NProbes.toLong).toSeq)
     val rDrift = recallAtK(spark, idx,
       (100000L until (100000L + math.min(NProbes, nApp))).toSeq)
@@ -134,23 +134,23 @@ object IvfDriftProbe {
       val dir = Files.createTempDirectory(scratch, s"splitvs-$tag-").toString
       vecs(spark, 0 until nBase, 0.0, 42).coalesce(4)
         .write.parquet(s"$dir/embeddings.parquet")
-      ops.LlmPipeline.ensureIvfIndex(spark, dir)
+      ops.Ann.ensureIvfIndex(spark, dir)
       vecs(spark, 100000 until (100000 + nBase / 4), 5.0, 77).coalesce(1)
         .write.mode("append").parquet(s"$dir/embeddings.parquet")
-      ops.LlmPipeline.ensureIvfIndex(spark, dir)
+      ops.Ann.ensureIvfIndex(spark, dir)
       dir
     }
     def timed[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val a = f
       (a, (System.nanoTime() - t0) / 1e9)
     }
-    def mixed(d: String) = mixedBase(spark, ops.LlmPipeline.ivfIndexDir(spark, d))
+    def mixed(d: String) = mixedBase(spark, ops.Ann.ivfIndexDir(spark, d))
     val dSplit = build("split")
     val mixedBefore = mixed(dSplit)
-    val (didSplit, tSplit) = timed(ops.LlmPipeline.ivfSplitHotCells(spark, dSplit))
+    val (didSplit, tSplit) = timed(ops.Ann.ivfSplitHotCells(spark, dSplit))
     val mixedAfterSplit = mixed(dSplit)
     val dRefit = build("refit")
-    val (didRefit, tRefit) = timed(ops.LlmPipeline.ivfReclusterIfStale(spark, dRefit))
+    val (didRefit, tRefit) = timed(ops.Ann.ivfReclusterIfStale(spark, dRefit))
     val mixedAfterRefit = mixed(dRefit)
     println(f"split-vs-refit nBase=$nBase%d: split ran=$didSplit " +
       f"$tSplit%6.2fs (mixed_base $mixedBefore%d -> $mixedAfterSplit%d, corpus NOT read); " +

@@ -22,13 +22,15 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     ops.Catalog.queries ++ ops.Chunks.queries ++ ops.Relational.queries ++
-      ops.Streaming.queries ++ ops.LlmPipeline.queries ++
+      ops.Streaming.queries ++ ops.Dedup.queries ++ ops.Ann.queries ++
+      ops.TextQuality.queries ++ ops.Bpe.queries ++ ops.Sampling.queries ++
       ops.Multimodal.queries ++ ops.Skew.queries ++ ops.Storage.queries
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     ops.Catalog.oracle ++ ops.Chunks.oracle ++ ops.Relational.oracle ++
-      ops.Streaming.oracle ++ ops.LlmPipeline.oracle ++
+      ops.Streaming.oracle ++ ops.Dedup.oracle ++ ops.Ann.oracle ++
+      ops.TextQuality.oracle ++ ops.Bpe.oracle ++ ops.Sampling.oracle ++
       ops.Multimodal.oracle ++ ops.Skew.oracle ++ ops.Storage.oracle
 }

@@ -56,15 +56,15 @@ object SqlSurface {
     */
   private[graft] def registerDerivedViews(spark: SparkSession, sfDir: String,
       buildIfAbsent: Boolean): Unit = {
-    if (buildIfAbsent || ops.LlmPipeline.ivfIndexReady(spark, sfDir)) {
-      val ivfDir = ops.LlmPipeline.ensureIvfIndex(spark, sfDir)
+    if (buildIfAbsent || ops.Ann.ivfIndexReady(spark, sfDir)) {
+      val ivfDir = ops.Ann.ensureIvfIndex(spark, sfDir)
       ParquetMeta.read(spark, s"$ivfDir/assignments")
         .createOrReplaceTempView("ivf_assignments")
       ParquetMeta.read(spark, s"$ivfDir/stats")
         .createOrReplaceTempView("ivf_stats")
     }
-    if (buildIfAbsent || ops.LlmPipeline.substratesReady(spark, sfDir))
-      ops.LlmPipeline.substrateStats(spark, sfDir)
+    if (buildIfAbsent || ops.Dedup.substratesReady(spark, sfDir))
+      ops.Dedup.substrateStats(spark, sfDir)
         .createOrReplaceTempView("substrate_stats")
   }
 
@@ -123,6 +123,7 @@ object SqlSurface {
     */
   val overrides: Map[String, String] =
     ops.Catalog.sparkSql ++ ops.Chunks.sparkSql ++ ops.Relational.sparkSql ++
-      ops.Streaming.sparkSql ++ ops.LlmPipeline.sparkSql ++
+      ops.Streaming.sparkSql ++ ops.Dedup.sparkSql ++ ops.Ann.sparkSql ++
+      ops.TextQuality.sparkSql ++ ops.Bpe.sparkSql ++ ops.Sampling.sparkSql ++
       ops.Multimodal.sparkSql ++ ops.Storage.sparkSql
 }

@@ -41,10 +41,10 @@ object Procedures {
     */
   private[graft] def artifactFamilies: Seq[String] = Seq(
     Storage.ZonemapFamily, Storage.ZonemapMergedFamily, Storage.BloomFamily,
-    LlmPipeline.IvfFamily, LlmPipeline.JsonlExportFamily,
+    Ann.IvfFamily, Sampling.JsonlExportFamily,
     graft.sources.MediaFixtures.FixtureFamily,
     graft.sources.MediaFixtures.VolumeFamily) ++
-    LlmPipeline.substrates.map(_.family)
+    Dedup.substrates.map(_.family)
 
   private val procs: Seq[(String, Proc)] = Seq(
     "ensure_zone_map" -> Proc(
@@ -56,7 +56,7 @@ object Procedures {
     "ensure_ivf_index" -> Proc(
       Seq(Param("dataset_dir")), ensureSchema,
       (s, a) => {
-        val r = Seq(Row("ivf", LlmPipeline.ensureIvfIndex(s, a(0))))
+        val r = Seq(Row("ivf", Ann.ensureIvfIndex(s, a(0))))
         graft.SqlSurface.refreshDerivedViews(s, a(0))
         r
       }),
@@ -66,8 +66,8 @@ object Procedures {
         StructField("refit", BooleanType, nullable = false),
         StructField("index_path", StringType, nullable = false))),
       (s, a) => {
-        val r = Seq(Row(LlmPipeline.ivfReclusterIfStale(s, a(0)),
-          LlmPipeline.ivfIndexDir(s, a(0))))
+        val r = Seq(Row(Ann.ivfReclusterIfStale(s, a(0)),
+          Ann.ivfIndexDir(s, a(0))))
         graft.SqlSurface.refreshDerivedViews(s, a(0))
         r
       }),
@@ -77,8 +77,8 @@ object Procedures {
         StructField("split", BooleanType, nullable = false),
         StructField("index_path", StringType, nullable = false))),
       (s, a) => {
-        val r = Seq(Row(LlmPipeline.ivfSplitHotCells(s, a(0)),
-          LlmPipeline.ivfIndexDir(s, a(0))))
+        val r = Seq(Row(Ann.ivfSplitHotCells(s, a(0)),
+          Ann.ivfIndexDir(s, a(0))))
         graft.SqlSurface.refreshDerivedViews(s, a(0))
         r
       }),
@@ -88,7 +88,7 @@ object Procedures {
     "ensure_dedup_substrates" -> Proc(
       Seq(Param("dataset_dir")), ensureSchema,
       (s, a) => {
-        val r = LlmPipeline.substrates.map(sub => Row(sub.name, sub.ensure(s, a(0))))
+        val r = Dedup.substrates.map(sub => Row(sub.name, sub.ensure(s, a(0))))
         // the SQL surface's substrate_stats view is a snapshot — once
         // this verb has (re)built substrates, re-derive it so SQL and
         // DataFrame spellings agree on the fresh artifact
@@ -113,7 +113,7 @@ object Procedures {
         StructField("folded", LongType, nullable = false),
         StructField("swept", LongType, nullable = false))),
       (s, a) => {
-        val r = LlmPipeline.cmsCompactSketchLog(s, a(0), a(1).toInt)
+        val r = TextQuality.cmsCompactSketchLog(s, a(0), a(1).toInt)
         Seq(Row(r.ckptUpto, r.folded, r.swept))
       }),
     "compact_frames" -> Proc(

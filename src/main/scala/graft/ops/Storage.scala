@@ -634,7 +634,7 @@ object Storage {
     * data-file manifest (path, length, mtime of every part file) — a
     * driver-regenerated fixture must miss, or a stale index would serve
     * wrong prune sets to the oracle gate. Same build-once/probe-many
-    * lifecycle as the IVF index (LlmPipeline.ensureIvfIndex), PLUS the
+    * lifecycle as the IVF index (Ann.ensureIvfIndex), PLUS the
     * append lifecycle a daily-ingest lake needs: when the current
     * listing strictly extends a previously published
     * artifact's manifest, the build scans ONLY the delta files and

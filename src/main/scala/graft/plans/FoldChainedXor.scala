@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * Multiply only, and `ConstantFolding` can't reach constants separated
   * by a non-foldable subtree — so this chain survives optimization
   * untouched upstream. It arises naturally in this engine: the MinHash
-  * permutation family is `base_hash XOR salt_i` (ops/LlmPipeline), and
+  * permutation family is `base_hash XOR salt_i` (ops/Dedup), and
   * any composition layered on top (re-salting a signature, combining a
   * partition salt with a permutation salt) XORs another literal onto an
   * already-salted column. One fold = one fewer per-row instruction in a

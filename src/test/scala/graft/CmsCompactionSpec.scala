@@ -23,11 +23,11 @@ class CmsCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
   // itself has a dedicated test below
   private var savedCoveredTtl = 0L
   override def beforeAll(): Unit = {
-    savedCoveredTtl = ops.LlmPipeline.cmsCoveredTtlMs
-    ops.LlmPipeline.cmsCoveredTtlMs = 0L
+    savedCoveredTtl = ops.TextQuality.cmsCoveredTtlMs
+    ops.TextQuality.cmsCoveredTtlMs = 0L
   }
   override def afterAll(): Unit =
-    ops.LlmPipeline.cmsCoveredTtlMs = savedCoveredTtl
+    ops.TextQuality.cmsCoveredTtlMs = savedCoveredTtl
 
   /** All distinct tokens used by the fixtures — the probe corpus. */
   private val vocab = Seq("apple", "banana", "cherry", "date", "elder")
@@ -50,13 +50,13 @@ class CmsCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
       tokens: Seq[String]): Unit = {
     import spark.implicits._
     tokens.toDF("token")
-      .agg(expr(ops.LlmPipeline.cmsAgg("token")).as("sk"))
+      .agg(expr(ops.TextQuality.cmsAgg("token")).as("sk"))
       .withColumn("batch_id", lit(batchId))
       .coalesce(1).write.mode("append").parquet(dir)
   }
 
   private def estimates(dir: String, probe: String): Map[String, Long] =
-    ops.LlmPipeline.cmsMergedEstimates(spark, dir, probe)
+    ops.TextQuality.cmsMergedEstimates(spark, dir, probe)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
   /** Non-hidden data files in the log dir (what a Spark read sees). */
@@ -92,7 +92,7 @@ class CmsCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
     val before = estimates(dir, probe)
     assert(before == exact,
       "collision-free operating point: merged estimates must equal exact counts")
-    val report = ops.LlmPipeline.cmsCompactSketchLog(spark, dir, keepTail = 2)
+    val report = ops.TextQuality.cmsCompactSketchLog(spark, dir, keepTail = 2)
     assert(report.toString == "ckpt=3 folded=4 swept=4",
       s"batches 0..3 fold (watermark = 5 - 2), their 4 files sweep: $report")
     assert(logFiles(dir).length == 3,
@@ -103,9 +103,9 @@ class CmsCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("re-running compaction on a compacted log is a no-op") {
     val dir = mkLog(); val probe = mkProbeDir()
-    ops.LlmPipeline.cmsCompactSketchLog(spark, dir, keepTail = 2)
+    ops.TextQuality.cmsCompactSketchLog(spark, dir, keepTail = 2)
     val files = logFiles(dir)
-    val report = ops.LlmPipeline.cmsCompactSketchLog(spark, dir, keepTail = 2)
+    val report = ops.TextQuality.cmsCompactSketchLog(spark, dir, keepTail = 2)
     assert(report.toString == "ckpt=3 folded=0 swept=0", s"no new rows aged out: $report")
     assert(logFiles(dir) == files, "an idempotent re-run rewrites nothing")
     assert(estimates(dir, probe) == exact)
@@ -113,11 +113,11 @@ class CmsCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("second compaction folds checkpoint + newly aged raws incrementally") {
     val dir = mkLog(4); val probe = mkProbeDir()
-    ops.LlmPipeline.cmsCompactSketchLog(spark, dir, keepTail = 2)
+    ops.TextQuality.cmsCompactSketchLog(spark, dir, keepTail = 2)
     // stream advances: batches 4 and 5 arrive after the first compaction
     appendOldVintage(dir, 4L, batches(4))
     appendOldVintage(dir, 5L, batches(5))
-    val report = ops.LlmPipeline.cmsCompactSketchLog(spark, dir, keepTail = 2)
+    val report = ops.TextQuality.cmsCompactSketchLog(spark, dir, keepTail = 2)
     // old ckpt (upto=1) + raws 2,3 fold to upto=3; old ckpt file + 2 raw
     // files sweep — the checkpoint is itself a mergeable delta
     assert(report.toString == "ckpt=3 folded=3 swept=3", report)
@@ -127,10 +127,10 @@ class CmsCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("crash before publish: staging orphan is invisible, next run converges") {
     val dir = mkLog(); val probe = mkProbeDir()
-    ops.LlmPipeline.cmsCrashPoint = 1
+    ops.TextQuality.cmsCrashPoint = 1
     try intercept[IllegalStateException] {
-      ops.LlmPipeline.cmsCompactSketchLog(spark, dir, keepTail = 2)
-    } finally ops.LlmPipeline.cmsCrashPoint = 0
+      ops.TextQuality.cmsCompactSketchLog(spark, dir, keepTail = 2)
+    } finally ops.TextQuality.cmsCrashPoint = 0
     assert(hiddenDirs(dir).exists(_.startsWith(".cms-ckpt-build-")),
       "the crash leaves the staged checkpoint behind")
     assert(logFiles(dir).length == batches.length,
@@ -139,12 +139,12 @@ class CmsCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
       "dot-prefixed staging is invisible to Spark reads — no double count")
     // a young orphan is left alone (it may belong to a live compactor);
     // once TTL-aged it sweeps on the next run
-    val report = ops.LlmPipeline.cmsCompactSketchLog(spark, dir, keepTail = 2)
+    val report = ops.TextQuality.cmsCompactSketchLog(spark, dir, keepTail = 2)
     assert(report.toString == "ckpt=3 folded=4 swept=4", report)
     assert(hiddenDirs(dir).exists(_.startsWith(".cms-ckpt-build-")))
     val savedTtl = ops.Derived.orphanTtlMs
     ops.Derived.orphanTtlMs = 0L
-    try ops.LlmPipeline.cmsCompactSketchLog(spark, dir, keepTail = 2)
+    try ops.TextQuality.cmsCompactSketchLog(spark, dir, keepTail = 2)
     finally ops.Derived.orphanTtlMs = savedTtl
     assert(!hiddenDirs(dir).exists(_.startsWith(".cms-ckpt-build-")),
       "TTL-aged staging orphans sweep")
@@ -153,15 +153,15 @@ class CmsCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("crash between publish and sweep: reads exclude covered rows; re-run sweeps") {
     val dir = mkLog(); val probe = mkProbeDir()
-    ops.LlmPipeline.cmsCrashPoint = 2
+    ops.TextQuality.cmsCrashPoint = 2
     try intercept[IllegalStateException] {
-      ops.LlmPipeline.cmsCompactSketchLog(spark, dir, keepTail = 2)
-    } finally ops.LlmPipeline.cmsCrashPoint = 0
+      ops.TextQuality.cmsCompactSketchLog(spark, dir, keepTail = 2)
+    } finally ops.TextQuality.cmsCrashPoint = 0
     assert(logFiles(dir).length == batches.length + 1,
       "checkpoint published, covered raw files not yet swept")
     assert(estimates(dir, probe) == exact,
       "live-row filter drops covered raws — the crash window never double-counts")
-    val report = ops.LlmPipeline.cmsCompactSketchLog(spark, dir, keepTail = 2)
+    val report = ops.TextQuality.cmsCompactSketchLog(spark, dir, keepTail = 2)
     assert(report.toString == "ckpt=3 folded=0 swept=4",
       s"re-run folds nothing new but finishes the sweep: $report")
     assert(logFiles(dir).length == 3)
@@ -170,7 +170,7 @@ class CmsCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("twin checkpoints fold ONCE: a racing compactor's duplicate never doubles counts") {
     val dir = mkLog(); val probe = mkProbeDir()
-    ops.LlmPipeline.cmsCompactSketchLog(spark, dir, keepTail = 2)
+    ops.TextQuality.cmsCompactSketchLog(spark, dir, keepTail = 2)
     // the crash-at-2 + racing-compactor state: a bit-identical TWIN of
     // the current checkpoint coexists in the log
     val fsLocal = new java.io.File(dir)
@@ -182,7 +182,7 @@ class CmsCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
     // forward — exactly one twin may enter the fold
     appendOldVintage(dir, 6L, Seq("apple"))
     appendOldVintage(dir, 7L, Seq("banana"))
-    val report = ops.LlmPipeline.cmsCompactSketchLog(spark, dir, keepTail = 2)
+    val report = ops.TextQuality.cmsCompactSketchLog(spark, dir, keepTail = 2)
     assert(report.toString == "ckpt=5 folded=3 swept=4",
       s"1 ckpt (deduped) + raws 4,5 fold; both twins + raws 4,5 sweep: $report")
     val want = exact ++ Map("apple" -> (exact("apple") + 1),
@@ -193,9 +193,9 @@ class CmsCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("covered files linger one TTL window for in-flight readers, then sweep") {
     val dir = mkLog(); val probe = mkProbeDir()
-    ops.LlmPipeline.cmsCoveredTtlMs = 3600L * 1000
+    ops.TextQuality.cmsCoveredTtlMs = 3600L * 1000
     try {
-      val r1 = ops.LlmPipeline.cmsCompactSketchLog(spark, dir, keepTail = 2)
+      val r1 = ops.TextQuality.cmsCompactSketchLog(spark, dir, keepTail = 2)
       assert(r1.toString == "ckpt=3 folded=4 swept=0",
         s"a just-published checkpoint's covered files must linger: $r1")
       assert(logFiles(dir).length == batches.length + 1,
@@ -206,12 +206,12 @@ class CmsCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
       val ckpt = new java.io.File(dir).listFiles
         .find(_.getName.startsWith("cms-ckpt-3-")).get
       ckpt.setLastModified(System.currentTimeMillis() - 2 * 3600L * 1000)
-      val r2 = ops.LlmPipeline.cmsCompactSketchLog(spark, dir, keepTail = 2)
+      val r2 = ops.TextQuality.cmsCompactSketchLog(spark, dir, keepTail = 2)
       assert(r2.toString == "ckpt=3 folded=0 swept=4",
         s"an aged checkpoint's covered files sweep: $r2")
       assert(logFiles(dir).length == 3)
       assert(estimates(dir, probe) == exact)
-    } finally ops.LlmPipeline.cmsCoveredTtlMs = 0L
+    } finally ops.TextQuality.cmsCoveredTtlMs = 0L
   }
 
   test("a batch id at or below the checkpoint floor is skipped even after its file was swept") {
@@ -219,14 +219,14 @@ class CmsCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val dir = mkLog(); val probe = mkProbeDir()
-    ops.LlmPipeline.cmsCompactSketchLog(spark, dir, keepTail = 2)
+    ops.TextQuality.cmsCompactSketchLog(spark, dir, keepTail = 2)
     // batches 0..3 folded and their files swept: a restart with a FRESH
     // stream checkpoint restarts ids at 0 — the file-existence guard is
     // gone, so the sink must fall back to the checkpoint-name floor or
     // the new row would be accepted, excluded by every read, and
     // deleted by the next sweep (silent loss)
     val ms = MemoryStream[(Long, String)]
-    val q = ops.LlmPipeline.cmsSketchSink(ms.toDF().toDF("doc_id", "text"), dir)
+    val q = ops.TextQuality.cmsSketchSink(ms.toDF().toDF("doc_id", "text"), dir)
     try {
       ms.addData((9L, "elder elder elder"))
       q.processAllAvailable()
@@ -243,7 +243,7 @@ class CmsCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = s"/tmp/graft-test-cmslog-${java.util.UUID.randomUUID()}"
     val probe = mkProbeDir()
     val ms = MemoryStream[(Long, String)]
-    val q = ops.LlmPipeline.cmsSketchSink(ms.toDF().toDF("doc_id", "text"), dir)
+    val q = ops.TextQuality.cmsSketchSink(ms.toDF().toDF("doc_id", "text"), dir)
     try {
       ms.addData((1L, "apple banana apple"), (2L, "cherry banana"))
       q.processAllAvailable()
@@ -259,7 +259,7 @@ class CmsCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
     // already exists, so the sink must skip — bare append would
     // double-count every replayed batch
     val ms2 = MemoryStream[(Long, String)]
-    val q2 = ops.LlmPipeline.cmsSketchSink(ms2.toDF().toDF("doc_id", "text"), dir)
+    val q2 = ops.TextQuality.cmsSketchSink(ms2.toDF().toDF("doc_id", "text"), dir)
     try {
       ms2.addData((9L, "elder elder elder"))
       q2.processAllAvailable()

@@ -33,7 +33,7 @@ class CmsCrossProcessSpec extends AnyFunSuite {
   }
 
   private def estimates(dir: String, probe: String): Map[String, Long] =
-    ops.LlmPipeline.cmsMergedEstimates(spark, dir, probe)
+    ops.TextQuality.cmsMergedEstimates(spark, dir, probe)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
   private def logFiles(dir: String): Seq[String] =
@@ -89,8 +89,8 @@ class CmsCrossProcessSpec extends AnyFunSuite {
       .groupBy(identity).view.mapValues(_.size.toLong).toMap
 
     val ms = MemoryStream[(Long, String)]
-    val q = ops.LlmPipeline.cmsSketchSink(ms.toDF().toDF("doc_id", "text"), dir)
-    val savedTtl = ops.LlmPipeline.cmsCoveredTtlMs
+    val q = ops.TextQuality.cmsSketchSink(ms.toDF().toDF("doc_id", "text"), dir)
+    val savedTtl = ops.TextQuality.cmsCoveredTtlMs
     try {
       // the child compacts under the PRODUCTION covered-file TTL (no
       // sweep can race another process's in-flight fold); this JVM's
@@ -102,7 +102,7 @@ class CmsCrossProcessSpec extends AnyFunSuite {
           // a second compactor in THIS JVM every few batches: the
           // compactor-vs-compactor interleaving (twin checkpoints)
           if (i % 5 == 4)
-            ops.LlmPipeline.cmsCompactSketchLog(spark, dir, keepTail = 2)
+            ops.TextQuality.cmsCompactSketchLog(spark, dir, keepTail = 2)
         }
       }
       assert(exit == 0, s"child compactor JVM failed: $out")
@@ -113,8 +113,8 @@ class CmsCrossProcessSpec extends AnyFunSuite {
       assert(estimates(dir, probe) == exact,
         "merged estimates diverged from exact counts mid-race")
       // convergence: one final aged-out compaction sweeps the residue
-      ops.LlmPipeline.cmsCoveredTtlMs = 0L
-      ops.LlmPipeline.cmsCompactSketchLog(spark, dir, keepTail = 2)
+      ops.TextQuality.cmsCoveredTtlMs = 0L
+      ops.TextQuality.cmsCompactSketchLog(spark, dir, keepTail = 2)
       val files = logFiles(dir)
       assert(files.count(_.startsWith("cms-ckpt-")) == 1,
         s"twin/superseded checkpoints must converge to one: $files")
@@ -123,7 +123,7 @@ class CmsCrossProcessSpec extends AnyFunSuite {
       assert(estimates(dir, probe) == exact,
         "convergence sweep changed an estimate — a count was lost or doubled")
     } finally {
-      ops.LlmPipeline.cmsCoveredTtlMs = savedTtl
+      ops.TextQuality.cmsCoveredTtlMs = savedTtl
       q.stop()
     }
   }
@@ -139,26 +139,26 @@ class CmsCrossProcessSpec extends AnyFunSuite {
       .groupBy(identity).view.mapValues(_.size.toLong).toMap
     (0 until 12).foreach { i =>
       Seq.fill(i % 2 + 1)(vocab(i % 5)).toDF("token")
-        .agg(expr(ops.LlmPipeline.cmsAgg("token")).as("sk"))
+        .agg(expr(ops.TextQuality.cmsAgg("token")).as("sk"))
         .withColumn("batch_id", lit(i.toLong))
         .coalesce(1).write.mode("append").parquet(dir)
     }
-    val savedTtl = ops.LlmPipeline.cmsCoveredTtlMs
+    val savedTtl = ops.TextQuality.cmsCoveredTtlMs
     try {
       val (exit, out) = raceChild(Seq("--cms-compact", dir, "10", "2")) {
         (0 until 10).foreach { _ =>
-          ops.LlmPipeline.cmsCompactSketchLog(spark, dir, keepTail = 2)
+          ops.TextQuality.cmsCompactSketchLog(spark, dir, keepTail = 2)
           Thread.sleep(20)
         }
       }
       assert(exit == 0, s"child compactor JVM failed: $out")
       assert(estimates(dir, probe) == exact,
         "racing compactors lost or doubled a fold")
-      ops.LlmPipeline.cmsCoveredTtlMs = 0L
-      ops.LlmPipeline.cmsCompactSketchLog(spark, dir, keepTail = 2)
+      ops.TextQuality.cmsCoveredTtlMs = 0L
+      ops.TextQuality.cmsCompactSketchLog(spark, dir, keepTail = 2)
       assert(estimates(dir, probe) == exact)
       val files = logFiles(dir)
       assert(files.count(_.startsWith("cms-ckpt-")) == 1, s"$files")
-    } finally ops.LlmPipeline.cmsCoveredTtlMs = savedTtl
+    } finally ops.TextQuality.cmsCoveredTtlMs = savedTtl
   }
 }

@@ -51,13 +51,13 @@ class GcOrphansSpec extends AnyFunSuite {
     ops.Storage.ensureZoneMap(spark, d)
     ops.Storage.ensureZoneMapMerged(spark, d)
     ops.Storage.ensureBloomIndex(spark, d)
-    ops.LlmPipeline.ensureNgramPostings(spark, d)
-    ops.LlmPipeline.ensureMinhashBanded(spark, d)
-    ops.LlmPipeline.ensureSimhashSig(spark, d)
-    ops.LlmPipeline.ensureEmbedBucketed(spark, d)
-    ops.LlmPipeline.ensureWinnowFps(spark, d)
-    ops.LlmPipeline.ensureIvfIndex(spark, d)
-    ops.LlmPipeline.ensureJsonlExport(spark, d)
+    ops.Dedup.ensureNgramPostings(spark, d)
+    ops.Dedup.ensureMinhashBanded(spark, d)
+    ops.Dedup.ensureSimhashSig(spark, d)
+    ops.Dedup.ensureEmbedBucketed(spark, d)
+    ops.Dedup.ensureWinnowFps(spark, d)
+    ops.Ann.ensureIvfIndex(spark, d)
+    ops.Sampling.ensureJsonlExport(spark, d)
     ops.Multimodal.ensurePhashTable(spark, d)
     graft.sources.MediaFixtures.tablePath(spark, d)
     graft.sources.MediaFixtures.volumeTablePath(spark, d, 20L)
@@ -90,8 +90,8 @@ class GcOrphansSpec extends AnyFunSuite {
     assert(holding.filterNot(fams.contains).isEmpty,
       s"family stores with dataset A entries missing from artifactFamilies: " +
         holding.filterNot(fams.contains).sorted)
-    val aNgram = ops.LlmPipeline.ensureNgramPostings(spark, a)
-    val bNgram = ops.LlmPipeline.ensureNgramPostings(spark, b)
+    val aNgram = ops.Dedup.ensureNgramPostings(spark, a)
+    val bNgram = ops.Dedup.ensureNgramPostings(spark, b)
     fs.delete(new org.apache.hadoop.fs.Path(a), true)
 
     // phase 1 (default TTL): the orphan is OBSERVED, not deleted — an
@@ -121,7 +121,7 @@ class GcOrphansSpec extends AnyFunSuite {
       assert(entries(f, b).nonEmpty, s"$f lost a LIVE dataset's entry")
     }
     // the survivor still serves: warm probe resolves the same artifact
-    assert(ops.LlmPipeline.ensureNgramPostings(spark, b) == bNgram)
+    assert(ops.Dedup.ensureNgramPostings(spark, b) == bNgram)
     assert(spark.read.parquet(bNgram).count() > 0)
   }
 

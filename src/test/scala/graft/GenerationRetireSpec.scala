@@ -33,10 +33,10 @@ class GenerationRetireSpec extends AnyFunSuite {
     ops.Derived.generationTtlMs = 0L
     try {
       writeDocs(d, 1)
-      val jsonl1 = ops.LlmPipeline.ensureJsonlExport(spark, d)
+      val jsonl1 = ops.Sampling.ensureJsonlExport(spark, d)
       val media1 = graft.sources.MediaFixtures.tablePath(spark, d)
       // a warm call publishes nothing, so it retires nothing
-      assert(ops.LlmPipeline.ensureJsonlExport(spark, d) == jsonl1)
+      assert(ops.Sampling.ensureJsonlExport(spark, d) == jsonl1)
       assert(fs.exists(new org.apache.hadoop.fs.Path(jsonl1)))
 
       val mtime1 = fs.getFileStatus(docs).getModificationTime
@@ -44,7 +44,7 @@ class GenerationRetireSpec extends AnyFunSuite {
       // the artifact key is the table dir's mtime: make the new one
       // differ even on a coarse-clock filesystem
       fs.setTimes(docs, mtime1 + 60000, -1)
-      val jsonl2 = ops.LlmPipeline.ensureJsonlExport(spark, d)
+      val jsonl2 = ops.Sampling.ensureJsonlExport(spark, d)
       val media2 = graft.sources.MediaFixtures.tablePath(spark, d)
 
       assert(jsonl2 != jsonl1 && fs.exists(new org.apache.hadoop.fs.Path(jsonl2)))

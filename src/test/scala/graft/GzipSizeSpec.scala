@@ -59,7 +59,7 @@ class GzipSizeSpec extends AnyFunSuite {
       .map { case (id, t) => (id, t, "en", "src0", 0L) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
-    val got = ops.LlmPipeline.compressionRatio(spark, dir)
+    val got = ops.TextQuality.compressionRatio(spark, dir)
       .as[(Long, Long, Long, Long)].collect()
       .map(r => r._1 -> r).toMap
     val (_, repBytes, repGz, repPpm) = got(1L)

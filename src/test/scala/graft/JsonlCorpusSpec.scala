@@ -128,11 +128,11 @@ class JsonlCorpusSpec extends AnyFunSuite {
 
   test("registry roundtrip and audit agree with their oracles' shape at sf0.001") {
     val d = SparkTestSession.sf0001
-    val rt = ops.LlmPipeline.jsonlRoundtrip(spark, d).collect()
+    val rt = ops.Sampling.jsonlRoundtrip(spark, d).collect()
     assert(rt.nonEmpty)
     rt.foreach(r => assert(r.getAs[Long]("n_intact") == r.getAs[Long]("n_docs"),
       s"roundtrip lost documents: $r"))
-    val audit = ops.LlmPipeline.jsonlAudit(spark, d).collect()
+    val audit = ops.Sampling.jsonlAudit(spark, d).collect()
     assert(audit.map(_.getAs[Long]("n_lines")).sum ==
       Tables.documents(spark, d).count())
     audit.foreach(r => assert(r.getAs[Long]("n_corrupt") == 0L, s"corruption: $r"))

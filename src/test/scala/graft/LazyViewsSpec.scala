@@ -54,15 +54,15 @@ class LazyViewsSpec extends AnyFunSuite {
 
       // cold probes: nothing published yet, and saying so reads only
       // metadata (listings + marker probes)
-      assert(!ops.LlmPipeline.substratesReady(spark, d))
-      assert(!ops.LlmPipeline.ivfIndexReady(spark, d))
+      assert(!ops.Dedup.substratesReady(spark, d))
+      assert(!ops.Ann.ivfIndexReady(spark, d))
       SqlSurface.registerDerivedViews(spark, d, buildIfAbsent = false)
       assert(!spark.catalog.tableExists("substrate_stats"))
       assert(!spark.catalog.tableExists("ivf_assignments"))
       assert(!spark.catalog.tableExists("ivf_stats"))
       // ZERO corpus passes: no artifact entry appeared for this dataset
-      Seq(ops.LlmPipeline.NgramPostingsFamily, ops.LlmPipeline.IvfFamily,
-        ops.LlmPipeline.EmbedBucketedFamily).foreach { f =>
+      Seq(ops.Dedup.NgramPostingsFamily, ops.Ann.IvfFamily,
+        ops.Dedup.EmbedBucketedFamily).foreach { f =>
         assert(entriesIn(f, d).isEmpty, s"cold registration built a $f artifact")
       }
 
@@ -101,8 +101,8 @@ class LazyViewsSpec extends AnyFunSuite {
       // back with the surface — still via marker probes, no rebuild
       Seq("ivf_assignments", "ivf_stats", "substrate_stats")
         .foreach(spark.catalog.dropTempView(_))
-      assert(ops.LlmPipeline.substratesReady(spark, d))
-      assert(ops.LlmPipeline.ivfIndexReady(spark, d))
+      assert(ops.Dedup.substratesReady(spark, d))
+      assert(ops.Ann.ivfIndexReady(spark, d))
       SqlSurface.registerDerivedViews(spark, d, buildIfAbsent = false)
       assert(spark.catalog.tableExists("substrate_stats"))
       assert(spark.catalog.tableExists("ivf_assignments"))

@@ -44,29 +44,29 @@ class LlmPipelineSpec extends AnyFunSuite {
     (0 until 5).map(i => (i.toLong, 100L + i)).toSet + ((0L, 200L))
 
   test("q_dedup_near (MinHashLSH) recalls 100% of planted near-dups") {
-    val got = pairs(ops.LlmPipeline.dedupNear(spark, plantedDir))
+    val got = pairs(ops.Dedup.dedupNear(spark, plantedDir))
     assert(plantedPairs.subsetOf(got), s"missing: ${plantedPairs -- got}")
   }
 
   test("q_dedup_ngram ranks planted pairs with jaccard > 0.7") {
-    val top = ops.LlmPipeline.dedupNgram(spark, plantedDir)
+    val top = ops.Dedup.dedupNgram(spark, plantedDir)
       .where(col("jaccard") > 0.7)
     assert(plantedPairs.subsetOf(pairs(top)))
   }
 
   test("q_dedup_simhash bands the planted pairs with small hamming distance") {
-    val got = ops.LlmPipeline.dedupSimhash(spark, plantedDir)
+    val got = ops.Dedup.dedupSimhash(spark, plantedDir)
       .where(col("hamming") <= 8)
     assert(plantedPairs.subsetOf(pairs(got)))
   }
 
   test("q_dedup_minhash_pairs catches the exact duplicate (all bands equal)") {
-    assert(pairs(ops.LlmPipeline.dedupMinhashPairs(spark, plantedDir))
+    assert(pairs(ops.Dedup.dedupMinhashPairs(spark, plantedDir))
       .contains((0L, 200L)))
   }
 
   test("q_dedup_exact keeps min doc_id for the exact duplicate") {
-    val keep = ops.LlmPipeline.dedupExact(spark, plantedDir)
+    val keep = ops.Dedup.dedupExact(spark, plantedDir)
       .where(col("n_copies") === 2).select("keep_id")
       .collect().map(_.getLong(0)).toSeq
     assert(keep == Seq(0L))
@@ -102,8 +102,8 @@ class LlmPipelineSpec extends AnyFunSuite {
     val degenerate = (0 until 60).map(i => (i.toLong, 0, "hotkey"))
     val small = Seq((1000L, 1, "k2"), (1001L, 1, "k2"))
     val banded = (degenerate ++ small).toDF("doc_id", "band", "band_key")
-    assert(pairs(ops.LlmPipeline.minhashPairsFromBanded(banded)) == Set((1000L, 1001L)))
-    val overflow = ops.LlmPipeline.minhashBucketOverflow(banded).collect()
+    assert(pairs(ops.Dedup.minhashPairsFromBanded(banded)) == Set((1000L, 1001L)))
+    val overflow = ops.Dedup.minhashBucketOverflow(banded).collect()
     assert(overflow.length == 1 && overflow.head.getLong(2) == 60L)
   }
 
@@ -115,25 +115,25 @@ class LlmPipelineSpec extends AnyFunSuite {
     val healthy = Seq((1000L, 1L, Seq(3L, 4L), 25L, 7),
       (1001L, 1L, Seq(3L, 4L), 25L, 7))
     val b = (hot ++ healthy).toDF("vec_id", "label", "q", "n2", "bucket")
-    val got = ops.LlmPipeline.embedPairsFromBucketed(b).collect()
+    val got = ops.Dedup.embedPairsFromBucketed(b).collect()
     assert(got.length == 1)
     assert((got.head.getLong(0), got.head.getLong(1)) == (1000L, 1001L))
     assert(math.abs(got.head.getDouble(2) - 1.0) < 1e-12)
-    val ov = ops.LlmPipeline.embedBucketOverflow(b).collect()
+    val ov = ops.Dedup.embedBucketOverflow(b).collect()
     assert(ov.length == 1 && ov.head.getLong(2) == 60L)
     // raising the cap re-admits the hot block: C(60,2) + the healthy pair
-    assert(ops.LlmPipeline.embedPairsFromBucketed(b, cap = 100).count() ==
+    assert(ops.Dedup.embedPairsFromBucketed(b, cap = 100).count() ==
       60L * 59 / 2 + 1)
     // plan pin: candidate generation is block-local — NO join survives
     // anywhere in q_dedup_embed's physical plan (the old within-label
     // self-join was the registry's last uncapped pair surface)
-    val plan = ops.LlmPipeline.dedupEmbed(spark, SparkTestSession.sf0001)
+    val plan = ops.Dedup.dedupEmbed(spark, SparkTestSession.sf0001)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Join"), s"pair generation must not self-join:\n$plan")
   }
 
   test("q_dedup_embed still surfaces same-block high-cosine pairs on the fixture") {
-    val rows = ops.LlmPipeline.dedupEmbed(spark, SparkTestSession.sf0001).collect()
+    val rows = ops.Dedup.dedupEmbed(spark, SparkTestSession.sf0001).collect()
     assert(rows.nonEmpty)
     // deterministic total order: cos desc, then (vec_a, vec_b)
     val cos = rows.map(_.getDouble(2)).toSeq
@@ -166,7 +166,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     rows.map { case (id, v) => (id, v.map(_.toFloat), (id % 3).toInt) }
       .toDF("vec_id", "embedding", "label")
       .write.parquet(s"$dir/embeddings.parquet")
-    val got = ops.LlmPipeline.dedupSemantic(spark, dir)
+    val got = ops.Dedup.dedupSemantic(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toList
     val byId = got.map(r => r._1 -> r).toMap
     // cluster 1 collapses to rep 10 (transitive: 11 and 12 both reach 10)
@@ -179,7 +179,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     (30L until 34L).foreach(k => assert(byId(k) == ((k, k, true)), s"singleton $k: $got"))
     // and the fixture corpus (max cosine 0.51) is all-keep: the honest
     // trivial result, computed through the same bucketed machinery
-    val fixture = ops.LlmPipeline.dedupSemantic(spark, SparkTestSession.sf0001)
+    val fixture = ops.Dedup.dedupSemantic(spark, SparkTestSession.sf0001)
     assert(fixture.where(!col("keep")).isEmpty, "fixture grew a semantic dup")
   }
 
@@ -196,18 +196,18 @@ class LlmPipelineSpec extends AnyFunSuite {
     // cos = 24/25 = 0.96 ≥ 0.95: in
     val near = Seq((103L, Seq(4L, 3L), 25L, 7))
     val b = (hot ++ dup ++ far ++ near).toDF("vec_id", "q", "n2", "bucket")
-    val got = ops.LlmPipeline.semanticPairsFromBucketed(b)
+    val got = ops.Dedup.semanticPairsFromBucketed(b)
       .as[(Long, Long)].collect().toSet
     assert(got == Set((100L, 101L), (100L, 103L), (101L, 103L)),
       s"expected the cos∈{1, 0.96} pairs only, got $got")
     // and the cap is OBSERVABLE (VERDICT r16 #1): the skipped hot bucket
     // surfaces in the overflow report with its true membership
-    val ov = ops.LlmPipeline.semanticBucketOverflow(b).collect()
+    val ov = ops.Dedup.semanticBucketOverflow(b).collect()
     assert(ov.length == 1 && ov.head.getInt(0) == 3 && ov.head.getLong(1) == 60L,
       s"expected one overflow row (bucket 3, 60 vecs), got ${ov.toList}")
     // fixture: every semantic bucket within cap — the overflow is empty
-    assert(ops.LlmPipeline.semanticBucketOverflow(
-      ops.LlmPipeline.embedBucketed(spark, SparkTestSession.sf0001)).isEmpty,
+    assert(ops.Dedup.semanticBucketOverflow(
+      ops.Dedup.embedBucketed(spark, SparkTestSession.sf0001)).isEmpty,
       "fixture grew a hot semantic bucket")
   }
 
@@ -231,7 +231,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     // short-circuit probe, ccLabels' symmetrized edge pin — touches it.
     // An unpinned subtree here is the r16 weak row: the emptiness probe
     // and the edge pin each re-execute the dominant shuffle.
-    val pinnedPairs = ops.LlmPipeline.semanticPairsPinned(spark, dir)
+    val pinnedPairs = ops.Dedup.semanticPairsPinned(spark, dir)
     val pinnedPlan = pinnedPairs.queryExecution.executedPlan.toString
     assert(!pinnedPlan.contains("Exchange") && !pinnedPlan.contains("FileScan"),
       s"semantic pairs must be pinned (lineage-cut), got:\n$pinnedPlan")
@@ -242,7 +242,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val full = ops.LlmPipeline.dedupSemantic(spark, dir)
+      val full = ops.Dedup.dedupSemantic(spark, dir)
       val scans = full.queryExecution.executedPlan.collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec
           if f.metadata.get("Location").exists(_.contains("embeddings")) => f
@@ -258,7 +258,7 @@ class LlmPipelineSpec extends AnyFunSuite {
   test("q_dedup_overflow_report: empty on the fixture; planted hot blocks surface per family") {
     import spark.implicits._
     // the fixture is healthy — every capped family reports nothing
-    assert(ops.LlmPipeline.dedupOverflowReport(spark, SparkTestSession.sf0001).isEmpty,
+    assert(ops.Dedup.dedupOverflowReport(spark, SparkTestSession.sf0001).isEmpty,
       "fixture grew a hot block")
     // planted corpus that overflows EVERY family:
     //  - 60 byte-identical docs => identical minhash/simhash signatures
@@ -286,7 +286,7 @@ class LlmPipelineSpec extends AnyFunSuite {
         (101L, Seq.tabulate(64)(i => math.sin(i * 2.9).toFloat), 3))
     vecs.toDF("vec_id", "embedding", "label")
       .write.parquet(s"$dir/embeddings.parquet")
-    val rep = ops.LlmPipeline.dedupOverflowReport(spark, dir).collect()
+    val rep = ops.Dedup.dedupOverflowReport(spark, dir).collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3)))
     val byFam = rep.groupBy(_._1)
     assert(byFam.keySet == Set("minhash", "simhash", "ngram", "embed", "semantic"),
@@ -313,7 +313,7 @@ class LlmPipelineSpec extends AnyFunSuite {
         .getOrElse(fail("no SQL surface for q_dedup_overflow_report"))
       val (sqlCols, sqlRows) = SqlSurface.canon(spark.sql(sql))
       val (engCols, engRows) =
-        SqlSurface.canon(ops.LlmPipeline.dedupOverflowReport(spark, dir))
+        SqlSurface.canon(ops.Dedup.dedupOverflowReport(spark, dir))
       assert(sqlCols == engCols, s"mirror schema drift: $sqlCols vs $engCols")
       assert(sqlRows.nonEmpty && sqlRows == engRows,
         s"SQL mirror != engine on planted hot blocks: " +
@@ -336,7 +336,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     val dir = s"/tmp/graft-test-ivfappend-${java.util.UUID.randomUUID()}"
     val table = s"$dir/embeddings.parquet"
     vecs(0 until 300).coalesce(1).write.parquet(table)
-    val idx1 = ops.LlmPipeline.ensureIvfIndex(spark, dir)
+    val idx1 = ops.Ann.ensureIvfIndex(spark, dir)
     val asg1 = spark.read.parquet(s"$idx1/assignments")
       .select("vec_id", "bucket").as[(Long, Int)].collect().toMap
     val cents1 = spark.read.parquet(s"$idx1/centroids")
@@ -360,7 +360,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     val out = fs.create(oldPart.getPath, true)
     try out.write(new Array[Byte](pLen.toInt)) finally out.close()
     fs.setTimes(oldPart.getPath, pMtime, -1)
-    val idx2 = ops.LlmPipeline.ensureIvfIndex(spark, dir)
+    val idx2 = ops.Ann.ensureIvfIndex(spark, dir)
     assert(idx2 != idx1, "append did not produce a new artifact")
     // production IVF contract #1: centroids are FROZEN on append
     val cents2 = spark.read.parquet(s"$idx2/centroids")
@@ -398,7 +398,7 @@ class LlmPipelineSpec extends AnyFunSuite {
       .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
       .head.getPath
     vecs(1000 until 1060).coalesce(1).write.mode("append").parquet(table)
-    val idx1 = ops.LlmPipeline.ensureIvfIndex(spark, dir)
+    val idx1 = ops.Ann.ensureIvfIndex(spark, dir)
     val rows1 = spark.read.parquet(s"$idx1/assignments")
       .selectExpr("vec_id", "bucket", "src").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
@@ -416,7 +416,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     val out = fs.create(firstPart, true)
     try out.write(new Array[Byte](pLen.toInt)) finally out.close()
     fs.setTimes(firstPart, pMtime, -1)
-    val idx2 = ops.LlmPipeline.ensureIvfIndex(spark, dir)
+    val idx2 = ops.Ann.ensureIvfIndex(spark, dir)
     assert(idx2 != idx1, "removal did not produce a new artifact")
     // contract #1: centroids stay FROZEN on removal
     val cents2 = spark.read.parquet(s"$idx2/centroids")
@@ -448,7 +448,7 @@ class LlmPipelineSpec extends AnyFunSuite {
       .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
       .head.getPath
     vecs(500 until 600).coalesce(1).write.mode("append").parquet(table)
-    val idx1 = ops.LlmPipeline.ensureIvfIndex(spark, dir)
+    val idx1 = ops.Ann.ensureIvfIndex(spark, dir)
     val cents1 = spark.read.parquet(s"$idx1/centroids")
       .as[(Int, Seq[Double])].collect().sortBy(_._1)
     val keep1 = spark.read.parquet(s"$idx1/assignments")
@@ -460,7 +460,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     val newVecs = newDf.select($"vec_id", $"embedding".cast("array<double>"))
       .as[(Long, Seq[Double])].collect()
     newDf.coalesce(1).write.mode("append").parquet(table)
-    val idx2 = ops.LlmPipeline.ensureIvfIndex(spark, dir)
+    val idx2 = ops.Ann.ensureIvfIndex(spark, dir)
     assert(idx2 != idx1)
     // centroids frozen through the mixed tick
     val cents2 = spark.read.parquet(s"$idx2/centroids")
@@ -490,38 +490,38 @@ class LlmPipelineSpec extends AnyFunSuite {
     // corpus A: same-distribution append — drift ratio ~1, frac small
     val dirA = s"/tmp/graft-test-ivfstale-a-${java.util.UUID.randomUUID()}"
     vecs(0 until 300, 0.0).coalesce(1).write.parquet(s"$dirA/embeddings.parquet")
-    ops.LlmPipeline.ensureIvfIndex(spark, dirA)
+    ops.Ann.ensureIvfIndex(spark, dirA)
     vecs(1000 until 1060, 0.0).coalesce(1).write.mode("append")
       .parquet(s"$dirA/embeddings.parquet")
-    val a = ops.LlmPipeline.ivfStaleness(spark, dirA).collect().head
+    val a = ops.Ann.ivfStaleness(spark, dirA).collect().head
     assert(a.getAs[Long]("n_base") == 300L && a.getAs[Long]("n_appended") == 60L)
     assert(!a.getAs[Boolean]("recluster"),
       s"faithful append must not trigger a recluster: $a")
-    assert(a.getAs[Double]("drift_ratio") < ops.LlmPipeline.IvfStaleRatio)
+    assert(a.getAs[Double]("drift_ratio") < ops.Ann.IvfStaleRatio)
     // corpus B: the appended distribution moved (+5 per dim — far
     // outside every build-time cell) — drift ratio blows past the
     // threshold even though the appended fraction is small
     val dirB = s"/tmp/graft-test-ivfstale-b-${java.util.UUID.randomUUID()}"
     vecs(0 until 300, 0.0).coalesce(1).write.parquet(s"$dirB/embeddings.parquet")
-    ops.LlmPipeline.ensureIvfIndex(spark, dirB)
+    ops.Ann.ensureIvfIndex(spark, dirB)
     vecs(1000 until 1060, 5.0).coalesce(1).write.mode("append")
       .parquet(s"$dirB/embeddings.parquet")
-    val b = ops.LlmPipeline.ivfStaleness(spark, dirB).collect().head
-    assert(b.getAs[Double]("drift_ratio") > ops.LlmPipeline.IvfStaleRatio,
+    val b = ops.Ann.ivfStaleness(spark, dirB).collect().head
+    assert(b.getAs[Double]("drift_ratio") > ops.Ann.IvfStaleRatio,
       s"planted drift not detected: $b")
     assert(b.getAs[Boolean]("recluster"), s"drifted append must flag: $b")
     // corpus C: no drift but appends outweigh the clustered base — the
     // fraction leg triggers (frozen cells fitted on a minority)
     val dirC = s"/tmp/graft-test-ivfstale-c-${java.util.UUID.randomUUID()}"
     vecs(0 until 300, 0.0).coalesce(1).write.parquet(s"$dirC/embeddings.parquet")
-    ops.LlmPipeline.ensureIvfIndex(spark, dirC)
+    ops.Ann.ensureIvfIndex(spark, dirC)
     vecs(1000 until 1400, 0.0).coalesce(1).write.mode("append")
       .parquet(s"$dirC/embeddings.parquet")
-    val c = ops.LlmPipeline.ivfStaleness(spark, dirC).collect().head
-    assert(c.getAs[Double]("appended_frac") > ops.LlmPipeline.IvfStaleFrac &&
+    val c = ops.Ann.ivfStaleness(spark, dirC).collect().head
+    assert(c.getAs[Double]("appended_frac") > ops.Ann.IvfStaleFrac &&
       c.getAs[Boolean]("recluster"), s"majority append must flag: $c")
     // and the un-appended fixture reports a quiet index (0 deltas)
-    val fix = ops.LlmPipeline.ivfStaleness(spark, SparkTestSession.sf0001)
+    val fix = ops.Ann.ivfStaleness(spark, SparkTestSession.sf0001)
       .collect().head
     assert(fix.getAs[Long]("n_appended") == 0L && !fix.getAs[Boolean]("recluster"))
   }
@@ -547,16 +547,16 @@ class LlmPipelineSpec extends AnyFunSuite {
     vecs(0 until 240, 0.0).coalesce(1).write.parquet(tblA)
     Thread.sleep(1100) // distinct part mtimes so "oldest" is stable
     vecs(240 until 300, 0.0).coalesce(1).write.mode("append").parquet(tblA)
-    ops.LlmPipeline.ensureIvfIndex(spark, dirA)
+    ops.Ann.ensureIvfIndex(spark, dirA)
     vecs(1000 until 1100, 0.0).coalesce(1).write.mode("append").parquet(tblA)
-    ops.LlmPipeline.ensureIvfIndex(spark, dirA)
+    ops.Ann.ensureIvfIndex(spark, dirA)
     val fsA = new org.apache.hadoop.fs.Path(tblA)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fsA.delete(parts(tblA).head.getPath, false) // drop the 240-vec base file
-    val a = ops.LlmPipeline.ivfStaleness(spark, dirA).collect().head
+    val a = ops.Ann.ivfStaleness(spark, dirA).collect().head
     assert(a.getAs[Long]("n_base") == 60L && a.getAs[Long]("n_appended") == 100L,
       s"removal census wrong: $a")
-    assert(a.getAs[Double]("appended_frac") > ops.LlmPipeline.IvfStaleFrac &&
+    assert(a.getAs[Double]("appended_frac") > ops.Ann.IvfStaleFrac &&
       a.getAs[Boolean]("recluster"),
       s"post-retention minority base must flag a recluster: $a")
     // scenario 2: the DRIFTED append itself is retained away — its
@@ -564,16 +564,16 @@ class LlmPipelineSpec extends AnyFunSuite {
     val dirB = s"/tmp/graft-test-ivfrmdelta-${java.util.UUID.randomUUID()}"
     val tblB = s"$dirB/embeddings.parquet"
     vecs(0 until 300, 0.0).coalesce(1).write.parquet(tblB)
-    ops.LlmPipeline.ensureIvfIndex(spark, dirB)
+    ops.Ann.ensureIvfIndex(spark, dirB)
     Thread.sleep(1100)
     vecs(1000 until 1060, 5.0).coalesce(1).write.mode("append").parquet(tblB)
-    ops.LlmPipeline.ensureIvfIndex(spark, dirB)
-    assert(ops.LlmPipeline.ivfStaleness(spark, dirB)
+    ops.Ann.ensureIvfIndex(spark, dirB)
+    assert(ops.Ann.ivfStaleness(spark, dirB)
       .collect().head.getAs[Boolean]("recluster"), "drifted append must flag")
     val fsB = new org.apache.hadoop.fs.Path(tblB)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fsB.delete(parts(tblB).last.getPath, false) // drop the drifted file
-    val b = ops.LlmPipeline.ivfStaleness(spark, dirB).collect().head
+    val b = ops.Ann.ivfStaleness(spark, dirB).collect().head
     assert(b.getAs[Long]("n_appended") == 0L && !b.getAs[Boolean]("recluster"),
       s"removed append's stale delta means must not fire the drift leg: $b")
   }
@@ -586,11 +586,11 @@ class LlmPipelineSpec extends AnyFunSuite {
         .toDF("vec_id", "embedding", "label")
     val dir = s"/tmp/graft-test-ivfrefit-${java.util.UUID.randomUUID()}"
     vecs(0 until 300, 0.0).coalesce(1).write.parquet(s"$dir/embeddings.parquet")
-    val idx = ops.LlmPipeline.ensureIvfIndex(spark, dir)
+    val idx = ops.Ann.ensureIvfIndex(spark, dir)
     // quiet index: the job is a no-op and touches nothing
     val centsBefore = spark.read.parquet(s"$idx/centroids")
       .as[(Int, Seq[Double])].collect().sortBy(_._1).toSeq
-    assert(!ops.LlmPipeline.ivfReclusterIfStale(spark, dir),
+    assert(!ops.Ann.ivfReclusterIfStale(spark, dir),
       "quiet index must not refit")
     assert(spark.read.parquet(s"$idx/centroids")
       .as[(Int, Seq[Double])].collect().sortBy(_._1).toSeq == centsBefore)
@@ -601,23 +601,23 @@ class LlmPipelineSpec extends AnyFunSuite {
     // in-flight readers
     vecs(1000 until 1060, 5.0).coalesce(1).write.mode("append")
       .parquet(s"$dir/embeddings.parquet")
-    val idx2 = ops.LlmPipeline.ensureIvfIndex(spark, dir)
+    val idx2 = ops.Ann.ensureIvfIndex(spark, dir)
     // the in-flight reader: a DataFrame holding the pre-refit files
     val preReader = spark.read.parquet(s"$idx2/assignments")
-    assert(ops.LlmPipeline.ivfStaleness(spark, dir)
+    assert(ops.Ann.ivfStaleness(spark, dir)
       .collect().head.getAs[Boolean]("recluster"))
-    assert(ops.LlmPipeline.ivfReclusterIfStale(spark, dir), "drift must refit")
+    assert(ops.Ann.ivfReclusterIfStale(spark, dir), "drift must refit")
     // a new generation dir resolves; centroids moved (the one
     // sanctioned suspension of the frozen-centroid contract), every
     // vector re-assigned, and the staleness baseline restarted — the
     // verdict is quiet again with zero delta rows
-    val idx3 = ops.LlmPipeline.ensureIvfIndex(spark, dir)
+    val idx3 = ops.Ann.ensureIvfIndex(spark, dir)
     assert(idx3 != idx2 && idx3.contains("-r"),
       s"refit must publish a new generation: $idx2 -> $idx3")
     val centsAfter = spark.read.parquet(s"$idx3/centroids")
       .as[(Int, Seq[Double])].collect().sortBy(_._1).toSeq
     assert(centsAfter != centsBefore, "refit did not move the centroids")
-    val st = ops.LlmPipeline.ivfStaleness(spark, dir).collect().head
+    val st = ops.Ann.ivfStaleness(spark, dir).collect().head
     assert(st.getAs[Long]("n_base") == 360L &&
       st.getAs[Long]("n_appended") == 0L && !st.getAs[Boolean]("recluster"),
       s"refit did not restart the baseline: $st")
@@ -636,14 +636,14 @@ class LlmPipelineSpec extends AnyFunSuite {
         .toDF("vec_id", "embedding", "label")
     val dir = s"/tmp/graft-test-ivfsplit-${java.util.UUID.randomUUID()}"
     vecs(0 until 300, 0.0).coalesce(1).write.parquet(s"$dir/embeddings.parquet")
-    ops.LlmPipeline.ensureIvfIndex(spark, dir)
+    ops.Ann.ensureIvfIndex(spark, dir)
     // quiet index: the split job is a no-op
-    assert(!ops.LlmPipeline.ivfSplitHotCells(spark, dir),
+    assert(!ops.Ann.ivfSplitHotCells(spark, dir),
       "no appends -> nothing to split")
     // drifted append: all 60 land in ONE frozen cell (the hot cell)
     vecs(1000 until 1060, 5.0).coalesce(1).write.mode("append")
       .parquet(s"$dir/embeddings.parquet")
-    val idx1 = ops.LlmPipeline.ensureIvfIndex(spark, dir)
+    val idx1 = ops.Ann.ensureIvfIndex(spark, dir)
     val before = spark.read.parquet(s"$idx1/assignments")
       .select("vec_id", "bucket").as[(Long, Int)].collect().toMap
     val hotCell = before(1000L)
@@ -664,8 +664,8 @@ class LlmPipelineSpec extends AnyFunSuite {
         try out.write(new Array[Byte](len.toInt)) finally out.close()
         fs.setTimes(st.getPath, mtime, -1)
       }
-    assert(ops.LlmPipeline.ivfSplitHotCells(spark, dir), "hot cell must split")
-    val idx2 = ops.LlmPipeline.ensureIvfIndex(spark, dir)
+    assert(ops.Ann.ivfSplitHotCells(spark, dir), "hot cell must split")
+    val idx2 = ops.Ann.ensureIvfIndex(spark, dir)
     assert(idx2 != idx1 && idx2.contains("-r"),
       s"split must publish a new generation: $idx1 -> $idx2")
     val after = spark.read.parquet(s"$idx2/assignments")
@@ -688,12 +688,12 @@ class LlmPipelineSpec extends AnyFunSuite {
     assert(cents.count() == nCentsBefore + 1)
     assert(cents.where(col("cent_id") === hotCell).isEmpty,
       "parent centroid must retire")
-    val st = ops.LlmPipeline.ivfStaleness(spark, dir).collect().head
+    val st = ops.Ann.ivfStaleness(spark, dir).collect().head
     assert(st.getAs[Long]("n_base") == 360L &&
       st.getAs[Long]("n_appended") == 0L && !st.getAs[Boolean]("recluster"),
       s"split must re-baseline the verdict: $st")
     // probes keep working over the split generation (bucket co-membership)
-    assert(ops.LlmPipeline.simSearchIvfKmeansProbe(spark, dir).count() == 5)
+    assert(ops.Ann.simSearchIvfKmeansProbe(spark, dir).count() == 5)
   }
 
   test("ccLabels: chain graphs converge to the global min across rounds") {
@@ -704,7 +704,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     val chain = (10L until 16L).map(i => (i, i + 1))
     val clique = Seq((21L, 22L), (20L, 22L), (20L, 21L))
     val lone = Seq((30L, 31L))
-    val labels = ops.LlmPipeline
+    val labels = ops.Dedup
       .ccLabels((chain ++ clique ++ lone).toDF("doc_a", "doc_b"))
       .as[(Long, Long)].collect().toMap
     assert((10L to 16L).forall(labels(_) == 10L))
@@ -717,7 +717,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     // doc 0, its one-token-edit near-dup 100, and its exact copy 200
     // must land in ONE component represented by 0 — the transitive
     // decision pairwise keep-the-min cannot make.
-    val labels = ops.LlmPipeline.dedupCc(spark, plantedDir)
+    val labels = ops.Dedup.dedupCc(spark, plantedDir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels(200L) == 0L)
     assert(labels.get(100L).forall(_ == 0L)) // near-dup joins iff banded with 0
@@ -731,11 +731,11 @@ class LlmPipelineSpec extends AnyFunSuite {
     val hot = (0 until 60).map(i => (i.toLong, 0xABCD1234L))
     val healthy = Seq((1000L, 0L), (1001L, 1L))
     val sh = (hot ++ healthy).toDF("doc_id", "simhash")
-    assert(pairs(ops.LlmPipeline.simhashPairsFromSig(sh)) == Set((1000L, 1001L)))
-    val ov = ops.LlmPipeline.simhashBucketOverflow(sh).collect()
+    assert(pairs(ops.Dedup.simhashPairsFromSig(sh)) == Set((1000L, 1001L)))
+    val ov = ops.Dedup.simhashBucketOverflow(sh).collect()
     assert(ov.length == 4 && ov.forall(_.getLong(2) == 60L))
     // raising the cap re-admits the hot bucket: C(60,2) + the healthy pair
-    assert(ops.LlmPipeline.simhashPairsFromSig(sh, cap = 100).count() == 60L * 59 / 2 + 1)
+    assert(ops.Dedup.simhashPairsFromSig(sh, cap = 100).count() == 60L * 59 / 2 + 1)
   }
 
   test("ngram degenerate shingle is df-capped, not exploded") {
@@ -747,16 +747,16 @@ class LlmPipelineSpec extends AnyFunSuite {
     val healthy = Seq((1000L, 1L), (1000L, 2L), (1000L, 3L),
       (1001L, 1L), (1001L, 2L), (1001L, 4L))
     val postings = (stop ++ healthy).toDF("doc_id", "sh")
-    val out = ops.LlmPipeline.ngramPairsFromPostings(postings).collect()
+    val out = ops.Dedup.ngramPairsFromPostings(postings).collect()
     assert(out.length == 1)
     assert(out.head.getLong(0) == 1000L && out.head.getLong(1) == 1001L)
     // |∩|=2 ({1,2}), |A|=|B|=3 → J = 2/(3+3-2) = 0.5
     assert(out.head.getDouble(2) == 0.5)
-    val ov = ops.LlmPipeline.ngramDfOverflow(postings).collect()
+    val ov = ops.Dedup.ngramDfOverflow(postings).collect()
     assert(ov.length == 1 && ov.head.getLong(0) == 99999L && ov.head.getLong(1) == 150L)
     // raising the cap re-admits the stopword shingle: C(150,2)+1 pairs,
     // clipped to the function's own top-100
-    assert(ops.LlmPipeline.ngramPairsFromPostings(postings, cap = 200).count() == 100L)
+    assert(ops.Dedup.ngramPairsFromPostings(postings, cap = 200).count() == 100L)
   }
 
   test("approx_count_distinct within 10% of exact (#33 tolerance rule)") {
@@ -793,17 +793,17 @@ class LlmPipelineSpec extends AnyFunSuite {
   test("q_sim_search_ivf_kmeans: deterministic, bucket-pruned, scores exact") {
     import spark.implicits._
     val d = SparkTestSession.sf0001
-    val a = ops.LlmPipeline.simSearchIvfKmeans(spark, d)
+    val a = ops.Ann.simSearchIvfKmeans(spark, d)
       .as[(Long, Int, Double)].collect().toSeq
     assert(a.length == 5)
     assert(a.map(_._3).sliding(2).forall(w => w(0) >= w(1)), "not sorted desc")
     assert(a.map(_._2).distinct.length == 1, "results span buckets — not pruned")
     // fixed seed → identical result on a second run
-    val b = ops.LlmPipeline.simSearchIvfKmeans(spark, d)
+    val b = ops.Ann.simSearchIvfKmeans(spark, d)
       .as[(Long, Int, Double)].collect().toSeq
     assert(a == b)
     // each returned cosine equals the exact brute-force cosine for that id
-    val brute = ops.LlmPipeline.simSearch(spark, d)
+    val brute = ops.Ann.simSearch(spark, d)
       .as[(Long, Double)].collect().toMap
     // guard against a vacuous pass: the pruned bucket must actually recall
     // some of the brute-force top-10 before the per-id exactness check
@@ -817,7 +817,7 @@ class LlmPipelineSpec extends AnyFunSuite {
   test("IVF argmin BIGINT packing: exact at the boundary, fixture far below it") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, min => fmin, expr}
-    val nlist = ops.LlmPipeline.IvfNlist
+    val nlist = ops.Ann.IvfNlist
     // packing k = dist2 * nlist + cent_id is exact iff dist2 never
     // exceeds (Long.Max - (nlist-1)) / nlist; drive the EXACT aggregate
     // expression at that edge: ties at maxSafe must break by cent_id
@@ -845,23 +845,23 @@ class LlmPipelineSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.hadoop.fs.Path
     val d = SparkTestSession.sf0001
-    val dir = ops.LlmPipeline.ivfIndexDir(spark, d)
+    val dir = ops.Ann.ivfIndexDir(spark, d)
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(dir), true) // force a fresh build
-    val p1 = ops.LlmPipeline.simSearchIvfKmeansProbe(spark, d)
+    val p1 = ops.Ann.simSearchIvfKmeansProbe(spark, d)
       .as[(Long, Int, Double)].collect().toSeq
     val success = new Path(s"$dir/assignments/_SUCCESS")
     assert(fs.exists(success), "first probe did not persist the index")
     val builtAt = fs.getFileStatus(success).getModificationTime
     // second probe: identical result, and the index is NOT rebuilt —
     // the production contract (training job once, probes forever)
-    val p2 = ops.LlmPipeline.simSearchIvfKmeansProbe(spark, d)
+    val p2 = ops.Ann.simSearchIvfKmeansProbe(spark, d)
       .as[(Long, Int, Double)].collect().toSeq
     assert(p1 == p2)
     assert(fs.getFileStatus(success).getModificationTime == builtAt,
       "second probe retrained and rewrote the index")
     // the persisted-index probe returns exactly the per-run form's rows
-    val perRun = ops.LlmPipeline.simSearchIvfKmeans(spark, d)
+    val perRun = ops.Ann.simSearchIvfKmeans(spark, d)
       .as[(Long, Int, Double)].collect().toSeq
     assert(p1 == perRun, "persisted-index probe drifted from fit-and-probe")
     // centroid table: k=8 centers, full embedding dimensionality — the
@@ -875,12 +875,12 @@ class LlmPipelineSpec extends AnyFunSuite {
   test("q_sim_search_lsh: bucket-pruned, scores exact, recalls brute-force neighbors") {
     import spark.implicits._
     val d = SparkTestSession.sf0001
-    val a = ops.LlmPipeline.simSearchLsh(spark, d)
+    val a = ops.Ann.simSearchLsh(spark, d)
       .as[(Long, Int, Double)].collect().toSeq
     assert(a.nonEmpty && a.length <= 5)
     assert(a.map(_._2).distinct.length == 1, "results span buckets — not pruned")
     assert(a.map(_._3).sliding(2).forall(w => w.length < 2 || w(0) >= w(1)), "not sorted desc")
-    val brute = ops.LlmPipeline.simSearch(spark, d)
+    val brute = ops.Ann.simSearch(spark, d)
       .as[(Long, Double)].collect().toMap
     val overlap = a.count(r => brute.contains(r._1))
     assert(overlap >= 1, "LSH bucket recalled none of the brute-force top-10")
@@ -893,14 +893,14 @@ class LlmPipelineSpec extends AnyFunSuite {
     import spark.implicits._
     val d = SparkTestSession.sf0001
     // ground truth: brute-force top-5 neighbors of the probe
-    val brute5 = ops.LlmPipeline.simSearch(spark, d)
+    val brute5 = ops.Ann.simSearch(spark, d)
       .as[(Long, Double)].collect().take(5).map(_._1).toSet
     def recall(rows: Seq[(Long, _, Double)]): Double =
       rows.map(_._1).toSet.intersect(brute5).size.toDouble / brute5.size
-    val ivf1 = ops.LlmPipeline.simSearchIvf(spark, d).as[(Long, Long, Double)].collect().toSeq
-    val ivf2 = ops.LlmPipeline.simSearchIvf2(spark, d).as[(Long, Long, Double)].collect().toSeq
-    val lsh1 = ops.LlmPipeline.simSearchLsh(spark, d).as[(Long, Int, Double)].collect().toSeq
-    val lshMp = ops.LlmPipeline.simSearchLshMp(spark, d).as[(Long, Int, Double)].collect().toSeq
+    val ivf1 = ops.Ann.simSearchIvf(spark, d).as[(Long, Long, Double)].collect().toSeq
+    val ivf2 = ops.Ann.simSearchIvf2(spark, d).as[(Long, Long, Double)].collect().toSeq
+    val lsh1 = ops.Ann.simSearchLsh(spark, d).as[(Long, Int, Double)].collect().toSeq
+    val lshMp = ops.Ann.simSearchLshMp(spark, d).as[(Long, Int, Double)].collect().toSeq
     // a wider probe can only add candidates, so recall is monotone
     assert(recall(ivf2) >= recall(ivf1),
       s"ivf nprobe=2 recall ${recall(ivf2)} < nprobe=1 ${recall(ivf1)}")
@@ -928,7 +928,7 @@ class LlmPipelineSpec extends AnyFunSuite {
 
   test("q_sim_search_pq: ADC reconstructs codebook vectors exactly; top-5 is the scan's head") {
     val d = SparkTestSession.sf0001
-    val all = ops.LlmPipeline.pqAdcAll(spark, d).collect()
+    val all = ops.Ann.pqAdcAll(spark, d).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     // codebook vectors' codes reconstruct them losslessly, so their
     // APPROXIMATE distance must equal the EXACT integer squared-L2 to
@@ -936,7 +936,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     val e = graft.Tables.embeddings(spark, d).selectExpr("vec_id",
       "transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS q")
     val q0 = e.where(col("vec_id") === 0).head.getSeq[Long](1)
-    e.where(col("vec_id") > 0 && col("vec_id") < ops.LlmPipeline.PqK)
+    e.where(col("vec_id") > 0 && col("vec_id") < ops.Ann.PqK)
       .collect().foreach { r =>
         val v = r.getLong(0)
         val exact = q0.zip(r.getSeq[Long](1))
@@ -947,7 +947,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     // every non-probe vector got encoded (no row lost in the code join)
     assert(all.size == e.count() - 1)
     // the registered query is exactly the full scan's (adist2, vec_id) head
-    val top = ops.LlmPipeline.simSearchPq(spark, d).collect()
+    val top = ops.Ann.simSearchPq(spark, d).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     val expTop = all.toSeq.sortBy { case (id, ad) => (ad, id) }.take(5)
     assert(top == expTop)
@@ -961,9 +961,9 @@ class LlmPipelineSpec extends AnyFunSuite {
     val e = graft.Tables.embeddings(spark, d).selectExpr("vec_id",
       "transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS q")
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).toMap
-    val nlist = ops.LlmPipeline.IvfNlist
-    val pqM = ops.LlmPipeline.PqM; val pqSub = ops.LlmPipeline.PqSubDim
-    val pqK = ops.LlmPipeline.PqK
+    val nlist = ops.Ann.IvfNlist
+    val pqM = ops.Ann.PqM; val pqSub = ops.Ann.PqSubDim
+    val pqK = ops.Ann.PqK
     def d2(a: Array[Long], b: Array[Long]): Long =
       a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
     def argmin(ds: Seq[Long]): Int = ds.zipWithIndex.minBy { case (v, i) => (v, i) }._2
@@ -976,14 +976,14 @@ class LlmPipelineSpec extends AnyFunSuite {
     val codes = resid.map { case (v, r) =>
       v -> (0 until pqM).map(j => argmin(cb.map(cv => d2(sub(cv, j), sub(r, j))))) }
     val probed = (0 until nlist).sortBy(c => (d2(cents(c), e(0L)), c)).take(
-      ops.LlmPipeline.IvfPqNprobe).toSet
+      ops.Ann.IvfPqNprobe).toSet
     val expected = e.keys.filter(v => v != 0L && probed(cell(v))).map { v =>
       val pc = cell(v)
       val pr = e(0L).zip(cents(pc)).map { case (x, y) => x - y }
       val ad = (0 until pqM).map(j => d2(sub(cb(codes(v)(j)), j), sub(pr, j))).sum
       (v, pc.toLong, ad)
     }.toSet
-    val all = ops.LlmPipeline.ivfPqAdcAll(spark, d).collect()
+    val all = ops.Ann.ivfPqAdcAll(spark, d).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(all == expected,
       s"distributed IVF-PQ diverged from the plain-Scala witness " +
@@ -1001,7 +1001,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     // ---- the reason IVF-PQ quantizes RESIDUALS: within the probed
     // cells, residual-ADC distances track exact distances strictly
     // better than raw-PQ ADC (q_sim_search_pq's full-corpus scan)
-    val rawAdc = ops.LlmPipeline.pqAdcAll(spark, d).collect()
+    val rawAdc = ops.Ann.pqAdcAll(spark, d).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val errResid = adist.map { case (v, a) => math.abs(a - exact(v)).toDouble }.sum
     val errRaw = adist.keys.map(v => math.abs(rawAdc(v) - exact(v)).toDouble).sum
@@ -1013,7 +1013,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     val top5Exact = exact.toSeq.sortBy { case (v, dd) => (dd, v) }.take(5).map(_._1).toSet
     assert(top5Exact.count(adist.contains) >= 3,
       "coarse prune lost the brute-force neighborhood")
-    val top = ops.LlmPipeline.simSearchIvfPq(spark, d).collect()
+    val top = ops.Ann.simSearchIvfPq(spark, d).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val expTop = all.toSeq.sortBy { case (v, _, ad) => (ad, v) }.take(5)
     assert(top == expTop, "registered query is not the ADC scan's head")
@@ -1068,7 +1068,7 @@ class LlmPipelineSpec extends AnyFunSuite {
       }.groupBy(_._1).map { case (k, xs) => k -> xs.map(_._2).sum }
       it += 1
     }
-    val got = ops.LlmPipeline.bpeTrainDeep(spark, dir, 64)
+    val got = ops.Bpe.bpeTrainDeep(spark, dir, 64)
       .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
     assert(got.length == 64, s"fixture exhausted early: ${got.length} merges")
     assert(got == expected.toSeq,
@@ -1077,20 +1077,20 @@ class LlmPipelineSpec extends AnyFunSuite {
 
   test("q_sample_stratified: deterministic subset with per-stratum rates") {
     val d = SparkTestSession.sf0001
-    val a = ops.LlmPipeline.sampleStratified(spark, d).collect()
-    val b = ops.LlmPipeline.sampleStratified(spark, d).collect()
+    val a = ops.Sampling.sampleStratified(spark, d).collect()
+    val b = ops.Sampling.sampleStratified(spark, d).collect()
     assert(a.toSeq == b.toSeq, "seeded sample not deterministic")
     val srcIds = graft.Tables.documents(spark, d)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(a.forall(r => srcIds.contains(r.getLong(0))), "sample not a subset")
     // the fraction map is the whitelist: nothing outside it may appear
-    assert(a.forall(r => ops.LlmPipeline.SampleFractions.contains(r.getString(1))),
+    assert(a.forall(r => ops.Sampling.SampleFractions.contains(r.getString(1))),
       "sample leaked a language outside the configured mix")
     // per-stratum rate sanity: en downsampled hard vs the rest
     val byLang = a.groupBy(_.getString(1)).view.mapValues(_.length).toMap
     val totals = graft.Tables.documents(spark, d).groupBy("lang").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    ops.LlmPipeline.SampleFractions.foreach { case (lang, f) =>
+    ops.Sampling.SampleFractions.foreach { case (lang, f) =>
       val got = byLang.getOrElse(lang, 0).toDouble / totals(lang)
       assert(math.abs(got - f) < 0.25, s"$lang: rate $got vs target $f")
     }
@@ -1098,7 +1098,7 @@ class LlmPipelineSpec extends AnyFunSuite {
 
   test("q_mix_temperature: shares normalize and flatten the source distribution") {
     val d = SparkTestSession.sf0001
-    val rows = ops.LlmPipeline.mixTemperature(spark, d).collect()
+    val rows = ops.Sampling.mixTemperature(spark, d).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     // shares are a probability vector in ppm (floor division loses < 1
     // ppm per source)
@@ -1125,7 +1125,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     // packing: within a shard, bins are monotone non-decreasing with no
     // skips, and a bin's exclusive prefix always starts under budget
     // (boundary packing: a bin overflows by at most its last document)
-    val packed = ops.LlmPipeline.packSequences(spark, d)
+    val packed = ops.Sampling.packSequences(spark, d)
       .as[(Long, String, Long, Long)].collect().toSeq
     packed.groupBy(_._2).foreach { case (src, rows) =>
       val bins = rows.sortBy(_._1).map(_._4)
@@ -1139,18 +1139,18 @@ class LlmPipelineSpec extends AnyFunSuite {
       // bin id = exclusive-cumsum DIV budget recomputed independently
       var cum = 0L
       rows.sortBy(_._1).foreach { case (id, _, n, bin) =>
-        assert(bin == cum / ops.LlmPipeline.PackBudget, s"doc $id bin $bin")
+        assert(bin == cum / ops.Sampling.PackBudget, s"doc $id bin $bin")
         cum += n
       }
     }
     // decontamination: the benchmark docs themselves never appear, and
     // every n_hits is consistent with an actual shared shingle
-    val report = ops.LlmPipeline.decontaminate(spark, d)
+    val report = ops.Dedup.decontaminate(spark, d)
       .as[(Long, Long)].collect().toMap
     assert(report.keys.forall(_ % 20 != 0), "benchmark doc leaked into the report")
     assert(report.values.forall(_ >= 0L))
     // flagged docs really share a shingle hash with the bench set
-    val postings = ops.LlmPipeline.ngramPostings(spark, d)
+    val postings = ops.Dedup.ngramPostings(spark, d)
     val benchSh = postings.where($"doc_id" % 20 === 0)
       .select("sh").distinct().as[Long].collect().toSet
     val some = report.filter(_._2 > 0).keys.take(3)
@@ -1169,7 +1169,7 @@ class LlmPipelineSpec extends AnyFunSuite {
       (3L, "common extra extra plain words here", "en", "s0", 35L)
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
-    val got = ops.LlmPipeline.textTfidf(spark, dir)
+    val got = ops.TextQuality.textTfidf(spark, dir)
       .as[(Long, Int, String, Long, Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.sortBy(_._2)).toMap
     // doc 1: apple tf=3 df=1 → 3·10⁶·3/1 = 9e6, beats common tf=2 df=3 → 2e6
@@ -1195,7 +1195,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     val dir = s"/tmp/graft-test-qf-${java.util.UUID.randomUUID()}"
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
-    val got = ops.LlmPipeline.qualityFilter(spark, dir)
+    val got = ops.TextQuality.qualityFilter(spark, dir)
       .as[(Long, Boolean, String)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
     assert(got(1L) == ((false, "too_short")))
     assert(got(2L) == ((false, "low_stopword")))
@@ -1215,7 +1215,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     ).map { case (id, t) => (id, t, "en", "s0", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
-    val got = ops.LlmPipeline.dedupKeepBest(spark, dir)
+    val got = ops.Dedup.dedupKeepBest(spark, dir)
       .as[(Long, Long, Long, String)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
     assert(got == Map(2L -> ((13L, 2L)), 3L -> ((3L, 2L)), 5L -> ((11L, 1L))))
@@ -1243,7 +1243,7 @@ class LlmPipelineSpec extends AnyFunSuite {
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
       val expected = parent.keys.map(v => v -> find(v)).toMap
-      val got = ops.LlmPipeline.ccLabels(pairs.toDF("doc_a", "doc_b"))
+      val got = ops.Dedup.ccLabels(pairs.toDF("doc_a", "doc_b"))
         .as[(Long, Long)].collect().toMap
       assert(got == expected, s"trial $trial: $pairs")
     }
@@ -1251,7 +1251,7 @@ class LlmPipelineSpec extends AnyFunSuite {
 
   test("q_dedup_cluster_stats agrees with the cc labels and reclaims the dropped chars") {
     import spark.implicits._
-    val labels = ops.LlmPipeline.dedupCc(spark, plantedDir)
+    val labels = ops.Dedup.dedupCc(spark, plantedDir)
       .as[(Long, Long)].collect().toSeq
     val chars = spark.read.parquet(s"$plantedDir/documents.parquet")
       .select($"doc_id", $"n_chars").as[(Long, Long)].collect().toMap
@@ -1259,7 +1259,7 @@ class LlmPipelineSpec extends AnyFunSuite {
       rep -> ((members.size.toLong, members.size.toLong - 1,
         members.collect { case (id, _) if id != rep => chars(id) }.sum))
     }
-    val got = ops.LlmPipeline.dedupClusterStats(spark, plantedDir)
+    val got = ops.Dedup.dedupClusterStats(spark, plantedDir)
       .as[(Long, Long, Long, Long)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     assert(got == expected)
@@ -1269,8 +1269,8 @@ class LlmPipelineSpec extends AnyFunSuite {
 
   test("keep-best packing: exact at the caps' boundary") {
     import spark.implicits._
-    val charMax = ops.LlmPipeline.KbCharCap - 1  // largest encodable n_chars
-    val idMax = ops.LlmPipeline.KbIdCap - 1      // largest encodable doc_id
+    val charMax = ops.Dedup.KbCharCap - 1  // largest encodable n_chars
+    val idMax = ops.Dedup.KbIdCap - 1      // largest encodable doc_id
     val dir = s"/tmp/graft-test-kbb-${java.util.UUID.randomUUID()}"
     // same normalized text; the boundary-sized copy must win, and the
     // boundary doc_id must decode intact from the packed minimum
@@ -1279,7 +1279,7 @@ class LlmPipelineSpec extends AnyFunSuite {
       .map { case (id, t, n) => (id, t, "en", "s0", n) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
-    val got = ops.LlmPipeline.dedupKeepBest(spark, dir)
+    val got = ops.Dedup.dedupKeepBest(spark, dir)
       .as[(Long, Long, Long, String)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
     assert(got == Map(idMax -> ((charMax, 2L)), (idMax - 1) -> ((0L, 1L))))
@@ -1287,14 +1287,14 @@ class LlmPipelineSpec extends AnyFunSuite {
 
   test("q_decontaminate_bloom ≡ q_decontaminate (prefilter is result-neutral)") {
     val d = SparkTestSession.sf0001
-    val exact = SqlSurface.canon(ops.LlmPipeline.decontaminate(spark, d))
-    val bloom = SqlSurface.canon(ops.LlmPipeline.decontaminateBloom(spark, d))
+    val exact = SqlSurface.canon(ops.Dedup.decontaminate(spark, d))
+    val bloom = SqlSurface.canon(ops.Dedup.decontaminateBloom(spark, d))
     assert(exact == bloom)
   }
 
   test("q_source_overlap: bounded ratios, ordered pairs, single-source corpus is empty") {
     import spark.implicits._
-    val rows = ops.LlmPipeline.sourceOverlap(spark, SparkTestSession.sf0001)
+    val rows = ops.Dedup.sourceOverlap(spark, SparkTestSession.sf0001)
       .as[(String, String, Long, Long)].collect()
     assert(rows.nonEmpty)
     rows.foreach { case (a, b, shared, ppm) =>
@@ -1303,7 +1303,7 @@ class LlmPipelineSpec extends AnyFunSuite {
         s"($a, $b): n_shared=$shared ppm=$ppm out of range")
     }
     // the planted corpus is all src0 → no cross-source pairs at all
-    assert(ops.LlmPipeline.sourceOverlap(spark, plantedDir).isEmpty)
+    assert(ops.Dedup.sourceOverlap(spark, plantedDir).isEmpty)
   }
 
   test("q_embed_centroids: exact integer mean, recomputed per label from raw vectors") {
@@ -1320,7 +1320,7 @@ class LlmPipelineSpec extends AnyFunSuite {
         (label, dim.toLong) -> cells.map(_._1).sum * 1000 / n
       }
     }
-    val got = ops.LlmPipeline.embedCentroids(spark, d)
+    val got = ops.Ann.embedCentroids(spark, d)
       .as[(Long, Long, Long)].collect()
       .map(r => (r._1, r._2) -> r._3).toMap
     assert(got == expected)
@@ -1336,7 +1336,7 @@ class LlmPipelineSpec extends AnyFunSuite {
       (i.toLong, s"the quick fox u$i v$i w$i", "en", "src0", 20L)
     }.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
-    val got = ops.LlmPipeline.boilerplateScore(spark, dir)
+    val got = ops.Dedup.boilerplateScore(spark, dir)
       .as[(Long, Long, Long, Long)].collect()
     assert(got.length === 25)
     got.foreach { case (id, nSh, nCommon, ppm) =>
@@ -1349,7 +1349,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     (0 until 5).map(i => (i.toLong, s"a$i b$i c$i d$i", "en", "src0", 10L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir2/documents.parquet")
-    assert(ops.LlmPipeline.boilerplateScore(spark, dir2)
+    assert(ops.Dedup.boilerplateScore(spark, dir2)
       .as[(Long, Long, Long, Long)].collect().forall(r => r._3 == 0L && r._4 == 0L))
   }
 
@@ -1366,13 +1366,13 @@ class LlmPipelineSpec extends AnyFunSuite {
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     write((0 until 25).map(i => s"the quick fox u$i v$i w$i"))
-    val before = ops.LlmPipeline.boilerplateScore(spark, dir)
+    val before = ops.Dedup.boilerplateScore(spark, dir)
       .as[(Long, Long, Long, Long)].collect()
     assert(before.length == 25 && before.forall(_._4 == 250000L))
-    val sigBefore = ops.LlmPipeline.queries("q_dedup_minhash_sig")(spark, dir)
+    val sigBefore = ops.Dedup.queries("q_dedup_minhash_sig")(spark, dir)
       .where(col("doc_id") === 0 && col("band") === 0)
       .select("band_key").as[String].head()
-    val vocabBefore = ops.LlmPipeline.queries("q_bpe_apply")(spark, dir)
+    val vocabBefore = ops.Bpe.queries("q_bpe_apply")(spark, dir)
       .as[(String, Long)].collect().toSet
     // rewrite at the SAME path with no shared phrase; bump the dir
     // mtime explicitly so coarse-granularity filesystems can't alias
@@ -1380,16 +1380,16 @@ class LlmPipelineSpec extends AnyFunSuite {
     write((0 until 25).map(i => s"a$i b$i c$i d$i e$i f$i"))
     val f = new java.io.File(s"$dir/documents.parquet")
     assert(f.setLastModified(f.lastModified() + 2000))
-    val after = ops.LlmPipeline.boilerplateScore(spark, dir)
+    val after = ops.Dedup.boilerplateScore(spark, dir)
       .as[(Long, Long, Long, Long)].collect()
     assert(after.length == 25 && after.forall(_._4 == 0L),
       "stale postings memo served after a same-path corpus rewrite")
-    val sigAfter = ops.LlmPipeline.queries("q_dedup_minhash_sig")(spark, dir)
+    val sigAfter = ops.Dedup.queries("q_dedup_minhash_sig")(spark, dir)
       .where(col("doc_id") === 0 && col("band") === 0)
       .select("band_key").as[String].head()
     assert(sigAfter != sigBefore,
       "stale banded-signature memo served after a same-path corpus rewrite")
-    val vocabAfter = ops.LlmPipeline.queries("q_bpe_apply")(spark, dir)
+    val vocabAfter = ops.Bpe.queries("q_bpe_apply")(spark, dir)
       .as[(String, Long)].collect().toSet
     assert(vocabAfter != vocabBefore,
       "stale BPE-loop memo served after a same-path corpus rewrite")
@@ -1407,7 +1407,7 @@ class LlmPipelineSpec extends AnyFunSuite {
       (3L, null.asInstanceOf[String], "en", "src0", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
-    val got = ops.LlmPipeline.queries("q_bpe_pairs")(spark, dir)
+    val got = ops.Bpe.queries("q_bpe_pairs")(spark, dir)
       .as[(String, Long)].collect().toSeq
     assert(got === Seq(("aa", 3L), ("ab", 2L), ("xy", 1L)))
   }
@@ -1428,7 +1428,7 @@ class LlmPipelineSpec extends AnyFunSuite {
       (3L, null.asInstanceOf[String], "en", "src0", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
-    val got = ops.LlmPipeline.queries("q_bpe_train")(spark, dir)
+    val got = ops.Bpe.queries("q_bpe_train")(spark, dir)
       .as[(Int, String, String, Long)].collect().toSeq
     assert(got === Seq((1, "a", "a", 8L), (2, "a", "b", 2L), (3, "aa", "a", 2L)))
 
@@ -1436,7 +1436,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     // "aaaaa" → [aa, aaa] (merge 3's greedy pass lands on the SECOND
     // aa — leftmost (aa,a) adjacency), "abab" → [ab, ab], "xy" → [x, y];
     // weighted by word frequency (aaaaa×2) the vocabulary is exact.
-    val vocab = ops.LlmPipeline.queries("q_bpe_apply")(spark, dir)
+    val vocab = ops.Bpe.queries("q_bpe_apply")(spark, dir)
       .as[(String, Long)].collect().toSeq
     assert(vocab === Seq(("aa", 2L), ("aaa", 2L), ("ab", 2L), ("x", 1L), ("y", 1L)))
   }
@@ -1452,7 +1452,7 @@ class LlmPipelineSpec extends AnyFunSuite {
       .map { case (id, t) => (id, t, "en", "src0", 10L) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
-    val got = ops.LlmPipeline.piiScan(spark, dir)
+    val got = ops.TextQuality.piiScan(spark, dir)
       .as[(Long, Long, Long, Boolean)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     assert(got(1L) === ((2L, 0L, true)))
@@ -1460,7 +1460,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     assert(got(3L) === ((0L, 0L, false)))
     assert(got(4L) === ((0L, 0L, false)), "null text is clean, not an error")
     // redaction: same fixtures, placeholders in place, counts match scan
-    val red = ops.LlmPipeline.piiRedact(spark, dir)
+    val red = ops.TextQuality.piiRedact(spark, dir)
       .as[(Long, String, Long)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
     assert(red(1L)._1 === "contact me at <EMAIL> or <EMAIL> thanks")
     assert(red(1L)._2 === 2L)
@@ -1485,7 +1485,7 @@ class LlmPipelineSpec extends AnyFunSuite {
         (10 to 16).map(i => (i.toLong, Seq(0.5f, 0.5f), 1))
     rows.toDF("vec_id", "embedding", "label")
       .write.parquet(s"$dir/embeddings.parquet")
-    val got = ops.LlmPipeline.embedOutliers(spark, dir)
+    val got = ops.Ann.embedOutliers(spark, dir)
       .as[(Int, Long, Long)].collect().toSeq
     assert(got.filter(_._1 == 0) === Seq(
       (0, 5L, 64000000L), (0, 1L, 4000000L), (0, 2L, 4000000L),
@@ -1496,7 +1496,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     // the label window is scale-safe only because the rank filter runs
     // as a PARTIAL WindowGroupLimit before the label-keyed exchange
     // (≤ K rows per label leave each map task) — pin that plan shape
-    val plan = ops.LlmPipeline.embedOutliers(spark, dir)
+    val plan = ops.Ann.embedOutliers(spark, dir)
       .queryExecution.executedPlan.toString
     assert(plan.contains("WindowGroupLimit") && plan.contains("Partial"),
       s"expected a partial pre-shuffle group limit:\n$plan")
@@ -1512,7 +1512,7 @@ class LlmPipelineSpec extends AnyFunSuite {
       (3L, Seq(0.5f, 0.0f, 0.7f), 0))
       .toDF("vec_id", "embedding", "label")
       .write.parquet(s"$dir/embeddings.parquet")
-    val got = ops.LlmPipeline.embedQuantize(spark, dir)
+    val got = ops.Ann.embedQuantize(spark, dir)
       .as[(Long, Long, Long)].collect().toSeq
     assert(got === Seq(
       (1L, 0L, 0L), (1L, 1L, 0L), (1L, 2L, 0L),
@@ -1521,7 +1521,7 @@ class LlmPipelineSpec extends AnyFunSuite {
       "min→0, max→255, mid→127 (integer DIV), constant dim→0")
     // the dims-sized codebook must come back as a broadcast, never a
     // corpus-side shuffle join
-    val plan = ops.LlmPipeline.embedQuantize(spark, dir)
+    val plan = ops.Ann.embedQuantize(spark, dir)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"),
       s"expected the codebook joined via broadcast:\n$plan")
@@ -1536,13 +1536,13 @@ class LlmPipelineSpec extends AnyFunSuite {
       .map { case (id, t) => (id, t, "en", "src0", 10L) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
-    val got = ops.LlmPipeline.ngramCounts(spark, dir)
+    val got = ops.TextQuality.ngramCounts(spark, dir)
       .as[(String, Long)].collect().toSeq
     assert(got === Seq(("a b", 3L), ("b a", 1L), ("b c", 1L)),
       "doc1 yields 'a b','b a','a b'; doc2 'a b','b c'; doc3/doc4 nothing")
     // the global sort must never materialize: order+limit fuse into a
     // per-partition-heads TakeOrderedAndProject
-    val plan = ops.LlmPipeline.ngramCounts(spark, dir)
+    val plan = ops.TextQuality.ngramCounts(spark, dir)
       .queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"),
       s"expected top-k via TakeOrderedAndProject:\n$plan")
@@ -1562,7 +1562,7 @@ class LlmPipelineSpec extends AnyFunSuite {
       .map { case (id, t) => (id, t, "en", "src0", 10L) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
-    val got = ops.LlmPipeline.budgetSelect(spark, dir)
+    val got = ops.TextQuality.budgetSelect(spark, dir)
       .as[(Long, Long, Long, Long, Boolean)].collect().toSeq
     assert(got === Seq(
       (20L, 1L, 10L, 10L, true),
@@ -1585,7 +1585,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     rows.map { case (id, t, src) => (id, t, "en", src, 10L) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
-    val got = ops.LlmPipeline.qualityDrift(spark, dir)
+    val got = ops.TextQuality.qualityDrift(spark, dir)
       .as[(String, String, Long)].collect().toSeq
     assert(got === Seq(
       ("srcA", "srcB", 0L),
@@ -1597,7 +1597,7 @@ class LlmPipelineSpec extends AnyFunSuite {
 
   test("q_dedup_verify: every candidate pair carries its TRUE shingle-set Jaccard") {
     import spark.implicits._
-    val got = ops.LlmPipeline.dedupVerify(spark, plantedDir)
+    val got = ops.Dedup.dedupVerify(spark, plantedDir)
       .select(col("doc_a"), col("doc_b"), col("jaccard_ppm"), col("is_dup"))
       .as[(Long, Long, Long, Boolean)].collect().toSeq
     // Independent ground truth: true shingle sets from the same corpus.
@@ -1614,7 +1614,7 @@ class LlmPipelineSpec extends AnyFunSuite {
       val inter = (sa & sb).size.toLong
       val expected = inter * 1000000L / (sa.size + sb.size - inter)
       assert(jac === expected, s"pair ($a,$b): engine ppm $jac != true set ppm $expected")
-      assert(dup === (expected >= ops.LlmPipeline.VerifyDupPpm), s"pair ($a,$b) flag")
+      assert(dup === (expected >= ops.Dedup.VerifyDupPpm), s"pair ($a,$b) flag")
     }
     assert(got.filter(p => p._1 == 0L && p._2 == 200L).head._3 === 1000000L,
       "exact dup verifies at exactly 1e6 ppm")
@@ -1626,7 +1626,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     val rows = (1L to 400L).map(i => (i, s"tok a b c d$i", "en", s"src${i % 3}", 10L))
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
-    val got = ops.LlmPipeline.splitAssign(spark, dir)
+    val got = ops.Sampling.splitAssign(spark, dir)
       .as[(String, String, Long, Long)].collect().toSeq
     def bucket(id: Long): Long = {
       val md = java.security.MessageDigest.getInstance("MD5")
@@ -1655,7 +1655,7 @@ class LlmPipelineSpec extends AnyFunSuite {
       (2L, (1 to 150).map(i => f"t$i%03d").mkString(" "), "en", "srcB", 10L))
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
-    val got = ops.LlmPipeline.vocabCoverage(spark, dir)
+    val got = ops.TextQuality.vocabCoverage(spark, dir)
       .as[(String, Long, Long, Long)].collect().toSeq
     assert(got === Seq(
       ("srcA", 10L, 10L, 1000000L),
@@ -1673,7 +1673,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     rows.map { case (id, t) => (id, t, "en", "src0", 10L) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
-    val got = ops.LlmPipeline.contaminationFrac(spark, dir)
+    val got = ops.Dedup.contaminationFrac(spark, dir)
       .as[(Long, Long, Long, Long, Boolean)].collect().toSeq
     def sh(t: String) = t.split(' ').sliding(3).map(_.mkString(" ")).toSet
     val bench = sh(benchTxt)
@@ -1681,7 +1681,7 @@ class LlmPipelineSpec extends AnyFunSuite {
       val ss = sh(t)
       val hits = (ss & bench).size.toLong
       val frac = hits * 1000000L / ss.size
-      (id, ss.size.toLong, hits, frac, frac >= ops.LlmPipeline.ContamDropPpm)
+      (id, ss.size.toLong, hits, frac, frac >= ops.Dedup.ContamDropPpm)
     }
     assert(got === expected,
       "per-doc (n_sh, n_hits, frac_ppm, drop) must equal the true-set recompute; " +
@@ -1700,7 +1700,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     val rows = (1 to 40).map(i => (i.toLong, (1 to i).map(j => s"w$j").mkString(" "), "en", "srcA", 5L))
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
-    val got = ops.LlmPipeline.lengthTrim(spark, dir)
+    val got = ops.TextQuality.lengthTrim(spark, dir)
       .as[(String, Long, Long, Long, Long, Long)].collect().toSeq
     assert(got === Seq(("srcA", 40L, 2L, 38L, 37L, 3L)),
       "cut at the smallest length whose cumulative count reaches the ppm rank " +
@@ -1722,7 +1722,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     rows.map { case (id, t, src) => (id, t, "en", src, t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
-    val got = ops.LlmPipeline.dedupCrossSource(spark, dir)
+    val got = ops.Dedup.dedupCrossSource(spark, dir)
       .as[(String, String, Long)].collect().toSeq
     assert(got === Seq(("srcA", "srcB", 3L), ("srcB", "srcA", 1L)),
       "srcA absorbs 3 srcB mirrors (11,12,13); srcB absorbs 1 srcA mirror (22)")
@@ -1738,7 +1738,7 @@ class LlmPipelineSpec extends AnyFunSuite {
       .map { case (sh, rs) =>
         sh -> ((rs.length.toLong, rs.map(_._2).sum, rs.map(_._1).min, rs.map(_._1).max))
       }
-    val got = ops.LlmPipeline.shardManifest(spark, d)
+    val got = ops.Sampling.shardManifest(spark, d)
       .as[(Long, Long, Long, Long, Long)].collect()
     assert(got.map(_._1).toSeq == got.map(_._1).toSeq.sorted, "manifest ordered by shard")
     assert(got.map(r => r._1 -> ((r._2, r._3, r._4, r._5))).toMap == expected)
@@ -1766,7 +1766,7 @@ class LlmPipelineSpec extends AnyFunSuite {
       .map(n => (n.toLong, mk(n), "en", "src0", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
-    val got = ops.LlmPipeline.docWindows(spark, dir)
+    val got = ops.Sampling.docWindows(spark, dir)
       .as[(Long, Long, Long, Long)].collect()
       .groupBy(_._1).map { case (k, v) =>
         k -> v.sortBy(_._2).map(r => (r._3, r._4)).toSeq }
@@ -1794,7 +1794,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     import spark.implicits._
     val d = SparkTestSession.sf0001
     // stage 1: quality-ok ids from the registered filter
-    val okIds = ops.LlmPipeline.qualityFilter(spark, d)
+    val okIds = ops.TextQuality.qualityFilter(spark, d)
       .where($"keep").select("doc_id").as[Long].collect().toSet
     // stage 2: keep-best over ONLY the survivors (recomputed independently)
     val kept = spark.read.parquet(s"$d/documents.parquet")
@@ -1814,12 +1814,12 @@ class LlmPipelineSpec extends AnyFunSuite {
       .groupBy(_._2).toSeq.flatMap { case (_, rows) =>
         var cum = 0L
         rows.sortBy(_._1).map { r =>
-          val bin = cum / ops.LlmPipeline.PackBudget
+          val bin = cum / ops.Sampling.PackBudget
           cum += r._5
           r._1 -> ((r._2, r._5, bin))
         }
       }.toMap
-    val got = ops.LlmPipeline.pipelineCurate(spark, d)
+    val got = ops.TextQuality.pipelineCurate(spark, d)
       .as[(Long, String, Long, Long)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     assert(got == expected)
@@ -1843,7 +1843,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     docs.map { case (id, t) => (id, t, "en", "src0", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
-    val got = ops.LlmPipeline.dedupParagraph(spark, dir)
+    val got = ops.Dedup.dedupParagraph(spark, dir)
       .as[(Long, Long, Long, String)].collect().map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     assert(got(0L) == ((2L, 2L, s"$blkA $blkB")), "first definer keeps everything")
     assert(got(1L) == ((2L, 1L, blkC)), "repeated block dropped, unique block kept")
@@ -1859,7 +1859,7 @@ class LlmPipelineSpec extends AnyFunSuite {
       .map { case (id, t) => (id, t, "en", "src0", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
-    val got = ops.LlmPipeline.textDiversity(spark, dir)
+    val got = ops.TextQuality.textDiversity(spark, dir)
       .as[(Long, Long, Long, Long)].collect().map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     assert(got(0L) == ((4L, 3L, 6L)))  // 2²+1+1
     assert(got(1L) == ((4L, 1L, 16L))) // maximal repetition
@@ -1868,7 +1868,7 @@ class LlmPipelineSpec extends AnyFunSuite {
 
   test("q_dedup_editdist: exact-dup dist 0, one-token plants within K, convention pinned") {
     import spark.implicits._
-    val got = ops.LlmPipeline.dedupEditdist(spark, plantedDir)
+    val got = ops.Dedup.dedupEditdist(spark, plantedDir)
       .as[(Long, Long, Long, Boolean)].collect()
     val byPair = got.map(r => (r._1, r._2) -> ((r._3, r._4))).toMap
     // the exact duplicate pair is a candidate with distance exactly 0
@@ -1876,7 +1876,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     // every recalled one-token plant is within K (a word swap is ≤ ~12 chars)
     (0 until 5).foreach { i =>
       byPair.get((i.toLong, 100L + i)).foreach { case (dist, dup) =>
-        assert(dup && dist > 0 && dist <= ops.LlmPipeline.EditDistMax,
+        assert(dup && dist > 0 && dist <= ops.Dedup.EditDistMax,
           s"plant ($i,${100 + i}): dist $dist")
       }
     }
@@ -1908,10 +1908,10 @@ class LlmPipelineSpec extends AnyFunSuite {
   test("q_sample_weighted: deterministic, K-sized, weight-biased, priority recomputable") {
     import spark.implicits._
     val d = SparkTestSession.sf0001
-    val a = ops.LlmPipeline.sampleWeighted(spark, d).as[(Long, Long, Long)].collect()
-    val b = ops.LlmPipeline.sampleWeighted(spark, d).as[(Long, Long, Long)].collect()
+    val a = ops.Sampling.sampleWeighted(spark, d).as[(Long, Long, Long)].collect()
+    val b = ops.Sampling.sampleWeighted(spark, d).as[(Long, Long, Long)].collect()
     assert(a.toSeq == b.toSeq, "rerun produced a different sample")
-    assert(a.length == ops.LlmPipeline.WSampleK)
+    assert(a.length == ops.Sampling.WSampleK)
     // inclusion odds scale with weight: sampled mean weight beats corpus mean
     val corpusMean = Tables.documents(spark, d)
       .agg(avg(col("n_chars"))).head().getDouble(0)
@@ -1924,19 +1924,19 @@ class LlmPipelineSpec extends AnyFunSuite {
       .digest(docId.toString.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
     val h = java.lang.Long.parseLong(md5.take(15), 16)
-    assert(prio == w * ops.LlmPipeline.WSamplePrioScale /
-      (h % ops.LlmPipeline.WSampleUBits + 1))
+    assert(prio == w * ops.Sampling.WSamplePrioScale /
+      (h % ops.Sampling.WSampleUBits + 1))
   }
 
   test("q_dedup_substring: coverage and longest span recomputed from first principles") {
     import spark.implicits._
     val d = SparkTestSession.sf0001
-    val W = ops.LlmPipeline.SubWinW
-    val out = ops.LlmPipeline.dedupSubstring(spark, d)
+    val W = ops.Dedup.SubWinW
+    val out = ops.Dedup.dedupSubstring(spark, d)
       .as[(Long, Long, Long, Long)].collect()
     assert(out.nonEmpty, "no substring-overlap pairs found")
     assert(out.forall { case (a, b, cov, span) =>
-      a < b && span >= ops.LlmPipeline.SubMinSpan && cov >= span - (W - 1)
+      a < b && span >= ops.Dedup.SubMinSpan && cov >= span - (W - 1)
     })
     // independent witness: recompute the longest-span pair's coverage and
     // run structure in plain Scala over the raw strings (df cap honored)
@@ -1950,7 +1950,7 @@ class LlmPipelineSpec extends AnyFunSuite {
       wins(t).toSet.foreach { w: String => df(w) = df.getOrElse(w, 0) + 1 }
     }
     def eligible(w: String): Boolean = {
-      val n = df(w); n >= 2 && n <= ops.LlmPipeline.SubDfCap
+      val n = df(w); n >= 2 && n <= ops.Dedup.SubDfCap
     }
     val (pa, pb, cov, span) = out.maxBy(_._4)
     val bset = wins(docs(pb)).filter(eligible).toSet
@@ -1969,7 +1969,7 @@ class LlmPipelineSpec extends AnyFunSuite {
   test("q_lm_fluency: score recomputed from corpus bigram counts from first principles") {
     import spark.implicits._
     val d = SparkTestSession.sf0001
-    val out = ops.LlmPipeline.lmFluency(spark, d)
+    val out = ops.TextQuality.lmFluency(spark, d)
       .as[(Long, Long, Long)].collect()
     assert(out.nonEmpty)
     assert(out.forall { case (_, np, f) => np >= 1 && f >= 0 && f <= 1000000 },
@@ -2000,12 +2000,12 @@ class LlmPipelineSpec extends AnyFunSuite {
       .select(explode(split(col("text"), " ")).as("token"))
       .groupBy("token").count()
       .as[(String, Long)].collect().toMap
-    val got = ops.LlmPipeline.heavyHitters(spark, d)
+    val got = ops.TextQuality.heavyHitters(spark, d)
       .as[(String, Long, Boolean)].collect()
     assert(got.nonEmpty && got.length == exactCounts.size)
     got.foreach { case (tok, est, heavy) =>
       assert(est == exactCounts(tok), s"token $tok: est $est != exact ${exactCounts(tok)}")
-      assert(heavy == (est >= ops.LlmPipeline.CmsHeavyMin))
+      assert(heavy == (est >= ops.TextQuality.CmsHeavyMin))
     }
   }
 
@@ -2021,17 +2021,17 @@ class LlmPipelineSpec extends AnyFunSuite {
     val exactCounts = Tables.documents(spark, dir)
       .select(explode(split(col("text"), " ")).as("token"))
       .groupBy("token").count().as[(String, Long)].collect().toMap
-    val got = ops.LlmPipeline.heavyHitters(spark, dir)
+    val got = ops.TextQuality.heavyHitters(spark, dir)
       .as[(String, Long, Boolean)].collect()
     val n = exactCounts.values.sum
-    val epsBound = (ops.LlmPipeline.CmsEps * n).ceil.toLong
+    val epsBound = (ops.TextQuality.CmsEps * n).ceil.toLong
     var overShoots = 0
     got.foreach { case (tok, est, _) =>
       assert(est >= exactCounts(tok), s"CMS UNDERestimated $tok") // structural invariant
       if (est > exactCounts(tok) + epsBound) overShoots += 1
     }
     // eps-bound holds with prob >= conf per item; allow the 1% tail
-    assert(overShoots <= (got.length * (1 - ops.LlmPipeline.CmsConf) * 5).toInt + 1,
+    assert(overShoots <= (got.length * (1 - ops.TextQuality.CmsConf) * 5).toInt + 1,
       s"$overShoots of ${got.length} estimates exceeded the eps bound")
   }
 
@@ -2045,23 +2045,23 @@ class LlmPipelineSpec extends AnyFunSuite {
     def dot(a: Seq[Long], b: Seq[Long]): Long =
       a.lazyZip(b).map(_ * _).sum
     def bucket(v: Seq[Long]): Int = (0 until 4)
-      .map(p => if (dot(v, ops.LlmPipeline.LshPlanes(p)) >= 0) 1 << p else 0).sum
-    val got = ops.LlmPipeline.queries("q_ann_recall")(spark, d)
+      .map(p => if (dot(v, ops.Fragments.LshPlanes(p)) >= 0) 1 << p else 0).sum
+    val got = ops.Ann.queries("q_ann_recall")(spark, d)
       .as[(Long, Long, Long, Long)].collect()
-    assert(got.length == ops.LlmPipeline.RecallProbes)
+    assert(got.length == ops.Ann.RecallProbes)
     got.foreach { case (pid, nAnn, nHit, ppm) =>
       val qa = vecs.find(_._1 == pid).get._2
       val n2a = dot(qa, qa).toDouble
       def cos(v: Seq[Long]): Double = dot(qa, v) / math.sqrt(n2a * dot(v, v))
       val cands = vecs.filter(_._1 != pid)
       val truth = cands.sortBy { case (id, v) => (-cos(v), id) }
-        .take(ops.LlmPipeline.RecallK).map(_._1).toSet
+        .take(ops.Ann.RecallK).map(_._1).toSet
       val ann = cands.filter { case (_, v) => bucket(v) == bucket(qa) }
         .sortBy { case (id, v) => (-cos(v), id) }
-        .take(ops.LlmPipeline.RecallK).map(_._1).toSet
+        .take(ops.Ann.RecallK).map(_._1).toSet
       val hits = (truth & ann).size.toLong
       assert((nAnn, nHit, ppm) ===
-        ((ann.size.toLong, hits, hits * 1000000L / ops.LlmPipeline.RecallK)),
+        ((ann.size.toLong, hits, hits * 1000000L / ops.Ann.RecallK)),
         s"probe $pid")
       assert(nHit <= nAnn && ppm >= 0 && ppm <= 1000000)
     }
@@ -2084,7 +2084,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     docs.map { case (id, t) => (id, t, "en", "src0", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
-    val got = ops.LlmPipeline.dedupSubstringWinnow(spark, dir)
+    val got = ops.Dedup.dedupSubstringWinnow(spark, dir)
       .as[(Long, Long, Long)].collect()
     val pairs = got.map(r => (r._1, r._2)).toSet
     assert(pairs.contains((1L, 2L)), s"guaranteed planted pair missing: ${got.toSeq}")
@@ -2092,7 +2092,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L),
       s"unrelated doc paired: ${got.toSeq}")
     // the stride-1 form agrees on the same corpus (span ≥ SubMinSpan)
-    val exact = ops.LlmPipeline.dedupSubstring(spark, dir)
+    val exact = ops.Dedup.dedupSubstring(spark, dir)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     assert(exact == Set((1L, 2L)))
   }
@@ -2111,8 +2111,8 @@ class LlmPipelineSpec extends AnyFunSuite {
     // distinct shingle sets, so the two INDEPENDENT implementations
     // must agree pair for pair AND distance for distance — including
     // the (0, 200) intra-group pair at distance 0
-    val expanded = rows(ops.LlmPipeline.dedupNear(spark, dir))
-    val wholeCorpus = rows(ops.LlmPipeline.dedupNearUncollapsed(spark, dir))
+    val expanded = rows(ops.Dedup.dedupNear(spark, dir))
+    val wholeCorpus = rows(ops.Dedup.dedupNearUncollapsed(spark, dir))
     assert(expanded == wholeCorpus,
       s"only-expanded: ${(expanded -- wholeCorpus).take(5)}; " +
         s"only-whole: ${(wholeCorpus -- expanded).take(5)}")
@@ -2120,7 +2120,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     // and the expansion itself reconstructs the banded chain's own
     // whole-corpus run (same family, no collapse) — the cap-safe
     // rep-level form loses nothing on a fixture with small buckets
-    val bandedWhole = rows(ops.LlmPipeline.nearBandedVerified(spark, dir, None)
+    val bandedWhole = rows(ops.Dedup.nearBandedVerified(spark, dir, None)
       .orderBy("doc_a", "doc_b"))
     assert(expanded == bandedWhole,
       s"expansion diverged from the banded whole-corpus run: " +
@@ -2152,8 +2152,8 @@ class LlmPipelineSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select($"doc_a", $"doc_b", $"jaccard_dist".cast("double"))
       .as[(Long, Long, Double)].collect().toSet
-    val got = rows(ops.LlmPipeline.dedupNear(spark, dir))
-    val ml = rows(ops.LlmPipeline.dedupNearUncollapsed(spark, dir))
+    val got = rows(ops.Dedup.dedupNear(spark, dir))
+    val ml = rows(ops.Dedup.dedupNearUncollapsed(spark, dir))
     assert(got == ml,
       s"only-expanded: ${(got -- ml).take(5)}; only-ml: ${(ml -- got).take(5)}")
     assert(got.contains((1L, 2L, 0.0)), "duplicated empty texts must pair at 0")
@@ -2167,7 +2167,7 @@ class LlmPipelineSpec extends AnyFunSuite {
   test("collapse key is RAW text: a case-variant copy never collapses or gains distance-0 pairs") {
     import spark.implicits._
     val dir = LlmFixtures.plantedDir(spark) // doc 201 = doc 0 capitalized
-    val pairs = ops.LlmPipeline.dedupNear(spark, dir)
+    val pairs = ops.Dedup.dedupNear(spark, dir)
       .select($"doc_a", $"doc_b", $"jaccard_dist".cast("double"))
       .as[(Long, Long, Double)].collect().toSet
     // the old lower(trim) collapse key put 201 in doc 0's copy group:
@@ -2204,8 +2204,8 @@ class LlmPipelineSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select($"doc_a", $"doc_b", $"jaccard_dist".cast("double"))
       .as[(Long, Long, Double)].collect().toSet
-    val short = rows(ops.LlmPipeline.dedupNear(spark, dir))
-    val whole = rows(ops.LlmPipeline.dedupNearUncollapsed(spark, dir))
+    val short = rows(ops.Dedup.dedupNear(spark, dir))
+    val whole = rows(ops.Dedup.dedupNearUncollapsed(spark, dir))
     assert(short == whole,
       s"only-short: ${(short -- whole).take(5)}; only-whole: ${(whole -- short).take(5)}")
     assert(short.exists(p => p._1 == 0L && p._2 == 300L && p._3 > 0.0),
@@ -2216,21 +2216,21 @@ class LlmPipelineSpec extends AnyFunSuite {
     spark.conf.set("spark.graft.substringStride1MaxChars", "10")
     try {
       val e = intercept[IllegalStateException] {
-        ops.LlmPipeline.dedupSubstring(spark, plantedDir)
+        ops.Dedup.dedupSubstring(spark, plantedDir)
       }
       assert(e.getMessage.contains("q_dedup_substring_auto") &&
         e.getMessage.contains("substringStride1MaxChars"), e.getMessage)
     } finally spark.conf.unset("spark.graft.substringStride1MaxChars")
     // with the conf cleared the default ceiling admits the tiny corpus
-    assert(ops.LlmPipeline.dedupSubstring(spark, plantedDir).columns.contains("longest_span"))
+    assert(ops.Dedup.dedupSubstring(spark, plantedDir).columns.contains("longest_span"))
   }
 
   test("q_dedup_near_collapsed: verbatim copies collapse before the LSH join, recall intact") {
     import spark.implicits._
     val dir = LlmFixtures.plantedDir(spark) // doc 200 is a verbatim copy of doc 0
-    val full = ops.LlmPipeline.dedupNear(spark, dir)
+    val full = ops.Dedup.dedupNear(spark, dir)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
-    val collapsed = ops.LlmPipeline.dedupNearCollapsed(spark, dir)
+    val collapsed = ops.Dedup.dedupNearCollapsed(spark, dir)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     // the uncollapsed join pays for the verbatim copy; the collapsed one
     // never lets it reach the join at all
@@ -2248,9 +2248,9 @@ class LlmPipelineSpec extends AnyFunSuite {
   test("q_ann_recall_mp: multi-probe recall dominates single-probe on every probe") {
     import spark.implicits._
     val d = SparkTestSession.sf0001
-    val single = ops.LlmPipeline.queries("q_ann_recall")(spark, d)
+    val single = ops.Ann.queries("q_ann_recall")(spark, d)
       .as[(Long, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
-    val multi = ops.LlmPipeline.queries("q_ann_recall_mp")(spark, d)
+    val multi = ops.Ann.queries("q_ann_recall_mp")(spark, d)
       .as[(Long, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
     assert(single.keySet == multi.keySet && single.nonEmpty)
     single.keySet.foreach { pid =>
@@ -2274,9 +2274,9 @@ class LlmPipelineSpec extends AnyFunSuite {
       .as[(Long, Seq[Long])].collect()
     def dot(a: Seq[Long], b: Seq[Long]): Long = a.lazyZip(b).map(_ * _).sum
     def bucket(v: Seq[Long]): Int = (0 until 4)
-      .map(p => if (dot(v, ops.LlmPipeline.LshPlanes(p)) >= 0) 1 << p else 0).sum
+      .map(p => if (dot(v, ops.Fragments.LshPlanes(p)) >= 0) 1 << p else 0).sum
     val want = vecs.groupBy { case (_, v) => bucket(v) }.view.mapValues(_.length.toLong).toMap
-    val got = ops.LlmPipeline.queries("q_lsh_bucket_stats")(spark, d)
+    val got = ops.Ann.queries("q_lsh_bucket_stats")(spark, d)
       .as[(Int, Long, Long, Long)].collect()
     assert(got.map(_._2).sum == vecs.length.toLong, "occupancies must partition the corpus")
     got.foreach { case (b, n, ppm, load) =>
@@ -2288,7 +2288,7 @@ class LlmPipelineSpec extends AnyFunSuite {
 
   test("quantized cosine tracks float cosine (sim search sanity)") {
     import spark.implicits._
-    val top = ops.LlmPipeline.simSearch(spark, SparkTestSession.sf0001)
+    val top = ops.Ann.simSearch(spark, SparkTestSession.sf0001)
       .as[(Long, Double)].collect()
     assert(top.length == 10)
     // quantization error bound: |cos_q - cos_f| < ~2e-3 for unit-ish vecs
@@ -2313,11 +2313,11 @@ class LlmPipelineSpec extends AnyFunSuite {
           s"$d: row and auto centers differ")
         // the engine's one fit helper (mllib, no spark.ml wrapper) is
         // spark.ml's row solver: same centers, same per-row buckets
-        val helper = ops.LlmPipeline.ivfFit(e, k = 8)
+        val helper = ops.Ann.ivfFit(e, k = 8)
         assert(helper.clusterCenters.map(_.toArray.toSeq).toSeq == rowCenters,
           s"$d: helper and row centers differ")
         val buckets = row.transform(e)
-          .select(col("prediction"), ops.LlmPipeline.ivfAssign(helper).as("helper"))
+          .select(col("prediction"), ops.Ann.ivfAssign(helper).as("helper"))
           .collect()
         assert(buckets.nonEmpty && buckets.forall(r => r.getInt(0) == r.getInt(1)),
           s"$d: helper buckets differ from KMeansModel.transform's")
@@ -2327,7 +2327,7 @@ class LlmPipelineSpec extends AnyFunSuite {
 
   test("q_sim_search_ivf_kmeans: the per-run fit leaves no RDD persisted") {
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    ops.LlmPipeline.simSearchIvfKmeans(spark, SparkTestSession.sf0001).count()
+    ops.Ann.simSearchIvfKmeans(spark, SparkTestSession.sf0001).count()
     val left = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(left.isEmpty, s"RDDs left persisted by the fit: $left")
   }
@@ -2340,11 +2340,11 @@ class LlmPipelineSpec extends AnyFunSuite {
         i % 10))
       .toDF("vec_id", "embedding", "label")
       .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
-    intercept[Exception](ops.LlmPipeline.simSearchIvfKmeans(spark, dir).count())
+    intercept[Exception](ops.Ann.simSearchIvfKmeans(spark, dir).count())
     // the fit helper itself rejects a NaN and a null vector, as spark.ml's
     // fit does, whatever other column of the frame would fail later
     def fitError(fv: org.apache.spark.sql.DataFrame, msg: String) = {
-      val err = intercept[Exception](ops.LlmPipeline.ivfFit(fv, k = 2))
+      val err = intercept[Exception](ops.Ann.ivfFit(fv, k = 2))
       assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
         .exists(e => String.valueOf(e.getMessage).contains(msg)),
         s"fit failed for another reason than '$msg': $err")

@@ -98,8 +98,8 @@ class ParquetMetaSpec extends AnyFunSuite {
     val d = SparkTestSession.sf0001
     ops.Storage.ensureZoneMapMerged(spark, d)
     ops.Storage.ensureBloomIndex(spark, d)
-    ops.LlmPipeline.substrates.foreach(_.ensure(spark, d))
-    ops.LlmPipeline.ensureIvfIndex(spark, d)
+    ops.Dedup.substrates.foreach(_.ensure(spark, d))
+    ops.Ann.ensureIvfIndex(spark, d)
     sources.MediaFixtures.tablePath(spark, d)
     sources.MediaFixtures.volumeTablePath(spark, d, 20L)
     val fs = new org.apache.hadoop.fs.Path(d)
@@ -125,7 +125,7 @@ class ParquetMetaSpec extends AnyFunSuite {
     }
     // the JSONL export is the one family that publishes no parquet
     assert(checked.toSet == ops.Procedures.artifactFamilies.toSet -
-      ops.LlmPipeline.JsonlExportFamily, s"families checked: $checked")
+      ops.Sampling.JsonlExportFamily, s"families checked: $checked")
   }
 
   test("footer read keeps a Spark-written NTZ schema; a partitioned dir takes Spark's own discovery") {

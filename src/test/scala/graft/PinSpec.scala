@@ -43,13 +43,13 @@ class PinSpec extends AnyFunSuite {
   }
 
   test("q_dedup_substring_auto: below the volume cap it is the stride-1 result") {
-    val auto = ops.LlmPipeline.dedupSubstringAuto(spark, d)
+    val auto = ops.Dedup.dedupSubstringAuto(spark, d)
     val modes = auto.select("mode").distinct().as[String].collect().toSeq
     assert(modes.isEmpty || modes == Seq("stride1"),
       s"sf0.001 (~150k chars) must select stride1, got $modes")
     val pairs = auto.select($"doc_a", $"doc_b", $"n_matches").as[(Long, Long, Long)]
       .collect().toSeq
-    val exact = ops.LlmPipeline.dedupSubstring(spark, d)
+    val exact = ops.Dedup.dedupSubstring(spark, d)
       .select($"doc_a", $"doc_b", $"n_cov_pos").as[(Long, Long, Long)].collect().toSeq
     assert(pairs == exact)
   }

@@ -105,7 +105,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // nearest-centroid per vector must be the packed-argmin MIN (8
     // candidate rows collapse map-side before any exchange), not a
     // row_number window shuffling and sorting all 8n rows
-    val plan = physical(ops.LlmPipeline.simSearchIvf(spark, d))
+    val plan = physical(ops.Ann.simSearchIvf(spark, d))
     assert(plan.contains("HashAggregate") && plan.contains("partial_min"),
       s"expected map-side partial argmin in:\n$plan")
     assert(!plan.contains("Window"),
@@ -116,7 +116,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // the (max n_chars, min doc_id) preference must ride ONE BIGINT min
     // (map-side combining); a struct min would fall back to
     // SortAggregate and a row_number would shuffle+sort every copy
-    val plan = physical(ops.LlmPipeline.dedupKeepBest(spark, d))
+    val plan = physical(ops.Dedup.dedupKeepBest(spark, d))
     assert(plan.contains("HashAggregate") && plan.contains("partial_min"),
       s"expected map-side partial packed argmin in:\n$plan")
     assert(!plan.contains("SortAggregate"),
@@ -126,7 +126,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("bloom decontamination prefilters via broadcast semi joins before the confirm join") {
-    val plan = physical(ops.LlmPipeline.decontaminateBloom(spark, d))
+    val plan = physical(ops.Dedup.decontaminateBloom(spark, d))
     assert(!plan.contains("CartesianProduct"),
       s"bloom decontamination degenerated to a cartesian:\n$plan")
     assert("BroadcastHashJoin.*LeftSemi".r.findAllIn(plan).size >= 2,
@@ -134,7 +134,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("decontamination joins hash-probe the bounded benchmark side, no cartesian") {
-    val plan = physical(ops.LlmPipeline.decontaminate(spark, d))
+    val plan = physical(ops.Dedup.decontaminate(spark, d))
     assert(!plan.contains("CartesianProduct"),
       s"decontamination degenerated to a cartesian:\n$plan")
     assert(plan.contains("BroadcastHashJoin") || plan.contains("SortMergeJoin"),
@@ -196,7 +196,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("shard manifest is one combining hash aggregate: a single hash shuffle, no sort-agg") {
-    val plan = physical(ops.LlmPipeline.shardManifest(spark, d))
+    val plan = physical(ops.Sampling.shardManifest(spark, d))
     assert(plan.contains("HashAggregate") && plan.contains("partial"),
       s"expected partial HashAggregate in:\n$plan")
     assert(!plan.contains("SortAggregate"), s"sort-agg crept in:\n$plan")
@@ -206,14 +206,14 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("doc windows is a pure generator projection: no hash shuffle anywhere") {
-    val plan = physical(ops.LlmPipeline.docWindows(spark, d))
+    val plan = physical(ops.Sampling.docWindows(spark, d))
     assert(plan.contains("Generate"), s"expected a Generate (explode) node in:\n$plan")
     assert(!plan.contains("Exchange hashpartitioning"),
       s"chunking must not shuffle (only the gate's final sort may range-exchange):\n$plan")
   }
 
   test("embed outliers broadcasts the moment table and partial-limits before the label window") {
-    val plan = physical(ops.LlmPipeline.embedOutliers(spark, d))
+    val plan = physical(ops.Ann.embedOutliers(spark, d))
     assert(plan.contains("BroadcastHashJoin"),
       s"moment table must broadcast, not shuffle the exploded corpus:\n$plan")
     assert(plan.contains("WindowGroupLimit") && plan.contains("Partial"),
@@ -222,7 +222,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("pii redact is mapper-only: no hash shuffle") {
-    val plan = physical(ops.LlmPipeline.piiRedact(spark, d))
+    val plan = physical(ops.TextQuality.piiRedact(spark, d))
     assert(!plan.contains("Exchange hashpartitioning"),
       s"redaction is a projection; it must not shuffle:\n$plan")
   }
@@ -240,7 +240,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // Pin the pre-checkpoint subtree directly: in dedupVerify's own plan
     // the pinned blocks print as Scan ExistingRDD and hide this shape.
     val docsInPairs = Seq(1L, 2L).toDF("doc_id")
-    val plan = physical(ops.LlmPipeline.verifyShingleHashes(spark, d, docsInPairs))
+    val plan = physical(ops.Dedup.verifyShingleHashes(spark, d, docsInPairs))
     // The semi join against the candidate-doc set must sit BELOW the
     // Generate (shingle explode): verifying must never re-shingle the
     // whole corpus, only the dup-set-sized slice that appears in pairs.
@@ -250,11 +250,11 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(semiIdx >= 0, s"expected a left-semi prune in:\n$plan")
     assert(genIdx >= 0 && genIdx < semiIdx,
       s"shingle Generate must consume the semi-pruned side (generate line $genIdx, semi line $semiIdx):\n$plan")
-    assert(!physical(ops.LlmPipeline.dedupVerify(spark, d)).contains("CartesianProduct"))
+    assert(!physical(ops.Dedup.dedupVerify(spark, d)).contains("CartesianProduct"))
   }
 
   test("split assignment is mapper-only up to one combining census aggregate") {
-    val plan = physical(ops.LlmPipeline.splitAssign(spark, d))
+    val plan = physical(ops.Sampling.splitAssign(spark, d))
     assert(plan.contains("HashAggregate") && plan.contains("partial"),
       s"expected a partial (map-side-combining) census agg in:\n$plan")
     assert(!plan.contains("SortAggregate"), s"sort-agg crept in:\n$plan")
@@ -264,9 +264,9 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("vocab coverage broadcasts the bounded top-K vocab, never a second corpus shuffle") {
-    val plan = physical(ops.LlmPipeline.vocabCoverage(spark, d))
+    val plan = physical(ops.TextQuality.vocabCoverage(spark, d))
     assert(plan.contains("BroadcastHashJoin"),
-      s"the ${ops.LlmPipeline.VocabK}-row vocab must broadcast:\n$plan")
+      s"the ${ops.TextQuality.VocabK}-row vocab must broadcast:\n$plan")
     assert(plan.contains("TakeOrderedAndProject"),
       s"top-K vocab must TakeOrdered, not globally sort:\n$plan")
     assert(!plan.contains("SortAggregate"), s"sort-agg crept in:\n$plan")
@@ -291,7 +291,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("ann recall: probe panel broadcasts; per-probe top-K partial-limits map-side") {
-    val plan = physical(ops.LlmPipeline.annRecall(spark, d))
+    val plan = physical(ops.Ann.annRecall(spark, d))
     assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastHashJoin"),
       s"the 8-probe panel must broadcast, never shuffle the corpus by probe:\n$plan")
     assert(plan.contains("WindowGroupLimit"),
@@ -299,7 +299,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("lsh bucket stats is a combining aggregate plus a one-row broadcast") {
-    val plan = physical(ops.LlmPipeline.queries("q_lsh_bucket_stats")(spark, d))
+    val plan = physical(ops.Ann.queries("q_lsh_bucket_stats")(spark, d))
     assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastHashJoin"),
       s"the 1-row global must broadcast:\n$plan")
     assert(!plan.contains("CartesianProduct"), s"cartesian in bucket stats:\n$plan")
@@ -375,7 +375,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("source cap: rank filter compiles to WindowGroupLimit, truncating before the shuffle") {
-    val plan = physical(ops.LlmPipeline.sourceCap(spark, d))
+    val plan = physical(ops.Sampling.sourceCap(spark, d))
     // rn <= K must rewrite to a group-limit so each map task keeps at
     // most K rows per source before the exchange — the difference
     // between shuffling K·sources·tasks rows and the whole corpus

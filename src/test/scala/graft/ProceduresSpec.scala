@@ -65,15 +65,15 @@ class ProceduresSpec extends AnyFunSuite {
     val log = s"/tmp/graft-test-callcms-${java.util.UUID.randomUUID()}"
     (0 until 4).foreach { b =>
       Seq(s"tok$b").toDF("token")
-        .agg(expr(ops.LlmPipeline.cmsAgg("token")).as("sk"))
+        .agg(expr(ops.TextQuality.cmsAgg("token")).as("sk"))
         .withColumn("batch_id", lit(b.toLong))
         .coalesce(1).write.mode("append").parquet(log)
     }
-    val savedTtl = ops.LlmPipeline.cmsCoveredTtlMs
-    ops.LlmPipeline.cmsCoveredTtlMs = 0L // deterministic same-run sweep
+    val savedTtl = ops.TextQuality.cmsCoveredTtlMs
+    ops.TextQuality.cmsCoveredTtlMs = 0L // deterministic same-run sweep
     val c = try spark.sql(s"CALL graft.cms_compact('$log', keep_tail => 1)")
       .collect().head
-    finally ops.LlmPipeline.cmsCoveredTtlMs = savedTtl
+    finally ops.TextQuality.cmsCoveredTtlMs = savedTtl
     assert((c.getLong(0), c.getLong(1), c.getLong(2)) == (2L, 3L, 3L),
       s"ckpt_upto=2, 3 rows folded, 3 files swept: $c")
   }

@@ -40,7 +40,7 @@ object RaceProbe {
           Console.out.flush()
           var i = 0
           while (i < iters) {
-            val r = ops.LlmPipeline.cmsCompactSketchLog(spark, dir, keepTail)
+            val r = ops.TextQuality.cmsCompactSketchLog(spark, dir, keepTail)
             println(s"COMPACT $r")
             Console.out.flush()
             Thread.sleep(25)

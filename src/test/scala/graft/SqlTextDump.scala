@@ -26,7 +26,7 @@ object SqlTextDump {
     s.replace("\\", "\\\\").replace("\n", "\\n").replace("\r", "\\r").replace("\t", "\\t")
 
   def lines: Seq[String] = {
-    ops.LlmPipeline.ivfOracleIndexDir = Some(IvfDir)
+    ops.Ann.ivfOracleIndexDir = Some(IvfDir)
     def rows(kind: String, m: Map[String, String]) =
       m.toSeq.sortBy(_._1).map { case (k, v) => s"$kind\t$k\t${esc(v)}" }
     def numbered(name: String, texts: Seq[String]) =

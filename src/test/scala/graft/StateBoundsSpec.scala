@@ -160,9 +160,9 @@ class StateBoundsSpec extends AnyFunSuite {
       wave1.write.parquet(spool)
       // REBUILT per run: a fresh plan + fresh localCheckpoint — nothing
       // shared with the previous query's broadcast
-      def startRun() = ops.LlmPipeline.decontaminateStream(
+      def startRun() = ops.Dedup.decontaminateStream(
         spark.readStream.schema("doc_id LONG, text STRING").parquet(spool),
-        ops.LlmPipeline.ngramPostings(spark, d).where($"doc_id" % 20 === 0)
+        ops.Dedup.ngramPostings(spark, d).where($"doc_id" % 20 === 0)
           .select($"sh").distinct().localCheckpoint())
         .writeStream.format("parquet")
         .option("path", sink).option("checkpointLocation", ckpt)

@@ -345,11 +345,11 @@ class StreamingSpec extends AnyFunSuite {
       (2L, (1 to 30).map(i => s"tok$i").mkString(" "), 200L),
       (3L, "the quick brown fox is a lazy dog of note and we ran far " +
         "too fast over old red hill near my home today", 103L))
-    val batch = ops.LlmPipeline.qualityVerdictCols(
+    val batch = ops.TextQuality.qualityVerdictCols(
       docs.toDF("doc_id", "text", "n_chars"))
       .select($"doc_id", $"reason").as[(Long, String)].collect().toSet
     val ms = MemoryStream[(Long, String, Long)]
-    val q = ops.LlmPipeline.qualityVerdictCols(
+    val q = ops.TextQuality.qualityVerdictCols(
       ms.toDF().toDF("doc_id", "text", "n_chars"))
       .select($"doc_id", $"reason")
       .writeStream.format("memory").queryName("qf_stream")
@@ -370,13 +370,13 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     // static history: the planted corpus's base docs (< 100)
     val dir = LlmFixtures.plantedDir(spark)
-    val hist = ops.LlmPipeline.minhashBanded(spark, dir)
+    val hist = ops.Dedup.minhashBanded(spark, dir)
       .where($"doc_id" < 100).localCheckpoint()
     // batch≡stream signature math: the stateless per-row form must band
     // identically to the explode+agg batch form over the same docs
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val perRow = ops.LlmPipeline.incrementalDedupStream(docs, hist)
-    val batchBands = ops.LlmPipeline.minhashBanded(spark, dir)
+    val perRow = ops.Dedup.incrementalDedupStream(docs, hist)
+    val batchBands = ops.Dedup.minhashBanded(spark, dir)
     val viaBatch = batchBands
       .join(hist.select($"doc_id".as("hist_id"), $"band", $"band_key"),
         Seq("band", "band_key"))
@@ -385,7 +385,7 @@ class StreamingSpec extends AnyFunSuite {
     // live: stream the near-dup docs (100+i edits doc i); each must
     // collide with its base in at least one band
     val ms = MemoryStream[(Long, String)]
-    val q = ops.LlmPipeline.incrementalDedupStream(
+    val q = ops.Dedup.incrementalDedupStream(
       ms.toDF().toDF("doc_id", "text"), hist)
       .writeStream.format("memory").queryName("inc_dedup")
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
@@ -408,22 +408,22 @@ class StreamingSpec extends AnyFunSuite {
     val d = SparkTestSession.sf0001
     // static benchmark side: the same bounded shingle set the batch
     // query broadcasts (doc_id % 20 == 0 stands in for the eval suites)
-    val postings = ops.LlmPipeline.ngramPostings(spark, d)
+    val postings = ops.Dedup.ngramPostings(spark, d)
     val benchSh = postings.where($"doc_id" % 20 === 0)
       .select($"sh").distinct().localCheckpoint()
     val train = Tables.documents(spark, d).where($"doc_id" % 20 =!= 0)
     // batch≡per-row: the stateless projection must score every train
     // doc exactly as q_decontaminate's join+aggregate report does
-    val viaRow = ops.LlmPipeline.decontaminateStream(train, benchSh)
+    val viaRow = ops.Dedup.decontaminateStream(train, benchSh)
       .select("doc_id", "n_hits")
-    val viaBatch = ops.LlmPipeline.queries("q_decontaminate")(spark, d)
+    val viaBatch = ops.Dedup.queries("q_decontaminate")(spark, d)
     assert(SqlSurface.canon(viaRow) == SqlSurface.canon(viaBatch))
     // live: stream a contaminated doc (a benchmark doc's own text) and a
     // clean nonsense doc; verdicts arrive per-row in Append mode
     val benchText = Tables.documents(spark, d)
       .where($"doc_id" % 20 === 0).select($"text").as[String].head()
     val ms = MemoryStream[(Long, String)]
-    val q = ops.LlmPipeline.decontaminateStream(
+    val q = ops.Dedup.decontaminateStream(
       ms.toDF().toDF("doc_id", "text"), benchSh)
       .writeStream.format("memory").queryName("decontam_stream")
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
@@ -534,11 +534,11 @@ class StreamingSpec extends AnyFunSuite {
     // not (bucket 0) — "the the the" vs "x y z"
     val stopful = "the the the"
     val stopless = "x y z"
-    val ref = ops.LlmPipeline.qualityBuckets(
+    val ref = ops.TextQuality.qualityBuckets(
       Seq(("srcX", stopful), ("srcX", stopless)).toDF("source", "text"))
       .localCheckpoint()
     val ms = MemoryStream[(Long, String, String)]
-    val q = ops.LlmPipeline.driftMonitorSink(
+    val q = ops.TextQuality.driftMonitorSink(
       ms.toDF().toDF("doc_id", "text", "source"), ref, dir)
     try {
       // batch 0 matches the reference distribution → TVD 0
@@ -561,7 +561,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val ms = MemoryStream[(Long, String)]
     val dir = s"/tmp/graft-test-cmslog-${java.util.UUID.randomUUID()}"
-    val q = ops.LlmPipeline.cmsSketchSink(ms.toDF().toDF("doc_id", "text"), dir)
+    val q = ops.TextQuality.cmsSketchSink(ms.toDF().toDF("doc_id", "text"), dir)
     try {
       ms.addData((1L, "apple banana apple"), (2L, "cherry banana"))
       q.processAllAvailable()
@@ -575,7 +575,7 @@ class StreamingSpec extends AnyFunSuite {
       Seq((0L, "apple banana cherry date", "en", "src0", 24L))
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.parquet(s"$probeDir/documents.parquet")
-      val got = ops.LlmPipeline.cmsMergedEstimates(spark, dir, probeDir)
+      val got = ops.TextQuality.cmsMergedEstimates(spark, dir, probeDir)
         .as[(String, Long, Boolean)].collect()
         .map(r => r._1 -> r._2).toMap
       assert(got == Map("apple" -> 4L, "banana" -> 2L, "cherry" -> 1L, "date" -> 1L))

@@ -60,18 +60,18 @@ class SubstrateSpec extends AnyFunSuite {
     val dir = s"/tmp/graft-test-substrate-${java.util.UUID.randomUUID()}"
     writeDocs(dir, 0L until 30L, 0)
     writeEmbeds(dir, 0L until 30L)
-    def posts = ops.LlmPipeline.ngramPostings(spark, dir)
+    def posts = ops.Dedup.ngramPostings(spark, dir)
       .collect().map(_.toSeq).toSet
-    def banded = ops.LlmPipeline.minhashBanded(spark, dir)
+    def banded = ops.Dedup.minhashBanded(spark, dir)
       .collect().map(_.toSeq).toSet
-    def sim = ops.LlmPipeline.simhashSig(spark, dir)
+    def sim = ops.Dedup.simhashSig(spark, dir)
       .collect().map(_.toSeq).toSet
-    def embed = ops.LlmPipeline.embedBucketed(spark, dir)
+    def embed = ops.Dedup.embedBucketed(spark, dir)
       .selectExpr("vec_id", "label", "n2", "bucket") // q is an array: compare scalars
       .collect().map(_.toSeq).toSet
-    def report = ops.LlmPipeline.dedupOverflowReport(spark, dir)
+    def report = ops.Dedup.dedupOverflowReport(spark, dir)
       .collect().map(_.toSeq).toSeq
-    def winnow = ops.LlmPipeline.dedupSubstringWinnow(spark, dir)
+    def winnow = ops.Dedup.dedupSubstringWinnow(spark, dir)
       .collect().map(_.toSeq).toSet
     def phash = ops.Multimodal.dedupPhash(spark, dir)
       .collect().map(_.toSeq).toSet
@@ -80,7 +80,7 @@ class SubstrateSpec extends AnyFunSuite {
     // the second session: corpus bytes gone bad in place, memos dropped
     corruptInPlace(s"$dir/documents.parquet")
     corruptInPlace(s"$dir/embeddings.parquet")
-    ops.LlmPipeline.clearSubstrateMemos()
+    ops.Dedup.clearSubstrateMemos()
     intercept[Exception] { // the witness has teeth: a corpus read DIES
       spark.read.parquet(s"$dir/documents.parquet").count()
     }
@@ -96,7 +96,7 @@ class SubstrateSpec extends AnyFunSuite {
   test("banded/postings append evolves delta-only: extended ≡ full rebuild") {
     val dir = s"/tmp/graft-test-subappend-${java.util.UUID.randomUUID()}"
     writeDocs(dir, 0L until 12L, 0)
-    ops.LlmPipeline.minhashBanded(spark, dir).count() // day-0 artifacts
+    ops.Dedup.minhashBanded(spark, dir).count() // day-0 artifacts
     writeDocs(dir, 12L until 20L, 1) // the ingest appends a part file
     // corrupt the ORIGINAL part file (oldest) in place: the evolve must
     // succeed reading only the delta file
@@ -108,14 +108,14 @@ class SubstrateSpec extends AnyFunSuite {
     val out = fs.create(oldPart.getPath, true)
     try out.write(new Array[Byte](len.toInt)) finally out.close()
     fs.setTimes(oldPart.getPath, mtime, -1)
-    ops.LlmPipeline.clearSubstrateMemos()
-    val got = ops.LlmPipeline.minhashBanded(spark, dir)
+    ops.Dedup.clearSubstrateMemos()
+    val got = ops.Dedup.minhashBanded(spark, dir)
       .collect().map(_.toSeq).toSet
     // mirror with the same logical rows, built fresh
     val mirror = s"/tmp/graft-test-subappendmirror-${java.util.UUID.randomUUID()}"
     writeDocs(mirror, 0L until 12L, 0)
     writeDocs(mirror, 12L until 20L, 1)
-    val want = ops.LlmPipeline.minhashBanded(spark, mirror)
+    val want = ops.Dedup.minhashBanded(spark, mirror)
       .collect().map(_.toSeq).toSet
     assert(got == want, "banded append-evolve != full rebuild over the same rows")
   }
@@ -128,8 +128,8 @@ class SubstrateSpec extends AnyFunSuite {
       .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
       .head.getPath
     writeDocs(dir, 12L until 20L, 1)
-    ops.LlmPipeline.minhashBanded(spark, dir).count()
-    ops.LlmPipeline.ngramPostings(spark, dir).count()
+    ops.Dedup.minhashBanded(spark, dir).count()
+    ops.Dedup.ngramPostings(spark, dir).count()
     // retention drops the day-1 partition; the survivor goes corrupt in
     // place — subtraction must never read it
     fs.listStatus(table)
@@ -141,17 +141,17 @@ class SubstrateSpec extends AnyFunSuite {
     val out = fs.create(day0, true)
     try out.write(new Array[Byte](len.toInt)) finally out.close()
     fs.setTimes(day0, mtime, -1)
-    ops.LlmPipeline.clearSubstrateMemos()
-    val gotBanded = ops.LlmPipeline.minhashBanded(spark, dir)
+    ops.Dedup.clearSubstrateMemos()
+    val gotBanded = ops.Dedup.minhashBanded(spark, dir)
       .collect().map(_.toSeq).toSet
-    val gotPosts = ops.LlmPipeline.ngramPostings(spark, dir)
+    val gotPosts = ops.Dedup.ngramPostings(spark, dir)
       .collect().map(_.toSeq).toSet
     val mirror = s"/tmp/graft-test-subremovemirror-${java.util.UUID.randomUUID()}"
     writeDocs(mirror, 0L until 12L, 0)
-    assert(gotBanded == ops.LlmPipeline.minhashBanded(spark, mirror)
+    assert(gotBanded == ops.Dedup.minhashBanded(spark, mirror)
       .collect().map(_.toSeq).toSet,
       "banded removal-evolve != rebuild over survivors")
-    assert(gotPosts == ops.LlmPipeline.ngramPostings(spark, mirror)
+    assert(gotPosts == ops.Dedup.ngramPostings(spark, mirror)
       .collect().map(_.toSeq).toSet,
       "postings removal-evolve != rebuild over survivors")
   }
@@ -160,16 +160,16 @@ class SubstrateSpec extends AnyFunSuite {
     val dir = s"/tmp/graft-test-substats-${java.util.UUID.randomUUID()}"
     writeDocs(dir, 0L until 12L, 0)
     writeEmbeds(dir, 0L until 12L)
-    val got = ops.LlmPipeline.substrateStats(spark, dir)
+    val got = ops.Dedup.substrateStats(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     assert(got.map(_._1).toSeq == Seq("embed_bucketed", "minhash_banded",
       "ngram_postings", "phash", "simhash", "winnow_fps"),
       s"one footprint row per substrate family, name-ordered: ${got.toSeq}")
     // footer counts must equal a real count of the published artifact
     val wantRows = Map(
-      "ngram_postings" -> ops.LlmPipeline.ensureNgramPostings(spark, dir),
-      "winnow_fps" -> ops.LlmPipeline.ensureWinnowFps(spark, dir),
-      "simhash" -> ops.LlmPipeline.ensureSimhashSig(spark, dir))
+      "ngram_postings" -> ops.Dedup.ensureNgramPostings(spark, dir),
+      "winnow_fps" -> ops.Dedup.ensureWinnowFps(spark, dir),
+      "simhash" -> ops.Dedup.ensureSimhashSig(spark, dir))
       .map { case (f, d2) => f -> spark.read.parquet(d2).count() }
     got.filter(r => wantRows.contains(r._1)).foreach { case (f, n, bytes) =>
       assert(n == wantRows(f), s"$f: footer rows $n != artifact count ${wantRows(f)}")
@@ -181,16 +181,16 @@ class SubstrateSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = s"/tmp/graft-test-subdupdoc-${java.util.UUID.randomUUID()}"
     writeDocs(dir, 0L until 12L, 0)
-    ops.LlmPipeline.ngramPostings(spark, dir).count() // day-0 artifact
+    ops.Dedup.ngramPostings(spark, dir).count() // day-0 artifact
     // the violating delta: doc 5 arrives AGAIN in a new part file —
     // per-(doc_id, src) signature grouping would silently fragment
     // doc 5 into two signature row-sets
     Seq((5L, "doc 5 entirely different text now here", "en", "src2", 37L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("append").parquet(s"$dir/documents.parquet")
-    ops.LlmPipeline.clearSubstrateMemos()
+    ops.Dedup.clearSubstrateMemos()
     val e = intercept[IllegalArgumentException] {
-      ops.LlmPipeline.ngramPostings(spark, dir).count()
+      ops.Dedup.ngramPostings(spark, dir).count()
     }
     assert(e.getMessage.contains("spans part files"),
       s"the staged-artifact validation must name the violation: ${e.getMessage}")
@@ -206,8 +206,8 @@ class SubstrateSpec extends AnyFunSuite {
   /** The postings family's contract check over a published artifact of
     * the corpus at `dir`. */
   private def contractCheck(dir: String, posts: String): Unit =
-    ops.LlmPipeline.checkIngestContract(spark,
-      ops.LlmPipeline.NgramPostingsFamily, posts, corpusFiles(dir))
+    ops.Dedup.checkIngestContract(spark,
+      ops.Dedup.NgramPostingsFamily, posts, corpusFiles(dir))
 
   private def published(dir: String): Boolean =
     fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))
@@ -219,9 +219,9 @@ class SubstrateSpec extends AnyFunSuite {
       "the proof needs one scan task per corpus file")
     val dir = s"/tmp/graft-test-subfooter-${java.util.UUID.randomUUID()}"
     (0 until 4).foreach(f => writeDocs(dir, (f * 12L) until (f * 12L + 12L), f))
-    val posts = ops.LlmPipeline.ensureNgramPostings(spark, dir)
+    val posts = ops.Dedup.ensureNgramPostings(spark, dir)
     assert(published(posts))
-    assert(ops.LlmPipeline.docIdsDisjointByFile(corpusFooters(dir)),
+    assert(ops.Dedup.docIdsDisjointByFile(corpusFooters(dir)),
       "disjoint per-file doc_id ranges in the corpus footers")
     val (_, jobs) = SparkTestSession.jobsIn(contractCheck(dir, posts))
     assert(jobs == 0, s"the footer proof held, yet the check launched $jobs job(s)")
@@ -234,12 +234,12 @@ class SubstrateSpec extends AnyFunSuite {
       "the fanned-out layout is pinned on the 4-slot test master")
     val dir = s"/tmp/graft-test-subfanned-${java.util.UUID.randomUUID()}"
     (0 until 2).foreach(f => writeDocs(dir, (f * 12L) until (f * 12L + 12L), f))
-    val posts = ops.LlmPipeline.ensureNgramPostings(spark, dir)
+    val posts = ops.Dedup.ensureNgramPostings(spark, dir)
     assert(published(posts))
     assert(ParquetMeta.footers(spark, posts).flatMap(_.rowGroups).exists(
       _.stats.get("src").exists(st => st.genericGetMin != st.genericGetMax)),
       "the fanned-out artifact mixes part files within a row group")
-    assert(ops.LlmPipeline.docIdsDisjointByFile(corpusFooters(dir)),
+    assert(ops.Dedup.docIdsDisjointByFile(corpusFooters(dir)),
       "disjoint per-file doc_id ranges in the corpus footers")
     val (_, jobs) = SparkTestSession.jobsIn(contractCheck(dir, posts))
     assert(jobs == 0, s"the corpus footers prove the contract, yet the check launched $jobs job(s)")
@@ -249,12 +249,12 @@ class SubstrateSpec extends AnyFunSuite {
     val dir = s"/tmp/graft-test-subinterleave-${java.util.UUID.randomUUID()}"
     writeDocs(dir, (0L until 24L).filter(_ % 2 == 0), 0)
     writeDocs(dir, (0L until 24L).filter(_ % 2 == 1), 1)
-    val posts = ops.LlmPipeline.ensureNgramPostings(spark, dir)
+    val posts = ops.Dedup.ensureNgramPostings(spark, dir)
     assert(published(posts))
-    assert(!ops.LlmPipeline.docIdsDisjointByFile(corpusFooters(dir)),
+    assert(!ops.Dedup.docIdsDisjointByFile(corpusFooters(dir)),
       "overlapping per-file doc_id ranges are no proof")
     val (_, jobs) = SparkTestSession.jobsIn(contractCheck(dir, posts))
     assert(jobs >= 1, "an unproven contract must be decided by the aggregate")
-    assert(ops.LlmPipeline.ngramPostings(spark, dir).count() > 0)
+    assert(ops.Dedup.ngramPostings(spark, dir).count() > 0)
   }
 }

@@ -42,7 +42,7 @@ class WinHashes60Spec extends AnyFunSuite {
     val want = df.select(expr(composable(w))).as[Seq[Long]].collect()
     assert(got.toSeq === want.toSeq)
     // and at the registered window width
-    val w32 = ops.LlmPipeline.SubWinW
+    val w32 = ops.Dedup.SubWinW
     val long = Seq(("x" * 100 + "ü" * 10 + "y" * 100, 210L)).toDF("text", "n_chars")
     assert(long.select(expr(s"win_hashes60(text, n_chars, $w32)")).as[Seq[Long]].head ===
       long.select(expr(composable(w32))).as[Seq[Long]].head)

@@ -37,7 +37,7 @@ class WinMinKSpec extends AnyFunSuite {
       Seq.fill(200)(rng.nextLong() >>> 4),      // random 60-bit-like
       Seq.fill(17)(rng.nextInt(5).toLong))      // heavy duplicates
     val df = rows.toDF("hs")
-    for (k <- Seq(1, 2, ops.LlmPipeline.WinnowK, 1000)) {
+    for (k <- Seq(1, 2, ops.Dedup.WinnowK, 1000)) {
       val got = df.select(expr(s"win_min_k(hs, $k)")).as[Seq[Long]].collect()
       val want = df.select(expr(composable(k))).as[Seq[Long]].collect()
       assert(got.toSeq === want.toSeq, s"k=$k")
