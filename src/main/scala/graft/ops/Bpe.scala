@@ -196,70 +196,75 @@ object Bpe {
       .orderBy(col("n").desc, col("sym").asc)
       .limit(100)
 
-  /** The q_bpe_train oracle, K iterations unrolled into chained CTEs —
-    * the loop body is deterministic SQL, so depth-K training is one
-    * static query per dialect. `duck` flips the few spellings that
-    * differ (unnest vs explode, list vs array lambdas); the merge step
-    * and its wrapped-symbol encoding are character-identical, which is
-    * the point: both engines' replace() is leftmost-nonoverlapping, and
-    * the encoding makes that exactly one greedy BPE pass (see [[BpeL]]).
+  /** The q_bpe_train text, K iterations unrolled into chained CTEs
+    * over a dialect's training prefix — the loop body is deterministic
+    * SQL, so depth-K training is one static query per dialect. The merge
+    * step and its wrapped-symbol encoding are character-identical in
+    * both, which is the point: both engines' replace() is
+    * leftmost-nonoverlapping, and the encoding makes that exactly one
+    * greedy BPE pass (see [[BpeL]]).
     */
-  private def bpeTrainSql(duck: Boolean): String = {
+  private def bpeTrainSql(prefix: String): String = {
     val unions = (1 to BpeIters)
       .map(i => s"SELECT $i AS iter, lhs, rhs, n FROM b$i").mkString(" UNION ALL ")
-    s"${bpeSqlPrefix(duck)} SELECT iter, lhs, rhs, n FROM ($unions) ORDER BY iter"
+    s"$prefix SELECT iter, lhs, rhs, n FROM ($unions) ORDER BY iter"
   }
 
-  /** The q_bpe_apply oracle: the same chained-CTE state as
+  /** The q_bpe_apply text: the same chained-CTE state as
     * [[bpeTrainSql]], finished by exploding the final state's symbols
-    * into the corpus-weighted vocabulary histogram.
+    * (`sym`, the dialect's generator) into the corpus-weighted
+    * vocabulary histogram with count column `n`.
     */
-  private def bpeApplySql(duck: Boolean): String =
-    if (duck)
-      s"${bpeSqlPrefix(duck = true)} SELECT sym, CAST(sum(wn) AS BIGINT) AS n FROM " +
-        s"(SELECT unnest(string_split(substr(st, 2, len(st) - 2), chr(2) || chr(1))) AS sym, wn " +
-        s"FROM s$BpeIters) GROUP BY sym ORDER BY n DESC, sym LIMIT 100"
-    else
-      s"${bpeSqlPrefix(duck = false)} SELECT sym, sum(wn) AS n FROM " +
-        s"(SELECT explode(split(substring(st, 2, length(st) - 2), concat(chr(2), chr(1)))) AS sym, wn " +
-        s"FROM s$BpeIters) GROUP BY sym ORDER BY n DESC, sym LIMIT 100"
+  private def bpeApplySql(prefix: String, sym: String, n: String): String =
+    s"$prefix SELECT sym, $n AS n FROM (SELECT $sym AS sym, wn " +
+      s"FROM s$BpeIters) GROUP BY sym ORDER BY n DESC, sym LIMIT 100"
+
+  // SQL spellings of the BpeL / BpeR symbol wrappers
+  private val SqlL = "chr(1)"
+  private val SqlR = "chr(2)"
 
   /** The shared WITH-clause: w0 (distinct-word frequencies) → s0
     * (wrapped-symbol states) → per-iteration pair counts p_i, winner
-    * b_i, rewritten state s_i, for i in 1..[[BpeIters]].
+    * b_i, rewritten state s_i, for i in 1..[[BpeIters]]. The dialect
+    * supplies what differs: `words` (one row per whitespace token),
+    * `wrap` (a word `w` as its wrapped-symbol state), `len` (string
+    * length) and `pairs` (the p_i CTE over state s_{i-1}).
     */
-  private def bpeSqlPrefix(duck: Boolean): String = {
-    val sepL = "chr(1)"
-    val sepR = "chr(2)"
-    val toks =
-      if (duck) "SELECT unnest(string_split(coalesce(text, ''), ' ')) AS w FROM documents"
-      else "SELECT explode(split(coalesce(text, ''), ' ')) AS w FROM documents"
-    val wrap =
-      if (duck) s"array_to_string(list_transform(string_split(w, ''), c -> $sepL || c || $sepR), '')"
-      else s"concat_ws('', transform(split(w, ''), c -> concat($sepL, c, $sepR)))"
-    val lenF = if (duck) "len" else "length"
-    def pairs(i: Int): String =
-      if (duck)
-        s"p$i AS (SELECT sy[u] AS lhs, sy[u + 1] AS rhs, CAST(sum(wn) AS BIGINT) AS n FROM " +
-          s"(SELECT sy, wn, unnest(generate_series(1, len(sy) - 1)) AS u FROM " +
-          s"(SELECT string_split(substr(st, 2, len(st) - 2), $sepR || $sepL) AS sy, wn FROM s${i - 1})) " +
-          "GROUP BY lhs, rhs)"
-      else
-        s"p$i AS (SELECT p.lhs AS lhs, p.rhs AS rhs, sum(wn) AS n FROM " +
-          s"(SELECT explode(zip_with(slice(sy, 1, size(sy) - 1), slice(sy, 2, size(sy) - 1), " +
-          "(a, b) -> struct(a AS lhs, b AS rhs))) AS p, wn FROM " +
-          s"(SELECT split(substring(st, 2, length(st) - 2), concat($sepR, $sepL)) AS sy, wn FROM s${i - 1})) " +
-          "GROUP BY p.lhs, p.rhs)"
+  private def bpeSqlPrefix(words: String, wrap: String, len: String,
+      pairs: Int => String): String = {
     def step(i: Int): String =
       s"${pairs(i)}, " +
         s"b$i AS (SELECT lhs, rhs, n FROM p$i ORDER BY n DESC, lhs, rhs LIMIT 1), " +
-        s"s$i AS (SELECT replace(st, $sepL || lhs || $sepR || $sepL || rhs || $sepR, " +
-        s"$sepL || lhs || rhs || $sepR) AS st, wn FROM s${i - 1} CROSS JOIN b$i)"
-    s"WITH w0 AS (SELECT w, CAST(count(*) AS BIGINT) AS wn FROM ($toks) " +
-      s"WHERE $lenF(w) >= 2 AND instr(w, $sepL) = 0 AND instr(w, $sepR) = 0 GROUP BY w), " +
+        s"s$i AS (SELECT replace(st, $SqlL || lhs || $SqlR || $SqlL || rhs || $SqlR, " +
+        s"$SqlL || lhs || rhs || $SqlR) AS st, wn FROM s${i - 1} CROSS JOIN b$i)"
+    s"WITH w0 AS (SELECT w, CAST(count(*) AS BIGINT) AS wn FROM ($words) " +
+      s"WHERE $len(w) >= 2 AND instr(w, $SqlL) = 0 AND instr(w, $SqlR) = 0 GROUP BY w), " +
       s"s0 AS (SELECT $wrap AS st, wn FROM w0), " +
       (1 to BpeIters).map(step).mkString(", ")
   }
+
+  /** A state `st`'s symbol list, in DuckDB and in Spark SQL. */
+  private val bpeSymsDuck = s"string_split(substr(st, 2, len(st) - 2), $SqlR || $SqlL)"
+  private val bpeSymsSpark = s"split(substring(st, 2, length(st) - 2), concat($SqlR, $SqlL))"
+
+  private val bpePrefixDuck = bpeSqlPrefix(
+    "SELECT unnest(string_split(coalesce(text, ''), ' ')) AS w FROM documents",
+    s"array_to_string(list_transform(string_split(w, ''), c -> $SqlL || c || $SqlR), '')",
+    "len",
+    i => s"p$i AS (SELECT sy[u] AS lhs, sy[u + 1] AS rhs, CAST(sum(wn) AS BIGINT) AS n FROM " +
+      s"(SELECT sy, wn, unnest(generate_series(1, len(sy) - 1)) AS u FROM " +
+      s"(SELECT $bpeSymsDuck AS sy, wn FROM s${i - 1})) " +
+      "GROUP BY lhs, rhs)")
+
+  private val bpePrefixSpark = bpeSqlPrefix(
+    "SELECT explode(split(coalesce(text, ''), ' ')) AS w FROM documents",
+    s"concat_ws('', transform(split(w, ''), c -> concat($SqlL, c, $SqlR)))",
+    "length",
+    i => s"p$i AS (SELECT p.lhs AS lhs, p.rhs AS rhs, sum(wn) AS n FROM " +
+      s"(SELECT explode(zip_with(slice(sy, 1, size(sy) - 1), slice(sy, 2, size(sy) - 1), " +
+      "(a, b) -> struct(a AS lhs, b AS rhs))) AS p, wn FROM " +
+      s"(SELECT $bpeSymsSpark AS sy, wn FROM s${i - 1})) " +
+      "GROUP BY p.lhs, p.rhs)")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_bpe_pairs"           -> (bpePairs _),
@@ -267,33 +272,29 @@ object Bpe {
     "q_bpe_apply"           -> (bpeApply _),
   )
 
-  val oracle: Map[String, String] = {
+  val oracle: Map[String, String] = Map(
+    "q_bpe_pairs" ->
+      ("WITH w AS (SELECT unnest(string_split(coalesce(text, ''), ' ')) AS w " +
+        "FROM documents), " +
+        "p AS (SELECT substr(w, u, 2) AS pair FROM " +
+        "(SELECT w, unnest(generate_series(1, len(w) - 1)) AS u FROM w " +
+        "WHERE len(w) >= 2)) " +
+        "SELECT pair, count(*) AS n FROM p GROUP BY pair " +
+        "ORDER BY n DESC, pair LIMIT 50"),
+    "q_bpe_train" -> bpeTrainSql(bpePrefixDuck),
+    "q_bpe_apply" ->
+      bpeApplySql(bpePrefixDuck, s"unnest($bpeSymsDuck)", "CAST(sum(wn) AS BIGINT)"),
+  )
 
-    Map(
-      "q_bpe_pairs" ->
-        ("WITH w AS (SELECT unnest(string_split(coalesce(text, ''), ' ')) AS w " +
-          "FROM documents), " +
-          "p AS (SELECT substr(w, u, 2) AS pair FROM " +
-          "(SELECT w, unnest(generate_series(1, len(w) - 1)) AS u FROM w " +
-          "WHERE len(w) >= 2)) " +
-          "SELECT pair, count(*) AS n FROM p GROUP BY pair " +
-          "ORDER BY n DESC, pair LIMIT 50"),
-      "q_bpe_train" -> bpeTrainSql(duck = true),
-      "q_bpe_apply" -> bpeApplySql(duck = true),
-    )
-  }
-
-  val sparkSql: Map[String, String] = {
-    Map(
-      "q_bpe_pairs" ->
-        ("WITH w AS (SELECT explode(split(coalesce(text, ''), ' ')) AS w " +
-          "FROM documents), " +
-          "p AS (SELECT explode(transform(sequence(1, length(w) - 1), " +
-          "i -> substring(w, i, 2))) AS pair FROM w WHERE length(w) >= 2) " +
-          "SELECT pair, count(*) AS n FROM p GROUP BY pair " +
-          "ORDER BY n DESC, pair LIMIT 50"),
-      "q_bpe_train" -> bpeTrainSql(duck = false),
-      "q_bpe_apply" -> bpeApplySql(duck = false),
-    )
-  }
+  val sparkSql: Map[String, String] = Map(
+    "q_bpe_pairs" ->
+      ("WITH w AS (SELECT explode(split(coalesce(text, ''), ' ')) AS w " +
+        "FROM documents), " +
+        "p AS (SELECT explode(transform(sequence(1, length(w) - 1), " +
+        "i -> substring(w, i, 2))) AS pair FROM w WHERE length(w) >= 2) " +
+        "SELECT pair, count(*) AS n FROM p GROUP BY pair " +
+        "ORDER BY n DESC, pair LIMIT 50"),
+    "q_bpe_train" -> bpeTrainSql(bpePrefixSpark),
+    "q_bpe_apply" -> bpeApplySql(bpePrefixSpark, s"explode($bpeSymsSpark)", "sum(wn)"),
+  )
 }
