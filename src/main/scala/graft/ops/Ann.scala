@@ -296,7 +296,7 @@ object Ann {
     */
   def simSearchLsh(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d).select(col("vec_id"), expr(quant).as("q"))
-    val b = e.withColumn("bucket", expr(lshBucketExpr(lshPlaneDot)).cast("int"))
+    val b = e.withColumn("bucket", expr(lshBucket).cast("int"))
     val probe = broadcast(b.where(col("vec_id") === 0)
       .select(col("q").as("qa"), expr(dotL("q", "q")).as("n2a"),
         col("bucket").as("probe_bucket")))
@@ -323,7 +323,7 @@ object Ann {
     */
   def lshBucketStats(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d).select(col("vec_id"), expr(quant).as("q"))
-    val perBucket = e.withColumn("bucket", expr(lshBucketExpr(lshPlaneDot)).cast("int"))
+    val perBucket = e.withColumn("bucket", expr(lshBucket).cast("int"))
       .groupBy("bucket").agg(count(lit(1)).as("n_vecs"))
     val global = perBucket.agg(
       sum(col("n_vecs")).as("total_vecs"), count(lit(1)).as("n_buckets"))
@@ -1137,6 +1137,14 @@ object Ann {
         "q_sim_search_ivf_kmeans_probe" -> sql,
         "q_ivf_staleness" -> staleSql)
     }.getOrElse(Map.empty)
+
+  /** Cosine of a probe (`qa`, norm² `n2a`) and candidate vector `v`:
+    * integer dots in the dialect's `dot`, then the same float ops in the
+    * same order, so both engines compute bit-equal cos.
+    */
+  private def probeCos(dot: (String, String) => String, qa: String, n2a: String, v: String) =
+    s"CAST(${dot(qa, v)} AS DOUBLE) / " +
+      s"sqrt(CAST($n2a AS DOUBLE) * CAST(${dot(v, v)} AS DOUBLE)) AS cos"
 
   /** Sign-LSH buckets: `q` (quantized embeddings) and `b` (vec_id, q, bucket). */
   private def lshCtes(quant: String, planeDot: Int => String) =

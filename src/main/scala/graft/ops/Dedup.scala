@@ -308,7 +308,7 @@ object Dedup {
       .select(col("vec_id"), col("label"), expr(quant).as("q"),
         Storage.normSrcCol(input_file_name()).as("src"))
       .withColumn("n2", expr(dotL("q", "q")))
-      .withColumn("bucket", expr(lshBucketExpr(lshPlaneDot)).cast("int"))
+      .withColumn("bucket", expr(lshBucket).cast("int"))
 
   private[graft] def ensureEmbedBucketed(s: SparkSession, d: String): String = {
     val table = s"$d/embeddings.parquet"

@@ -143,14 +143,6 @@ object Fragments {
   private[ops] def dotDuck(a: String, b: String) =
     s"CAST(list_sum(list_transform(list_zip($a, $b), p -> p[1] * p[2])) AS BIGINT)"
 
-  /** Cosine of a probe (`qa`, norm² `n2a`) and candidate vector `v`:
-    * integer dots in the dialect's `dot`, then the same float ops in the
-    * same order, so both engines compute bit-equal cos.
-    */
-  private[ops] def probeCos(dot: (String, String) => String, qa: String, n2a: String, v: String) =
-    s"CAST(${dot(qa, v)} AS DOUBLE) / " +
-      s"sqrt(CAST($n2a AS DOUBLE) * CAST(${dot(v, v)} AS DOUBLE)) AS cos"
-
   /** Documents with the token array `tk` (Spark SQL CTE), under the
     * same null⇒'' rule as the DataFrame shingle substrate.
     */
