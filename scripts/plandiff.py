@@ -7,10 +7,12 @@ Each directory holds `<name>_<tag>.txt` files as written by
 `GRAFT_PLAN_DIR=<dir> sbt "runMain graft.Probe explain <names> <sfDir> 1"`
 (the tag is GRAFT_PLAN_TAG, default `before`). Files are paired by query
 name, ignoring the tag. Before comparing, the run-specific parts of a
-plan are masked: expression ids (`#123`), `plan_id=123`, and artifact
-staging suffixes (`.build-1a2b3c4d`). Prints a unified diff per query
-that differs and a one-line summary; exits 1 on any difference or on a
-query present in one directory only, else 0.
+plan are masked: expression ids (`#123`), `plan_id=123`, RDD ids
+(`MapPartitionsRDD[123]`: a session counter, which differed by one
+between two runs of the same commit), and artifact staging suffixes
+(`.build-1a2b3c4d`). Prints a unified diff per query that differs and a
+one-line summary; exits 1 on any difference or on a query present in
+one directory only, else 0.
 """
 import difflib
 import os
@@ -20,6 +22,7 @@ import sys
 MASKS = [
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"\.build-[0-9a-f]{8}"), ".build-X"),
 ]
 
