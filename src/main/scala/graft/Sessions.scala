@@ -37,6 +37,8 @@ object Sessions {
     // back exactly as Spark computed them
     "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
     "spark.ui.enabled" -> "false",
+    // serves CALL graft.<procedure>(...) through Spark's CALL
+    "spark.sql.catalog.graft" -> classOf[graft.ops.Procedures].getName,
     "spark.sql.shuffle.partitions" -> partitions.toString)
 
   /** Executor-process wiring for a `local-cluster[workers,cores,memMB]`

@@ -57,14 +57,13 @@ object GraftFunctions {
 /** Deployment path: `spark.sql.extensions=graft.functions.GraftExtensions`
   * registration — `expr("array_dot_f(a, b)")` and SQL resolve the native
   * expressions (`injectFunction`), the optimizer gains the chained-XOR
-  * constant fold (`injectOptimizerRule`, plans/FoldChainedXor), and the
-  * parser gains the `CALL graft.<procedure>(...)` maintenance front
-  * door (`injectParser`, plans/GraftCallParser).
+  * constant fold (`injectOptimizerRule`, plans/FoldChainedXor). The
+  * `CALL graft.<procedure>(...)` surface is a procedure catalog, not an
+  * extension (ops/Procedures).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => graft.plans.FoldChainedXor)
-    ext.injectParser((_, delegate) => new graft.plans.GraftCallParser(delegate))
   }
 }

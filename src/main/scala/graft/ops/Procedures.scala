@@ -1,34 +1,80 @@
 package graft.ops
 
 import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.connector.catalog.{Identifier, ProcedureCatalog}
+import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
+import org.apache.spark.sql.connector.read.{LocalScan, Scan}
+import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import scala.jdk.CollectionConverters._
 
-/** Dispatch table for `CALL graft.<proc>(...)` (plans/GraftCallParser)
-  * — the maintenance verbs behind the persisted artifacts, named and
-  * argument-shaped the way a lakehouse operator schedules them. Each
-  * procedure returns TYPED rows under a per-procedure schema (VERDICT
-  * r18 what's-wrong #3: Delta/Iceberg CALL procedures return rows a
-  * caller can join/filter, not a rendered string), and arguments
-  * resolve positionally or by Iceberg-style `name => value` with
-  * declared defaults. Failures throw and reach the caller as a normal
-  * query error. Lives in `graft.ops` so it can reach the
+/** `CALL graft.<proc>(...)`: the maintenance verbs behind the persisted
+  * artifacts, named and argument-shaped the way a lakehouse operator
+  * schedules them, served through Spark's own procedure catalog
+  * (`spark.sql.catalog.graft=graft.ops.Procedures`, set by every
+  * `Sessions.build` session). Spark's `CALL` grammar binds positional
+  * and `name => value` arguments, applies the declared defaults, casts
+  * to the declared types and raises its own errors; the catalog only
+  * lists and loads procedures. Each procedure returns TYPED rows under
+  * its own schema (Delta/Iceberg CALL procedures return rows a caller
+  * can join/filter, not a rendered string). Failures throw and reach
+  * the caller as a normal query error.
+  */
+class Procedures extends ProcedureCatalog {
+  private var catalogName = "graft"
+  override def initialize(name: String, options: CaseInsensitiveStringMap): Unit =
+    catalogName = name
+  override def name: String = catalogName
+
+  override def loadProcedure(ident: Identifier): UnboundProcedure = {
+    val n = ident.name.toLowerCase(java.util.Locale.ROOT)
+    Procedures.byName.get(n).filter(_ => ident.namespace.isEmpty)
+      .map(new Procedures.Adapter(n, _))
+      .getOrElse(throw new IllegalArgumentException(
+        s"unknown procedure $catalogName.${(ident.namespace :+ n).mkString(".")}; " +
+          s"available: ${Procedures.usage}"))
+  }
+
+  override def listProcedures(namespace: Array[String]): Array[Identifier] =
+    Procedures.procs.map { case (n, _) => Identifier.of(Array.empty, n) }.toArray
+}
+
+/** The procedure table. Lives in `graft.ops` so it can reach the
   * private[graft] ensure entry points without widening them.
   */
 object Procedures {
 
-  /** One parsed CALL argument: `value` exactly as the user wrote it
-    * (quoted literals verbatim — including the empty string and inner
-    * whitespace; unquoted tokens trimmed), `name` from the optional
-    * `name => value` form.
-    */
-  case class CallArg(value: String, name: Option[String] = None)
-
-  private case class Param(name: String, default: Option[String] = None)
-
-  private case class Proc(
-      params: Seq[Param],
+  private[graft] case class Proc(
+      params: Seq[ProcedureParameter],
       schema: StructType,
-      exec: (SparkSession, Seq[String]) => Seq[Row])
+      exec: (SparkSession, InternalRow) => Seq[Row])
+
+  /** One table entry as Spark's unbound and bound procedure at once
+    * (binding depends on nothing the caller passes). `call` runs the
+    * action on the caller's active session and returns its rows as one
+    * `LocalScan`, which Spark turns into the CALL's result.
+    */
+  private class Adapter(override val name: String, p: Proc)
+      extends UnboundProcedure with BoundProcedure {
+    override def bind(inputType: StructType): BoundProcedure = this
+    override def parameters: Array[ProcedureParameter] = p.params.toArray
+    override def isDeterministic: Boolean = false
+    override def call(input: InternalRow): java.util.Iterator[Scan] = {
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(p.schema)
+      val out = p.exec(SparkSession.active, input)
+        .map(toCatalyst(_).asInstanceOf[InternalRow]).toArray
+      Iterator[Scan](new LocalScan {
+        override def rows: Array[InternalRow] = out
+        override def readSchema: StructType = p.schema
+      }).asJava
+    }
+  }
+
+  private def in(name: String, t: DataType = StringType): ProcedureParameter =
+    ProcedureParameter.in(name, t).build()
+  private def in(name: String, t: DataType, default: Long): ProcedureParameter =
+    ProcedureParameter.in(name, t).defaultValue(default.toString).build()
 
   private def ensureSchema = StructType(Seq(
     StructField("family", StringType, nullable = false),
@@ -46,79 +92,80 @@ object Procedures {
     graft.sources.MediaFixtures.VolumeFamily) ++
     Dedup.substrates.map(_.family)
 
-  private val procs: Seq[(String, Proc)] = Seq(
+  private[graft] val procs: Seq[(String, Proc)] = Seq(
     "ensure_zone_map" -> Proc(
-      Seq(Param("dataset_dir")), ensureSchema,
-      (s, a) => Seq(Row("zonemap", Storage.ensureZoneMapMerged(s, a(0))))),
+      Seq(in("dataset_dir")), ensureSchema,
+      (s, a) => Seq(Row("zonemap", Storage.ensureZoneMapMerged(s, a.getString(0))))),
     "ensure_bloom_index" -> Proc(
-      Seq(Param("dataset_dir")), ensureSchema,
-      (s, a) => Seq(Row("bloom", Storage.ensureBloomIndex(s, a(0))))),
+      Seq(in("dataset_dir")), ensureSchema,
+      (s, a) => Seq(Row("bloom", Storage.ensureBloomIndex(s, a.getString(0))))),
     "ensure_ivf_index" -> Proc(
-      Seq(Param("dataset_dir")), ensureSchema,
+      Seq(in("dataset_dir")), ensureSchema,
       (s, a) => {
-        val r = Seq(Row("ivf", Ann.ensureIvfIndex(s, a(0))))
-        graft.SqlSurface.refreshDerivedViews(s, a(0))
+        val r = Seq(Row("ivf", Ann.ensureIvfIndex(s, a.getString(0))))
+        graft.SqlSurface.refreshDerivedViews(s, a.getString(0))
         r
       }),
     "ivf_recluster_if_stale" -> Proc(
-      Seq(Param("dataset_dir")),
+      Seq(in("dataset_dir")),
       StructType(Seq(
         StructField("refit", BooleanType, nullable = false),
         StructField("index_path", StringType, nullable = false))),
       (s, a) => {
-        val r = Seq(Row(Ann.ivfReclusterIfStale(s, a(0)),
-          Ann.ivfIndexDir(s, a(0))))
-        graft.SqlSurface.refreshDerivedViews(s, a(0))
+        val d = a.getString(0)
+        val r = Seq(Row(Ann.ivfReclusterIfStale(s, d), Ann.ivfIndexDir(s, d)))
+        graft.SqlSurface.refreshDerivedViews(s, d)
         r
       }),
     "ivf_split_hot_cells" -> Proc(
-      Seq(Param("dataset_dir")),
+      Seq(in("dataset_dir")),
       StructType(Seq(
         StructField("split", BooleanType, nullable = false),
         StructField("index_path", StringType, nullable = false))),
       (s, a) => {
-        val r = Seq(Row(Ann.ivfSplitHotCells(s, a(0)),
-          Ann.ivfIndexDir(s, a(0))))
-        graft.SqlSurface.refreshDerivedViews(s, a(0))
+        val d = a.getString(0)
+        val r = Seq(Row(Ann.ivfSplitHotCells(s, d), Ann.ivfIndexDir(s, d)))
+        graft.SqlSurface.refreshDerivedViews(s, d)
         r
       }),
     // the ingest-time job that makes every cold dedup query an
     // artifact read: all six substrate families for one corpus, one
     // row per family so a caller can join/filter the published paths
     "ensure_dedup_substrates" -> Proc(
-      Seq(Param("dataset_dir")), ensureSchema,
+      Seq(in("dataset_dir")), ensureSchema,
       (s, a) => {
-        val r = Dedup.substrates.map(sub => Row(sub.name, sub.ensure(s, a(0))))
+        val d = a.getString(0)
+        val r = Dedup.substrates.map(sub => Row(sub.name, sub.ensure(s, d)))
         // the SQL surface's substrate_stats view is a snapshot — once
         // this verb has (re)built substrates, re-derive it so SQL and
         // DataFrame spellings agree on the fresh artifact
-        graft.SqlSurface.refreshDerivedViews(s, a(0))
+        graft.SqlSurface.refreshDerivedViews(s, d)
         r
       }),
     // the fleet-wide janitor for datasets nothing will ever touch
     // again: two-phase (tombstone → TTL → reclaim), safe to schedule
     // on a cadence against live stores
     "gc_orphans" -> Proc(
-      Seq(Param("ttl_ms", Some(Derived.generationTtlMs.toString))),
+      Seq(in("ttl_ms", LongType, Derived.generationTtlMs)),
       StructType(Seq(
         StructField("family", StringType, nullable = false),
         StructField("path", StringType, nullable = false),
         StructField("action", StringType, nullable = false))),
-      (s, a) => Derived.gcOrphans(s, artifactFamilies, a(0).toLong)
+      (s, a) => Derived.gcOrphans(s, artifactFamilies, a.getLong(0))
         .map { case (f, p, act) => Row(f, p, act) }),
     "cms_compact" -> Proc(
-      Seq(Param("sketch_dir"), Param("keep_tail", Some("4"))),
+      Seq(in("sketch_dir"), in("keep_tail", IntegerType, 4)),
       StructType(Seq(
         StructField("ckpt_upto", LongType, nullable = false),
         StructField("folded", LongType, nullable = false),
         StructField("swept", LongType, nullable = false))),
       (s, a) => {
-        val r = TextQuality.cmsCompactSketchLog(s, a(0), a(1).toInt)
+        val r = TextQuality.cmsCompactSketchLog(s, a.getString(0), a.getInt(1))
         Seq(Row(r.ckptUpto, r.folded, r.swept))
       }),
     "compact_frames" -> Proc(
-      Seq(Param("frame_dir"), Param("small_bytes", Some((512L * 1024).toString)),
-        Param("target_bytes", Some((4L * 1024 * 1024).toString))),
+      Seq(in("frame_dir"), in("small_bytes", LongType, 512L * 1024),
+        in("target_bytes", LongType, 4L * 1024 * 1024)),
       StructType(Seq(
         StructField("candidates", IntegerType, nullable = false),
         StructField("bins_written", IntegerType, nullable = false),
@@ -127,7 +174,7 @@ object Procedures {
         StructField("recovered", IntegerType, nullable = false))),
       (s, a) => {
         val rep = graft.sources.FrameCompaction.compact(
-          s, a(0), a(1).toLong, a(2).toLong)
+          s, a.getString(0), a.getLong(1), a.getLong(2))
         Seq(Row(rep.candidates, rep.binsWritten, rep.rewritten,
           rep.skippedSingletons, rep.recovered))
       }))
@@ -135,55 +182,8 @@ object Procedures {
   private val byName: Map[String, Proc] = procs.toMap
 
   private def usage: String = procs.map { case (n, p) =>
-    n + p.params.map(pp => pp.default
-      .map(d => s"${pp.name} => $d").getOrElse(pp.name))
+    n + p.params.map(pp => Option(pp.defaultValue)
+      .map(d => s"${pp.name} => ${d.getSql}").getOrElse(pp.name))
       .mkString("(", ", ", ")")
   }.mkString(", ")
-
-  /** The CALL's result schema — resolvable at analysis time from the
-    * procedure name alone (LeafRunnableCommand reads `output` before
-    * run). Unknown names get the legacy (procedure, result) shape so
-    * analysis succeeds and [[run]] raises the surface-listing error.
-    */
-  def outputSchema(proc: String): StructType =
-    byName.get(proc).map(_.schema).getOrElse(StructType(Seq(
-      StructField("procedure", StringType, nullable = false),
-      StructField("result", StringType, nullable = false))))
-
-  /** Positional-then-named resolution against the declared parameter
-    * list: named args may arrive in any order, later optional slots
-    * fall back to their declared defaults, and the standard SQL rules
-    * hold loudly — no positional after named, no duplicate, no unknown
-    * name, no missing required parameter.
-    */
-  private def resolve(proc: String, p: Proc, args: Seq[CallArg]): Seq[String] = {
-    val positional = args.takeWhile(_.name.isEmpty)
-    val named = args.drop(positional.length)
-    require(named.forall(_.name.nonEmpty),
-      s"CALL graft.$proc: positional argument after a named argument")
-    require(positional.length <= p.params.length,
-      s"CALL graft.$proc: too many arguments " +
-        s"(${args.length} given, ${p.params.length} declared)")
-    val slots = Array.fill[Option[String]](p.params.length)(None)
-    positional.zipWithIndex.foreach { case (a, i) => slots(i) = Some(a.value) }
-    named.foreach { a =>
-      val i = p.params.indexWhere(_.name == a.name.get)
-      require(i >= 0, s"CALL graft.$proc: unknown parameter " +
-        s"'${a.name.get}' (declared: ${p.params.map(_.name).mkString(", ")})")
-      require(slots(i).isEmpty,
-        s"CALL graft.$proc: parameter '${a.name.get}' given twice")
-      slots(i) = Some(a.value)
-    }
-    p.params.zipWithIndex.map { case (pp, i) =>
-      slots(i).orElse(pp.default).getOrElse(throw new IllegalArgumentException(
-        s"CALL graft.$proc: missing required parameter '${pp.name}'"))
-    }
-  }
-
-  def run(s: SparkSession, proc: String, args: Seq[CallArg]): Seq[Row] =
-    byName.get(proc) match {
-      case Some(p) => p.exec(s, resolve(proc, p, args))
-      case None => throw new IllegalArgumentException(
-        s"unknown procedure graft.$proc; available: $usage")
-    }
 }

@@ -1,13 +1,15 @@
 package graft
 
+import org.apache.spark.SparkThrowable
+import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.catalyst.parser.ParseException
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `CALL graft.<procedure>(...)` — the SQL front door for maintenance
-  * verbs (plans/GraftCallParser + ops/Procedures): the parser extension
-  * intercepts only the CALL form and delegates everything else, each
-  * procedure performs the same action as its Scala entry point, and —
-  * the Delta/Iceberg contract — results are TYPED rows a caller can
-  * join/filter and arguments resolve positionally or by
+  * verbs (ops/Procedures, a procedure catalog behind Spark's own CALL):
+  * each procedure performs the same action as its Scala entry point,
+  * and — the Delta/Iceberg contract — results are TYPED rows a caller
+  * can join/filter and arguments resolve positionally or by
   * `name => value` with declared defaults.
   */
 class ProceduresSpec extends AnyFunSuite {
@@ -79,48 +81,78 @@ class ProceduresSpec extends AnyFunSuite {
   }
 
   test("argument resolution fails loudly: unknown name, duplicate, missing required") {
-    def msg(sql: String): String =
-      intercept[Exception](spark.sql(sql).collect()).getMessage
-    assert(msg(s"CALL graft.cms_compact('$d', nope => 1)").contains("unknown parameter"))
-    assert(msg(s"CALL graft.cms_compact('$d', sketch_dir => 'x')").contains("given twice"))
-    assert(msg("CALL graft.cms_compact(keep_tail => 2)")
-      .contains("missing required parameter"))
-    assert(msg(s"CALL graft.cms_compact(keep_tail => 2, '$d')")
-      .contains("positional argument after a named argument"))
+    def condition(sql: String): String =
+      intercept[AnalysisException](spark.sql(sql).collect()).getCondition
+    assert(condition(s"CALL graft.cms_compact('$d', nope => 1)") ==
+      "UNRECOGNIZED_PARAMETER_NAME")
+    assert(condition(s"CALL graft.cms_compact('$d', sketch_dir => 'x')")
+      .startsWith("DUPLICATE_ROUTINE_PARAMETER_ASSIGNMENT"))
+    assert(condition("CALL graft.cms_compact(keep_tail => 2)") ==
+      "REQUIRED_PARAMETER_NOT_FOUND")
+    assert(condition(s"CALL graft.cms_compact(keep_tail => 2, '$d')") ==
+      "UNEXPECTED_POSITIONAL_ARGUMENT")
+    assert(condition(s"CALL graft.cms_compact('$d', 2, 3)").startsWith("WRONG_NUM_ARGS"))
   }
 
   test("CALL parsing: unknown procedure lists the surface; non-CALL SQL delegates") {
-    val e = intercept[Exception] {
+    val e = intercept[AnalysisException] {
       spark.sql("CALL graft.no_such_proc('x')").collect()
     }
-    assert(e.getMessage.contains("ensure_zone_map") &&
-      e.getMessage.contains("compact_frames"),
-      s"error must list the procedure surface: ${e.getMessage}")
-    // the interceptor is anchored to the whole statement: ordinary SQL
-    // (even SQL that CONTAINS the CALL text as a literal) delegates
+    assert(e.getCondition == "FAILED_TO_LOAD_ROUTINE")
+    // the catalog's own error, the cause Spark keeps, lists the surface
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).toSeq
+    assert(msgs.exists(m => m.contains("ensure_zone_map") && m.contains("compact_frames")),
+      s"error must list the procedure surface: $msgs")
+    // ordinary SQL (even SQL that CONTAINS the CALL text as a literal)
+    // runs as a query
     val r = spark.sql("SELECT 'CALL graft.ensure_zone_map(1)' AS s")
       .collect().head.getString(0)
     assert(r.startsWith("CALL graft."))
   }
 
-  test("splitArgs: quoted literals verbatim, named args, loud malformed input") {
-    import ops.Procedures.CallArg
-    val p = new plans.GraftCallParser(spark.sessionState.sqlParser)
-    assert(p.splitArgs("'a,b', 'c''d', 42") ==
-      Seq(CallArg("a,b"), CallArg("c'd"), CallArg("42")))
-    assert(p.splitArgs("") == Seq.empty)
-    assert(p.splitArgs("   ") == Seq.empty)
-    // ADVICE r18: '' must survive as a positional arg (not shift later
-    // args) and quoted whitespace must be preserved byte-for-byte
-    assert(p.splitArgs("'', 512") == Seq(CallArg(""), CallArg("512")))
-    assert(p.splitArgs("' /tmp/x y/t.parquet '") ==
-      Seq(CallArg(" /tmp/x y/t.parquet ")))
-    assert(p.splitArgs("keep_tail => 2, sketch_dir => '/tmp/a b'") == Seq(
-      CallArg("2", Some("keep_tail")), CallArg("/tmp/a b", Some("sketch_dir"))))
-    // '=>' inside a quoted literal is data, not a named-arg marker
-    assert(p.splitArgs("'a => b'") == Seq(CallArg("a => b")))
-    intercept[IllegalArgumentException](p.splitArgs("a,,b"))
-    intercept[IllegalArgumentException](p.splitArgs("'unterminated"))
-    intercept[IllegalArgumentException](p.splitArgs("'a' junk"))
+  test("CALL arguments: quoted literals verbatim, typed casts, loud malformed input") {
+    // a dataset dir whose name holds a comma, a quote, '=>' and leading
+    // and trailing spaces: the whole literal must reach the procedure
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    val root = s"/tmp/graft-test-callargs-${java.util.UUID.randomUUID()}"
+    val dir = s"$root/ a,b'c => d "
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(root).getFileSystem(conf)
+    try {
+      FileUtil.copy(fs, new Path(s"$d/lineitem.parquet"),
+        fs, new Path(s"$dir/lineitem.parquet"), false, conf)
+      val row = spark.sql(s"CALL graft.ensure_zone_map('${dir.replace("'", "''")}')")
+        .collect().head
+      assert(row.getString(1) == ops.Storage.ensureZoneMapMerged(spark, dir))
+    } finally fs.delete(new Path(root), true)
+    // an int literal binds to a STRING parameter; '2' casts to INT
+    val empty = s"/tmp/graft-test-absent-${java.util.UUID.randomUUID()}"
+    assert(spark.sql(s"CALL graft.cms_compact(keep_tail => '2', sketch_dir => '$empty')")
+      .collect().head.getLong(0) == -1L)
+    assert(spark.sql("CALL graft.cms_compact(42)").collect().head.getLong(0) == -1L)
+    assert(intercept[SparkThrowable](spark.sql(s"CALL graft.cms_compact('$empty', 'abc')"))
+      .getCondition == "CAST_INVALID_INPUT")
+    // the procedure name is case-insensitive; the catalog name is not
+    // (GRAFT falls through to spark_catalog, which has no procedures)
+    assert(spark.sql(s"CALL graft.CMS_Compact('$empty')").collect().head.getLong(0) == -1L)
+    assert(intercept[AnalysisException](spark.sql(s"CALL GRAFT.cms_compact('$empty')"))
+      .getCondition.startsWith("MISSING_CATALOG_ABILITY"))
+    intercept[ParseException](spark.sql("CALL graft.cms_compact(a,,b)"))
+    intercept[ParseException](spark.sql("CALL graft.cms_compact('unterminated)"))
+    intercept[ParseException](spark.sql("CALL graft.cms_compact('a' junk)"))
+  }
+
+  test("the graft catalog lists the procedure table; each CALL has the table's schema") {
+    val cat = spark.sessionState.catalogManager.catalog("graft")
+      .asInstanceOf[org.apache.spark.sql.connector.catalog.ProcedureCatalog]
+    assert(cat.listProcedures(Array.empty).map(_.name).toSeq ==
+      ops.Procedures.procs.map(_._1))
+    val absent = s"/tmp/graft-test-absent-${java.util.UUID.randomUUID()}"
+    val args = Map("gc_orphans" -> "", "cms_compact" -> s"'$absent'",
+      "compact_frames" -> s"'$absent'").withDefaultValue(s"'$d'")
+    ops.Procedures.procs.foreach { case (n, p) =>
+      assert(spark.sql(s"CALL graft.$n(${args(n)})").schema == p.schema, n)
+    }
   }
 }

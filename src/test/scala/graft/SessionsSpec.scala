@@ -18,6 +18,11 @@ class SessionsSpec extends AnyFunSuite {
     assert(Sessions.parseConfList("a=b;c=d=e;junk") === Seq("a" -> "b", "c" -> "d=e"))
   }
 
+  test("every session registers the graft procedure catalog") {
+    assert(Sessions.commonConfs(4).toMap.get("spark.sql.catalog.graft") ===
+      Some("graft.ops.Procedures"))
+  }
+
   test("the test session and Verify get the same common confs") {
     val common = Sessions.commonConfs(4).toMap - "spark.sql.shuffle.partitions"
     def commonOf(c: Seq[(String, String)]) =

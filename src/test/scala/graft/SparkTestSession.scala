@@ -23,10 +23,11 @@ object SparkTestSession {
     */
   def extraConfs(env: Map[String, String]): Seq[(String, String)] =
     Seq(
-      // full production registration (native functions + optimizer rule
-      // + the CALL graft.<procedure> parser) — the extensions path a
-      // deployment configures; Sessions.build's ensureRegistered stays
-      // as the idempotent path for sessions built without it
+      // full production registration (native functions + optimizer
+      // rule) — the extensions path a deployment configures;
+      // Sessions.build's ensureRegistered stays as the idempotent path
+      // for sessions built without it. CALL graft.<procedure> needs no
+      // extension: the common confs register the procedure catalog
       "spark.sql.extensions" -> "graft.functions.GraftExtensions",
       "spark.sql.streaming.checkpointLocation" ->
         s"/tmp/graft-test-ckpt-${java.util.UUID.randomUUID()}",
