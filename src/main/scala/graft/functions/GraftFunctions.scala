@@ -57,9 +57,9 @@ object GraftFunctions {
 /** Deployment path: `spark.sql.extensions=graft.functions.GraftExtensions`
   * registration — `expr("array_dot_f(a, b)")` and SQL resolve the native
   * expressions (`injectFunction`), the optimizer gains the chained-XOR
-  * constant fold (`injectOptimizerRule`, plans/FoldChainedXor). The
-  * `CALL graft.<procedure>(...)` surface is a procedure catalog, not an
-  * extension (ops/Procedures).
+  * constant fold (`injectOptimizerRule`, plans/FoldChainedXor).
+  * `CALL graft.<procedure>(...)` is served by the procedure catalog in
+  * ops/Procedures.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -131,6 +131,10 @@ class ProceduresSpec extends AnyFunSuite {
     assert(spark.sql(s"CALL graft.cms_compact(keep_tail => '2', sketch_dir => '$empty')")
       .collect().head.getLong(0) == -1L)
     assert(spark.sql("CALL graft.cms_compact(42)").collect().head.getLong(0) == -1L)
+    // '' reaches the procedure as the empty path; it shifts no later argument
+    val e = intercept[Exception](spark.sql("CALL graft.cms_compact('', 1)"))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("empty string")), e)
     assert(intercept[SparkThrowable](spark.sql(s"CALL graft.cms_compact('$empty', 'abc')"))
       .getCondition == "CAST_INVALID_INPUT")
     // the procedure name is case-insensitive; the catalog name is not
