@@ -3,7 +3,7 @@ package graft.ops
 import graft.{ParquetMeta, Tables}
 import graft.ops.Fragments._
 import graft.ops.Pin.PinOps
-import org.apache.spark.mllib.clustering.{KMeans, KMeansModel}
+import org.apache.spark.mllib.clustering.{DriverKMeans, KMeansModel}
 import org.apache.spark.mllib.linalg.Vectors
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -549,9 +549,9 @@ object Ann {
     * is spec-pinned, so one oracle covers both forms); LlmPipelineSpec
     * additionally pins determinism and recall vs the brute-force top-k.
     * The deterministic-centroid variant above stays corpus-SQL. Scale:
-    * training samples/aggregates per-partition (k·dim state), assignment
-    * is a projection carrying the k centroids, bucket scan shrinks the probed set
-    * ~k×.
+    * training collects the vectors to the driver (n × 64 × 8 B, about
+    * 65 MB at sf100's roughly 128k vectors), assignment is a projection
+    * carrying the k centroids, bucket scan shrinks the probed set ~k×.
     */
   def simSearchIvfKmeans(s: SparkSession, d: String): DataFrame =
     ivfKmeansProbe(ivfKmeansFit(s, d))
@@ -577,10 +577,14 @@ object Ann {
     * deterministic regardless of convergence). mllib's other defaults
     * are the ones spark.ml passes (k-means|| with 2 init steps, tol
     * 1e-4, Euclidean), so the centers are spark.ml's `row` solver's
-    * (LlmPipelineSpec). mllib persists its own training RDD across the
-    * init and Lloyd passes and drops it before returning. As spark.ml's
-    * fit does, a null vector or a null, NaN or infinite value fails the
-    * fit: embeddings come from outside the program.
+    * (LlmPipelineSpec). One scan job collects `(vec_id, fv)`; the fit
+    * runs on the driver over the rows sorted by `vec_id`
+    * ([[org.apache.spark.mllib.clustering.DriverKMeans]], mllib's
+    * one-partition fit bit for bit), so the centers do not depend on
+    * how the scan was split. Driver memory: n × dim × 8 B, about 65 MB
+    * for sf100's roughly 128k 64-dim vectors. As spark.ml's fit does, a
+    * null vector or a null, NaN or infinite value fails the fit:
+    * embeddings come from outside the program.
     */
   private[graft] def ivfFit(df: DataFrame, k: Int): KMeansModel = {
     val fv = col("fv")
@@ -590,8 +594,10 @@ object Ann {
           raise_error(concat(lit("Vector values MUST NOT be NaN or Infinity, but got "),
             fv.cast("string"))))
         .otherwise(fv)
-    new KMeans().setK(k).setSeed(42L).setMaxIterations(5)
-      .run(df.select(checked).rdd.map(r => Vectors.dense(r.getSeq[Double](0).toArray)))
+    val points = df.select(col("vec_id"), checked).collect()
+      .sortBy(_.getLong(0))
+      .map(r => Vectors.dense(r.getSeq[Double](1).toArray))
+    DriverKMeans.fit(points, k, maxIterations = 5, seed = 42L)
   }
 
   /** The cell of each row's `fv` under a fitted quantizer: mllib's
@@ -667,8 +673,8 @@ object Ann {
     */
   private[graft] def buildIvfIndexFrom(s: SparkSession, emb: DataFrame,
       indexDir: String): Unit = {
-    // no pin: mllib persists its own training input, and the scan
-    // runs three times (the fit, the assignments, the stats)
+    // no pin: the fit collects its own input to the driver, and the
+    // scan runs three times (the fit, the assignments, the stats)
     val e = emb
       .select(col("vec_id"), col("embedding").cast("array<double>").as("fv"),
         expr(quant).as("q"),

@@ -2301,7 +2301,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     import org.apache.spark.ml.functions.array_to_vector
     for (d <- Seq(SparkTestSession.sf0001, SparkTestSession.sf001)) {
       val e = Tables.embeddings(spark, d)
-        .select(col("embedding").cast("array<double>").as("fv"))
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("fv"))
         .withColumn("v", array_to_vector(col("fv")))
         .cache()
       def fit(solver: String) = new KMeans().setK(8).setSeed(42L).setMaxIter(5)
@@ -2350,8 +2350,10 @@ class LlmPipelineSpec extends AnyFunSuite {
         s"fit failed for another reason than '$msg': $err")
     }
     fitError(spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("embedding").cast("array<double>").as("fv")), "MUST NOT be NaN")
-    fitError(spark.range(3).select(lit(null).cast("array<double>").as("fv")),
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("fv")),
+      "MUST NOT be NaN")
+    fitError(spark.range(3)
+      .select(col("id").as("vec_id"), lit(null).cast("array<double>").as("fv")),
       "MUST NOT be Null")
   }
 }

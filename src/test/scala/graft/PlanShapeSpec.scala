@@ -539,8 +539,9 @@ class PlanShapeSpec extends AnyFunSuite {
                                        // persisted) + the verify re-key
                                        // (same rationale as q_dedup_near)
       "q_dedup_collapsed_jaccard" -> 6, // collapse, band pairs, verify join
-      "q_sim_search_ivf_kmeans" -> 0,  // per-call mllib KMeans fit
-                                       // (ivfFit); the assignment is a
+      "q_sim_search_ivf_kmeans" -> 0,  // per-call k-means fit on the
+                                       // driver (ivfFit: one collect, no
+                                       // exchange); the assignment is a
                                        // projection, broadcast probe +
                                        // map-side top-k: no shuffle
       "q_dedup_ngram" -> 3,            // banded sigs + bucket pairs + order
