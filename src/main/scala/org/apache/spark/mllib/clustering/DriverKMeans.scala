@@ -44,10 +44,10 @@ object DriverKMeans {
       val stats = Some(dm.computeStatistics(centers))
       val sums = Array.fill(centers.length)(Vectors.zeros(centers.head.vector.size))
       val weightSums = new Array[Double](centers.length)
-      var iterCost = 0.0
+      cost = 0.0
       data.foreach { p =>
         val (best, c) = dm.findClosest(centers, stats, p)
-        iterCost += c * p.weight
+        cost += c * p.weight
         dm.updateClusterSum(p, sums(best))
         weightSums(best) += p.weight
       }
@@ -57,7 +57,6 @@ object DriverKMeans {
         if (converged && !dm.isCenterConverged(centers(j), moved, Epsilon)) converged = false
         centers(j) = moved
       }
-      cost = iterCost
       iteration += 1
     }
     new KMeansModel(centers.map(_.vector), DistanceMeasure.EUCLIDEAN, cost, iteration)
