@@ -117,7 +117,7 @@ def gzip_witness(con, files0):
     return True, f"{len(rows)} rows, every byte count matches python zlib"
 
 
-def substrate_stats_witness(con, files0, sf_dir):
+def substrate_stats_witness(con, files0, sf_dir, out_dir):
     """Independent byte/row witness for q_substrate_stats (VERDICT r19
     missing #5 — the gzip_witness pattern).
 
@@ -128,11 +128,13 @@ def substrate_stats_witness(con, files0, sf_dir):
     count by re-reading the artifact parquet in DuckDB, locating the
     CURRENT artifact exactly the way Derived.dirFor does (md5-digest
     label + source-table mtime in ms + a version under the current
-    format tag).
+    format tag). The artifacts are looked up under the root Verify
+    recorded in <out_dir>/artifact_root.txt (its java.io.tmpdir); a
+    missing record or root fails the witness instead of checking
+    whatever artifacts another run left elsewhere.
     """
     import hashlib
     import re
-    import tempfile
     fam_map = {
         "embed_bucketed": ("graft-embed-bucketed", "embeddings.parquet"),
         "minhash_banded": ("graft-minhash-banded", "documents.parquet"),
@@ -146,7 +148,13 @@ def substrate_stats_witness(con, files0, sf_dir):
                    "ORDER BY family").fetchall()
     if sorted(r[0] for r in rows) != sorted(fam_map):
         return False, f"families {sorted(r[0] for r in rows)} != {sorted(fam_map)}"
-    tmp = tempfile.gettempdir()
+    root_file = os.path.join(out_dir, "artifact_root.txt")
+    if not os.path.isfile(root_file):
+        return False, f"{root_file} missing (cannot locate the artifacts)"
+    with open(root_file) as f:
+        tmp = f.read().strip()
+    if not os.path.isdir(tmp):
+        return False, f"artifact root {tmp} (from {root_file}) does not exist"
     parent = os.path.normpath(os.path.abspath(sf_dir))
     label = ("d" + hashlib.md5(parent.encode()).hexdigest()[:8] + "_"
              + re.sub(r"[^A-Za-z0-9._-]", "_", parent))
@@ -316,7 +324,7 @@ def main():
                     n_fail += 1
                 continue
             if name == "q_substrate_stats":
-                ok, msg = substrate_stats_witness(con, files[0], sf_dir)
+                ok, msg = substrate_stats_witness(con, files[0], sf_dir, out_dir)
                 if ok:
                     print(f"PASS {name} (byte witness): {msg}")
                     n_pass += 1

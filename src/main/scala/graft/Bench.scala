@@ -1,14 +1,13 @@
 package graft
 object Bench {
 
-  /** Fixed-work single-thread CPU calibration (VERDICT r18 missing #3):
-    * 200M xorshift64 steps, timed after one untimed JIT warm-up pass.
-    * The work is constant, so the measured milliseconds move ONLY with
-    * the box's contention/thermal state — a bench record whose
-    * calib_ms drifts vs another record's is measuring a different
-    * machine-state, and benchdiff annotates the comparison instead of
-    * letting the drift read as a code regression (r16→r18's uniform
-    * ~1.19x was exactly this, adjudicated only in BENCHNOTES prose).
+  /** Fixed-work single-thread CPU calibration: 200M xorshift64 steps,
+    * timed after one untimed JIT warm-up pass. The work is constant, so
+    * the measured milliseconds move ONLY with the box's
+    * contention/thermal state — a bench record whose calib_ms drifts vs
+    * another record's is measuring a different machine-state, and
+    * benchdiff annotates the comparison instead of letting the drift
+    * read as a code regression.
     */
   private def calibrateMs(): Double = {
     def pass(n: Long): Long = {
@@ -73,10 +72,10 @@ object Bench {
     // A bench-only crash (OOM, codegen failure) must surface as an
     // ERROR, not read as a fast query: CORRECTNESS is the wrong-answer
     // gate, but a swallowed throw here would report a wall-time for a
-    // query that never ran (VERDICT r12 #2). Collected across all
-    // iterations and emitted as "errors":[names] in the metric line.
+    // query that never ran. Collected across all iterations and
+    // emitted as "errors":[names] in the metric line.
     val errored = scala.collection.mutable.SortedSet[String]()
-    // Shuffle-bytes telemetry (VERDICT r14 #5): exchange-count plan pins
+    // Shuffle-bytes telemetry: exchange-count plan pins
     // catch ADDED shuffles but not INFLATED ones (same plan, 10× bytes
     // through the exchange). Attribute per-stage shuffle read/write and
     // spill bytes to the running query via its job group (thread-local,
@@ -113,7 +112,7 @@ object Bench {
         }
       }
     })
-    // NOTE on per-query shuffle sizing (VERDICT r15 #6): a
+    // NOTE on per-query shuffle sizing: a
     // volume-multiplier override (partitions = sourceBytes × mult /
     // 64 MB for the explode/pair-verify class) was implemented and
     // MEASURED here in r16, and reverted on the evidence — 8× partitions
@@ -168,6 +167,10 @@ object Bench {
     // emits nothing above ERROR, then emit the one JSON line and flush.
     // stop() also drains the listener bus, so the shuffle-bytes map is
     // complete once it returns — the full-file write happens after.
+    // Storage still held at the end of the pass: every persisted RDD
+    // (pins and cached memos) that nothing released, memory + disk.
+    val held = spark.sparkContext.getRDDStorageInfo.filter(_.isCached)
+    val storage = s""""storage_mb_end":${held.map(r => r.memSize + r.diskSize).sum / 1e6},"persisted_rdds_end":${held.length}"""
     spark.sparkContext.setLogLevel("ERROR")
     spark.stop()
     import scala.jdk.CollectionConverters._
@@ -181,7 +184,7 @@ object Bench {
     val jobCounts = jobsAgg.asScala.toSeq.sortBy(_._1).map { case (k, n) => k -> n.sum / iters }
     val jobs = jobCounts.map { case (k, n) => s"\"$k\":$n" }.mkString("{", ",", "}")
     val calib = s""""loadavg_start":$loadavg,"calib_ms":$calibMs"""
-    val full = s"""{"metric":"total","value":$total,"unit":"sec",$calib,"errors":$errs,"queries":$qs,"shuffle":$shuffle,"jobs":$jobs,"jobs_total":${jobCounts.map(_._2).sum},"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec",$calib,"errors":$errs,"queries":$qs,"shuffle":$shuffle,"jobs":$jobs,"jobs_total":${jobCounts.map(_._2).sum},$storage,"sf":"$sfDir"}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get("/tmp/graft_bench_full.json"),
       full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case scala.util.control.NonFatal(_) => () }

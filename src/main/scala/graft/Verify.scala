@@ -48,6 +48,10 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // the artifact root this run read and wrote: check.py's
+    // q_substrate_stats witness walks the artifacts found there
+    Files.writeString(Paths.get(s"$outDir/artifact_root.txt"),
+      Paths.get(ops.Derived.artifactRoot).toAbsolutePath.toString)
     spark.stop()
   }
 }

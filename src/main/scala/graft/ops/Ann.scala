@@ -847,14 +847,14 @@ object Ann {
         nextId += 2
       }
     }
-    // the split ADOPTS the appends: every row re-baselines as base
+    // the split ADOPTS the appends: every row re-baselines as base.
+    // Two actions read newAsg (the write, the baseline row) and recompute
+    // its index-row union; the split A/B measured that no slower than a pin
     val newAsg = parts.reduce(_ unionByName _)
       .withColumn("appended", lit(false))
-      .pinned() // consumed twice: the table + the fresh baseline row
     newAsg.write.mode("overwrite").parquet(s"$tmp/assignments")
     val keptCents = cents.where(!col("cent_id").isin(retired.map(Int.box): _*))
       .unionByName(newCents.toDF("cent_id", "center"))
-      .pinned() // consumed twice: the stats join + the table write
     newAsg.join(broadcast(keptCents), col("bucket") === col("cent_id"))
       .select(expr(
         s"aggregate(zip_with($fvExpr, center, (a, b) -> (a - b) * (a - b)), " +
@@ -1045,7 +1045,10 @@ object Ann {
           .select(col("vec_id"), col("q"),
             col("cent_id").cast("int").as("bucket"), col("src"),
             lit(true).as("appended"), col("dist2"))
-          .pinned()) // consumed twice: assignment rows + the staleness row
+          // (d) two actions read it, the assignments write and the
+          // staleness row; an A/B of the append path measured the pin
+          // faster than re-ranking the delta twice
+          .pinned())
       }
     assigned.fold(surviving)(a => surviving.unionByName(a.drop("dist2")))
       .write.mode("overwrite").parquet(s"$tmp/assignments")

@@ -120,6 +120,7 @@ object Bpe {
     */
   private[graft] def bpeLoopDeep(s: SparkSession, d: String, iters: Int,
       pinEvery: Int, stopWhenExhausted: Boolean = true): (Seq[DataFrame], DataFrame) = {
+    // (a) pinned: every iteration of the loop below starts from it.
     // fanOut below the tokenize/explode/word-count pass, the loop's only
     // corpus-sized work. Keyed on doc_id; the groupBy("w") sum is exact,
     // so the merge sequence does not depend on the partitioning.
@@ -140,6 +141,7 @@ object Bpe {
     var i = 1
     var exhausted = false
     while (i <= iters && !exhausted) {
+      // (a) the winner feeds the rewrite and the merge row, inside the loop
       val best = Pin.pin(state
         .select(expr("split(substring(st, 2, length(st) - 2), " +
           "char(2) || char(1))").as("sy"), col("wn"))
@@ -156,6 +158,7 @@ object Bpe {
             concat(lit(BpeL), col("lhs"), lit(BpeR), lit(BpeL), col("rhs"), lit(BpeR)).as("pat"),
             concat(lit(BpeL), col("lhs"), col("rhs"), lit(BpeR)).as("rep"))))
           .select(expr("replace(st, pat, rep)").as("st"), col("wn"))
+        // (a) cut the state's lineage every pinEvery rounds
         state = if (i % pinEvery == 0 || i == iters) Pin.pin(next) else next
         merges += best.select(lit(i).as("iter"), col("lhs"), col("rhs"), col("n"))
         i += 1

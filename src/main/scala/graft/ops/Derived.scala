@@ -43,8 +43,10 @@ object Derived {
   /** The family's artifact root — where every published artifact for
     * `family` lives, one subdir per (source, mtime, version).
     */
-  def familyDir(family: String): String =
-    s"${sys.props("java.io.tmpdir")}/$family"
+  def familyDir(family: String): String = s"$artifactRoot/$family"
+
+  /** The directory holding every artifact family: java.io.tmpdir. */
+  def artifactRoot: String = sys.props("java.io.tmpdir")
 
   /** The per-dataset label component of an artifact dir name (the
     * sanitized parent of the source file). Exposed so append-aware

@@ -2,21 +2,35 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 
-/** Materialize-and-cut-lineage for multi-consumer subtrees.
+/** Materialize-and-cut-lineage: an eager checkpoint of a subtree,
+  * whose blocks nothing releases. A site keeps a pin only for one of
+  * these reasons, named in a comment beside it:
+  *   (a) it cuts the lineage of a loop, so each round reads a
+  *       materialized input instead of replaying every earlier round
+  *       (ccLabels' label propagation, the BPE merge loop);
+  *   (b) a [[graft.SessionMemo]] owns it for reuse across queries (the
+  *       substring window tables);
+  *   (c) its subtree is nondeterministic and read twice, so both reads
+  *       must see one materialization;
+  *   (d) its consumers cannot share one run of the subtree, and a
+  *       same-context A/B shows that dropping the pin loses. They
+  *       cannot when they are separate actions (an `isEmpty` probe, a
+  *       `write`), or legs of one plan that Catalyst prunes or keys
+  *       differently, so no exchange of the subtree is reused.
+  * Otherwise two legs of ONE plan need no pin: Spark plans the DataFrame
+  * whole and reuses an exchange both legs read (`ReusedExchange`), and
+  * where it re-reads a cheap source per leg the A/B decides. PlanShapeSpec
+  * counts the source scans of the queries whose pins were dropped.
   *
-  * Several pipelines here fan one expensive subtree (window hashes,
-  * LSH signatures, decode output) into 2–4 plan legs; without a
-  * materialization each leg re-executes the subtree. `localCheckpoint`
-  * is the right call at the declared bench target (local[32]): blocks
-  * live in executor memory, no filesystem round-trip — but its blocks
-  * die with their executor, so on a real cluster a lost node would
-  * kill the job (no lineage left to recover from). `pinned()` keeps
-  * the fast path under a `local`/`local[...]` master, where every block
-  * lives in the one driver JVM, and switches to a RELIABLE checkpoint
-  * (HDFS/object-store-backed, survives executor loss) under any other
-  * master, `local-cluster[...]` included; the checkpoint dir falls back
-  * to `spark.graft.pinDir` (default under java.io.tmpdir) when the
-  * session has not set one.
+  * `localCheckpoint` keeps the blocks in executor memory with no
+  * filesystem round-trip, but they die with their executor: on a real
+  * cluster a lost node would kill the job (no lineage left to recover
+  * from). `pin` therefore takes `localCheckpoint` only under a
+  * `local`/`local[...]` master, where every block lives in the one
+  * driver JVM, and a RELIABLE checkpoint (HDFS/object-store-backed,
+  * survives executor loss) under any other master, `local-cluster[...]`
+  * included; the checkpoint dir falls back to `spark.graft.pinDir`
+  * (default under java.io.tmpdir) when the session has not set one.
   */
 object Pin {
 

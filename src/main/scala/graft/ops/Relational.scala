@@ -803,9 +803,10 @@ object Relational {
     * it.
     */
   def subqueryTopSupplier(s: SparkSession, d: String): DataFrame = {
-    // Pin the CTE: it feeds TWO plan legs (join input + global max) and
-    // without a materialization each leg re-scans lineitem — the plan
-    // pin in PlanShapeSpec caught exactly that. The pinned table is
+    // (d) the CTE feeds TWO plan legs (join input + global max); only
+    // the join leg gets the inferred isnotnull(l_suppkey) filter, so the
+    // legs' exchanges differ and each would re-scan lineitem, and the
+    // sf0.1 A/B measured the pin faster. The pinned table is
     // supplier-count-sized.
     val rev = Pin.pin(Tables.lineitem(s, d)
       .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp") &&

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.{ParquetMeta, Tables}
-import graft.ops.Pin.PinOps
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -122,15 +121,13 @@ object Streaming {
     * dense frame is output-sized, never corpus-sized.
     */
   def gapFill(s: SparkSession, d: String): DataFrame = {
-    // ONE corpus pass: the spine bounds (min/max hour) and the type dim
-    // both derive from the already-aggregated hourly table — pinned
-    // because three legs consume it. Deriving them from raw events
-    // (the original shape) re-scanned the corpus twice more for facts
-    // the metadata-sized aggregate already holds.
+    // The spine bounds (min/max hour) and the type dim both derive from
+    // the already-aggregated hourly table, whose combining aggregate
+    // keeps each of its three legs cheap; the sf0.1 A/B measured them
+    // faster unpinned than materializing the table once.
     val hourly = Tables.events(s, d)
       .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
-      .pinned()
     val spine = hourly
       .agg(min(col("hour")).as("h0"), max(col("hour")).as("h1"))
       .select(explode(expr("sequence(h0, h1, interval 1 hour)")).as("hour"))
@@ -338,7 +335,7 @@ object Streaming {
         unix_micros(col("e_ts")).as("echo_us")) // echo_us NULL = timed out
 
   /** Stream-stream FULL OUTER join with bounded state — two-way
-    * reconciliation (VERDICT r15 #5, completing the inner/left family):
+    * reconciliation (completing the inner/left family):
     * matches emit immediately like the inner form; a ping with no
     * in-bound echo emits null-padded on the echo side (the timeout,
     * same as the left form); an echo with no ping emits null-padded on
@@ -482,10 +479,12 @@ object Streaming {
   /** q_retention — cohort retention matrix: users grouped by their
     * first-activity day, counted on each later active day as an offset
     * from the cohort day. THE product-health query over an event
-    * stream. Scale shape: the (user, day) distinct activity set is the
-    * only corpus-sized aggregate (one exchange, map-side combining);
-    * it is localCheckpoint-pinned for its two consumers (cohort min +
-    * offset join), and everything after is activity-set-sized. The
+    * stream. Scale shape: the (user, day) distinct activity set (one
+    * exchange, map-side combining) feeds two consumers, the cohort min
+    * and the offset join; each aggregates the events scan (Catalyst
+    * drops the distinct under the min), which the sf0.1 A/B measured
+    * faster than pinning the set. Everything after is
+    * activity-set-sized. The
     * count per (cohort, offset) needs no DISTINCT — activity rows are
     * already unique per (user, day).
     */
@@ -493,7 +492,6 @@ object Streaming {
     val act = Tables.events(s, d)
       .select(col("user_id"), col("ts").cast("date").as("day"))
       .distinct()
-      .pinned()
     val first = act.groupBy("user_id").agg(min(col("day")).as("cohort_day"))
     act.join(first, Seq("user_id"))
       .select(col("cohort_day"),

@@ -15,6 +15,40 @@ class PlanShapeSpec extends AnyFunSuite {
   private def physical(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  private object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  // Queries whose multi-consumer pin was removed: the scans of the
+  // shared subtree's source in the final (AQE) plan. 1 = the legs share
+  // the subtree's exchange (ReusedExchange); more = Catalyst prunes or
+  // keys the legs differently, so each re-reads the source, which the
+  // sf0.1 A/B measured no slower than the pin. An added re-read fails.
+  // (query, shared source's path fragment, scans, on the planted corpus)
+  private val unpinned = Seq(
+    ("q_vocab_coverage", "documents.parquet", 1, false),
+    ("q_quality_drift", "documents.parquet", 4, false),
+    ("q_gap_fill", "events.parquet", 3, false),
+    ("q_retention", "events.parquet", 2, false),
+    ("q_dedup_incremental", "graft-minhash-banded", 3, false),
+    // the fixture has no τ-pair: the emptiness probe answers, and the
+    // pair subtree never enters the final plan
+    ("q_dedup_semantic", "graft-embed-bucketed", 0, false),
+    // the copy-expansion path needs a corpus with verbatim copies
+    ("q_dedup_near", "documents.parquet", 0, true))
+
+  unpinned.foreach { case (name, src, want, planted) =>
+    test(s"unpinned $name: $want final-plan scan(s) of its shared source $src") {
+      val dir = if (planted) LlmFixtures.plantedDir(spark) else d
+      val df = SparkEntry.queries(name)(spark, dir)
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val scans = Aqe.collect(plan) {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec
+          if f.metadata.get("Location").exists(_.contains(src)) => f
+      }.size
+      assert(scans == want, s"$name scans $src $scans times, want $want:\n$plan")
+    }
+  }
+
   test("point lookup pushes its predicate to the parquet scan (#2)") {
     val plan = physical(ops.Catalog.pointLookup(spark, d))
     assert(plan.contains("PushedFilters: [") && plan.contains("IsNotNull"),
