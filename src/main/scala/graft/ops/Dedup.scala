@@ -720,9 +720,9 @@ object Dedup {
     val members = Tables.documents(s, d)
       .select(col("doc_id"), md5(coalesce(col("text"), lit(""))).as("norm_key"))
     val reps = members.groupBy("norm_key").agg(min("doc_id").as("rep"))
-    // (d) the copy probe below is its own action and four legs read
-    // docRep; unpinned, each re-hashes the corpus text, and the sf0.1
-    // A/B measured the pin faster
+    // (d) the copy probe below is its own action, and the rep filter
+    // and both expansion joins read docRep; unpinned, each re-hashes the
+    // corpus text, and the sf0.1 A/B measured the pin faster
     val docRep = members.join(reps, "norm_key")
       .select(col("doc_id"), col("rep")).pinned()
     // Short-circuit on a duplicate-FREE corpus: when

@@ -3,8 +3,9 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 
 /** Materialize-and-cut-lineage: an eager checkpoint of a subtree,
-  * whose blocks nothing releases. A site keeps a pin only for one of
-  * these reasons, named in a comment beside it:
+  * whose blocks no code here releases (Spark's ContextCleaner drops
+  * them once the pinned frame is garbage-collected). A site keeps a
+  * pin only for one of these reasons, named in a comment beside it:
   *   (a) it cuts the lineage of a loop, so each round reads a
   *       materialized input instead of replaying every earlier round
   *       (ccLabels' label propagation, the BPE merge loop);
