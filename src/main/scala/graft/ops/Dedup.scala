@@ -1636,15 +1636,12 @@ object Dedup {
     // corpus-scale pins that exceeded the sandbox's 55 GB scratch disk
     // at the sf100 probe (BENCHNOTES r15) — the exact anti-pattern the
     // winnow form exists to avoid. Now NOTHING corpus-scale is pinned
-    // or sorted: the df count is a combining hash aggregate over
-    // per-partition-distinct fingerprints, only the df-capped RARE
-    // slice (pair-relevant by construction) is pinned for its two join
-    // legs, and the raw projection is recomputed (mapper CPU, ~md5 per
-    // window) rather than materialized — the 100 TB trade. What IS
-    // pinned (and corpus-memoized, shared with the auto router's
-    // winnow branch) is the per-doc-DISTINCT rolling-minima table —
-    // winnowing's own ~K/2× reduction — so the md5 mapper work runs
-    // once across the df count, both join legs, and both queries.
+    // or sorted: the df count is a combining hash aggregate, and both
+    // join legs read only the df-capped RARE slice (pair-relevant by
+    // construction). All three read the persisted per-doc-DISTINCT
+    // rolling-minima artifact (winnowing's own ~K/2× reduction, shared
+    // with the auto router's winnow branch), so the md5 window work
+    // runs once per corpus, not per leg or per query.
     val fp = winnowFps(s, d)
     val g = fp.groupBy("h").agg(count(lit(1)).as("df"))
       .where(col("df").between(2, SubDfCap)).select("h")

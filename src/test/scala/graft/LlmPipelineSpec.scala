@@ -211,7 +211,7 @@ class LlmPipelineSpec extends AnyFunSuite {
       "fixture grew a hot semantic bucket")
   }
 
-  test("q_dedup_semantic pair subtree executes once: pinned lineage-cut scan, single embeddings read") {
+  test("q_dedup_semantic pair subtree: one bucketed-artifact scan per action, single embeddings read") {
     import spark.implicits._
     // planted cluster (the dedupSemantic spec's recipe) so the NON-empty
     // path — the one where ccLabels consumes the pairs — is the one
