@@ -169,8 +169,20 @@ object Bench {
     // complete once it returns — the full-file write happens after.
     // Storage still held at the end of the pass: every persisted RDD
     // (pins and cached memos) that nothing released, memory + disk.
+    // Each one is listed by name (a pin names its call site), creation
+    // site and MB, largest first.
     val held = spark.sparkContext.getRDDStorageInfo.filter(_.isCached)
-    val storage = s""""storage_mb_end":${held.map(r => r.memSize + r.diskSize).sum / 1e6},"persisted_rdds_end":${held.length}"""
+      .sortBy(r => -(r.memSize + r.diskSize))
+    def jsonStr(x: String): String = "\"" + Option(x).getOrElse("").take(200).flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => " "
+      case c => c.toString
+    } + "\""
+    val heldRdds = held.map { r =>
+      s"""{"id":${r.id},"name":${jsonStr(r.name)},"call_site":${jsonStr(r.callSite)},"mb":${(r.memSize + r.diskSize) / 1e6}}"""
+    }.mkString("[", ",", "]")
+    val storage = s""""storage_mb_end":${held.map(r => r.memSize + r.diskSize).sum / 1e6},"persisted_rdds_end":${held.length},"storage_end":$heldRdds"""
     spark.sparkContext.setLogLevel("ERROR")
     spark.stop()
     import scala.jdk.CollectionConverters._

@@ -2,10 +2,9 @@ package graft.ops
 
 import graft.{ParquetMeta, Tables}
 import graft.ops.Fragments._
-import graft.ops.Pin.PinOps
 import org.apache.spark.mllib.clustering.{DriverKMeans, KMeansModel}
 import org.apache.spark.mllib.linalg.Vectors
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1044,22 +1043,24 @@ object Ann {
           .withColumn("rn", row_number().over(w)).where(col("rn") === 1)
           .select(col("vec_id"), col("q"),
             col("cent_id").cast("int").as("bucket"), col("src"),
-            lit(true).as("appended"), col("dist2"))
-          // (d) two actions read it, the assignments write and the
-          // staleness row; an A/B of the append path measured the pin
-          // faster than re-ranking the delta twice
-          .pinned())
+            lit(true).as("appended"), col("dist2")))
       }
-    assigned.fold(surviving)(a => surviving.unionByName(a.drop("dist2")))
+    // the delta's staleness figures are observed while the assignments
+    // write ranks it, so the delta is read and ranked once
+    val delta = Observation("ivf_delta")
+    assigned.fold(surviving)(a => surviving.unionByName(
+        a.observe(delta, count(lit(1)).as("n_vecs"), avg(col("dist2")).as("mean_dist2"))
+          .drop("dist2")))
       .write.mode("overwrite").parquet(s"$tmp/assignments")
     // staleness accounting: record each delta's mean
     // distance-to-frozen-centroid next to the build-time baseline, and
     // each removal's base/appended row census — what
     // ivfStaleness reads to decide the recluster flag
-    val withDelta = assigned.fold(ParquetMeta.read(s, s"$prevDir/stats")) { a =>
-      ParquetMeta.read(s, s"$prevDir/stats").unionByName(
-        a.agg(count(lit(1)).as("n_vecs"), avg(col("dist2")).as("mean_dist2"))
-          .select(lit("delta").as("kind"), col("n_vecs"), col("mean_dist2")))
+    val withDelta = assigned.fold(ParquetMeta.read(s, s"$prevDir/stats")) { _ =>
+      val m = delta.get
+      ParquetMeta.read(s, s"$prevDir/stats").unionByName(s.range(1).select(
+        lit("delta").as("kind"), lit(m("n_vecs")).as("n_vecs"),
+        lit(m("mean_dist2")).cast("double").as("mean_dist2")))
     }
     removedAdj.fold(withDelta)(withDelta.unionByName(_))
       .coalesce(1).write.mode("overwrite").parquet(s"$tmp/stats")

@@ -465,6 +465,7 @@ object Dedup {
         .join(labels.withColumnRenamed("doc_id", "u"), "u")
         .groupBy(col("v").as("doc_id"))
         .agg(min(col("rep_id")).as("nmin"))
+      // (a) the next round reads these labels pinned
       val next = labels
         .join(prop, Seq("doc_id"), "left")
         .select(col("doc_id"),
@@ -720,30 +721,25 @@ object Dedup {
     val members = Tables.documents(s, d)
       .select(col("doc_id"), md5(coalesce(col("text"), lit(""))).as("norm_key"))
     val reps = members.groupBy("norm_key").agg(min("doc_id").as("rep"))
-    // (d) the copy probe below is its own action, and the rep filter
-    // and both expansion joins read docRep; unpinned, each re-hashes the
-    // corpus text, and the sf0.1 A/B measured the pin faster
+    // one plan, no copy probe: the expansion joins and the intra pairs
+    // read docRep under the same projection and filters (the explicit
+    // one is what their rep joins infer, and a null rep joins nothing),
+    // so Spark runs it once and reuses its exchange. On a copy-free
+    // corpus the expansion is the identity and intra is empty
     val docRep = members.join(reps, "norm_key")
-      .select(col("doc_id"), col("rep")).pinned()
-    // Short-circuit on a duplicate-FREE corpus: when
-    // every doc is its own representative the expansion is an identity
-    // map and the intra-group pairs are empty, so the re-expansion
-    // equi-joins, the corpus-sized intra self-join, and the union are
-    // pure overhead — run the verified chain over all docs directly.
-    val hasCopies = !docRep.where(col("doc_id") =!= col("rep")).isEmpty
-    if (!hasCopies)
-      return nearBandedVerified(s, d, None).orderBy("doc_a", "doc_b")
-    val repPairs = nearBandedVerified(s, d,
-      Some(docRep.where(col("doc_id") === col("rep")).select("doc_id")))
+      .select(col("doc_id"), col("rep")).where(col("rep").isNotNull)
+    val repPairs = nearBandedVerified(s, d, Some(reps.select(col("rep").as("doc_id"))))
     // expansion: linear equi-joins on the rep key; intra-group pairs are
     // output-inherent (the whole-corpus chain emits them too)
     val cross = repPairs
-      .join(docRep.select(col("rep").as("doc_a"), col("doc_id").as("xa")), "doc_a")
-      .join(docRep.select(col("rep").as("doc_b"), col("doc_id").as("xb")), "doc_b")
-      .select(least(col("xa"), col("xb")).as("doc_a"),
-        greatest(col("xa"), col("xb")).as("doc_b"), col("jaccard_dist"))
-    val intra = docRep.as("m1").join(docRep.as("m2"),
-        col("m1.rep") === col("m2.rep") && col("m1.doc_id") < col("m2.doc_id"))
+      .join(docRep.as("ra"), col("doc_a") === col("ra.rep"))
+      .join(docRep.as("rb"), col("doc_b") === col("rb.rep"))
+      .select(least(col("ra.doc_id"), col("rb.doc_id")).as("doc_a"),
+        greatest(col("ra.doc_id"), col("rb.doc_id")).as("doc_b"), col("jaccard_dist"))
+    // coalesce(…, false) keeps `<`'s null semantics without inferring
+    // isnotnull(doc_id), a filter the expansion legs do not have
+    val intra = docRep.as("m1").join(docRep.as("m2"), col("m1.rep") === col("m2.rep") &&
+        coalesce(col("m1.doc_id") < col("m2.doc_id"), lit(false)))
       .select(col("m1.doc_id").as("doc_a"), col("m2.doc_id").as("doc_b"),
         lit(0.0).as("jaccard_dist"))
     cross.unionByName(intra).orderBy("doc_a", "doc_b")
@@ -765,9 +761,8 @@ object Dedup {
       case Some(ids) => minhashBanded(s, d).join(ids, Seq("doc_id"), "left_semi")
       case None => minhashBanded(s, d)
     }
-    // inner join on n_inter: a zero-intersection candidate cannot pass
-    // J > 1/2, so the left-coalesce of dedupVerify is dead weight here
-    pairIntersections(s, d, banded, "inner")
+    // a disjoint pair (n_inter = 0) cannot pass J > 1/2
+    pairIntersections(s, d, banded)
       .where(col("n_inter") * 2 > col("n_a") + col("n_b") - col("n_inter"))
       .select(col("doc_a"), col("doc_b"),
         (lit(1.0) - col("n_inter").cast("double") /
@@ -1094,8 +1089,9 @@ object Dedup {
   /** The τ-pair edge set for dedupSemantic over the persisted bucketed
     * artifact. Not pinned: the emptiness probe and ccLabels' edge pin
     * are separate actions, so a non-empty pair set runs the bucket
-    * shuffle twice, but the sf0.1 fixture has no τ-pair and there the
-    * A/B measured the probe alone faster than pin + probe. Factored and
+    * shuffle twice (LlmPipelineSpec counts the runs), but the sf0.1
+    * fixture has no τ-pair and there the A/B measured the probe alone
+    * faster than folding it into ccLabels' pinned edges. Factored and
     * `private[graft]` so the spec can check that it reads the artifact
     * once and never the raw embeddings.
     */
@@ -1183,7 +1179,9 @@ object Dedup {
     // the distinct (source, shingle) projection; they prune and key it
     // differently, so unpinned, Spark re-runs the postings ⋈ documents
     // join and the distinct per leg, and the sf0.1 A/B measured the pin
-    // faster. Pinned state is 16 B × |distinct (source, sh)|.
+    // faster; so did it against a one-plan form (each shingle's source
+    // list emits its pairs, ss's exchange reused). Pinned state is
+    // 16 B × |distinct (source, sh)|.
     val ss = ngramPostings(s, d)
       .join(Tables.documents(s, d).select("doc_id", "source"), "doc_id")
       .select(col("source"), col("sh")).distinct()
@@ -1778,57 +1776,50 @@ object Dedup {
     * SHINGLE HASHES, not shingles: a 60-bit collision inside one doc
     * would undercount by one on both engines identically, the same
     * collision budget minhashBanded already accepts.) The pair list and
-    * the pruned hash table are pinned in [[pairIntersections]].
+    * the pruned hash rows each run once, in [[pairIntersections]].
     */
   def dedupVerify(s: SparkSession, d: String): DataFrame =
-    pairIntersections(s, d, minhashBanded(s, d), "left")
+    pairIntersections(s, d, minhashBanded(s, d))
       .select(col("doc_a"), col("doc_b"),
-        expr("coalesce(n_inter, CAST(0 AS BIGINT)) * 1000000 DIV " +
-          "(n_a + n_b - coalesce(n_inter, CAST(0 AS BIGINT)))").as("jaccard_ppm"))
+        expr("n_inter * 1000000 DIV (n_a + n_b - n_inter)").as("jaccard_ppm"))
       .withColumn("is_dup", col("jaccard_ppm") >= VerifyDupPpm)
       .orderBy("doc_a", "doc_b")
 
   /** The exact-verify core shared by [[dedupVerify]] and
-    * [[nearBandedVerified]]: the candidate pairs of `banded` (pinned)
-    * joined (`joinType` "inner" or "left") to their shingle-hash
-    * intersection count `n_inter`, then to both docs' set sizes `n_a`
-    * and `n_b`. The shingle re-read is pruned to docs in ≥1 pair
-    * ([[verifyShingleHashes]]) and pinned (3 consumers).
+    * [[nearBandedVerified]]: every candidate pair of `banded` with both
+    * docs' shingle-hash set sizes `n_a`, `n_b` and their intersection
+    * count `n_inter` (0 when disjoint). The shingle re-read is pruned to
+    * docs in ≥1 pair ([[verifyShingleHashes]]).
     *
-    * Build-side choice is deliberately LEFT TO STATS (+ AQE at
-    * runtime): the shingle table is candidate-set-bounded but NOT
-    * small-bounded — on an adversarial corpus it reaches corpus scale
-    * (sf100: ~450M rows; a broadcast hint here once cost q_dedup_near
-    * 96 → 468 s). When it is genuinely small Catalyst broadcasts it and
-    * the n_inter aggregate rides the pairs' pinned range partitioning
-    * for free; when it is not, the aggregate re-key is one honest
-    * exchange (PlanShapeSpec budgets 3 for the fixture's estimates).
+    * One plan, each subtree run once: every pair becomes one row per
+    * doc, so the hash rows are joined once, and two combining counts
+    * give, per (pair, hash), the slots each doc holds, then per pair
+    * their sums and the sum of their products (the matching (a, b)
+    * slots an equi-join on the hash would count). The three legs of
+    * `pairs` read it under the filters their joins infer (a pair id is
+    * never null: collect_set drops nulls), so they share its exchange.
+    * Build sides are left to stats + AQE: the hash rows are
+    * candidate-set-bounded but not small-bounded (sf100: a broadcast
+    * hint on them once cost q_dedup_near 96 → 468 s).
     */
-  private def pairIntersections(s: SparkSession, d: String,
-      banded: DataFrame, joinType: String): DataFrame = {
-    // (d) both pins: the legs below prune and key these frames
-    // differently, so Spark re-runs an unpinned subtree per leg, and
-    // the sf0.1 A/B measured the pins faster (q_dedup_near_collapsed,
-    // q_dedup_verify)
-    val pairs = minhashPairsFromBanded(banded).pinned()
+  private def pairIntersections(s: SparkSession, d: String, banded: DataFrame): DataFrame = {
+    val pairs = minhashPairsFromBanded(banded)
+      .where(col("doc_a").isNotNull && col("doc_b").isNotNull)
     val docsInPairs = pairs.select(col("doc_a").as("doc_id"))
       .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
-    val sh = verifyShingleHashes(s, d, docsInPairs).pinned()
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter = pairs
-      .join(sh.select(col("doc_id").as("doc_a"), col("h")), Seq("doc_a"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("h")), Seq("doc_b", "h"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_inter"))
-    pairs.join(inter, Seq("doc_a", "doc_b"), joinType)
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("n_a")), Seq("doc_a"))
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("n_b")), Seq("doc_b"))
+    def slots(doc: String) = sum(when(col("doc_id") === col(doc), 1L).otherwise(0L))
+    pairs.select(col("doc_a"), col("doc_b"), explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
+      .join(verifyShingleHashes(s, d, docsInPairs), "doc_id")
+      .groupBy("doc_a", "doc_b", "h")
+      .agg(slots("doc_a").as("ca"), slots("doc_b").as("cb"))
+      .groupBy("doc_a", "doc_b")
+      .agg(sum(col("ca") * col("cb")).as("n_inter"), sum("ca").as("n_a"), sum("cb").as("n_b"))
   }
 
   /** The verify stage's pruned shingle re-read: semi-join the corpus
     * down to `docsInPairs` BEFORE the shingle explode, so re-shingling
-    * cost is bounded by the candidate set. Factored out (pre-checkpoint)
-    * so PlanShapeSpec can pin the semi-below-Generate shape that the
-    * pinned blocks hide from dedupVerify's own plan.
+    * cost is bounded by the candidate set. Factored out so PlanShapeSpec
+    * can pin the semi-below-Generate shape.
     */
   private[graft] def verifyShingleHashes(
       s: SparkSession, d: String, docsInPairs: DataFrame): DataFrame =

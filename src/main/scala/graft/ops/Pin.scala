@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Materialize-and-cut-lineage: an eager checkpoint of a subtree,
   * whose blocks no code here releases (Spark's ContextCleaner drops
@@ -14,14 +15,27 @@ import org.apache.spark.sql.DataFrame
   *   (c) its subtree is nondeterministic and read twice, so both reads
   *       must see one materialization;
   *   (d) its consumers cannot share one run of the subtree, and a
-  *       same-context A/B shows that dropping the pin loses. They
-  *       cannot when they are separate actions (an `isEmpty` probe, a
-  *       `write`), or legs of one plan that Catalyst prunes or keys
-  *       differently, so no exchange of the subtree is reused.
-  * Otherwise two legs of ONE plan need no pin: Spark plans the DataFrame
-  * whole and reuses an exchange both legs read (`ReusedExchange`), and
-  * where it re-reads a cheap source per leg the A/B decides. PlanShapeSpec
+  *       same-context A/B shows that dropping the pin loses.
+  * Otherwise the consumers form ONE plan: Spark plans the DataFrame
+  * whole and reuses an exchange every leg reads (`ReusedExchange`) once
+  * the legs carry the same projection and the same filters (an explicit
+  * filter where a join would infer one on a single leg, `<=>` where the
+  * inferred one would change a result); a count joined back becomes a
+  * window; an emptiness probe folds into the plan; a figure a write
+  * needs is observed during the write (`Dataset.observe`). PlanShapeSpec
   * counts the source scans of the queries whose pins were dropped.
+  *
+  * Sites in src/main, counted by PinInventorySpec: 10. (a) 6: ccLabels'
+  * edges and round labels (3), the BPE loop's words, winner and state
+  * (3); (b) 2: substringWindows and substringDistinctMemo; (d) 2:
+  * Dedup.sourceOverlap's (source, shingle) set, whose one-plan form
+  * (per-shingle source lists) lost the sf0.1 A/B, and
+  * Multimodal.dedupPhashCore, the spec-only phash helper, whose four
+  * legs read a decode+hash MapPartitions with no exchange to share.
+  *
+  * Each pinned RDD is named `pin <file>:<line>` after its call site (the
+  * line the call's argument ends on), so Bench's end-of-pass storage
+  * listing says which site holds what.
   *
   * `localCheckpoint` keeps the blocks in executor memory with no
   * filesystem round-trip, but they die with their executor: on a real
@@ -41,8 +55,7 @@ object Pin {
   private[graft] def pin(df: DataFrame, reliable: Boolean): DataFrame = {
     val s = df.sparkSession
     val sc = s.sparkContext
-    if (!reliable) df.localCheckpoint()
-    else {
+    val pinned = if (!reliable) df.localCheckpoint() else {
       if (sc.getCheckpointDir.isEmpty)
         sc.setCheckpointDir(s.conf.getOption("spark.graft.pinDir")
           .getOrElse(s"${sys.props("java.io.tmpdir")}/graft-pin"))
@@ -63,7 +76,19 @@ object Pin {
         finally cached.unpersist(blocking = false)
       }
     }
+    val at = callSite()
+    pinned.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.setName(s"pin $at")
+      case _ =>
+    }
+    pinned
   }
+
+  /** `File.scala:line` of the first frame outside this object. */
+  private def callSite(): String =
+    Thread.currentThread.getStackTrace.iterator
+      .find(f => f.getClassName.startsWith("graft.") && !f.getClassName.startsWith("graft.ops.Pin"))
+      .fold("?")(f => s"${f.getFileName}:${f.getLineNumber}")
 
   implicit class PinOps(private val df: DataFrame) extends AnyVal {
     def pinned(): DataFrame = pin(df)

@@ -161,8 +161,9 @@ object Relational {
       .orderBy("l_partkey")
 
   /** #33 q_agg_approx_distinct — HLL++ sketch distinct count. Approx ≠
-    * oracle: no oracle SQL declared; RelationalSpec asserts tolerance vs
-    * the exact count instead (SURVEY §7.4 rule 8). At 100 TB this is the
+    * oracle: no oracle SQL declared; LlmPipelineSpec and check.py's
+    * tolerance witness bound it against the exact count instead (SURVEY
+    * §7.4 rule 8). At 100 TB this is the
     * operator you actually run — fixed-size sketch, single pass, no
     * expand.
     */
@@ -803,21 +804,23 @@ object Relational {
     * it.
     */
   def subqueryTopSupplier(s: SparkSession, d: String): DataFrame = {
-    // (d) the CTE feeds TWO plan legs (join input + global max); only
-    // the join leg gets the inferred isnotnull(l_suppkey) filter, so the
-    // legs' exchanges differ and each would re-scan lineitem, and the
-    // sf0.1 A/B measured the pin faster. The pinned table is
-    // supplier-count-sized.
-    val rev = Pin.pin(Tables.lineitem(s, d)
+    val rev = Tables.lineitem(s, d)
       .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp") &&
         col("l_shipdate") < lit("1997-04-01").cast("timestamp"))
       .groupBy(col("l_suppkey"))
-      .agg(sum(dec("l_extendedprice") * (lit(1) - dec("l_discount"))).as("rev_d")))
+      .agg(sum(dec("l_extendedprice") * (lit(1) - dec("l_discount"))).as("rev_d"))
     val top = rev.agg(max(col("rev_d")).as("max_rev"))
+    // the CTE feeds two legs (join input + global max), which share its
+    // exchange only while both carry the same filters: a plain `===`
+    // would infer isnotnull(l_suppkey) on the join leg alone. `<=>`
+    // infers nothing, and the non-null s_suppkey side keeps it an inner
+    // equi-join, so a null-supplier group still enters the max (as in
+    // the oracle) and never the output
     rev.crossJoin(broadcast(top))
       .filter(col("rev_d") === col("max_rev"))
-      .join(Tables.supplier(s, d).select("s_suppkey", "s_name"),
-        col("l_suppkey") === col("s_suppkey"))
+      .join(Tables.supplier(s, d).where(col("s_suppkey").isNotNull)
+          .select("s_suppkey", "s_name"),
+        col("l_suppkey") <=> col("s_suppkey"))
       .select(col("s_suppkey"), col("s_name"),
         col("rev_d").cast(DoubleType).as("total_revenue"))
       .orderBy("s_suppkey")
@@ -1188,9 +1191,10 @@ object Relational {
   /** q_agg_approx_quantile — the same quartiles via the KLL-style
     * approx_percentile sketch: fixed-size state per group, mergeable
     * partials, no value buffering — the form that survives 100 TB.
-    * Sketch output is accuracy-parameter-dependent, so no DuckDB oracle
-    * (rows-only check); RelationalSpec bounds it against the exact
-    * quartiles (SURVEY §7.4 rule 8, the q_agg_approx_distinct pattern).
+    * Sketch output is accuracy-parameter-dependent, so no DuckDB oracle;
+    * LlmPipelineSpec and check.py's tolerance witness bound it against
+    * the exact quartiles (SURVEY §7.4 rule 8, the q_agg_approx_distinct
+    * pattern).
     */
   def aggApproxQuantile(s: SparkSession, d: String): DataFrame =
     Tables.lineitem(s, d)

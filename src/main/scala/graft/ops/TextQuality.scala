@@ -3,7 +3,6 @@ package graft.ops
 import graft.Tables
 import graft.ops.Dedup.{KbCharCap, KbIdCap}
 import graft.ops.Fragments._
-import graft.ops.Pin.PinOps
 import graft.ops.Sampling.PackBudget
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -225,11 +224,9 @@ object TextQuality {
     * p_ppm = nb·10⁶ DIV nu, per doc fluency_ppm = Σp_ppm DIV n_pairs
     * (both engines truncate alike; nb·10⁶ stays ≤10¹⁸ even at
     * 10¹²-bigram corpora). Plan: the bigram pass is a mapper-only
-    * zip_with projection pinned ONCE (localCheckpoint — it feeds the
-    * two count tables and the scoring join); counts are combining hash
-    * aggregates (vocab-sized, Heaps-sublinear); scoring is two
-    * equi-shuffle joins on high-cardinality keys plus one per-doc
-    * combining agg. Nothing driver-side, nothing all-pairs.
+    * zip_with projection that runs ONCE; the two counts are windows
+    * over it, each one shuffle on a high-cardinality key, then one
+    * per-doc combining agg. Nothing driver-side, nothing all-pairs.
     */
   def lmFluency(s: SparkSession, d: String): DataFrame = {
     val bg = withTk(Tables.documents(s, d)
@@ -239,13 +236,12 @@ object TextQuality {
         "zip_with(slice(tk, 1, size(tk) - 1), slice(tk, 2, size(tk) - 1), " +
           "(a, b) -> struct(a AS w1, concat(a, ' ', b) AS bigram))")).as("p"))
       .select(col("doc_id"), col("p.w1").as("w1"), col("p.bigram").as("bigram"))
-      // (d) two count aggregates and the scoring join key the bigram
-      // rows differently, so unpinned each leg re-tokenizes the corpus;
-      // the sf0.1 A/B measured the pin faster
-      .pinned()
-    val cb = bg.groupBy("bigram").agg(count(lit(1)).as("nb"))
-    val cu = bg.groupBy("w1").agg(count(lit(1)).as("nu"))
-    bg.join(cb, "bigram").join(cu, "w1")
+    // both counts are windows over the one bigram stream, so the corpus
+    // is tokenized once (a count joined back would re-run it per leg);
+    // w1 and bigram are never null, so no row the equi-joins dropped
+    // is kept
+    bg.withColumn("nb", count(lit(1)).over(Window.partitionBy("bigram")))
+      .withColumn("nu", count(lit(1)).over(Window.partitionBy("w1")))
       .groupBy("doc_id")
       .agg(expr("CAST(count(*) AS BIGINT)").as("n_pairs"),
         expr("CAST(sum((nb * 1000000) DIV nu) DIV count(*) AS BIGINT)")
@@ -317,7 +313,7 @@ object TextQuality {
     * and break the oracle hash). Plan: explode → per-(doc, term) count
     * (one shuffle, map-side combinable) → per-term document frequency
     * computed FROM THE tf ROWS (posting-list-sized input, not the raw
-    * token stream) → tf ⋈ df equi join on term → per-doc top-3 window.
+    * token stream) as a window on term → per-doc top-3 window.
     * Every stage is linear in postings at 100 TB; the DECIMAL(38,0)
     * cross-multiply keeps tf·N·10⁶ exact at any corpus size, the DIV
     * brings the score back to BIGINT range (score ≤ tf·N·10⁶ only when
@@ -327,15 +323,13 @@ object TextQuality {
     val docs = Tables.documents(s, d)
     val tf = docs.select(col("doc_id"), explode(expr(toks)).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      // (d) the df pass prunes tf's count, so its aggregate differs from
-      // the join leg's and, unpinned, the corpus is tokenized twice; the
-      // sf0.1 A/B measured the pin faster
-      .pinned()
-    val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     val w = Window.partitionBy("doc_id")
       .orderBy(col("score_micros").desc, col("term").asc)
-    tf.join(dfreq, "term")
+    // df is a window over the tf rows, so the corpus is tokenized once
+    // (an aggregate joined back would re-run tf per leg); a term is
+    // never null, so no row the equi-join dropped is kept
+    tf.withColumn("df", count(lit(1)).over(Window.partitionBy("term")))
       .crossJoin(broadcast(nDocs))
       .withColumn("score_micros",
         expr("CAST(CAST(tf AS DECIMAL(38,0)) * 1000000 * n_docs DIV df AS BIGINT)"))

@@ -200,7 +200,7 @@ class LlmPipelineSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toSet
     assert(got == Set((100L, 101L), (100L, 103L), (101L, 103L)),
       s"expected the cos∈{1, 0.96} pairs only, got $got")
-    // and the cap is OBSERVABLE (VERDICT r16 #1): the skipped hot bucket
+    // and the cap is OBSERVABLE: the skipped hot bucket
     // surfaces in the overflow report with its true membership
     val ov = ops.Dedup.semanticBucketOverflow(b).collect()
     assert(ov.length == 1 && ov.head.getInt(0) == 3 && ov.head.getLong(1) == 60L,
@@ -257,6 +257,50 @@ class LlmPipelineSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
   }
 
+  test("q_dedup_semantic on a τ-pair corpus: SQL executions that run the bucket exchange") {
+    import spark.implicits._
+    def vec(base: Array[Double], eps: Int): Seq[Double] =
+      base.zipWithIndex.map { case (v, i) => v + (if (i == eps) 0.004 else 0.0) }.toSeq
+    val b1 = Array.tabulate(64)(i => 0.5 + 0.3 * math.sin(i))
+    // a short dir name: plan strings abbreviate a scan's location
+    val tag = java.util.UUID.randomUUID().toString.take(8)
+    val dir = s"/tmp/gsr-$tag"
+    Seq((10L, vec(b1, -1)), (11L, vec(b1, 0)), (12L, vec(b1, 1)))
+      .map { case (id, v) => (id, v.map(_.toFloat), (id % 3).toInt) }
+      .toDF("vec_id", "embedding", "label")
+      .write.parquet(s"$dir/embeddings.parquet")
+    ops.Dedup.embedBucketed(spark, dir).count() // build the artifact first
+    // the bucketed artifact's path carries the dataset dir, so an
+    // execution whose initial plan scans it belongs to this corpus; a
+    // marker execution after the query flushes the listener bus
+    val runs = new java.util.concurrent.atomic.AtomicInteger
+    val marker = s"marker-$tag"
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          val plan = s.physicalPlanDescription
+          if (plan.contains(marker)) seen.countDown()
+          else if (plan.contains("graft-embed-bucketed") && plan.contains(tag))
+            runs.incrementAndGet()
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    val got = try {
+      val rows = ops.Dedup.dedupSemantic(spark, dir)
+        .as[(Long, Long, Boolean)].collect().toSet
+      spark.sql(s"SELECT '$marker' AS m").collect()
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker execution never seen")
+      rows
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(got == Set((10L, 10L, true), (11L, 10L, false), (12L, 10L, false)))
+    // two: the emptiness probe and ccLabels' edge pin are separate
+    // actions. Folding the probe into the pinned edges makes it one, but
+    // an sf0.1 A/B measured that slower on the fixture's empty path
+    assert(runs.get == 2, s"the bucket exchange ran in ${runs.get} executions, want 2")
+  }
+
   test("q_dedup_overflow_report: empty on the fixture; planted hot blocks surface per family") {
     import spark.implicits._
     // the fixture is healthy — every capped family reports nothing
@@ -303,8 +347,8 @@ class LlmPipelineSpec extends AnyFunSuite {
     // the shared trigram is the only over-df shingle, at its exact df
     assert(byFam("ngram").map(_._4).toSeq == Seq(120L),
       s"ngram overflow: ${byFam("ngram").toList}")
-    // ADVICE r17: the SQL mirror had only ever been exercised on the
-    // EMPTY fixture result — run the five HAVING-count mirrors (the
+    // the SQL mirror must hold on the NON-empty result too, not only on
+    // the EMPTY fixture result — run the five HAVING-count mirrors (the
     // SqlSurface text) against this planted corpus and pin text-SQL ≡
     // engine on the NON-empty path (a band/bit formula drift between
     // the dialects now fails here instead of passing CI)
@@ -597,10 +641,9 @@ class LlmPipelineSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$idx/centroids")
       .as[(Int, Seq[Double])].collect().sortBy(_._1).toSeq == centsBefore)
     // drifted append flags; the refit publishes as the NEXT '-r<n>'
-    // GENERATION of the same manifest key (ADVICE r17: the old
-    // in-place swap had an absence window that could FNF a racing
-    // reader) — the superseded generation stays on disk for its
-    // in-flight readers
+    // GENERATION of the same manifest key (an in-place swap would have
+    // an absence window that could FNF a racing reader) — the
+    // superseded generation stays on disk for its in-flight readers
     vecs(1000 until 1060, 5.0).coalesce(1).write.mode("append")
       .parquet(s"$dir/embeddings.parquet")
     val idx2 = ops.Ann.ensureIvfIndex(spark, dir)
@@ -2107,7 +2150,7 @@ class LlmPipelineSpec extends AnyFunSuite {
       .as[(Long, Long, Double)].collect().toSet
     // the registered chain (banded-MinHash candidates over reps → exact
     // verify → expansion) against the RETIRED spark.ml whole-corpus
-    // approxSimilarityJoin (spec-only witness, VERDICT r14 #4): on a
+    // approxSimilarityJoin (spec-only witness): on a
     // collision-free fixture both families' candidate sets cover every
     // true near pair and both distances are exact 1 − |∩|/|∪| over
     // distinct shingle sets, so the two INDEPENDENT implementations
@@ -2131,8 +2174,8 @@ class LlmPipelineSpec extends AnyFunSuite {
 
   test("duplicated short/empty texts: expansion ≡ ml witness, distance-0 intra pairs on both (ADVICE r15)") {
     import spark.implicits._
-    // ADVICE r15 flagged the collapse membership as including docs with
-    // empty shingle sets while the ml witness filters size(tokens) > 0.
+    // The collapse membership could include docs with empty shingle
+    // sets while the ml witness filters size(tokens) > 0.
     // In THIS substrate the shingle set is never empty — a short or
     // empty/null text shingles to array(coalesce(text, '')), one
     // element — so byte-identical short/empty docs are legitimate
@@ -2187,9 +2230,9 @@ class LlmPipelineSpec extends AnyFunSuite {
 
   test("q_dedup_near short-circuits on a duplicate-free corpus and equals the whole-corpus join") {
     import spark.implicits._
-    // no verbatim copies anywhere: the collapse is an identity map, so
-    // dedupNear skips the two re-expansion joins (VERDICT r12 #6) and
-    // must STILL produce exactly the whole-corpus LSH join result
+    // no verbatim copies anywhere: the collapse is an identity map (the
+    // re-expansion maps every pair to itself, no intra-group pair), and
+    // dedupNear must STILL produce exactly the whole-corpus LSH join result
     val rnd = new scala.util.Random(41)
     val vocab = Vector("alpha", "bravo", "charlie", "delta", "echo", "foxtrot",
       "golf", "hotel", "india", "juliet")

@@ -32,8 +32,17 @@ class PlanShapeSpec extends AnyFunSuite {
     // the fixture has no τ-pair: the emptiness probe answers, and the
     // pair subtree never enters the final plan
     ("q_dedup_semantic", "graft-embed-bucketed", 0, false),
-    // the copy-expansion path needs a corpus with verbatim copies
-    ("q_dedup_near", "documents.parquet", 0, true))
+    // the copy-expansion path needs a corpus with verbatim copies: the
+    // members and the rep aggregate, the intra leg's streamed members
+    // (its broadcast side is reused) and the verify's shingle rows
+    ("q_dedup_near", "documents.parquet", 4, true),
+    // the rep aggregate and the verify's shingle rows, each once
+    ("q_dedup_near_collapsed", "documents.parquet", 2, false),
+    ("q_dedup_verify", "documents.parquet", 1, false),
+    ("q_lm_fluency", "documents.parquet", 1, false),
+    // the tf rows once, plus the n_docs count
+    ("q_text_tfidf", "documents.parquet", 2, false),
+    ("q_subquery_top_supplier", "lineitem.parquet", 1, false))
 
   unpinned.foreach { case (name, src, want, planted) =>
     test(s"unpinned $name: $want final-plan scan(s) of its shared source $src") {
@@ -271,8 +280,6 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("dedup verify prunes the shingle re-read to docs-in-pairs before the explode") {
     import spark.implicits._
-    // Pin the pre-checkpoint subtree directly: in dedupVerify's own plan
-    // the pinned blocks print as Scan ExistingRDD and hide this shape.
     val docsInPairs = Seq(1L, 2L).toDF("doc_id")
     val plan = physical(ops.Dedup.verifyShingleHashes(spark, d, docsInPairs))
     // The semi join against the candidate-doc set must sit BELOW the
@@ -520,23 +527,20 @@ class PlanShapeSpec extends AnyFunSuite {
     // Q15's CTE is consumed twice (join input + global max); the plan
     // must reuse the aggregate's exchange, not re-scan lineitem per
     // consumer — at 100 TB a second scan of the quarter slice is the
-    // difference between one pass and two
-    // AQE's adaptive wrapper hides the subtree from TreeNode.collect
-    // (the shuffle-budget test's rule) — count with it off
-    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      // build twice: the first construction materializes the Pin so the
-      // counted plan is the steady-state one (the budget-test rule)
-      ops.Relational.subqueryTopSupplier(spark, d).queryExecution.executedPlan
-      val qe = ops.Relational.subqueryTopSupplier(spark, d).queryExecution
-      val scans = qe.executedPlan.collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec
-          if f.metadata.get("Location").exists(_.contains("lineitem")) => f
-      }.size
-      assert(scans == 0,
-        s"revenue CTE re-scans lineitem ($scans scans) instead of the pinned table:\n${qe.executedPlan}")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
+    // difference between one pass and two. Both legs carry the same
+    // filters only while the supplier join infers none (`<=>`)
+    val df = ops.Relational.subqueryTopSupplier(spark, d)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val scans = Aqe.collect(plan) {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec
+        if f.metadata.get("Location").exists(_.contains("lineitem")) => f
+    }.size
+    val reused = Aqe.collect(plan) {
+      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => r
+    }.size
+    assert(scans == 1 && reused >= 1,
+      s"revenue CTE: $scans lineitem scans, $reused reused exchanges:\n$plan")
   }
 
   test("bench-tail shuffle budget: exchange counts are pinned (VERDICT r13 #4)") {
@@ -555,23 +559,20 @@ class PlanShapeSpec extends AnyFunSuite {
       // shuffles are correctly NOT in the budget
       "q_dedup_substring" -> 3,        // window self-join + pair agg + order
       "q_dedup_substring_auto" -> 3,   // winnow leg over the same memo table
-      "q_dedup_near" -> 3,             // collapse agg + re-expansion join
-                                       // + the verify n_inter re-key: with
-                                       // the substrates persisted (r18) the
-                                       // fixture's estimates stream sh and
-                                       // broadcast pairs, so the aggregate
-                                       // no longer rides pairs' pinned range
-                                       // partitioning; forcing sh broadcast
-                                       // to win it back cost 96→468 s at
-                                       // sf100 (sh is corpus-scale there) —
-                                       // the extra fixture exchange is the
-                                       // honest scale-safe budget
+      "q_dedup_near" -> 8,             // collapse agg + final order, and
+                                       // the pair and verify subtrees that
+                                       // pins used to run as separate jobs:
+                                       // band buckets, pair distinct + its
+                                       // sort, docs-in-pairs distinct,
+                                       // (pair, hash) and per-pair slot
+                                       // counts; the re-expansion reuses
+                                       // the collapse (forcing the shingle
+                                       // rows to broadcast cost 96→468 s at
+                                       // sf100: corpus-scale there)
       "q_heartbeat_map_explode" -> 3,  // explode + per-file agg + order
       "q_dedup_cc" -> 1,               // memoized labels -> one final agg
-      "q_dedup_near_collapsed" -> 3,   // r15 banded+verify reroute: collapse
-                                       // agg + order (banded/shingle substrate
-                                       // persisted) + the verify re-key
-                                       // (same rationale as q_dedup_near)
+      "q_dedup_near_collapsed" -> 8,   // the q_dedup_near chain without the
+                                       // re-expansion
       "q_dedup_collapsed_jaccard" -> 6, // collapse, band pairs, verify join
       "q_sim_search_ivf_kmeans" -> 0,  // per-call k-means fit on the
                                        // driver (ivfFit: one collect, no
